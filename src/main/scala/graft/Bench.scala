@@ -87,13 +87,23 @@ object Bench {
       probeCounts(name) = (pJobs.get - j0, pStages.get - s0, pTasks.get - t0)
       r
     }
-    def timedBuild(body: => Unit): Double = {
+    // A failed build is a FAILED entry (-1.0, so it lands in `failed`)
+    // whose exception class and message ride the full line's
+    // `build_errors` — never a fast success whose consumer then pays
+    // for the build inside its timed run 1.
+    val buildErrors =
+      scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timedBuild(name: String)(body: => Unit): Double = probed(name) {
       val t0 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+      try { body; (System.nanoTime() - t0) / 1e9 }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          buildErrors(name) = s"${e.getClass.getName}: ${e.getMessage}"
+          -1.0
+      }
     }
-    val stageBuild = probed("shared_stage_build")(timedBuild(
-      queries.SharedStages.clusters(spark, sfDir).count()))
+    val stageBuild = timedBuild("shared_stage_build")(
+      queries.SharedStages.clusters(spark, sfDir).count())
     // The lazy per-SF temp IVF-PQ indexes (session-cached by dir) are
     // built HERE as their own named *_index_build entries — the
     // BenchScale discipline. Warmup runs at sf0.001, so without this
@@ -126,7 +136,7 @@ object Bench {
       ("q141_stage_build", "q141_hybrid_deployed_parity",
         () => queries.SharedStages.hybridIvfPq(spark, sfDir).count())
     ).collect { case (buildName, consumer, build) if selected.contains(consumer) =>
-      buildName -> Seq(probed(buildName)(timedBuild(build())))
+      buildName -> Seq(timedBuild(buildName)(build()))
     }
     BenchHarness.drainLocalCheckpoints(spark)
     // three timed runs per query; "queries" reports the min (the
@@ -235,14 +245,18 @@ object Bench {
       "\"" + k + "\":" + rs.map(BenchHarness.num).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val driftsJson = drifts.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val buildErrorsJson = buildErrors.map { case (k, m) =>
+      "\"" + k + "\":" + BenchHarness.jsonString(m)
+    }.mkString("{", ",", "}")
     // job/stage/task counts ride the FULL line + sidecar only (the
     // compact line stays small); BenchHarness.parseBenchMins strips
-    // this object before its run-array fallback, like leak_retests
+    // this object before its run-array fallback, like leak_retests and
+    // build_errors
     val probeJson = probeCounts.map { case (k, (j, s, t)) =>
       "\"" + k + "\":[" + j + "," + s + "," + t + "]"
     }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"failed":$failedJson,"leak_suspects":$leaksJson,"drift_suspects":$driftsJson,"prior_source":"$priorSource","leak_retests":$retestsJson,"probe_jst":$probeJson,"drained_checkpoints":$drained,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"failed":$failedJson,"build_errors":$buildErrorsJson,"leak_suspects":$leaksJson,"drift_suspects":$driftsJson,"prior_source":"$priorSource","leak_retests":$retestsJson,"probe_jst":$probeJson,"drained_checkpoints":$drained,"sf":"$sfDir"}"""
     println(line)
     // COMPACT final line (VERDICT r16 #1): the full line above is
     // ~14 KB and the driver captures stdout with a bounded tail, so

@@ -145,11 +145,10 @@ object BenchHarness {
     * `"name":[...]` array (a leading partial array has no intact
     * `"name":[` prefix and is skipped). Escaped quotes (`\"` inside the
     * artifact's JSON-string tail) are normalized first, and the
-    * `leak_retests` object is STRIPPED before the fallback scan — its
-    * entries are also query-keyed numeric arrays and would otherwise
-    * be ingested as that query's runs (benign while retests are real
-    * runs, fragile the moment any non-runs numeric-array field lands
-    * in the artifact — ADVICE r13).
+    * query-keyed non-runs objects (`leak_retests`, `build_errors`,
+    * `probe_jst`) are STRIPPED before the fallback scan, including a
+    * headless remainder the tail cut — their entries would otherwise
+    * be ingested as that query's runs (ADVICE r13).
     */
   def parseBenchMins(text: String): Map[String, Double] = {
     val t = text.replace("\\\"", "\"")
@@ -160,15 +159,23 @@ object BenchHarness {
         pair.findAllMatchIn(m.group(1))
           .map(p => p.group(1) -> p.group(2).toDouble).toMap
       case None =>
-        // strip every known query-keyed NON-RUNS numeric-array object
-        // before the fallback scan (ADVICE r13): leak_retests (retest
-        // run arrays) and probe_jst (job/stage/task counts — r17)
+        // a tail that starts INSIDE the object the line emits just
+        // before `drained_checkpoints` (probe_jst; leak_retests before
+        // r17), its `"name":{` prefix cut off, leads with that
+        // object's headless remainder: drop it up to its first `}`
+        val body = t.substring(
+          """"tail"\s*:\s*"""".r.findFirstMatchIn(t).fold(0)(_.end))
+        val cut = """^[^{]*?\}(?=\s*,\s*"drained_checkpoints")""".r
+          .findPrefixMatchOf(body).fold(0)(_.end)
+        // then strip every known query-keyed NON-RUNS object before the
+        // fallback scan (ADVICE r13): leak_retests (retest run arrays),
+        // build_errors and probe_jst (job/stage/task counts — r17)
         // would otherwise be ingested as that query's run times
-        val noRetests =
-          """"(?:leak_retests|probe_jst)"\s*:\s*\{[^}]*\}""".r
-            .replaceAllIn(t, "")
+        val runsText =
+          """"(?:leak_retests|build_errors|probe_jst)"\s*:\s*\{[^}]*\}""".r
+            .replaceAllIn(body.substring(cut), "")
         val arr = """"([A-Za-z0-9_]+)"\s*:\s*\[([\-0-9.,\sEe]+)\]""".r
-        arr.findAllMatchIn(noRetests).flatMap { m =>
+        arr.findAllMatchIn(runsText).flatMap { m =>
           val runs = m.group(2).split(",").toSeq
             .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
           val mn = minOfRuns(runs)
@@ -304,6 +311,16 @@ object BenchHarness {
     classOf[org.apache.spark.rdd.RDD[_]].getMethod("isLocallyCheckpointed")
   def isLocallyCheckpointed(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
     locallyCheckpointedM.invoke(rdd).asInstanceOf[Boolean]
+
+  /** `m` as a JSON string literal (quotes, backslashes and control
+    * characters escaped).
+    */
+  def jsonString(m: String): String = "\"" + m.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Locale-safe fixed-ish decimal rendering for the JSON contract
     * lines: Double.toString never uses the JVM default locale, while

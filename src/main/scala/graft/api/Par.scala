@@ -16,7 +16,10 @@ package graft.api
   * The first failure propagates with its ORIGINAL exception (not the
   * pool's ExecutionException wrapper), so callers' error contracts
   * are unchanged; remaining thunks are awaited (a Spark write is not
-  * safely cancellable mid-commit).
+  * safely cancellable mid-commit). That holds for an interrupt of the
+  * calling thread too: the wait resumes until every thunk is done,
+  * then the first failure (the InterruptedException, unless a thunk
+  * failed before it) is rethrown with the interrupt flag set again.
   */
 private[graft] object Par {
   def run(thunks: (() => Unit)*): Unit = {
@@ -30,13 +33,25 @@ private[graft] object Par {
           })
         }
         var firstFailure: Throwable = null
+        var interrupted = false
+        def fail(e: Throwable): Unit =
+          if (firstFailure == null) firstFailure = e
         futs.foreach { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              if (firstFailure == null) firstFailure = e.getCause
+          var done = false
+          while (!done) {
+            try { f.get(); done = true }
+            catch {
+              case e: java.util.concurrent.ExecutionException =>
+                fail(e.getCause); done = true
+              case e: java.util.concurrent.CancellationException =>
+                fail(e); done = true
+              // get() cleared the flag, so the retry blocks again
+              case e: InterruptedException =>
+                fail(e); interrupted = true
+            }
           }
         }
+        if (interrupted) Thread.currentThread().interrupt()
         if (firstFailure != null) throw firstFailure
       } finally { pool.shutdown(); () }
     }

@@ -54,11 +54,16 @@ object PageRank {
     * for parquet-backed graphs, the planner's own broadcast heuristic
     * — so the check costs no job and no extra pass. Unknown or
     * join-inflated stats read as huge and safely keep the partitioned
-    * path. On the broadcast path every round's edge⋈state join builds
-    * the tiny edge hash table and the state side streams with ZERO
-    * exchange (and HITS needs only ONE cached edge copy, halving the
-    * #9 footprint); past the threshold nothing changes — the
-    * pre-partitioned cache remains the 100 TB shape.
+    * path. The kernels ask it about the frame they actually cache and
+    * broadcast (PageRank's symmetric union, whose stats sum both
+    * branches; HITS' distinct weighted pairs), never the caller's raw
+    * edges — a graph just under the threshold must not broadcast twice
+    * the configured cap every round. On the broadcast path every
+    * round's edge⋈state join builds the tiny edge hash table and the
+    * state side streams with ZERO exchange (and HITS needs only ONE
+    * cached edge copy, halving the #9 footprint); past the threshold
+    * nothing changes — the pre-partitioned cache remains the 100 TB
+    * shape.
     */
   private[graft] def broadcastableEdges(df: DataFrame): Boolean = {
     val thr = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
@@ -66,13 +71,18 @@ object PageRank {
       df.queryExecution.optimizedPlan.stats.sizeInBytes <= thr
   }
 
-  /** @return one row per vertex of `edges`: (id, degree, rank) with
-    *         rank on the integer `scale` (a vertex with no edges does
-    *         not appear — it would hold the constant floor forever).
+  /** The PageRank round loop over (s, t, w) rows, symmetrized here: a
+    * vertex splits its rank across neighbors proportionally to edge
+    * weight, `rank × w div Σw`, and collects `base + dampingPct ×
+    * in_sum div 100` (the integer discipline of the object doc).
+    * [[ranks]] is the unit-weight case — ⌊r·1/Σ1⌋ = ⌊r/d⌋, duplicate
+    * rows included, each row being one more unit of degree.
+    *
+    * @return (id, `degreeCol`, rank) per vertex, `degreeCol` holding
+    *         the summed incident weight.
     */
-  def ranks(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 5, dampingPct: Int = 85,
-      scale: Long = Scale): DataFrame = {
+  private def rankRounds(e: DataFrame, degreeCol: String, iterations: Int,
+      dampingPct: Int, scale: Long): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
     // the edge list is cached PRE-PARTITIONED on the per-round join
     // key (guide §2.4: operations keyed the same way share one
@@ -84,15 +94,17 @@ object PageRank {
     // pre-partition entirely and broadcasts the cached edges into each
     // round's join instead — the rank side then streams with no
     // exchange at all.
-    val small = broadcastableEdges(edges)
-    val sym0 = edges
-      .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("t"))
-      .union(edges
-        .select(col(dstCol).cast("long").as("s"), col(srcCol).cast("long").as("t")))
+    val sym0 = e
+      .select(col("s").cast("long").as("s"), col("t").cast("long").as("t"),
+        col("w"))
+      .union(e
+        .select(col("t").cast("long").as("s"), col("s").cast("long").as("t"),
+          col("w")))
+    val small = broadcastableEdges(sym0)
     val sym = (if (small) sym0 else sym0.repartition(col("s"))).persist()
     val symJ = if (small) broadcast(sym) else sym
     val deg = sym.groupBy(col("s").as("id"))
-      .agg(count(lit(1)).as("degree")).persist()
+      .agg(sum(col("w")).as(degreeCol)).persist()
     val base = (100L - dampingPct) * scale / 100L
 
     var rank = deg.withColumn("rank", lit(scale))
@@ -100,10 +112,11 @@ object PageRank {
       val prev = rank
       val incoming = symJ
         .join(rank.withColumnRenamed("id", "s"), Seq("s"))
-        .select(col("t").as("id"), expr("rank div degree").as("c"))
+        .select(col("t").as("id"),
+          expr(s"(rank * w) div $degreeCol").as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("in_sum"))
       rank = deg.join(incoming, Seq("id"))
-        .select(col("id"), col("degree"),
+        .select(col("id"), col(degreeCol),
           (lit(base) + expr(s"($dampingPct * in_sum) div 100")).as("rank"))
         // one job per round; truncates the nested-round lineage
         .localCheckpoint()
@@ -123,6 +136,20 @@ object PageRank {
     rank
   }
 
+  /** @return one row per vertex of `edges`: (id, degree, rank) with
+    *         rank on the integer `scale` (a vertex with no edges does
+    *         not appear — it would hold the constant floor forever).
+    *         Every input row is one edge: a duplicate row counts twice
+    *         in `degree`, and a self-loop adds 2 to its vertex's degree
+    *         and feeds the vertex its own rank.
+    */
+  def ranks(edges: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int = 5, dampingPct: Int = 85,
+      scale: Long = Scale): DataFrame =
+    rankRounds(
+      edges.select(col(srcCol).as("s"), col(dstCol).as("t"), lit(1L).as("w")),
+      "degree", iterations, dampingPct, scale)
+
   /** Similarity-WEIGHTED PageRank: a vertex splits its rank across
     * neighbors proportionally to edge weight (`rank × w div Σw`
     * instead of `rank div degree`), so a 0.9-Jaccard twin pulls more
@@ -140,98 +167,59 @@ object PageRank {
     */
   def weightedRanks(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iterations: Int = 5, dampingPct: Int = 85,
-      scale: Long = Scale): DataFrame = {
-    require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    // cached pre-partitioned on the round key (the [[ranks]] argument),
-    // or broadcast per round when the graph is broadcast-sized
-    val small = broadcastableEdges(edges)
-    val sym0 = edges
-      .select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("t"),
-        col(weightCol).cast("long").as("w"))
-      .union(edges
-        .select(col(dstCol).cast("long").as("s"),
-          col(srcCol).cast("long").as("t"),
-          col(weightCol).cast("long").as("w")))
-    val sym = (if (small) sym0 else sym0.repartition(col("s"))).persist()
-    val symJ = if (small) broadcast(sym) else sym
-    val deg = sym.groupBy(col("s").as("id"))
-      .agg(sum(col("w")).as("w_degree")).persist()
-    val base = (100L - dampingPct) * scale / 100L
+      scale: Long = Scale): DataFrame =
+    rankRounds(
+      edges.select(col(srcCol).as("s"), col(dstCol).as("t"),
+        col(weightCol).cast("long").as("w")),
+      "w_degree", iterations, dampingPct, scale)
 
-    var rank = deg.withColumn("rank", lit(scale))
-    for (i <- 1 to iterations) {
-      val prev = rank
-      val incoming = symJ
-        .join(rank.withColumnRenamed("id", "s"), Seq("s"))
-        .select(col("t").as("id"),
-          expr("(rank * w) div w_degree").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("in_sum"))
-      rank = deg.join(incoming, Seq("id"))
-        .select(col("id"), col("w_degree"),
-          (lit(base) + expr(s"($dampingPct * in_sum) div 100")).as("rank"))
-        .localCheckpoint()
-      // release the dead previous round (the [[ranks]] discipline)
-      if (i > 1) graft.api.Lifecycle.releaseLocalCheckpoint(prev)
-    }
-    sym.unpersist()
-    deg.unpersist()
-    rank
-  }
-
-  /** Integer-exact HITS (Kleinberg hubs-and-authorities) over a
-    * DIRECTED edge list — the second classic link-analysis signal a
-    * crawl scheduler wants next to [[ranks]]' PageRank: an AUTHORITY
-    * score (pointed to by good hubs — fetch its pages sooner) and a
-    * HUB score (points at good authorities — mine its outlinks
-    * harder). PageRank's single score cannot separate the two roles;
-    * directory-style hub hosts and content-authority hosts are
-    * exactly the split a frontier scheduler acts on differently.
+  /** The HITS round loop — integer-exact Kleinberg hubs-and-
+    * authorities over CANONICAL directed (s, t, w) rows: one row per
+    * pair, no self-loops, w > 0, s/t/w Long. Each hop is multiplied
+    * by the edge weight; [[hits]] is the unit-weight case.
     *
     * Same engine-exact discipline as [[ranks]], adapted to HITS'
     * mutual recursion: every vertex starts at hub = `scale`; each
-    * round computes raw authority in-sums `a_raw(t) = Σ_{(s,t)} h(s)`
+    * round computes raw authority in-sums `a_raw(t) = Σ_{(s,t)} w·h(s)`
     * and renormalizes by the round's MAX — `a = a_raw·scale div
-    * max(a_raw)` — then the same for hubs off the new authorities.
-    * L∞ normalization instead of the textbook L2: the max is one
-    * integer row (exact, broadcast), where an L2 norm needs a square
-    * root of a sum of squares — float, order-sensitive, not
-    * oracle-replayable. Ranking-equivalent per round (both are a
-    * positive scalar rescale of the same vector; only the fixed-point
-    * rounding differs and it is identical in both engines).
-    * Vertices with no in-edges hold authority 0; no out-edges, hub 0.
-    * The in-sums and the `raw × scale` renormalization products run
-    * in decimal(38,0) — Long would wrap at in-degree × scale ≈ 2^63,
-    * i.e. at ~9M in-links for the default scale, which real web-graph
-    * authorities exceed; 128-bit keeps the arithmetic exact at any
-    * graph size (the oracle replays it in DuckDB HUGEINT), and the
-    * normalized scores themselves are ≤ `scale`, safely Long.
+    * max(a_raw)` — then the same for hubs off the new authorities,
+    * `h_raw(s) = Σ_{(s,t)} w·a(t)`. L∞ normalization instead of the
+    * textbook L2: the max is one integer row (exact, broadcast), where
+    * an L2 norm needs a square root of a sum of squares — float,
+    * order-sensitive, not oracle-replayable. Ranking-equivalent per
+    * round (both are a positive scalar rescale of the same vector;
+    * only the fixed-point rounding differs and it is identical in both
+    * engines). Vertices with no in-edges hold authority 0; no
+    * out-edges, hub 0. The w·h products, in-sums and the `raw × scale`
+    * renormalization products run in decimal(38,0) — Long would wrap
+    * at in-degree × scale ≈ 2^63, i.e. at ~9M in-links for the default
+    * scale, which real web-graph authorities exceed; 128-bit keeps the
+    * arithmetic exact (h ≤ scale = 10^12, so Σw·scale must stay under
+    * 10^38 — anchor-count weights leave ~10^14 total-weight headroom;
+    * the oracle replays it in DuckDB HUGEINT), and the normalized
+    * scores themselves are ≤ `scale`, safely Long.
     *
     * Cost shape at 100 TB: edges persist once; each round is two
     * edge⋈vertex joins with partial-aggregated sums (vertex-count
     * rows on the wire) plus two 1-row max broadcasts; per-round
     * state localCheckpoints exactly as [[ranks]].
     *
-    * @return one row per vertex of `edges`: (id, hub, auth) on the
-    *         integer `scale`.
+    * @return one row per vertex of `e`: (id, hub, auth) on the integer
+    *         `scale`.
     */
-  def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 3, scale: Long = Scale): DataFrame = {
+  private def hitsRounds(e0: DataFrame, iterations: Int,
+      scale: Long): DataFrame = {
     require(iterations >= 1)
     // HITS joins edges on s (authority round) AND on t (hub round):
     // cache the list once per key — two copies, zero per-round edge
     // shuffles (guide §2.4; the bucket-both-ways trade: 2 extra
     // materializations beat 2·iterations edge-list exchanges). eT
-    // derives from the cached eS so the distinct runs once. A
-    // BROADCAST-SIZED graph (VERDICT r16 #8/#9) keeps ONE unpartitioned
-    // cache and broadcasts it into both join directions instead —
-    // no second copy, no repartition exchanges, no per-round state
-    // exchange.
-    val small = broadcastableEdges(edges)
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("t"))
-      .filter(col("s") =!= col("t"))
-      .distinct()
+    // derives from the cached eS so the caller's distinct/aggregate
+    // runs once. A BROADCAST-SIZED graph (VERDICT r16 #8/#9) keeps ONE
+    // unpartitioned cache and broadcasts it into both join directions
+    // instead — no second copy, no repartition exchanges, no per-round
+    // state exchange.
+    val small = broadcastableEdges(e0)
     val eS = (if (small) e0 else e0.repartition(col("s"))).persist()
     val eT = if (small) eS else eS.repartition(col("t")).persist()
     val (eSJ, eTJ) = if (small) (broadcast(eS), broadcast(eT)) else (eS, eT)
@@ -252,13 +240,11 @@ object PageRank {
     // with exactly the distinct sources. Likewise auth covers every
     // t. The per-round maxes stay ≥ scale > 0 (the argmax row of the
     // previous half-round renormalizes to exactly `scale` and owns an
-    // incident edge by construction), so the `div` can never see a
-    // zero divisor; the coalesce stays as a pure guard. A separate
-    // vertex frame is NOT needed: support(hub) ∪ support(auth) =
-    // sources ∪ targets = the whole vertex set, so the final
-    // zero-reattach is a full-outer join of the two final frames —
-    // the old per-query v cache (union + distinct + materialization)
-    // is gone.
+    // incident edge of positive weight by construction), so the `div`
+    // can never see a zero divisor; the coalesce stays as a pure
+    // guard. A separate vertex frame is NOT needed: support(hub) ∪
+    // support(auth) = sources ∪ targets = the whole vertex set, so the
+    // final zero-reattach is a full-outer join of the two final frames.
     var hub = eS.select(col("s").as("id")).distinct()
       .withColumn("h", lit(scale))
     var auth = hub.select(col("id")).withColumn("a", lit(0L))
@@ -266,7 +252,7 @@ object PageRank {
       val (prevHub, prevAuth) = (hub, auth)
       val aRaw = eSJ.join(hub.withColumnRenamed("id", "s"), Seq("s"))
         .groupBy(col("t").as("id"))
-        .agg(sum(col("h").cast("decimal(38,0)")).as("_ar"))
+        .agg(sum(col("h").cast("decimal(38,0)") * col("w")).as("_ar"))
       val aMax = aRaw.agg(max(col("_ar")).as("_am"))
       // LAZY mid-round checkpoint (round 16): the authority frame is
       // consumed by this round's hub step and by the final join — a
@@ -280,7 +266,7 @@ object PageRank {
         .localCheckpoint(eager = false)
       val hRaw = eTJ.join(auth.withColumnRenamed("id", "t"), Seq("t"))
         .groupBy(col("s").as("id"))
-        .agg(sum(col("a").cast("decimal(38,0)")).as("_hr"))
+        .agg(sum(col("a").cast("decimal(38,0)") * col("w")).as("_hr"))
       val hMax = hRaw.agg(max(col("_hr")).as("_hm"))
       hub = hRaw.crossJoin(broadcast(hMax))
         .select(col("id"),
@@ -311,6 +297,39 @@ object PageRank {
     if (!small) eT.unpersist()
     out
   }
+
+  /** Integer-exact HITS over a DIRECTED edge list — the second classic
+    * link-analysis signal a crawl scheduler wants next to [[ranks]]'
+    * PageRank: an AUTHORITY score (pointed to by good hubs — fetch its
+    * pages sooner) and a HUB score (points at good authorities — mine
+    * its outlinks harder). PageRank's single score cannot separate the
+    * two roles; directory-style hub hosts and content-authority hosts
+    * are exactly the split a frontier scheduler acts on differently.
+    * The graph is SIMPLE: duplicate rows collapse to one edge and
+    * self-loops drop, then the [[hitsRounds]] kernel runs with unit
+    * weights (every product is h·1).
+    *
+    * @return one row per vertex of `edges`: (id, hub, auth) on the
+    *         integer `scale`.
+    */
+  def hits(edges: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int = 3, scale: Long = Scale): DataFrame =
+    hitsRounds(
+      edges
+        .select(col(srcCol).cast("long").as("s"),
+          col(dstCol).cast("long").as("t"))
+        .filter(col("s") =!= col("t"))
+        .distinct()
+        .withColumn("w", lit(1L)),
+      iterations, scale)
+
+  /** The ranked frame with its 60-bit ids swapped back to string keys
+    * through the broadcast-sized vertex map `v` (id, key): `key`, then
+    * every score column of `scores` in order.
+    */
+  private def withKeys(scores: DataFrame, v: DataFrame): DataFrame =
+    scores.join(v, Seq("id"))
+      .select(col("key") +: scores.columns.toSeq.filter(_ != "id").map(col): _*)
 
   /** Shared key→hash derivation — (s, _sk, t, _tk) rows with
     * self-loops dropped. ONE definition behind [[ranksByKey]],
@@ -359,9 +378,8 @@ object PageRank {
   def hitsByKey(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3, scale: Long = Scale): DataFrame = {
     val h = keyedEdges(edges, srcCol, dstCol)
-    hits(h.select(col("s"), col("t")), "s", "t", iterations, scale)
-      .join(vertexMap(h), Seq("id"))
-      .select(col("key"), col("hub"), col("auth"))
+    withKeys(hits(h.select(col("s"), col("t")), "s", "t", iterations, scale),
+      vertexMap(h))
   }
 
   /** [[ranks]] over STRING-keyed vertices — hosts, canonical URLs,
@@ -396,10 +414,8 @@ object PageRank {
       iterations: Int = 5, dampingPct: Int = 85,
       scale: Long = Scale): DataFrame = {
     val h = keyedEdges(edges, srcCol, dstCol)
-    ranks(symmetrized(h.select(col("s"), col("t"))), "a", "b",
-        iterations, dampingPct, scale)
-      .join(vertexMap(h), Seq("id"))
-      .select(col("key"), col("degree"), col("rank"))
+    withKeys(ranks(symmetrized(h.select(col("s"), col("t"))), "a", "b",
+        iterations, dampingPct, scale), vertexMap(h))
   }
 
   // ------------------------------------------------------------------
@@ -665,9 +681,8 @@ object PageRank {
       indexPath: String, iterations: Int = 5, dampingPct: Int = 85,
       scale: Long = Scale): DataFrame = {
     val (e, v) = edgesFromIndex(s, indexPath, "ranksByKeyAgainstIndex")
-    ranks(symmetrized(e), "a", "b", iterations, dampingPct, scale)
-      .join(v, Seq("id"))
-      .select(col("key"), col("degree"), col("rank"))
+    withKeys(ranks(symmetrized(e), "a", "b", iterations, dampingPct, scale),
+      v)
   }
 
   /** [[hitsByKey]] over a persisted [[writeEdgeIndex]] — the directed
@@ -677,9 +692,7 @@ object PageRank {
       indexPath: String, iterations: Int = 3,
       scale: Long = Scale): DataFrame = {
     val (e, v) = edgesFromIndex(s, indexPath, "hitsByKeyAgainstIndex")
-    hits(e, "s", "t", iterations, scale)
-      .join(v, Seq("id"))
-      .select(col("key"), col("hub"), col("auth"))
+    withKeys(hits(e, "s", "t", iterations, scale), v)
   }
 
   // ------------------------------------------------------------------
@@ -756,10 +769,8 @@ object PageRank {
       weightCol: String, iterations: Int = 5, dampingPct: Int = 85,
       scale: Long = Scale): DataFrame = {
     val h = keyedWeightedEdges(edges, srcCol, dstCol, weightCol)
-    weightedRanks(weightedPairs(h), "a", "b", "w", iterations,
-        dampingPct, scale)
-      .join(vertexMap(h), Seq("id"))
-      .select(col("key"), col("w_degree"), col("rank"))
+    withKeys(weightedRanks(weightedPairs(h), "a", "b", "w", iterations,
+        dampingPct, scale), vertexMap(h))
   }
 
   /** Shared write-side derivation for the weighted family: per-run
@@ -1013,15 +1024,6 @@ object PageRank {
       compactThreshold)(out => compactWeightedEdgeIndex(s, indexPath, out))
   }
 
-  /** [[weightedRanksByKey]] over a persisted
-    * [[writeWeightedEdgeIndex]] — identical output to weighted-ranking
-    * the raw link stream the index was built+folded from, at
-    * INDEX-sized cost: the canonical pair aggregation
-    * ([[weightedPairs]]) both collapses the stored directed pairs to
-    * unordered form AND sum-reconciles the layered runs in one
-    * host-pair-sized exchange. The vertex map always distincts —
-    * layered runs repeat keys, and the map is broadcast-sized.
-    */
   /** Committed reads of a weighted index's two tables: rows filter to
     * the meta's run manifest (orphans from crashed folds are
     * invisible), then project to the consumer columns. ONE definition
@@ -1040,15 +1042,22 @@ object PageRank {
     (e, v)
   }
 
+  /** [[weightedRanksByKey]] over a persisted
+    * [[writeWeightedEdgeIndex]] — identical output to weighted-ranking
+    * the raw link stream the index was built+folded from, at
+    * INDEX-sized cost: the canonical pair aggregation
+    * ([[weightedPairs]]) both collapses the stored directed pairs to
+    * unordered form AND sum-reconciles the layered runs in one
+    * host-pair-sized exchange. The vertex map always distincts —
+    * layered runs repeat keys, and the map is broadcast-sized.
+    */
   def weightedRanksByKeyAgainstIndex(s: org.apache.spark.sql.SparkSession,
       indexPath: String, iterations: Int = 5, dampingPct: Int = 85,
       scale: Long = Scale): DataFrame = {
     val (e, v) =
       weightedFromIndex(s, indexPath, "weightedRanksByKeyAgainstIndex")
-    weightedRanks(weightedPairs(e), "a", "b", "w", iterations,
-        dampingPct, scale)
-      .join(v, Seq("id"))
-      .select(col("key"), col("w_degree"), col("rank"))
+    withKeys(weightedRanks(weightedPairs(e), "a", "b", "w", iterations,
+        dampingPct, scale), v)
   }
 
   /** Weight-scaled HITS over a DIRECTED weighted edge list — the
@@ -1069,80 +1078,27 @@ object PageRank {
     * [[writeWeightedEdgeIndex]]. Self-loops drop ([[hits]]'
     * discipline). With one row per directed pair and unit weights this
     * is EXACTLY [[hits]]: every product is h·1 — DedupSpec pins the
-    * equality. Arithmetic: the h·w products and their sums run in
-    * decimal(38,0) (h ≤ scale = 10^12 and Σw·scale must stay under
-    * 10^38 — anchor-count weights leave ~10^14 total-weight headroom;
-    * the oracle replays the same products in DuckDB HUGEINT), and the
-    * renormalized scores are ≤ `scale`, safely Long.
+    * equality. The rounds and their decimal(38,0) arithmetic are the
+    * shared [[hitsRounds]] kernel.
     *
     * @return one row per vertex: (id, hub, auth) on the integer
     *         `scale`.
     */
   def weightedHits(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iterations: Int = 3,
-      scale: Long = Scale): DataFrame = {
-    require(iterations >= 1)
-    val small = broadcastableEdges(edges)
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("t"),
-        col(weightCol).cast("long").as("w"))
-      .filter(col("s") =!= col("t"))
-      .groupBy(col("s"), col("t")).agg(sum(col("w")).as("w"))
-      // net-positive only: the directed twin of [[weightedPairs]]'
-      // delete-path filter — a signed removal run nets a removed
-      // directed pair to 0 and it drops here
-      .filter(col("w") > 0)
-    val e = (if (small) e0 else e0.repartition(col("s"))).persist()
-    // the hub round joins on t — second partitioned copy (the [[hits]]
-    // bucket-both-ways trade), derived off the cached s-copy; ONE
-    // broadcast copy serves both directions when the graph is small
-    val eT = if (small) e else e.repartition(col("t")).persist()
-    val (eJ, eTJ) = if (small) (broadcast(e), broadcast(eT)) else (e, eT)
-
-    // Rounds carry positive-support frames only, zeros re-attached
-    // once at the end — the [[hits]] round-17 argument verbatim (the
-    // weighted sums multiply h·w, and an absent row contributes to a
-    // sum exactly what a zero row did; no separate vertex frame, the
-    // final full-outer join covers sources ∪ targets = all vertices).
-    var hub = e.select(col("s").as("id")).distinct()
-      .withColumn("h", lit(scale))
-    var auth = hub.select(col("id")).withColumn("a", lit(0L))
-    for (i <- 1 to iterations) {
-      val (prevHub, prevAuth) = (hub, auth)
-      val aRaw = eJ.join(hub.withColumnRenamed("id", "s"), Seq("s"))
-        .groupBy(col("t").as("id"))
-        .agg(sum(col("h").cast("decimal(38,0)") * col("w")).as("_ar"))
-      val aMax = aRaw.agg(max(col("_ar")).as("_am"))
-      // lazy mid-round cut — the [[hits]] round-16 argument
-      auth = aRaw.crossJoin(broadcast(aMax))
-        .select(col("id"),
-          coalesce(expr(s"(_ar * $scale) div _am"), lit(0L)).as("a"))
-        .localCheckpoint(eager = false)
-      val hRaw = eTJ.join(auth.withColumnRenamed("id", "t"), Seq("t"))
-        .groupBy(col("s").as("id"))
-        .agg(sum(col("a").cast("decimal(38,0)") * col("w")).as("_hr"))
-      val hMax = hRaw.agg(max(col("_hr")).as("_hm"))
-      hub = hRaw.crossJoin(broadcast(hMax))
-        .select(col("id"),
-          coalesce(expr(s"(_hr * $scale) div _hm"), lit(0L)).as("h"))
-        .localCheckpoint()
-      // release the dead previous round (the [[hits]] discipline)
-      if (i > 1) {
-        graft.api.Lifecycle.releaseLocalCheckpoint(prevHub)
-        graft.api.Lifecycle.releaseLocalCheckpoint(prevAuth)
-      }
-    }
-    val out = hub.join(auth, Seq("id"), "full_outer")
-      .select(col("id"), coalesce(col("h"), lit(0L)).as("hub"),
-        coalesce(col("a"), lit(0L)).as("auth"))
-      .localCheckpoint()
-    graft.api.Lifecycle.releaseLocalCheckpoint(hub)
-    graft.api.Lifecycle.releaseLocalCheckpoint(auth)
-    e.unpersist()
-    if (!small) eT.unpersist()
-    out
-  }
+      scale: Long = Scale): DataFrame =
+    hitsRounds(
+      edges
+        .select(col(srcCol).cast("long").as("s"),
+          col(dstCol).cast("long").as("t"),
+          col(weightCol).cast("long").as("w"))
+        .filter(col("s") =!= col("t"))
+        .groupBy(col("s"), col("t")).agg(sum(col("w")).as("w"))
+        // net-positive only: the directed twin of [[weightedPairs]]'
+        // delete-path filter — a signed removal run nets a removed
+        // directed pair to 0 and it drops here
+        .filter(col("w") > 0),
+      iterations, scale)
 
   /** [[weightedHits]] over STRING-keyed vertices — the [[hitsByKey]]
     * shape at anchor-volume granularity: keys map through the shared
@@ -1158,10 +1114,8 @@ object PageRank {
       weightCol: String, iterations: Int = 3,
       scale: Long = Scale): DataFrame = {
     val h = keyedWeightedEdges(edges, srcCol, dstCol, weightCol)
-    weightedHits(h.select(col("s"), col("t"), col("w")), "s", "t", "w",
-        iterations, scale)
-      .join(vertexMap(h), Seq("id"))
-      .select(col("key"), col("hub"), col("auth"))
+    withKeys(weightedHits(h.select(col("s"), col("t"), col("w")), "s", "t",
+        "w", iterations, scale), vertexMap(h))
   }
 
   /** [[weightedHitsByKey]] over a persisted [[writeWeightedEdgeIndex]]
@@ -1179,8 +1133,6 @@ object PageRank {
       scale: Long = Scale): DataFrame = {
     val (e, v) =
       weightedFromIndex(s, indexPath, "weightedHitsByKeyAgainstIndex")
-    weightedHits(e, "s", "t", "w", iterations, scale)
-      .join(v, Seq("id"))
-      .select(col("key"), col("hub"), col("auth"))
+    withKeys(weightedHits(e, "s", "t", "w", iterations, scale), v)
   }
 }

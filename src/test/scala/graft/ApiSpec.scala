@@ -2056,4 +2056,37 @@ class ApiSpec extends SparkSpec {
     assert((fixedA intersect fixedB).isEmpty,
       "fixed windows unexpectedly aligned")
   }
+
+  test("Par.run: an interrupted caller still awaits every thunk, then " +
+      "sets its interrupt flag again and rethrows") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val started = new CountDownLatch(1)
+    val returned = new CountDownLatch(1)
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile var finishedAtReturn = false
+    @volatile var flagAtReturn = false
+    @volatile var thrown: Throwable = null
+    val caller = new Thread(() => {
+      try graft.api.Par.run(
+        () => {
+          started.countDown()
+          // a correct Par.run cannot return before this thunk ends, so
+          // this wait times out; an early return releases it at once
+          returned.await(2, TimeUnit.SECONDS)
+          finished.set(true)
+        },
+        () => ())
+      catch { case e: Throwable => thrown = e }
+      finishedAtReturn = finished.get
+      flagAtReturn = Thread.currentThread().isInterrupted
+      returned.countDown()
+    })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join()
+    assert(finishedAtReturn, "Par.run returned while a thunk still ran")
+    assert(flagAtReturn, "the caller's interrupt flag must be set again")
+    assert(thrown.isInstanceOf[InterruptedException], s"got $thrown")
+  }
 }

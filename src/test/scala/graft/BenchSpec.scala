@@ -127,6 +127,24 @@ class BenchSpec extends SparkSpec {
       """\"drained_checkpoints\":77","parsed":null}"""
     val mins3 = BenchHarness.parseBenchMins(tailWithProbe)
     assert(mins3 == Map("q58_keeper_by_quality" -> 0.266), s"got $mins3")
+    // a failed build ships -1.0 in `runs` and its exception in
+    // `build_errors`: it must not become a prior min, and the error
+    // object must not disturb the real runs
+    val tailWithBuildError = """{"n":18,"rc":0,"sf": 0.1,"tail":".62],""" +
+      """\"q150_index_build\":[-1.0],""" +
+      """\"q58_keeper_by_quality\":[0.41,0.266,0.268]},""" +
+      """\"failed\":[\"q150_index_build\"],\"build_errors\":""" +
+      """{\"q150_index_build\":\"java.io.IOException: disk full\"},""" +
+      """\"drained_checkpoints\":77","parsed":null}"""
+    val mins4 = BenchHarness.parseBenchMins(tailWithBuildError)
+    assert(mins4 == Map("q58_keeper_by_quality" -> 0.266), s"got $mins4")
+    // a tail that starts INSIDE probe_jst (its `"probe_jst":{` prefix
+    // cut off): the headless [j,s,t] triples must not read as runs
+    val headlessProbe = """{"n":18,"rc":0,"sf": 0.1,"tail":"64,1275],""" +
+      """\"q58_keeper_by_quality\":[64,64,1275]},""" +
+      """\"drained_checkpoints\":77","parsed":null}"""
+    val mins5 = BenchHarness.parseBenchMins(headlessProbe)
+    assert(mins5.isEmpty, s"got $mins5")
   }
 
   test("loadPriorMins: prefers a same-SF bench_out.json sidecar, falls " +

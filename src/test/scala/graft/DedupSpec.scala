@@ -157,6 +157,61 @@ class DedupSpec extends SparkSpec {
       .ranks(chain.drop("w"), "a", "b", iterations = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(wr == ur, s"uniform-weight ranks must equal unweighted: $wr vs $ur")
+
+    // ranks counts EVERY input row: the duplicate 0-1 is one more unit
+    // of degree and the self-loop 2-2 adds 2 to vertex 2's degree and
+    // feeds 2 its own rank — after ONE round (all ranks S):
+    //   r(0) = 0.15S + 85*( 2*(S div 3) ) div 100        [1->0 twice]
+    //   r(1) = 0.15S + 85*( 2*(S div 2) + S div 3 ) div 100
+    //   r(2) = 0.15S + 85*( S div 3 + 2*(S div 3) ) div 100
+    val multi = Seq((0L, 1L), (0L, 1L), (1L, 2L), (2L, 2L)).toDF("a", "b")
+    val m1 = graft.operators.PageRank.ranks(multi, "a", "b", iterations = 1)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(m1 == Map(
+      0L -> (2L, base + 85L * (2 * (S / 3)) / 100),
+      1L -> (3L, base + 85L * (2 * (S / 2) + S / 3) / 100),
+      2L -> (3L, base + 85L * (3 * (S / 3)) / 100)), s"got $m1")
+    val mu = graft.operators.PageRank
+      .ranks(multi, "a", "b", iterations = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val mw = graft.operators.PageRank
+      .weightedRanks(multi.withColumn("w", lit(1L)), "a", "b", "w",
+        iterations = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(mu == mw, s"duplicate/self-loop rows diverged: $mu vs $mw")
+  }
+
+  test("pagerank sizes its broadcast on the symmetric union it caches, " +
+      "not on the raw edge frame") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join,
+      LogicalPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val s = spark.newSession()
+    import s.implicits._
+    val edges = (0L until 64L).map(i => (i, (i * 7 + 1) % 64)).toDF("a", "b")
+    // above the raw frame, below its two orientations: the cached
+    // union is too big, so the edges must stay pre-partitioned
+    val raw = edges.queryExecution.optimizedPlan.stats.sizeInBytes
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (raw * 3 / 2).toString)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    s.experimental.extraStrategies =
+      Seq(new org.apache.spark.sql.execution.SparkStrategy {
+        def apply(p: LogicalPlan) = { seen += p; Nil }
+      })
+    graft.operators.PageRank.ranks(edges, "a", "b", iterations = 2).collect()
+    val hinted = seen.exists(_.exists {
+      case j: Join => (j.hint.leftHint ++ j.hint.rightHint)
+        .exists(_.strategy.contains(BROADCAST))
+      case _ => false
+    })
+    assert(!hinted, "edges broadcast although their cached union " +
+      "exceeds autoBroadcastJoinThreshold")
+    val partitioned = seen.exists(_.exists {
+      case r: InMemoryRelation =>
+        r.cacheBuilder.cachedPlan.toString.contains("REPARTITION_BY_COL")
+      case _ => false
+    })
+    assert(partitioned, "the cached edges must be pre-partitioned on s")
   }
 
   test("pagerank ranksByKey: string vertices rank exactly as their " +
@@ -1378,6 +1433,14 @@ class DedupSpec extends SparkSpec {
       PageRank.weightedHitsByKey(once, "src", "dst", "w"))
     assert(weighted == unweighted,
       "unit weights must reproduce the unweighted HITS exactly")
+    // hits runs on the SIMPLE graph: duplicate rows and self-loops
+    // (also one whose vertex has no other edge) change nothing
+    val simple = Seq((1L, 3L), (2L, 3L), (2L, 4L))
+    val noisy = simple ++ Seq((2L, 3L), (2L, 3L), (4L, 4L), (5L, 5L))
+    val gotNoisy = PageRank.hits(noisy.toDF("s", "t"), "s", "t").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(gotNoisy == refHits(simple.toSet, 3, PageRank.Scale),
+      s"duplicates and self-loops must drop before iteration: $gotNoisy")
     // uniform x7 scaling is invariant: floor(7x*s / 7m) = floor(x*s/m)
     assert(hitsSet(PageRank.weightedHitsByKey(
         once.withColumn("w", lit(7L)), "src", "dst", "w")) == weighted,
