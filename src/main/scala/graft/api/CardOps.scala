@@ -21,15 +21,14 @@ import org.apache.spark.sql.functions._
   *   - `$path/stats` = (source, lang, quality, n_docs, n_tokens,
   *     `__run`) leaf partial sums, one appended run per fold;
   *     `$path/meta` = the SUM families' committed-run manifest
-  *     ([[IndexMaintenance.writeIndexMetaRunsTags]] — append THEN
-  *     commit, orphans from crashed folds invisible to every read)
-  *     plus the logical `committed_tags` manifest for the streaming
-  *     maintainer below.
-  *   - Reconcile is exact by SUM-additivity, applied at read inside
-  *     [[reconciledLeaves]]' per-leaf aggregation; like the weighted
-  *     edge family there is NO layers<=1 fast path to protect — the
-  *     consumer aggregates to leaves anyway, and that aggregation IS
-  *     the cross-run reconcile. `layers` only schedules compaction.
+  *     ([[IndexMaintenance.Manifest.RunsTags]] — append THEN commit,
+  *     orphans from crashed folds invisible to every read) plus the
+  *     logical `committed_tags` manifest for the streaming maintainer
+  *     below.
+  *   - Reconcile is exact by SUM-additivity: the kernel's
+  *     [[IndexMaintenance.Reconcile.Summed]] per-leaf aggregation,
+  *     applied at read while layered ([[reconciledLeaves]]) and made
+  *     durable by compaction.
   *   - Delete path = signed runs for free
   *     ([[foldRemovalsIntoCardIndex]]): a dedup pass's drops or a
   *     takedown fold in with NEGATED counts, so the card tracks the
@@ -64,6 +63,19 @@ import org.apache.spark.sql.functions._
   */
 object CardOps {
 
+  /** The card index family: `stats` = (source, lang, quality, n_docs,
+    * n_tokens, `__run`) leaf partial sums, one appended run per fold,
+    * one file sorted by leaf; meta = the committed-run AND tag
+    * manifests. Reconcile is the signed per-leaf SUM with the
+    * net-positive filter (a fully-removed leaf reads as absent).
+    */
+  private[graft] val CardIndex = IndexMaintenance.Family("card",
+    "writeCardIndex", Seq("prefix_partitions"), "run and tag manifests",
+    IndexMaintenance.Manifest.RunsTags,
+    _ => Seq(IndexMaintenance.Table("stats", Seq("source", "lang", "quality"),
+      1, IndexMaintenance.Reconcile.Summed(Seq("source", "lang", "quality"),
+        Seq("n_docs", "n_tokens"), netPositive = true))))
+
   /** One fold's leaf partial sums over `df`: per (source, lang,
     * quality) doc and token counts, columns CANONICALIZED to (source,
     * lang, quality, n_docs, n_tokens) so the stored schema does not
@@ -79,13 +91,8 @@ object CardOps {
         col("quality"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
 
-  private def writeStatsRun(leaves: DataFrame, indexPath: String,
-      run: String, append: Boolean): Unit = {
-    val write = if (append) graft.jobs.Sinks.layoutAppend _
-    else graft.jobs.Sinks.layout _
-    write(leaves.withColumn("__run", lit(run)), s"$indexPath/stats",
-      Seq.empty, Seq("source", "lang", "quality"), 1)
-  }
+  private def statsRun(leaves: DataFrame): IndexMaintenance.Delta =
+    IndexMaintenance.Delta("stats" -> leaves)
 
   /** Build the card index at `path` from a corpus version: the leaf
     * partial sums land as one committed run, meta carries the run
@@ -96,43 +103,30 @@ object CardOps {
     */
   def writeCardIndex(df: DataFrame, idCol: String, textCol: String,
       sourceCol: String, langCol: String, path: String,
-      stopword: String = " the "): Unit = {
-    val run = IndexMaintenance.newRunId()
-    writeStatsRun(leafStats(df, idCol, textCol, sourceCol, langCol,
-      stopword), path, run, append = false)
-    IndexMaintenance.writeIndexMetaRunsTags(df.sparkSession, path,
-      prefixPartitions = 1, layers = 1, Seq(run), Seq.empty)
-  }
+      stopword: String = " the "): Unit =
+    IndexMaintenance.write(df.sparkSession, path, CardIndex,
+      "prefix_partitions" -> 1)(_ =>
+      statsRun(leafStats(df, idCol, textCol, sourceCol, langCol, stopword)))
 
   /** Fold a DELTA of documents into a persisted [[writeCardIndex]] IN
     * PLACE with O(delta) cost: the delta's leaf partial sums land as
     * their own run under a fresh `__run` id, and the meta COMMITS the
-    * run after the append (the SUM families' crash contract — an
-    * uncommitted run is invisible). `tag = Some(t)` is the
-    * exactly-once form: a tag already in the meta's logical manifest
-    * makes the whole fold a NO-OP (returns false), and a committed
-    * fold records it — the streaming maintainer's re-delivery
-    * discipline. Single-writer per index (use [[maintainCardIndex]] /
-    * [[maintainCardIndexTagged]] for the locked form).
+    * run after the append (an uncommitted run is invisible).
+    * `tag = Some(t)` is the exactly-once form: a tag already in the
+    * meta's logical manifest makes the whole fold a NO-OP (returns
+    * false), and a committed fold records it — the streaming
+    * maintainer's re-delivery discipline. Single-writer per index (use
+    * [[maintainCardIndex]] / [[maintainCardIndexTagged]] for the
+    * locked form).
     *
     * @return true iff the fold applied (always, when untagged).
     */
   def foldIntoCardIndex(df: DataFrame, idCol: String, textCol: String,
       sourceCol: String, langCol: String, indexPath: String,
-      stopword: String = " the ", tag: Option[String] = None): Boolean = {
-    val s = df.sparkSession
-    val (prefixPartitions, layers, runs, tags) = IndexMaintenance
-      .readIndexMetaRunsTags(s, indexPath, "foldIntoCardIndex")
-    if (tag.exists(tags.contains)) false
-    else {
-      val run = IndexMaintenance.newRunId()
-      writeStatsRun(leafStats(df, idCol, textCol, sourceCol, langCol,
-        stopword), indexPath, run, append = true)
-      IndexMaintenance.writeIndexMetaRunsTags(s, indexPath,
-        prefixPartitions, layers + 1, runs :+ run, tags ++ tag)
-      true
-    }
-  }
+      stopword: String = " the ", tag: Option[String] = None): Boolean =
+    IndexMaintenance.fold(df.sparkSession, indexPath, CardIndex,
+      "foldIntoCardIndex", tag)(_ =>
+      statsRun(leafStats(df, idCol, textCol, sourceCol, langCol, stopword))).isDefined
 
   /** The card family's DELETE path — a SIGNED run the SUM reconcile
     * absorbs for free: `df` holds the REMOVED documents (a dedup
@@ -142,58 +136,34 @@ object CardOps {
     * docs previously counted in — over-removal is a caller error
     * whose residual negative net reads as absent and is dropped at
     * compaction (the weighted-edge epoch contract). Crash shape = the
-    * fold's (per-run manifest; an uncommitted removal run is
-    * invisible).
+    * fold's (an uncommitted removal run is invisible).
     */
   def foldRemovalsIntoCardIndex(df: DataFrame, idCol: String,
       textCol: String, sourceCol: String, langCol: String,
       indexPath: String, stopword: String = " the "): Unit = {
-    val s = df.sparkSession
-    val (prefixPartitions, layers, runs, tags) = IndexMaintenance
-      .readIndexMetaRunsTags(s, indexPath, "foldRemovalsIntoCardIndex")
-    val run = IndexMaintenance.newRunId()
-    writeStatsRun(
-      leafStats(df, idCol, textCol, sourceCol, langCol, stopword)
+    IndexMaintenance.fold(df.sparkSession, indexPath, CardIndex,
+      "foldRemovalsIntoCardIndex")(_ =>
+      statsRun(leafStats(df, idCol, textCol, sourceCol, langCol, stopword)
         .select(col("source"), col("lang"), col("quality"),
-          (-col("n_docs")).as("n_docs"), (-col("n_tokens")).as("n_tokens")),
-      indexPath, run, append = true)
-    IndexMaintenance.writeIndexMetaRunsTags(s, indexPath,
-      prefixPartitions, layers + 1, runs :+ run, tags)
+          (-col("n_docs")).as("n_docs"), (-col("n_tokens")).as("n_tokens"))))
+    ()
   }
 
   /** Compact a layered card index back to ONE run: per-leaf sums over
     * COMMITTED rows made durable (orphans from crashed folds dropped
     * from disk; leaves whose net doc count is <= 0 dropped — signed
     * removal runs become durable deletions and over-removal's
-    * residual balance does not carry), meta reset to layers=1 with a
-    * single-run manifest and the TAG MANIFEST PRESERVED (a batch
-    * re-delivered after a compaction must still no-op). Identical
-    * reads before and after.
+    * residual balance does not carry), a single-run manifest and the
+    * TAG MANIFEST PRESERVED (a batch re-delivered after a compaction
+    * must still no-op). Identical reads before and after.
     */
   def compactCardIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactCardIndex: outPath must differ from indexPath")
-    val (prefixPartitions, _, runs, tags) = IndexMaintenance
-      .readIndexMetaRunsTags(s, indexPath, "compactCardIndex")
-    val run = IndexMaintenance.newRunId()
-    writeStatsRun(
-      IndexMaintenance.committedOnly(
-          s.read.parquet(s"$indexPath/stats"), runs)
-        .groupBy(col("source"), col("lang"), col("quality"))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("n_tokens")).as("n_tokens"))
-        .filter(col("n_docs") > 0),
-      outPath, run, append = false)
-    IndexMaintenance.writeIndexMetaRunsTags(s, outPath,
-      prefixPartitions, 1, Seq(run), tags)
-  }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.compact(s, indexPath, outPath, CardIndex,
+      "compactCardIndex")
 
-  /** The family's maintain* entry point — the
-    * [[graft.operators.PageRank.maintainWeightedEdgeIndex]] policy
-    * verbatim: crash-recover at entry, O(delta) fold,
-    * compact-and-swap iff post-fold layers reach `compactThreshold`,
-    * all inside the writer lock. NOT reader-safe across the swap.
+  /** The family's maintain* entry point ([[IndexMaintenance.maintain]]).
+    * NOT reader-safe across the swap.
     *
     * @return true iff a compaction ran.
     */
@@ -201,15 +171,11 @@ object CardOps {
       sourceCol: String, langCol: String, indexPath: String,
       stopword: String = " the ",
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = df.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoCardIndex(df, idCol, textCol, sourceCol, langCol,
-        indexPath, stopword)
-      compactIfDue(s, indexPath, compactThreshold)
-    }
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    IndexMaintenance.maintain(df.sparkSession, indexPath, CardIndex,
+      "maintainCardIndex", compactThreshold)(_ =>
+      statsRun(leafStats(df, idCol, textCol, sourceCol, langCol, stopword)))
+      .contains(true)
 
   /** [[maintainCardIndex]] with the exactly-once tag: returns true
     * iff the fold APPLIED (the tag was new — a replayed tag no-ops
@@ -220,24 +186,11 @@ object CardOps {
       textCol: String, sourceCol: String, langCol: String,
       indexPath: String, tag: String, stopword: String = " the ",
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = df.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      val applied = foldIntoCardIndex(df, idCol, textCol, sourceCol,
-        langCol, indexPath, stopword, Some(tag))
-      if (applied) compactIfDue(s, indexPath, compactThreshold)
-      applied
-    }
-  }
-
-  private def compactIfDue(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, compactThreshold: Int): Boolean = {
-    val (_, layers, _, _) = IndexMaintenance
-      .readIndexMetaRunsTags(s, indexPath, "maintainCardIndex")
-    IndexMaintenance.compactIfLayered(s, indexPath, layers,
-      compactThreshold)(out => compactCardIndex(s, indexPath, out))
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    IndexMaintenance.maintain(df.sparkSession, indexPath, CardIndex,
+      "maintainCardIndex", compactThreshold, Some(tag))(_ =>
+      statsRun(leafStats(df, idCol, textCol, sourceCol, langCol, stopword)))
+      .isDefined
 
   /** Committed, reconciled leaf rows of a card index: runs filter to
     * the meta's manifest, per-leaf SUM reconcile, net-positive only
@@ -245,16 +198,10 @@ object CardOps {
     * read-side half). Broadcast-sized by construction.
     */
   def reconciledLeaves(s: org.apache.spark.sql.SparkSession,
-      indexPath: String): DataFrame = {
-    val (_, _, runs, _) = IndexMaintenance
-      .readIndexMetaRunsTags(s, indexPath, "reconciledLeaves")
-    IndexMaintenance.committedOnly(
-        s.read.parquet(s"$indexPath/stats"), runs)
-      .groupBy(col("source"), col("lang"), col("quality"))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"))
-      .filter(col("n_docs") > 0)
-  }
+      indexPath: String): DataFrame =
+    IndexMaintenance.read(s, indexPath, CardIndex,
+      IndexMaintenance.readMeta(s, indexPath, CardIndex, "reconciledLeaves"),
+      "stats", "reconciledLeaves")
 
   /** [[TextOps.datasetCard]] off the persisted index — identical
     * output to running the batch card over every document the index

@@ -190,319 +190,164 @@ object DedupOps {
       jaccardX1000Threshold)
   }
 
+  /** The minhash index family: `buckets` = the capped (band, bkey,
+    * `__cs`) LSH buckets WITH over-cap tombstones, partitioned by `__bp`
+    * (`xxhash64(band, bkey) mod prefix_partitions`) and (band, bkey)-
+    * sorted; `hashed` = (doc_old, hs_old) shingle sets sorted by id for
+    * the verify join; meta = (prefix_partitions, max_bucket, layers).
+    */
+  private[graft] val MinhashIndex = IndexMaintenance.Family("minhash",
+    "writeMinhashIndex", Seq("prefix_partitions", "max_bucket"),
+    "prefix/cap geometry and layer count", IndexMaintenance.Manifest.Layers,
+    _ => Seq(bucketTable(withPrefix = true),
+      IndexMaintenance.Table("hashed", Seq("doc_old"), 8)))
+
+  /** The (band, bkey, `__cs`) bucket table shared by the minhash,
+    * fingerprint and sign families. */
+  private[graft] def bucketTable(withPrefix: Boolean): IndexMaintenance.Table =
+    IndexMaintenance.Table("buckets", Seq("band", "bkey"), 8,
+      IndexMaintenance.Reconcile.Capped,
+      if (withPrefix) Some("__bp" -> xxhash64(col("band"), col("bkey")))
+      else None)
+
+  /** The family's row derivation over one persisted shingle pass (the
+    * NearDupIngest.index single-scan discipline): tombstones INCLUDED
+    * ([[bandBucketsAll]]) — a fold must see which buckets are already
+    * over cap. */
+  private def minhashRows[T](df: DataFrame, idCol: String,
+      textCol: String)(go: (IndexMaintenance.Meta =>
+        IndexMaintenance.Delta) => T): T = {
+    val hashed = shingleHashed(df, idCol, textCol).persist()
+    try go(m => IndexMaintenance.Delta(
+      "buckets" -> bandBucketsAll(withBandKeys(hashed)
+        .select(col(idCol), col("band"), col("bkey")), idCol,
+        m.int("max_bucket")),
+      "hashed" -> hashed.select(col(idCol).as("doc_old"),
+        col("hs").as("hs_old"))))
+    finally { hashed.unpersist(); () }
+  }
+
   /** Materialize the corpus side of [[minhashPairsAgainstIndex]] to
-    * parquet: `$path/buckets` = the capped (band, bkey, __cs) LSH
-    * bucket index PARTITIONED by `__bp` (a band-hash prefix:
-    * `xxhash64(band, bkey) mod prefixPartitions`) and sorted by
-    * (band, bkey) within partitions, `$path/hashed` = (doc_old,
-    * hs_old) shingle sets sorted by id for the verify join,
-    * `$path/meta` = one row recording `prefix_partitions` so probes
-    * derive the SAME prefix without a caller-side knob to keep in
-    * sync. This is the "build once, probe per ingest batch" contract
-    * made literal — at 100TB the index build is the one full-corpus
-    * LSH scan per corpus version ([[minhashPairsAgainst]] re-derives
-    * it per CALL, NearDupIngest.index per SESSION), and every daily
-    * delta pays only the probe. The `__bp` layout is what makes the
-    * probe's index-scan term sub-linear in the INDEX: a delta touching
-    * k of the prefixes reads k/prefixPartitions of the bucket files
-    * (directory-level partition pruning), and the (band, bkey) sort
-    * gives row-group min/max pruning within each file. Both frames are
-    * tiny next to the corpus: ids + 60-bit hash sets, never text.
+    * parquet ([[MinhashIndex]]'s layout). This is the "build once,
+    * probe per ingest batch" contract made literal — at 100TB the index
+    * build is the one full-corpus LSH scan per corpus version
+    * ([[minhashPairsAgainst]] re-derives it per CALL, NearDupIngest.index
+    * per SESSION), and every daily delta pays only the probe. The `__bp`
+    * layout makes the probe's index-scan term sub-linear in the INDEX: a
+    * delta touching k of the prefixes reads k/prefixPartitions of the
+    * bucket files, and the (band, bkey) sort gives row-group min/max
+    * pruning within each file. Both tables are tiny next to the corpus:
+    * ids + 60-bit hash sets, never text.
     */
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, maxBucket: Int = DefaultMaxBucket,
       prefixPartitions: Int = 64): Unit = {
     require(prefixPartitions >= 1,
       s"writeMinhashIndex: prefixPartitions $prefixPartitions < 1")
-    // one persisted shingle pass feeds both outputs (the
-    // NearDupIngest.index single-scan discipline)
-    val hashed = shingleHashed(corpus, idCol, textCol).persist()
-    try {
-      // the two tables are independent given the shared shingle cache
-      // — overlap their writes (guide §2.6, graft.api.Par)
-      Par.run(
-        () => graft.jobs.Sinks.layout(
-          // tombstones INCLUDED (bandBucketsAll): the fold operator
-          // needs to see which buckets are already over cap
-          bandBucketsAll(withBandKeys(hashed)
-            .select(col(idCol), col("band"), col("bkey")), idCol, maxBucket)
-            .withColumn("__bp",
-              pmod(xxhash64(col("band"), col("bkey")), lit(prefixPartitions.toLong))),
-          s"$path/buckets", partitionCols = Seq("__bp"),
-          sortCols = Seq("band", "bkey"), numFiles = 8),
-        () => graft.jobs.Sinks.layout(
-          hashed.select(col(idCol).as("doc_old"), col("hs").as("hs_old")),
-          s"$path/hashed", partitionCols = Nil,
-          sortCols = Seq("doc_old"), numFiles = 8))
-      writeMinhashMeta(corpus.sparkSession, path, prefixPartitions,
-        maxBucket, 1)
-    } finally hashed.unpersist()
-  }
-
-  /** The exact from-scratch cap arithmetic over two (band, bkey,
-    * `__cs`) bucket frames WITH tombstones: a tombstone on either side
-    * persists (adding docs cannot shrink a bucket), an under-cap union
-    * that crosses the cap becomes one, a one-sided bucket keeps its
-    * list. The `_has` indicators distinguish "row absent" from "row
-    * present with a null (tombstone) list" across the full-outer
-    * join. Shared by the minhash and sign-index folds.
-    */
-  private[graft] def mergeCappedBuckets(oldBuckets: DataFrame,
-      deltaBuckets: DataFrame, maxBucket: Int): DataFrame = {
-    val listType = deltaBuckets.schema("__cs").dataType
-    val o = oldBuckets.select(col("band"), col("bkey"),
-      col("__cs").as("_ocs"), lit(true).as("_ohas"))
-    val d = deltaBuckets.select(col("band"), col("bkey"),
-      col("__cs").as("_dcs"), lit(true).as("_dhas"))
-    o.join(d, Seq("band", "bkey"), "full_outer")
-      .select(col("band"), col("bkey"),
-        when(col("_ohas").isNotNull && col("_ocs").isNull ||
-             col("_dhas").isNotNull && col("_dcs").isNull,
-          lit(null).cast(listType))
-        .when(col("_ohas").isNotNull && col("_dhas").isNotNull,
-          when(size(concat(col("_ocs"), col("_dcs"))) > maxBucket,
-            lit(null).cast(listType))
-          .otherwise(concat(col("_ocs"), col("_dcs"))))
-        .when(col("_ohas").isNotNull, col("_ocs"))
-        .otherwise(col("_dcs")).as("__cs"))
+    minhashRows(corpus, idCol, textCol)(
+      IndexMaintenance.write(corpus.sparkSession, path, MinhashIndex,
+        "prefix_partitions" -> prefixPartitions, "max_bucket" -> maxBucket))
   }
 
   /** N-way reconcile of LAYERED (band, bkey, `__cs`) bucket runs — the
-    * read side of the O(delta)-write fold ([[foldIntoMinhashIndex]]'s
-    * in-place overload, [[graft.jobs.Sinks.layoutAppend]]): each
-    * append lands the delta's capped buckets as its own run, so a key
-    * may appear once per layer; one grouped pass restores the exact
-    * from-scratch semantics. The arithmetic is order-free (unlike the
-    * 2-way [[mergeCappedBuckets]], which encodes sides): a tombstone
-    * in ANY layer means that layer alone was over cap, so the union
-    * is too; otherwise the concat of disjoint per-layer member lists
-    * IS the full bucket, tombstoned iff it crosses the cap — term for
-    * term what `capped_list` computes over the union corpus.
-    * `collect_list` skips nulls, so tombstones are detected by an
-    * explicit indicator, not by their (absent) lists.
+    * [[IndexMaintenance.Reconcile.Capped]] rule: each append lands the
+    * delta's capped buckets as its own run, so a key may appear once
+    * per layer; one grouped pass restores the exact from-scratch
+    * semantics. The arithmetic is order-free: a tombstone in ANY layer
+    * means that layer alone was over cap, so the union is too;
+    * otherwise the concat of the per-layer member lists IS the full
+    * bucket, tombstoned iff it crosses the cap — term for term what
+    * `capped_list` computes over the union corpus. Members are
+    * distinct'ed, so a retried delta's duplicate run cannot inflate a
+    * bucket past the cap. `collect_list` skips nulls, so tombstones
+    * are detected by an explicit indicator, not by their (absent)
+    * lists.
     */
   private[graft] def mergeLayeredBuckets(buckets: DataFrame,
       maxBucket: Int): DataFrame = {
     val listType = buckets.schema("__cs").dataType
     buckets.groupBy(col("band"), col("bkey"))
       .agg(max(when(col("__cs").isNull, 1).otherwise(0)).as("_tomb"),
-        flatten(collect_list(col("__cs"))).as("_all"))
+        array_distinct(flatten(collect_list(col("__cs")))).as("_all"))
       .select(col("band"), col("bkey"),
         when(col("_tomb") === 1 || size(col("_all")) > maxBucket,
           lit(null).cast(listType))
           .otherwise(col("_all")).as("__cs"))
   }
 
-  /** (prefix_partitions, max_bucket, layers) off a
-    * [[writeMinhashIndex]] meta. BOTH geometry fields are REQUIRED
-    * with a named rebuild-once error: a pre-tombstone index (no
-    * `max_bucket` in meta) has no tombstone rows, so folding it would
-    * silently resurrect over-cap buckets with delta-only members —
-    * violating fold==rebuild with no error anywhere (the
-    * foldIntoBm25Index / foldIntoSignIndex posture, applied here).
-    * `layers` defaults to 1 (single-run indexes predate the column).
-    */
-  private def readMinhashMeta(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (Int, Int, Int) = {
-    val metaDf =
-      try s.read.parquet(s"$indexPath/meta")
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"$op: cannot read $indexPath/meta — the fold must " +
-            "reproduce the build's prefix/cap geometry", e)
-      }
-    require(metaDf.columns.contains("max_bucket"),
-      s"$op: $indexPath/meta lacks max_bucket — a pre-tombstone index " +
-        "records no over-cap buckets, so a fold would silently " +
-        "resurrect them with delta-only members; rebuild it once with " +
-        "the current writeMinhashIndex")
-    val row = metaDf.head(1).headOption.getOrElse(
-      throw new IllegalStateException(s"$op: $indexPath/meta is empty"))
-    val layers =
-      if (metaDf.columns.contains("layers"))
-        row.getAs[Number]("layers").intValue()
-      else 1
-    (row.getAs[Number]("prefix_partitions").intValue(),
-      row.getAs[Number]("max_bucket").intValue(), layers)
-  }
-
-  private def writeMinhashMeta(s: org.apache.spark.sql.SparkSession,
-      path: String, prefixPartitions: Int, maxBucket: Int,
-      layers: Int): Unit =
-    s.range(1)
-      .select(lit(prefixPartitions).as("prefix_partitions"),
-        lit(maxBucket).as("max_bucket"), lit(layers).as("layers"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-
   /** Fold a DELTA of new documents into a persisted
-    * [[writeMinhashIndex]] WITHOUT re-scanning the corpus text, and
-    * WITHOUT rewriting the index: the delta's capped buckets and
-    * shingle sets land as their OWN sorted parquet runs
-    * ([[graft.jobs.Sinks.layoutAppend]]) inside the index's existing
-    * `__bp` directory layout — write cost O(delta) bytes, the daily
-    * index-maintenance operation at 100 TB (the compacting overload
-    * below writes O(index) bytes per fold, which at scale would
-    * rewrite the whole signature store every day). `layers` in meta
-    * counts the runs; readers reconcile per-key duplicates through
-    * [[mergeLayeredBuckets]] (exact fold==rebuild arithmetic, q110's
-    * driver-checked hash), and the `hashed/` runs need NO reconcile —
-    * disjoint delta ids make the row-set union literal. Each appended
-    * run keeps its own (band, bkey) row-group stats, so point/range
-    * pruning still works per file; periodic [[compactMinhashIndex]]
-    * folds the runs back to one when their count starts to matter
-    * (the LSM posture: append daily, compact weekly).
+    * [[writeMinhashIndex]] WITHOUT re-scanning the corpus text and
+    * WITHOUT rewriting the index ([[IndexMaintenance.fold]]): the
+    * delta's capped buckets and shingle sets land as their OWN sorted
+    * runs inside the existing `__bp` layout — write cost O(delta)
+    * bytes, the daily index-maintenance operation at 100 TB. Readers
+    * reconcile per-key duplicates through [[mergeLayeredBuckets]]
+    * (exact fold==rebuild arithmetic, q110's driver-checked hash); the
+    * `hashed` runs need none (disjoint delta ids). Periodic
+    * [[compactMinhashIndex]] folds the runs back to one (append daily,
+    * compact weekly).
     *
-    * Crash consistency (applies to ALL FOUR in-place folds): the
-    * appends and the meta rewrite are separate filesystem commits, so
-    * a crash mid-fold can leave a partial delta (appended runs the
-    * meta's layer count does not yet cover). The operational contract
-    * is single-writer with restore-on-failure: treat the fold as a job
-    * that either completes or rolls back to the previous index copy
-    * (never retried in place — re-appending the delta would duplicate
-    * its rows). Callers needing an atomic fold use the to-`outPath`
-    * overloads, which build a FRESH directory and leave the old index
-    * untouched — O(index) writes is the price of that atomicity, which
-    * is exactly the trade a transactional table layout (manifest
-    * commit) would dissolve at the storage layer, out of scope here.
+    * Crash consistency (the [[IndexMaintenance.Manifest.Layers]]
+    * families): the appends and the meta rewrite are separate
+    * filesystem commits. The operational contract is single-writer
+    * with restore-on-failure; callers needing an atomic fold use the
+    * to-`outPath` overload, which builds a FRESH directory and leaves
+    * the old index untouched — O(index) writes is the price of that
+    * atomicity.
     */
   def foldIntoMinhashIndex(delta: DataFrame, idCol: String,
       textCol: String, indexPath: String): Unit = {
-    val s = delta.sparkSession
-    val (prefixPartitions, maxBucket, layers) =
-      readMinhashMeta(s, indexPath, "foldIntoMinhashIndex")
-    val hashed = shingleHashed(delta, idCol, textCol).persist()
-    try {
-      // independent appends off the shared shingle cache — overlapped
-      // (guide §2.6); the meta bump stays AFTER both (the count-family
-      // crash ordering)
-      Par.run(
-        () => graft.jobs.Sinks.layoutAppend(
-          bandBucketsAll(withBandKeys(hashed)
-            .select(col(idCol), col("band"), col("bkey")), idCol, maxBucket)
-            .withColumn("__bp",
-              pmod(xxhash64(col("band"), col("bkey")),
-                lit(prefixPartitions.toLong))),
-          s"$indexPath/buckets", partitionCols = Seq("__bp"),
-          sortCols = Seq("band", "bkey"), numFiles = 8),
-        () => graft.jobs.Sinks.layoutAppend(
-          hashed.select(col(idCol).as("doc_old"), col("hs").as("hs_old")),
-          s"$indexPath/hashed", partitionCols = Nil,
-          sortCols = Seq("doc_old"), numFiles = 8))
-      writeMinhashMeta(s, indexPath, prefixPartitions, maxBucket, layers + 1)
-    } finally hashed.unpersist()
+    minhashRows(delta, idCol, textCol)(IndexMaintenance.fold(
+      delta.sparkSession, indexPath, MinhashIndex, "foldIntoMinhashIndex"))
+    ()
   }
 
-  /** Fold-and-COMPACT: delta + old index merged into a fresh
-    * single-layer index at `outPath` — O(index) read AND write, the
-    * right cost class when the fold cadence is the compaction cadence
-    * (small indexes, tests, one-shot migrations). For the daily path
-    * at scale use the in-place overload above (O(delta) writes) and
-    * compact separately. Exactness: identical probes to a
-    * from-scratch `writeMinhashIndex(corpus ∪ delta)` (DedupSpec
-    * parity) — tombstone/cap arithmetic via [[mergeCappedBuckets]],
-    * with a layered old index first reconciled through
-    * [[mergeLayeredBuckets]] so both fold shapes compose.
+  /** Fold-and-COMPACT ([[IndexMaintenance.foldTo]]): delta + old index
+    * merged into a fresh single-layer index at `outPath` — O(index)
+    * read AND write, the right cost class when the fold cadence is the
+    * compaction cadence (small indexes, tests, one-shot migrations).
+    * Identical probes to a from-scratch `writeMinhashIndex(corpus ∪
+    * delta)` (DedupSpec parity).
     */
   def foldIntoMinhashIndex(delta: DataFrame, idCol: String,
-      textCol: String, indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "foldIntoMinhashIndex: outPath must differ from indexPath (the " +
-        "merge reads the old index lazily while writing the new one)")
-    val s = delta.sparkSession
-    val (prefixPartitions, maxBucket, layers) =
-      readMinhashMeta(s, indexPath, "foldIntoMinhashIndex")
-    val hashed = shingleHashed(delta, idCol, textCol).persist()
-    try {
-      val deltaBuckets = bandBucketsAll(withBandKeys(hashed)
-        .select(col(idCol), col("band"), col("bkey")), idCol, maxBucket)
-      val oldRaw = s.read.parquet(s"$indexPath/buckets").drop("__bp")
-      val oldBuckets =
-        if (layers > 1) mergeLayeredBuckets(oldRaw, maxBucket) else oldRaw
-      val merged = mergeCappedBuckets(oldBuckets, deltaBuckets, maxBucket)
-      graft.jobs.Sinks.layout(
-        merged.withColumn("__bp",
-          pmod(xxhash64(col("band"), col("bkey")),
-            lit(prefixPartitions.toLong))),
-        s"$outPath/buckets", partitionCols = Seq("__bp"),
-        sortCols = Seq("band", "bkey"), numFiles = 8)
-      graft.jobs.Sinks.layout(
-        s.read.parquet(s"$indexPath/hashed").unionByName(
-          hashed.select(col(idCol).as("doc_old"), col("hs").as("hs_old"))),
-        s"$outPath/hashed", partitionCols = Nil,
-        sortCols = Seq("doc_old"), numFiles = 8)
-      writeMinhashMeta(s, outPath, prefixPartitions, maxBucket, 1)
-    } finally hashed.unpersist()
-  }
+      textCol: String, indexPath: String, outPath: String): Unit =
+    minhashRows(delta, idCol, textCol)(IndexMaintenance.foldTo(
+      delta.sparkSession, indexPath, outPath, MinhashIndex,
+      "foldIntoMinhashIndex"))
 
-  /** The maintenance policy as one call: in-place O(delta) fold, then
-    * compact-and-swap iff the post-fold layer count has reached
-    * `compactThreshold` ([[IndexMaintenance.compactIfLayered]] — the
-    * "append daily, compact weekly" cadence without a separate
-    * scheduler). Probes are identical before and after the compaction
-    * (reconcile-at-read == reconcile-at-compact). Returns true when
-    * this fold triggered the compaction.
+  /** The maintenance policy as one call ([[IndexMaintenance.maintain]]):
+    * in-place O(delta) fold, then compact-and-swap iff the post-fold
+    * layer count has reached `compactThreshold`. Probes are identical
+    * before and after the compaction. Returns true when this fold
+    * triggered the compaction.
     */
   def maintainMinhashIndex(delta: DataFrame, idCol: String,
       textCol: String, indexPath: String,
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = delta.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoMinhashIndex(delta, idCol, textCol, indexPath)
-      val (_, _, layers) =
-        readMinhashMeta(s, indexPath, "maintainMinhashIndex")
-      IndexMaintenance.compactIfLayered(s, indexPath, layers,
-        compactThreshold)(out => compactMinhashIndex(s, indexPath, out))
-    }
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    minhashRows(delta, idCol, textCol)(IndexMaintenance.maintain(
+      delta.sparkSession, indexPath, MinhashIndex, "maintainMinhashIndex",
+      compactThreshold)).contains(true)
 
-  /** Compact a layered index ([[foldIntoMinhashIndex]] in-place folds)
-    * back to ONE sorted run per side: buckets reconciled through
-    * [[mergeLayeredBuckets]], hashed rows re-laid into globally sorted
-    * files, meta reset to layers=1. O(index) read and write — the
-    * amortized cost the daily O(delta) appends defer; identical probe
-    * results before and after (reconcile-at-read == reconcile-at-
-    * compact, same arithmetic).
+  /** Compact a layered index back to ONE sorted run per table — O(index)
+    * read and write, the amortized cost the daily O(delta) appends
+    * defer; identical probe results before and after.
     */
   def compactMinhashIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactMinhashIndex: outPath must differ from indexPath")
-    val (prefixPartitions, maxBucket, _) =
-      readMinhashMeta(s, indexPath, "compactMinhashIndex")
-    graft.jobs.Sinks.layout(
-      mergeLayeredBuckets(
-        s.read.parquet(s"$indexPath/buckets").drop("__bp"), maxBucket)
-        .withColumn("__bp",
-          pmod(xxhash64(col("band"), col("bkey")),
-            lit(prefixPartitions.toLong))),
-      s"$outPath/buckets", partitionCols = Seq("__bp"),
-      sortCols = Seq("band", "bkey"), numFiles = 8)
-    graft.jobs.Sinks.layout(
-      s.read.parquet(s"$indexPath/hashed"),
-      s"$outPath/hashed", partitionCols = Nil,
-      sortCols = Seq("doc_old"), numFiles = 8)
-    writeMinhashMeta(s, outPath, prefixPartitions, maxBucket, 1)
-  }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.compact(s, indexPath, outPath, MinhashIndex,
+      "compactMinhashIndex")
 
   /** [[minhashPairsAgainst]] probing a PERSISTED index
     * ([[writeMinhashIndex]]) instead of re-deriving the corpus side:
     * the delta bands map-only, joins the bucket parquet, and verifies
     * against the hashed parquet — identical output to the inline path
-    * on the same split (parity-tested), but the per-batch cost is
-    * O(delta work + index scan) with NO corpus shingle/minhash
-    * re-derivation. BenchScale's `probe_const_delta` rows measure
-    * exactly this: a fixed delta's probe time stays ~flat while the
-    * corpus behind the index grows 10×. The index-scan term itself is
-    * PRUNED, not just bounded: the delta's distinct `__bp` prefixes
-    * (at most `prefix_partitions` ints — a partition-pruning list
-    * collected driver-side, the same role as a pushed-down IN filter,
-    * never data) filter the `__bp`-partitioned bucket parquet, so the
-    * probe reads only the directories its keys can hit, and the
-    * (band, bkey) sort prunes row groups within them. Pre-`__bp`
-    * indexes (no meta/partition column) probe unpruned, unchanged.
-    * Output: doc_new, doc_old, jaccard_x1000.
+    * on the same split (parity-tested), at O(delta work + index scan)
+    * per batch with NO corpus shingle/minhash re-derivation. The scan is
+    * PRUNED: the delta's distinct `__bp` prefixes filter the bucket
+    * parquet to the directories its keys can hit, and a layered index
+    * reconciles only that pruned subset. Output: doc_new, doc_old,
+    * jaccard_x1000.
     */
   def minhashPairsAgainstIndex(newDf: DataFrame, idCol: String,
       textCol: String, indexPath: String,
@@ -513,89 +358,30 @@ object DedupOps {
       s"minhashPairsAgainstIndex: id column '$idCol' collides with a " +
         s"working column (${reserved.mkString(", ")}) — rename it first")
     val s = newDf.sparkSession
-    val bucketsRaw = s.read.parquet(s"$indexPath/buckets")
-    val hashedOld = s.read.parquet(s"$indexPath/hashed")
+    val op = "minhashPairsAgainstIndex"
+    val m = IndexMaintenance.readMeta(s, indexPath, MinhashIndex, op)
     val deltaBands = withBandKeys(shingleHashed(newDf, idCol, textCol))
-    // the prefix count AND the layer count come from the index's own
-    // meta — pruning is still only an optimization, but since the
-    // in-place layered folds exist, the layer count is a CORRECTNESS
-    // dependency (see the hard-fail below)
-    val metaRow: Option[org.apache.spark.sql.Row] =
-      try s.read.parquet(s"$indexPath/meta").head(1).headOption
-      catch { case _: Exception => None }
-    // an index WITHOUT the __bp layout predates both pruning and
-    // layering — single-run by construction, safe to probe unpruned
-    // and unreconciled. An index WITH the layout always shipped a
-    // meta, and since layered folds exist an unreadable meta can no
-    // longer degrade to "correct, slower": without `layers` we cannot
-    // rule out per-key duplicate runs whose unreconciled join would
-    // resurrect tombstones and cap-crossing unions — fail loudly (the
-    // CDC/BM25 probes' posture), never probe possibly-wrong.
-    if (bucketsRaw.columns.contains("__bp") && metaRow.isEmpty)
-      throw new IllegalStateException(
-        s"minhashPairsAgainstIndex: cannot read $indexPath/meta for a " +
-          "__bp-layout index — the meta carries the layer count, and " +
-          "probing a possibly-layered index without reconcile would be " +
-          "silently wrong; restore the meta or rebuild the index")
-    def metaInt(name: String): Option[Int] = metaRow
-      .filter(_.schema.fieldNames.contains(name))
-      .map(_.getAs[Number](name).intValue())
-    val prefixPartitions: Option[Int] =
-      if (!bucketsRaw.columns.contains("__bp")) None
-      else metaInt("prefix_partitions").filter(_ >= 1)
-    if (bucketsRaw.columns.contains("__bp") && prefixPartitions.isEmpty)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"minhashPairsAgainstIndex: $indexPath/meta lacks a usable " +
-          "prefix_partitions — probing UNPRUNED (correct, slower)")
-    val buckets = prefixPartitions match {
-      case Some(p) =>
-        // the delta re-derives its band keys for this list (map-only
-        // over the delta — cheap by the delta-size contract); the
-        // returned plan recomputes them for the join itself
-        val prefixes = deltaBands
-          .select(pmod(xxhash64(col("band"), col("bkey")), lit(p.toLong))
-            .as("__bp"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        // Int literals: the read-back partition column infers as int,
-        // and a cast on the partition side would defeat directory
-        // pruning — the whole point of the layout
-        bucketsRaw.filter(col("__bp").isin(prefixes.map(_.toInt): _*))
-          .drop("__bp")
-      case None =>
-        if (bucketsRaw.columns.contains("__bp")) bucketsRaw.drop("__bp")
-        else bucketsRaw
-    }
-    // LAYERED index (in-place O(delta) folds): a (band, bkey) may
-    // appear once per appended run, and exact fold==rebuild semantics
-    // need the cross-run cap arithmetic — reconcile the PRUNED subset
-    // through mergeLayeredBuckets (the agg runs over only the
-    // directories the delta's keys can hit, so the probe's sub-linear
-    // index-scan term is untouched). Single-layer indexes skip the
-    // agg entirely. A layered index always carries meta (the in-place
-    // fold both requires and rewrites it), so layers/max_bucket are
-    // reliably present exactly when they matter.
-    val layers = metaInt("layers").getOrElse(1)
-    val reconciled =
-      if (layers <= 1) buckets
-      else mergeLayeredBuckets(buckets,
-        metaInt("max_bucket").getOrElse(throw new IllegalStateException(
-          s"minhashPairsAgainstIndex: $indexPath/meta has layers=" +
-            s"$layers but no max_bucket — layered reconcile needs the " +
-            "build's cap; the index is corrupt or hand-edited")))
-        .filter(col("__cs").isNotNull)
+    // the delta re-derives its band keys for this list (map-only over
+    // the delta — cheap by the delta-size contract); the returned plan
+    // recomputes them for the join itself
+    val prefixes = IndexMaintenance.prefixesOf(deltaBands,
+      xxhash64(col("band"), col("bkey")), m)
+    val buckets = IndexMaintenance.read(s, indexPath, MinhashIndex, m,
+        "buckets", op, Some(prefixes))
+      .filter(col("__cs").isNotNull)
     deltaBands
-      .join(reconciled, Seq("band", "bkey"))
+      .join(buckets, Seq("band", "bkey"))
       .select(col(idCol).as("doc_new"), col("hs").as("hs_new"),
         explode(col("__cs")).as("doc_old"))
       .dropDuplicates("doc_new", "doc_old")
-      .join(hashedOld, Seq("doc_old"))
+      .join(IndexMaintenance.read(s, indexPath, MinhashIndex, m, "hashed",
+        op), Seq("doc_old"))
       .withColumn("it", size(array_intersect(col("hs_new"), col("hs_old"))).cast("long"))
       .withColumn("un", size(array_distinct(concat(col("hs_new"), col("hs_old")))).cast("long"))
       .select(col("doc_new"), col("doc_old"),
         expr("(it * 1000) div un").as("jaccard_x1000"))
       .filter(col("jaccard_x1000") >= jaccardX1000Threshold)
   }
-
   /** Passage-level (sub-document) near-dup spans — duplicate
     * PARAGRAPHS across documents (license blocks, boilerplate
     * passages, syndicated fragments) that doc-level [[minhashPairs]]
@@ -851,17 +637,40 @@ object DedupOps {
       .filter(col("hamming") <= hammingMax)
   }
 
-  /** Materialize the corpus side of [[fingerprintPairsAgainstIndex]]:
-    * the [[writeMinhashIndex]] layout applied to the fingerprint
-    * modalities (text simhash, image dHash, audio envelope).
-    * `$path/buckets` = capped pigeonhole block buckets WITH over-cap
-    * tombstones, PARTITIONED by `__bp` and (band, bkey)-sorted;
-    * `$path/fps` = (doc_old, fp_old) — one Long per corpus row, never
-    * payloads; `$path/meta` = prefix/cap geometry PLUS the banding
-    * geometry (bits, hamming_max): a probe banding with different
-    * geometry would be silently meaningless, so the geometry lives in
-    * the index, not in caller code (the CDC meta contract).
+  /** The fingerprint index family — the [[MinhashIndex]] layout applied
+    * to the fingerprint modalities (text simhash, image dHash, audio
+    * envelope): capped pigeonhole block `buckets` WITH over-cap
+    * tombstones, `fps` = (doc_old, fp_old) — one Long per corpus row,
+    * never payloads — and a meta carrying the prefix/cap geometry PLUS
+    * the banding geometry (bits, hamming_max): a probe banding with
+    * different geometry would be silently meaningless, so the geometry
+    * lives in the index, not in caller code.
     */
+  private[graft] val FingerprintIndex = IndexMaintenance.Family(
+    "fingerprint", "writeFingerprintIndex",
+    Seq("prefix_partitions", "max_bucket", "bits", "hamming_max"),
+    "prefix/cap and banding geometry and layer count",
+    IndexMaintenance.Manifest.Layers,
+    _ => Seq(bucketTable(withPrefix = true),
+      IndexMaintenance.Table("fps", Seq("doc_old"), 8)))
+
+  /** Row derivation: both tables consume the input frame, so it is
+    * persisted — an expensive upstream lineage (a real media decode)
+    * runs ONCE; banding uses the INDEX's meta geometry. */
+  private def fingerprintRows[T](df: DataFrame, idCol: String,
+      fpCol: String)(go: (IndexMaintenance.Meta =>
+        IndexMaintenance.Delta) => T): T = {
+    graft.functions.SketchAggregates.register(df.sparkSession)
+    val fps = df.select(col(idCol), col(fpCol)).persist()
+    try go(m => IndexMaintenance.Delta(
+      "buckets" -> bandBucketsAll(fingerprintBands(fps, idCol, fpCol,
+        m.int("bits"), m.int("hamming_max")), idCol, m.int("max_bucket")),
+      "fps" -> fps.select(col(idCol).as("doc_old"), col(fpCol).as("fp_old"))))
+    finally { fps.unpersist(); () }
+  }
+
+  /** Materialize the corpus side of [[fingerprintPairsAgainstIndex]]
+    * ([[FingerprintIndex]]'s layout). */
   def writeFingerprintIndex(corpusFps: DataFrame, idCol: String,
       fpCol: String, bits: Int, hammingMax: Int, path: String,
       maxBucket: Int = DefaultMaxBucket,
@@ -870,79 +679,10 @@ object DedupOps {
       hammingMax)
     require(prefixPartitions >= 1,
       s"writeFingerprintIndex: prefixPartitions $prefixPartitions < 1")
-    val s = corpusFps.sparkSession
-    graft.functions.SketchAggregates.register(s)
-    // both outputs consume the input frame; persisting it keeps an
-    // expensive upstream lineage (e.g. a real media decode) at ONE
-    // pass (the writeMinhashIndex single-scan discipline)
-    val fps = corpusFps
-      .select(col(idCol), col(fpCol)).persist()
-    try {
-      // independent tables off the shared fps cache — overlapped
-      // writes (guide §2.6)
-      graft.api.Par.run(
-        () => graft.jobs.Sinks.layout(
-          bandBucketsAll(
-            fingerprintBands(fps, idCol, fpCol, bits, hammingMax),
-            idCol, maxBucket)
-            .withColumn("__bp", pmod(xxhash64(col("band"), col("bkey")),
-              lit(prefixPartitions.toLong))),
-          s"$path/buckets", partitionCols = Seq("__bp"),
-          sortCols = Seq("band", "bkey"), numFiles = 8),
-        () => graft.jobs.Sinks.layout(
-          fps.select(col(idCol).as("doc_old"), col(fpCol).as("fp_old")),
-          s"$path/fps", partitionCols = Nil,
-          sortCols = Seq("doc_old"), numFiles = 8))
-      writeFpMeta(s, path, prefixPartitions, maxBucket, bits, hammingMax, 1)
-    } finally { fps.unpersist(); () }
-  }
-
-  private def writeFpMeta(s: org.apache.spark.sql.SparkSession,
-      path: String, prefixPartitions: Int, maxBucket: Int, bits: Int,
-      hammingMax: Int, layers: Int): Unit =
-    s.range(1)
-      .select(lit(prefixPartitions).as("prefix_partitions"),
-        lit(maxBucket).as("max_bucket"), lit(bits).as("bits"),
-        lit(hammingMax).as("hamming_max"), lit(layers).as("layers"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-
-  /** (prefixPartitions, maxBucket, bits, hammingMax, layers) off a
-    * [[writeFingerprintIndex]] meta — every field REQUIRED with a
-    * named rebuild-once error (banding geometry AND cap arithmetic are
-    * both correctness dependencies; there is no degraded mode).
-    */
-  /** [[readFpMeta]] surfaced for the streaming gate (same named-error
-    * contract). */
-  private[graft] def readFingerprintIndexMeta(
-      s: org.apache.spark.sql.SparkSession, indexPath: String,
-      op: String): (Int, Int, Int, Int, Int) =
-    readFpMeta(s, indexPath, op)
-
-  private def readFpMeta(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (Int, Int, Int, Int, Int) = {
-    val metaDf =
-      try s.read.parquet(s"$indexPath/meta")
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"$op: cannot read $indexPath/meta — probes must band with " +
-            "the index's own (bits, hamming_max) geometry and folds " +
-            "must reproduce its prefix/cap arithmetic; the index is " +
-            "missing or partially copied", e)
-      }
-    Seq("prefix_partitions", "max_bucket", "bits", "hamming_max")
-      .foreach(c => require(metaDf.columns.contains(c),
-        s"$op: $indexPath/meta lacks $c — rebuild the index once with " +
-          "the current writeFingerprintIndex"))
-    val row = metaDf.head(1).headOption.getOrElse(
-      throw new IllegalStateException(s"$op: $indexPath/meta is empty"))
-    val layers =
-      if (metaDf.columns.contains("layers"))
-        row.getAs[Number]("layers").intValue()
-      else 1
-    (row.getAs[Number]("prefix_partitions").intValue(),
-      row.getAs[Number]("max_bucket").intValue(),
-      row.getAs[Number]("bits").intValue(),
-      row.getAs[Number]("hamming_max").intValue(), layers)
+    fingerprintRows(corpusFps, idCol, fpCol)(IndexMaintenance.write(
+      corpusFps.sparkSession, path, FingerprintIndex,
+      "prefix_partitions" -> prefixPartitions, "max_bucket" -> maxBucket,
+      "bits" -> bits, "hamming_max" -> hammingMax))
   }
 
   /** [[fingerprintPairsAgainst]] probing a PERSISTED
@@ -953,41 +693,33 @@ object DedupOps {
     * through the SHARED [[mergeLayeredBuckets]] cap arithmetic over
     * just the pruned subset, and candidates verify by exact
     * bit_count(xor) against the fps parquet. Identical output to the
-    * inline path on the same split (DedupSpec parity). Cost shape:
-    * the BUCKETS term is prefix-pruned (directories the delta's keys
-    * can hit), while the verify join reads the fps sidecar — one id +
-    * one Long per corpus row, never text or payloads — so the
-    * per-batch cost is O(delta work + pruned buckets + fps sidecar
-    * scan); what the probe never pays is re-deriving the corpus's
-    * fingerprints or banding. Output: doc_new, doc_old, hamming.
+    * inline path on the same split (DedupSpec parity); per-batch cost
+    * O(delta work + pruned buckets + fps sidecar scan). Output:
+    * doc_new, doc_old, hamming.
     */
   def fingerprintPairsAgainstIndex(newFps: DataFrame, idCol: String,
       fpCol: String, indexPath: String): DataFrame = {
     val s = newFps.sparkSession
-    val (prefixPartitions, maxBucket, bits, hammingMax, layers) =
-      readFpMeta(s, indexPath, "fingerprintPairsAgainstIndex")
-    fingerprintValidate("fingerprintPairsAgainstIndex", idCol, fpCol,
-      bits, hammingMax)
+    val op = "fingerprintPairsAgainstIndex"
+    val m = IndexMaintenance.readMeta(s, indexPath, FingerprintIndex, op)
+    val (bits, hammingMax) = (m.int("bits"), m.int("hamming_max"))
+    fingerprintValidate(op, idCol, fpCol, bits, hammingMax)
     val deltaBands = fingerprintBands(newFps, idCol, fpCol, bits,
       hammingMax)
-    val prefixes = deltaBands
-      .select(pmod(xxhash64(col("band"), col("bkey")),
-        lit(prefixPartitions.toLong)).as("__bp"))
-      .distinct().collect().map(_.getLong(0).toInt).toSeq
-    val pruned = s.read.parquet(s"$indexPath/buckets")
-      .filter(col("__bp").isin(prefixes: _*)).drop("__bp")
-    val reconciled =
-      (if (layers <= 1) pruned
-       else mergeLayeredBuckets(pruned, maxBucket))
-        .filter(col("__cs").isNotNull)
+    val prefixes = IndexMaintenance.prefixesOf(deltaBands,
+      xxhash64(col("band"), col("bkey")), m)
+    val reconciled = IndexMaintenance.read(s, indexPath, FingerprintIndex,
+        m, "buckets", op, Some(prefixes))
+      .filter(col("__cs").isNotNull)
     deltaBands
       .join(reconciled, Seq("band", "bkey"))
       .select(col(idCol).as("doc_new"), explode(col("__cs")).as("doc_old"))
       .dropDuplicates("doc_new", "doc_old")
       .join(newFps.select(col(idCol).as("doc_new"), col(fpCol).as("sh_a")),
         Seq("doc_new"))
-      .join(s.read.parquet(s"$indexPath/fps")
-        .select(col("doc_old"), col("fp_old").as("sh_b")), Seq("doc_old"))
+      .join(IndexMaintenance.read(s, indexPath, FingerprintIndex, m, "fps",
+          op).select(col("doc_old"), col("fp_old").as("sh_b")),
+        Seq("doc_old"))
       .select(col("doc_new"), col("doc_old"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long")
           .as("hamming"))
@@ -995,93 +727,34 @@ object DedupOps {
   }
 
   /** Fold a DELTA of fingerprints into a persisted index IN PLACE with
-    * O(delta) write bytes: the delta's capped buckets (banded with the
-    * INDEX's meta geometry) land as their own sorted layered run, fps
-    * rows append, meta bumps `layers` — the
-    * [[foldIntoMinhashIndex]] posture for the fingerprint family;
-    * probes reconcile runs through [[mergeLayeredBuckets]]. Crash
-    * consistency: single-writer, restore-on-failure (the shared fold
-    * contract, [[foldIntoMinhashIndex]]).
-    */
+    * O(delta) write bytes — the [[foldIntoMinhashIndex]] posture for
+    * the fingerprint family (same crash contract). */
   def foldIntoFingerprintIndex(delta: DataFrame, idCol: String,
       fpCol: String, indexPath: String): Unit = {
-    val s = delta.sparkSession
-    graft.functions.SketchAggregates.register(s)
-    val (prefixPartitions, maxBucket, bits, hammingMax, layers) =
-      readFpMeta(s, indexPath, "foldIntoFingerprintIndex")
-    // two appends consume the delta; one persisted pass (see
-    // writeFingerprintIndex)
-    val fps = delta
-      .select(col(idCol), col(fpCol)).persist()
-    try {
-      // overlapped independent appends (guide §2.6); meta bump stays
-      // after both
-      graft.api.Par.run(
-        () => graft.jobs.Sinks.layoutAppend(
-          bandBucketsAll(
-            fingerprintBands(fps, idCol, fpCol, bits, hammingMax),
-            idCol, maxBucket)
-            .withColumn("__bp", pmod(xxhash64(col("band"), col("bkey")),
-              lit(prefixPartitions.toLong))),
-          s"$indexPath/buckets", partitionCols = Seq("__bp"),
-          sortCols = Seq("band", "bkey"), numFiles = 8),
-        () => graft.jobs.Sinks.layoutAppend(
-          fps.select(col(idCol).as("doc_old"), col(fpCol).as("fp_old")),
-          s"$indexPath/fps", partitionCols = Nil,
-          sortCols = Seq("doc_old"), numFiles = 8))
-      writeFpMeta(s, indexPath, prefixPartitions, maxBucket, bits,
-        hammingMax, layers + 1)
-    } finally { fps.unpersist(); () }
+    fingerprintRows(delta, idCol, fpCol)(IndexMaintenance.fold(
+      delta.sparkSession, indexPath, FingerprintIndex,
+      "foldIntoFingerprintIndex"))
+    ()
   }
 
   /** Compact a layered fingerprint index back to ONE sorted run per
-    * side (buckets reconciled through [[mergeLayeredBuckets]], fps
-    * re-laid globally sorted, meta reset to layers=1) — O(index) read
-    * and write, the [[compactMinhashIndex]] shape.
-    */
+    * table — the [[compactMinhashIndex]] shape. */
   def compactFingerprintIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactFingerprintIndex: outPath must differ from indexPath")
-    val (prefixPartitions, maxBucket, bits, hammingMax, _) =
-      readFpMeta(s, indexPath, "compactFingerprintIndex")
-    graft.functions.SketchAggregates.register(s)
-    graft.jobs.Sinks.layout(
-      mergeLayeredBuckets(
-        s.read.parquet(s"$indexPath/buckets").drop("__bp"), maxBucket)
-        .withColumn("__bp", pmod(xxhash64(col("band"), col("bkey")),
-          lit(prefixPartitions.toLong))),
-      s"$outPath/buckets", partitionCols = Seq("__bp"),
-      sortCols = Seq("band", "bkey"), numFiles = 8)
-    graft.jobs.Sinks.layout(
-      s.read.parquet(s"$indexPath/fps"),
-      s"$outPath/fps", partitionCols = Nil,
-      sortCols = Seq("doc_old"), numFiles = 8)
-    writeFpMeta(s, outPath, prefixPartitions, maxBucket, bits,
-      hammingMax, 1)
-  }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.compact(s, indexPath, outPath, FingerprintIndex,
+      "compactFingerprintIndex")
 
-  /** [[maintainMinhashIndex]]'s fingerprint twin: crash-recover at
-    * entry, O(delta) fold, compact-and-swap iff post-fold layers reach
-    * `compactThreshold`. Returns true when this fold compacted. NOT
-    * reader-safe across the swap — see
+  /** [[maintainMinhashIndex]]'s fingerprint twin. Returns true when this
+    * fold compacted. NOT reader-safe across the swap — see
     * [[IndexMaintenance]]'s reader contract.
     */
   def maintainFingerprintIndex(delta: DataFrame, idCol: String,
       fpCol: String, indexPath: String,
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = delta.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoFingerprintIndex(delta, idCol, fpCol, indexPath)
-      val (_, _, _, _, layers) =
-        readFpMeta(s, indexPath, "maintainFingerprintIndex")
-      IndexMaintenance.compactIfLayered(s, indexPath, layers,
-        compactThreshold)(out => compactFingerprintIndex(s, indexPath, out))
-    }
-  }
-
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    fingerprintRows(delta, idCol, fpCol)(IndexMaintenance.maintain(
+      delta.sparkSession, indexPath, FingerprintIndex,
+      "maintainFingerprintIndex", compactThreshold)).contains(true)
   /** Exact-substring duplicate SPANS (the ExactSubstr dedup of Lee et
     * al. 2022, "Deduplicating Training Data Makes Language Models
     * Better", arXiv:2107.06499, re-expressed for Spark): every maximal
@@ -1240,149 +913,78 @@ object DedupOps {
         .select(col("doc_id"), col("pos")), gramTokens)
   }
 
+  /** The gram-count index family — the simplest: `grams` = (gh,
+    * n_docs) per-gram distinct-corpus-doc COUNTS, partitioned by
+    * `__gp = gh mod prefix_partitions` and sorted by gh; meta carries
+    * the gram geometry and the committed-run manifest. RAW counts are
+    * stored — the probe applies min/cap thresholds at read, so one
+    * index serves any (minCorpusDocs, maxDocsPerGram) policy. Reconcile
+    * is EXACT BY ADDITIVITY: delta doc ids are disjoint from indexed
+    * ids, so a gram's distinct-doc count is the SUM of its per-run
+    * counts; the cap is a probe-side threshold, not a storage contract,
+    * so no tombstones exist here.
+    */
+  private[graft] val GramIndex = IndexMaintenance.Family("gram",
+    "writeGramIndex", Seq("gram_tokens", "prefix_partitions"),
+    "gram geometry and run manifest", IndexMaintenance.Manifest.Runs,
+    _ => Seq(IndexMaintenance.Table("grams", Seq("gh"), 8,
+      IndexMaintenance.Reconcile.Summed(Seq("gh"), Seq("n_docs")),
+      Some("__gp" -> col("gh")))))
+
+  private def gramRows(df: DataFrame, idCol: String,
+      textCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta =
+    IndexMaintenance.Delta("grams" ->
+      gramPositions(df, idCol, textCol, m.int("gram_tokens"))
+        .select(col("__gh").as("gh"), col("doc_id")).distinct()
+        .groupBy(col("gh")).agg(count(lit(1)).as("n_docs")))
+
   /** Materialize the corpus side of [[exactSubstringSpansAgainst]] to
-    * parquet — the SEVENTH persisted index family, and the simplest:
-    * `$path/grams` = (gh, n_docs) per-gram distinct-corpus-doc COUNTS,
-    * partitioned by `__gp = hash60-mod-prefixPartitions` (the `__bp`
-    * prefix-pruning discipline) and sorted by gh; `$path/meta` carries
-    * the gram geometry (gram_tokens, prefix_partitions, layers). RAW
-    * counts are stored — the probe applies min/cap thresholds at read,
-    * so one index serves any (minCorpusDocs, maxDocsPerGram) policy.
-    * Build once per corpus version, probe per ingest batch.
+    * parquet ([[GramIndex]]'s layout). Build once per corpus version,
+    * probe per ingest batch.
     */
   def writeGramIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, gramTokens: Int = 8,
       prefixPartitions: Int = 64): Unit = {
     require(gramTokens >= 2, s"writeGramIndex: gramTokens $gramTokens < 2")
-    val run = IndexMaintenance.newRunId()
-    graft.jobs.Sinks.layout(
-      gramPositions(corpus, idCol, textCol, gramTokens)
-        .select(col("__gh").as("gh"), col("doc_id")).distinct()
-        .groupBy(col("gh")).agg(count(lit(1)).as("n_docs"))
-        .withColumn("__gp", pmod(col("gh"), lit(prefixPartitions.toLong)))
-        .withColumn("__run", lit(run)),
-      s"$path/grams", partitionCols = Seq("__gp"),
-      sortCols = Seq("gh"), numFiles = 8)
-    writeGramMeta(corpus.sparkSession, path, gramTokens, prefixPartitions,
-      1, Seq(run))
-  }
-
-  // the gram family's richer meta (gram geometry) carries the same
-  // committed-run manifest as the shared SUM-family meta
-  // (IndexMaintenance.writeIndexMetaRuns) — reads filter to committed
-  // runs, so the append-before-commit crash window is structural here
-  // too
-  private[graft] def writeGramMeta(s: org.apache.spark.sql.SparkSession,
-      path: String, gramTokens: Int, prefixPartitions: Int,
-      layers: Int, runs: Seq[String]): Unit = {
-    require(runs.nonEmpty, "writeGramMeta: empty run manifest")
-    s.range(1)
-      .select(lit(gramTokens).as("gram_tokens"),
-        lit(prefixPartitions).as("prefix_partitions"),
-        lit(layers).as("layers"),
-        array(runs.map(lit(_)): _*).as("committed_runs"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** (gramTokens, prefixPartitions, layers, committedRuns) off a
-    * [[writeGramIndex]] meta — REQUIRED with a named rebuild-once
-    * error (the delta must gram with the index's own geometry;
-    * mismatched gram widths would silently match nothing).
-    */
-  private[graft] def readGramMeta(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (Int, Int, Int, Seq[String]) = {
-    val metaDf =
-      try s.read.parquet(s"$indexPath/meta")
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"$op: cannot read $indexPath/meta — probes and folds must " +
-            "use the index's own gram geometry (indexes written before " +
-            "the meta existed must be rebuilt once)", e)
-      }
-    val row = metaDf.head(1).headOption.getOrElse(
-      throw new IllegalStateException(s"$op: $indexPath/meta is empty"))
-    (row.getAs[Number]("gram_tokens").intValue(),
-      row.getAs[Number]("prefix_partitions").intValue(),
-      row.getAs[Number]("layers").intValue(),
-      IndexMaintenance.committedRunsOf(s, indexPath, op))
+    IndexMaintenance.write(corpus.sparkSession, path, GramIndex,
+      "gram_tokens" -> gramTokens, "prefix_partitions" -> prefixPartitions)(
+      gramRows(corpus, idCol, textCol))
   }
 
   /** Fold a DELTA of new documents into a persisted [[writeGramIndex]]
     * IN PLACE with O(delta) write bytes: the delta's per-gram
-    * distinct-doc counts land as their own sorted run, meta bumps
-    * `layers`. Reconcile is EXACT BY ADDITIVITY — delta doc ids are
-    * disjoint from indexed ids (the incremental contract everywhere in
-    * this api), so the total distinct-doc count of a gram is simply
-    * the SUM of its per-run counts; no cap arithmetic or tombstones
-    * exist in this family because the cap is a PROBE-side threshold
-    * over the reconciled total, not a storage contract. Crash
-    * consistency: the run lands under a fresh `__run` id and the meta
-    * — written AFTER the append — commits it: a crash between append
-    * and commit leaves orphan files every reader filters out, and the
-    * retry's fresh id can never merge with them (RecoverySpec pins
-    * it). Single-writer still governs (the lock).
+    * distinct-doc counts land as their own run under a fresh `__run`
+    * id that the meta — written AFTER the append — commits: a crash
+    * between append and commit leaves orphan files every reader
+    * filters out, and the retry's fresh id can never merge with them
+    * (RecoverySpec pins it). Single-writer still governs (the lock).
     */
   def foldIntoGramIndex(delta: DataFrame, idCol: String, textCol: String,
       indexPath: String): Unit = {
-    val s = delta.sparkSession
-    val (gramTokens, prefixPartitions, layers, runs) =
-      readGramMeta(s, indexPath, "foldIntoGramIndex")
-    val run = IndexMaintenance.newRunId()
-    graft.jobs.Sinks.layoutAppend(
-      gramPositions(delta, idCol, textCol, gramTokens)
-        .select(col("__gh").as("gh"), col("doc_id")).distinct()
-        .groupBy(col("gh")).agg(count(lit(1)).as("n_docs"))
-        .withColumn("__gp", pmod(col("gh"), lit(prefixPartitions.toLong)))
-        .withColumn("__run", lit(run)),
-      s"$indexPath/grams", partitionCols = Seq("__gp"),
-      sortCols = Seq("gh"), numFiles = 8)
-    writeGramMeta(s, indexPath, gramTokens, prefixPartitions, layers + 1,
-      runs :+ run)
+    IndexMaintenance.fold(delta.sparkSession, indexPath, GramIndex,
+      "foldIntoGramIndex")(gramRows(delta, idCol, textCol))
+    ()
   }
 
   /** Compact a layered gram index back to ONE sorted run: per-gram
-    * counts summed across COMMITTED runs (the exact reconcile
-    * arithmetic — orphan rows from crashed folds are dropped from
-    * disk here), meta reset to layers=1 with a single-run manifest.
+    * counts summed across COMMITTED runs (orphan rows from crashed
+    * folds are dropped from disk here), a single-run manifest.
     * Identical probe results before and after.
     */
   def compactGramIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactGramIndex: outPath must differ from indexPath")
-    val (gramTokens, prefixPartitions, _, runs) =
-      readGramMeta(s, indexPath, "compactGramIndex")
-    val run = IndexMaintenance.newRunId()
-    graft.jobs.Sinks.layout(
-      IndexMaintenance.committedOnly(
-          s.read.parquet(s"$indexPath/grams").drop("__gp"), runs)
-        .groupBy(col("gh")).agg(sum(col("n_docs")).as("n_docs"))
-        .withColumn("__gp", pmod(col("gh"), lit(prefixPartitions.toLong)))
-        .withColumn("__run", lit(run)),
-      s"$outPath/grams", partitionCols = Seq("__gp"),
-      sortCols = Seq("gh"), numFiles = 8)
-    writeGramMeta(s, outPath, gramTokens, prefixPartitions, 1, Seq(run))
-  }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.compact(s, indexPath, outPath, GramIndex,
+      "compactGramIndex")
 
-  /** [[maintainMinhashIndex]]'s gram-count twin: crash-recover at
-    * entry, O(delta) fold, compact-and-swap iff post-fold layers reach
-    * `compactThreshold`. All inside [[IndexMaintenance.withWriterLock]];
-    * NOT reader-safe across the swap.
-    */
+  /** [[maintainMinhashIndex]]'s gram-count twin. NOT reader-safe across
+    * the swap. */
   def maintainGramIndex(delta: DataFrame, idCol: String, textCol: String,
       indexPath: String,
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = delta.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoGramIndex(delta, idCol, textCol, indexPath)
-      val (_, _, layers, _) =
-        readGramMeta(s, indexPath, "maintainGramIndex")
-      IndexMaintenance.compactIfLayered(s, indexPath, layers,
-        compactThreshold)(out => compactGramIndex(s, indexPath, out))
-    }
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    IndexMaintenance.maintain(delta.sparkSession, indexPath, GramIndex,
+      "maintainGramIndex", compactThreshold)(
+      gramRows(delta, idCol, textCol)).contains(true)
 
   /** [[exactSubstringSpansAgainst]] probing a PERSISTED
     * [[writeGramIndex]]: the delta's grams derive with the INDEX's own
@@ -1404,33 +1006,18 @@ object DedupOps {
       s"exactSubstringSpansAgainstIndex: maxDocsPerGram $maxDocsPerGram " +
         s"< minCorpusDocs $minCorpusDocs — the cap would reject every gram")
     val s = newDf.sparkSession
-    val (gramTokens, prefixPartitions, layers, runs) =
-      readGramMeta(s, indexPath, "exactSubstringSpansAgainstIndex")
+    val op = "exactSubstringSpansAgainstIndex"
+    val m = IndexMaintenance.readMeta(s, indexPath, GramIndex, op)
+    val gramTokens = m.int("gram_tokens")
     val deltaGrams = gramPositions(newDf, idCol, textCol, gramTokens)
-    val prefixes = deltaGrams
-      .select(pmod(col("__gh"), lit(prefixPartitions.toLong)).as("__gp"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val pruned = IndexMaintenance.committedOnly(
-      s.read.parquet(s"$indexPath/grams")
-        .filter(col("__gp").isin(prefixes: _*)).drop("__gp"), runs)
-    val shared = reconcileGramRuns(pruned, layers)
+    val shared = IndexMaintenance.read(s, indexPath, GramIndex, m, "grams",
+        op, Some(IndexMaintenance.prefixesOf(deltaGrams, col("__gh"), m)))
       .filter(col("n_docs") >= minCorpusDocs &&
         col("n_docs") <= maxDocsPerGram)
       .select(col("gh").as("__gh"))
     mergeSpans(deltaGrams.join(shared, Seq("__gh"), "left_semi")
       .select(col("doc_id"), col("pos")), gramTokens)
   }
-
-  /** Layered-run reconcile for the gram index — per-gram counts SUM
-    * across runs (exact by additivity); ONE definition shared by the
-    * batch probe and the streaming gate's author-time read (the
-    * reconcileLineRuns discipline).
-    */
-  private[graft] def reconcileGramRuns(raw: DataFrame,
-      layers: Int): DataFrame =
-    if (layers <= 1) raw
-    else raw.groupBy(col("gh")).agg(sum(col("n_docs")).as("n_docs"))
-
   /** Transitive near-dup clusters over a pair frame. Output: doc_id,
     * cluster_id (= component min). See ConnectedComponents for rounds.
     */
@@ -1613,197 +1200,105 @@ object DedupOps {
       .select(col(idCol), col("n_chunks"), col("n_hits"), col("hit_x1000"))
   }
 
-  /** Materialize the corpus side of [[cdcChunkHitsAgainstIndex]]:
-    * `$path/chunks` = the corpus's DISTINCT chunk hashes PARTITIONED
-    * by `__bp = xxhash64(c) mod prefixPartitions` and sorted by `c`
-    * within partitions (directory-level pruning + row-group min/max,
-    * the [[writeMinhashIndex]] layout applied to a plain hash set);
-    * `$path/meta` = one row recording prefix_partitions AND the
-    * chunking parameters (modulus, window) so a probe chunks with
-    * EXACTLY the index's geometry — a CDC probe against an index
-    * built with different parameters would be silently meaningless,
-    * which is why the params live in the index, not in caller code.
+  /** The CDC index family: `chunks` = the corpus's DISTINCT chunk
+    * hashes partitioned by `__bp = xxhash64(c) mod prefix_partitions`
+    * and sorted by `c` (the [[MinhashIndex]] layout applied to a plain
+    * hash set); meta records prefix_partitions AND the chunking
+    * parameters (modulus, window) so a probe chunks with EXACTLY the
+    * index's geometry — a CDC probe against an index built with
+    * different parameters would be silently meaningless. Reconcile is
+    * set union; probes need none at all — the corpus set feeds a
+    * duplicate-insensitive `left_semi` join ([[cdcHitsRollup]]), so
+    * compaction is pure read-amplification cleanup.
     */
+  private[graft] val CdcIndex = IndexMaintenance.Family("CDC",
+    "writeCdcChunkIndex", Seq("prefix_partitions", "modulus", "window"),
+    "prefix and chunking geometry (modulus, window) and layer count",
+    IndexMaintenance.Manifest.Layers,
+    _ => Seq(IndexMaintenance.Table("chunks", Seq("c"), 8,
+      IndexMaintenance.Reconcile.SetUnion(), Some("__bp" -> xxhash64(col("c"))))))
+
+  private def cdcRows(df: DataFrame, idCol: String,
+      textCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta =
+    IndexMaintenance.Delta("chunks" ->
+      cdcChunked(df, idCol, textCol, m.int("modulus"), m.int("window"))
+        .select(explode(col("_ch")).as("c")).distinct())
+
+  /** Materialize the corpus side of [[cdcChunkHitsAgainstIndex]]
+    * ([[CdcIndex]]'s layout). */
   def writeCdcChunkIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, modulus: Int = 64, window: Int = 4,
       prefixPartitions: Int = 64): Unit = {
     require(prefixPartitions >= 1,
       s"writeCdcChunkIndex: prefixPartitions $prefixPartitions < 1")
-    graft.jobs.Sinks.layout(
-      cdcChunked(corpus, idCol, textCol, modulus, window)
-        .select(explode(col("_ch")).as("c")).distinct()
-        .withColumn("__bp",
-          pmod(xxhash64(col("c")), lit(prefixPartitions.toLong))),
-      s"$path/chunks", partitionCols = Seq("__bp"),
-      sortCols = Seq("c"), numFiles = 8)
-    writeCdcMeta(corpus.sparkSession, path, prefixPartitions, modulus,
-      window, 1)
+    IndexMaintenance.write(corpus.sparkSession, path, CdcIndex,
+      "prefix_partitions" -> prefixPartitions, "modulus" -> modulus,
+      "window" -> window)(cdcRows(corpus, idCol, textCol))
   }
 
   /** Fold a DELTA of new documents into a persisted
-    * [[writeCdcChunkIndex]] IN PLACE with O(delta) write bytes — the
-    * CDC sibling of the in-place [[foldIntoMinhashIndex]], simpler on
-    * BOTH sides because the index is a plain distinct hash set: the
-    * delta's distinct chunk hashes land as their own sorted run
-    * ([[graft.jobs.Sinks.layoutAppend]]) inside the existing `__bp`
-    * directories, chunked with EXACTLY the index's meta geometry, and
-    * the read side needs NO reconcile at all — the probe's corpus set
-    * feeds a `left_semi` join ([[cdcHitsRollup]]), which is
-    * duplicate-insensitive, so a chunk appearing in two runs changes
-    * nothing. `layers` in meta counts the runs; periodic
-    * [[compactCdcChunkIndex]] re-distincts them into one (pure read
-    * amplification cleanup, never a correctness event). Crash
-    * consistency: single-writer, restore-on-failure, never retry in
-    * place — see [[foldIntoMinhashIndex]]'s contract note.
+    * [[writeCdcChunkIndex]] IN PLACE with O(delta) write bytes: the
+    * delta's distinct chunk hashes, chunked with EXACTLY the index's
+    * meta geometry, land as their own sorted run. Crash consistency:
+    * [[foldIntoMinhashIndex]]'s contract.
     */
   def foldIntoCdcChunkIndex(delta: DataFrame, idCol: String,
       textCol: String, indexPath: String): Unit = {
-    val s = delta.sparkSession
-    val (prefixes, modulus, window) = readCdcMeta(s, indexPath)
-    val layers = readCdcLayers(s, indexPath)
-    graft.jobs.Sinks.layoutAppend(
-      cdcChunked(delta, idCol, textCol, modulus, window)
-        .select(explode(col("_ch")).as("c")).distinct()
-        .withColumn("__bp", pmod(xxhash64(col("c")), lit(prefixes.toLong))),
-      s"$indexPath/chunks", partitionCols = Seq("__bp"),
-      sortCols = Seq("c"), numFiles = 8)
-    writeCdcMeta(s, indexPath, prefixes, modulus, window, layers + 1)
+    IndexMaintenance.fold(delta.sparkSession, indexPath, CdcIndex,
+      "foldIntoCdcChunkIndex")(cdcRows(delta, idCol, textCol))
+    ()
   }
 
   /** Fold-and-COMPACT variant: old chunk set ∪ delta chunk set
     * re-distincted into a fresh single-run index at `outPath` —
-    * O(index) read and write, the right shape when fold cadence ==
-    * compaction cadence. Chunked with exactly the old index's meta
-    * geometry (a fold with different modulus/window would be silently
-    * meaningless, the probe's contract applied to maintenance).
-    * Probes identically to a from-scratch build on corpus ∪ delta
-    * (DedupSpec parity).
+    * O(index) read and write. Probes identically to a from-scratch
+    * build on corpus ∪ delta (DedupSpec parity).
     */
   def foldIntoCdcChunkIndex(delta: DataFrame, idCol: String,
-      textCol: String, indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "foldIntoCdcChunkIndex: outPath must differ from indexPath")
-    val s = delta.sparkSession
-    val (prefixes, modulus, window) = readCdcMeta(s, indexPath)
-    val deltaChunks = cdcChunked(delta, idCol, textCol, modulus, window)
-      .select(explode(col("_ch")).as("c"))
-    graft.jobs.Sinks.layout(
-      s.read.parquet(s"$indexPath/chunks").select(col("c"))
-        .unionByName(deltaChunks).distinct()
-        .withColumn("__bp", pmod(xxhash64(col("c")), lit(prefixes.toLong))),
-      s"$outPath/chunks", partitionCols = Seq("__bp"),
-      sortCols = Seq("c"), numFiles = 8)
-    writeCdcMeta(s, outPath, prefixes, modulus, window, 1)
-  }
+      textCol: String, indexPath: String, outPath: String): Unit =
+    IndexMaintenance.foldTo(delta.sparkSession, indexPath, outPath,
+      CdcIndex, "foldIntoCdcChunkIndex")(cdcRows(delta, idCol, textCol))
 
-  /** [[maintainMinhashIndex]]'s CDC twin: O(delta) fold, then
-    * compact-and-swap iff post-fold layers ≥ `compactThreshold`.
-    * Returns true when this fold triggered the compaction.
+  /** [[maintainMinhashIndex]]'s CDC twin. Returns true when this fold
+    * triggered the compaction.
     */
   def maintainCdcChunkIndex(delta: DataFrame, idCol: String,
       textCol: String, indexPath: String,
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = delta.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoCdcChunkIndex(delta, idCol, textCol, indexPath)
-      IndexMaintenance.compactIfLayered(s, indexPath,
-        readCdcLayers(s, indexPath), compactThreshold)(
-        out => compactCdcChunkIndex(s, indexPath, out))
-    }
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    IndexMaintenance.maintain(delta.sparkSession, indexPath, CdcIndex,
+      "maintainCdcChunkIndex", compactThreshold)(
+      cdcRows(delta, idCol, textCol)).contains(true)
 
-  /** Compact a layered CDC index (in-place [[foldIntoCdcChunkIndex]]
-    * appends) back to one globally distinct sorted run — O(index)
-    * read/write, pure read-amplification cleanup (layered and
-    * compacted indexes probe identically; the semi-join never saw
-    * the duplicates).
+  /** Compact a layered CDC index back to one globally distinct sorted
+    * run — pure read-amplification cleanup (layered and compacted
+    * indexes probe identically).
     */
   def compactCdcChunkIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactCdcChunkIndex: outPath must differ from indexPath")
-    val (prefixes, modulus, window) = readCdcMeta(s, indexPath)
-    graft.jobs.Sinks.layout(
-      s.read.parquet(s"$indexPath/chunks").select(col("c")).distinct()
-        .withColumn("__bp", pmod(xxhash64(col("c")), lit(prefixes.toLong))),
-      s"$outPath/chunks", partitionCols = Seq("__bp"),
-      sortCols = Seq("c"), numFiles = 8)
-    writeCdcMeta(s, outPath, prefixes, modulus, window, 1)
-  }
-
-  private def writeCdcMeta(s: org.apache.spark.sql.SparkSession,
-      path: String, prefixes: Int, modulus: Int, window: Int,
-      layers: Int): Unit =
-    s.range(1)
-      .select(lit(prefixes).as("prefix_partitions"),
-        lit(modulus).as("modulus"), lit(window).as("window"),
-        lit(layers).as("layers"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-
-  /** `layers` off a CDC index meta (default 1 — pre-layering indexes
-    * lack the column). Observability only for CDC: probes are
-    * duplicate-insensitive regardless.
-    */
-  private def readCdcLayers(s: org.apache.spark.sql.SparkSession,
-      indexPath: String): Int =
-    try {
-      val m = s.read.parquet(s"$indexPath/meta")
-      if (m.columns.contains("layers"))
-        m.head(1).headOption.map(_.getAs[Number]("layers").intValue())
-          .getOrElse(1)
-      else 1
-    } catch { case _: Exception => 1 }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.compact(s, indexPath, outPath, CdcIndex,
+      "compactCdcChunkIndex")
 
   /** [[cdcChunkHits]] probing a PERSISTED [[writeCdcChunkIndex]]
     * instead of re-chunking the corpus: identical output on the same
     * split (parity-tested), per-batch cost O(delta + pruned index
-    * scan). The delta's distinct `__bp` prefixes (at most
-    * prefix_partitions ints, collected driver-side) prune the chunk
+    * scan). The delta's distinct `__bp` prefixes prune the chunk
     * parquet to the directories its hashes can hit; the `c` sort
     * prunes row groups within them. The meta is REQUIRED — it carries
-    * the chunking geometry — so a missing/partial index fails with a
-    * named error rather than probing with guessed parameters (the
-    * minhash/sign probes converged on the same posture once layered
-    * folds made the layer count a correctness input).
+    * the chunking geometry.
     */
-  /** (prefix_partitions, modulus, window) off a [[writeCdcChunkIndex]]
-    * meta — REQUIRED (it carries the chunking geometry): named error
-    * on a missing/partial index, never a guessed-parameter probe.
-    */
-  private[graft] def readCdcMeta(s: org.apache.spark.sql.SparkSession,
-      indexPath: String): (Int, Int, Int) = {
-    val meta =
-      try {
-        s.read.parquet(s"$indexPath/meta")
-          .select(col("prefix_partitions").cast("int"),
-            col("modulus").cast("int"), col("window").cast("int"))
-          .head(1).headOption
-      } catch {
-        case e: Exception =>
-          throw new IllegalStateException(
-            s"cdc probe: cannot read $indexPath/meta — the index is " +
-              "missing or partially copied; the meta carries the " +
-              "chunking geometry (modulus, window), so probing " +
-              "without it would be silently meaningless", e)
-      }
-    val row = meta.getOrElse(throw new IllegalStateException(
-      s"cdc probe: $indexPath/meta is empty"))
-    (row.getInt(0), row.getInt(1), row.getInt(2))
-  }
-
   def cdcChunkHitsAgainstIndex(newDf: DataFrame, idCol: String,
       textCol: String, indexPath: String): DataFrame = {
     val s = newDf.sparkSession
-    val (prefixes, modulus, window) = readCdcMeta(s, indexPath)
-    val delta = cdcChunked(newDf, idCol, textCol, modulus, window)
+    val op = "cdcChunkHitsAgainstIndex"
+    val m = IndexMaintenance.readMeta(s, indexPath, CdcIndex, op)
+    val delta = cdcChunked(newDf, idCol, textCol, m.int("modulus"),
+        m.int("window"))
       .localCheckpoint() // consumed twice (prefix list + rollup)
-    val touched = delta.select(explode(col("_ch")).as("_c"))
-      .select(pmod(xxhash64(col("_c")), lit(prefixes.toLong)).as("__bp"))
-      .distinct().collect().map(_.getLong(0))
-    val corpusSet = s.read.parquet(s"$indexPath/chunks")
-      .filter(col("__bp").isin(touched.toSeq: _*))
+    val touched = IndexMaintenance.prefixesOf(
+      delta.select(explode(col("_ch")).as("_c")), xxhash64(col("_c")), m)
+    val corpusSet = IndexMaintenance.read(s, indexPath, CdcIndex, m,
+        "chunks", op, Some(touched), reconciled = false)
       .select(col("c").as("_c"))
     cdcHitsRollup(delta, corpusSet, idCol)
   }

@@ -1,232 +1,173 @@
 package graft.api
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Opportunistic compaction for the layered persisted indexes
-  * (minhash / CDC / sign / BM25 / fingerprint / IVF-PQ /
-  * gram-count): the in-place
-  * `foldInto*` appends are O(delta) by design, so layer count — and
-  * with it per-probe reconcile work and file-open fan-out — grows one
-  * run per fold until a `compact*` folds the runs back to one. The
-  * `maintain*` entry points in each ops object wrap
-  * fold-then-compact-if-layered around this policy, turning the LSM
-  * posture ("append daily, compact weekly") into a single call whose
-  * amortized cost is O(delta + index/threshold) writes per fold.
+/** The index-family kernel: the ONE implementation of the LSM posture
+  * every persisted index shares — minhash, fingerprint, gram, CDC,
+  * sign, IVF-PQ, BM25, line, card, edge and weighted edge. An ops
+  * object declares its family once ([[Family]]) and supplies only its
+  * row derivation; the kernel owns everything else:
   *
-  * IVF-PQ is under the policy with one structural difference: its fold
-  * never rewrites `meta` (the frozen-codebook contract that makes
-  * fold-while-serving safe — [[VectorOps.ivfPqProbeEachBatch]] caches
-  * the model at stream-author time), so its run count lives in a
-  * `runs` sidecar no probe path reads, and its compaction is a pure
-  * re-layout: codes runs need no read-side reconcile (per-vector rows,
-  * disjoint ids) and probes prune by `cell` DIRECTORY, so what
-  * [[VectorOps.maintainIvfPqIndex]] buys is file-count — every fold
-  * adds up to `numFiles` files inside each routed cell, and a
-  * cell-pruned scan over an uncompacted year of daily folds opens
-  * 365× the files one run needs.
+  *   - the declaration: the family's tables ([[Table]] — directory,
+  *     `pmod` prefix partition, sort columns, file count), its meta
+  *     fields, its [[Manifest]] kind and one N-way [[Reconcile]] rule
+  *     per table;
+  *   - ONE meta reader ([[readMeta]]: a missing meta, a missing field
+  *     or an empty manifest fails by name — never a silent default)
+  *     and ONE meta writer ([[writeMeta]]);
+  *   - [[write]] (the build), the in-place O(delta) [[fold]] (each
+  *     table's delta rows land as their own sorted run via
+  *     [[graft.jobs.Sinks.layoutAppend]], then the meta commits; it
+  *     returns the post-fold layer count, or None for a replayed tag),
+  *     [[foldTo]] (compaction over the committed runs PLUS the delta's
+  *     run into a fresh directory), [[compact]] and [[maintain]];
+  *   - the committed and reconciled [[read]] behind every probe and
+  *     every streaming gate's snapshot.
   *
-  * Compaction-in-place mechanics: `compact*` contracts require a
-  * fresh output directory (the merge reads the old index lazily while
-  * writing the new one), so the swap goes through two siblings —
-  * compact to `<index>__compacting`, rename the live index to
-  * `<index>__old`, rename the fresh one into place, delete the old.
-  * Directory rename is a metadata op on HDFS-like filesystems; on a
-  * pure object store the same swap is a manifest flip in a
-  * transactional table layout, out of scope here (same position as
-  * the fold crash contract, [[DedupOps.foldIntoMinhashIndex]]).
-  * Crash consistency inherits that contract — single-writer,
-  * restore-on-failure: a crash between the two renames leaves the
-  * index path briefly absent, and every `maintain*` entry point runs
-  * [[recoverAtEntry]] FIRST (before its fold): a missing live path
-  * with an `__old` sibling restores `__old` into place, and stale
-  * `__compacting`/`__old` siblings are deleted UNCONDITIONALLY — a
-  * crashed attempt can neither strand the index absent nor leave a
-  * full-size copy lingering while folds stay under the threshold.
+  * Reconcile-at-read == reconcile-at-compact: both apply the same
+  * per-table rule, so probes are identical before and after a
+  * compaction, and fold==rebuild holds by the rule's arithmetic
+  * (capped buckets with tombstones, additive or signed sums, set
+  * union with tombstones, rebake-from-postings for BM25).
+  *
+  * Crash ordering is per manifest kind. [[Manifest.Layers]] families
+  * append, then bump `layers` — except the edge family
+  * ([[Family.metaFirst]]), whose set-union reconcile makes a bumped
+  * count with a missing or partial run harmless, so it bumps first.
+  * The SUM families cannot use either order (a partial run corrupts
+  * totals), so every run they append carries a fresh `__run` id that
+  * only the meta's `committed_runs` makes visible
+  * ([[Manifest.Runs]]): a crash between append and commit leaves
+  * orphan rows no read sees, a retry mints a new id, and compaction
+  * drops the orphan bytes. Families maintained FROM a stream add the
+  * logical `committed_tags` manifest ([[Manifest.RunsTags]]): a tagged
+  * fold whose tag is listed is a no-op (foreachBatch re-delivers a
+  * failed micro-batch), and compaction preserves the tags. IVF-PQ
+  * ([[Manifest.Sidecar]]) never rewrites `meta` on a fold — the
+  * frozen-codebook contract that makes fold-while-serving safe
+  * ([[VectorOps.ivfPqProbeEachBatch]] caches the model) — so its run
+  * count lives in a `runs` sidecar no probe reads.
+  *
+  * Compaction-in-place mechanics: compaction needs a fresh output
+  * directory (it reads the old index lazily while writing the new
+  * one), so the swap goes through two siblings — compact to
+  * `<index>__compacting`, rename the live index to `<index>__old`,
+  * rename the fresh one into place, delete the old. Directory rename
+  * is a metadata op on HDFS-like filesystems; on a pure object store
+  * the same swap is a manifest flip in a transactional table layout,
+  * out of scope here. Crash consistency is single-writer,
+  * restore-on-failure: every `maintain*` entry point runs inside
+  * [[withWriterLock]] and calls [[recoverAtEntry]] FIRST (before its
+  * fold) — a missing live path with an `__old` sibling restores
+  * `__old` into place, and stale `__compacting`/`__old` siblings are
+  * deleted unconditionally.
   *
   * READER CONTRACT: the swap is NOT reader-safe. A probe running
   * concurrently sees a briefly-absent path between the renames, and a
   * probe that listed files pre-swap can hit deleted files after the
   * old copy is removed. Quiesce probes across any maintain* call that
-  * may compact (layer count at threshold), or gate the call behind
-  * the serving layer's lock. This is deliberately WEAKER than the
-  * IVF-PQ serving path ([[VectorOps.ivfPqProbeEachBatch]] is
-  * fold-while-serving safe because IVF-PQ folds never rewrite meta
-  * and never delete files) — the difference is visible at the call
-  * site: maintain* families reconcile layers and rewrite on compact.
+  * may compact, or gate the call behind the serving layer's lock —
+  * deliberately WEAKER than the plain IVF-PQ fold, which never
+  * rewrites meta and never deletes files.
   */
 object IndexMaintenance {
 
-  /** Shared meta writer for the (prefix_partitions, layers)-shaped
-    * index families (line-count, edge) — one schema and one
-    * rebuild-once error message instead of a per-family clone that
-    * can drift. Families with richer metas (gram's max_bucket,
-    * fingerprint's bits/hamming_max) keep their own.
-    */
-  def writeIndexMeta(s: SparkSession, path: String,
-      prefixPartitions: Int, layers: Int): Unit = {
-    import org.apache.spark.sql.functions.lit
-    s.range(1)
-      .select(lit(prefixPartitions).as("prefix_partitions"),
-        lit(layers).as("layers"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+  // ---- the family declaration ----------------------------------------
+
+  /** How a family records which appended runs are applied. */
+  sealed trait Manifest
+  object Manifest {
+    /** `layers` in meta; every appended run is visible. */
+    case object Layers extends Manifest
+    /** `layers` + `committed_runs`: rows carry `__run`, reads keep only
+      * committed runs. */
+    case object Runs extends Manifest
+    /** [[Runs]] + the logical `committed_tags` manifest (exactly-once
+      * streaming folds). */
+    case object RunsTags extends Manifest
+    /** `meta` is written once; `layers` lives in a `runs` sidecar. */
+    case object Sidecar extends Manifest
   }
 
-  /** (prefixPartitions, layers) off a [[writeIndexMeta]] meta —
-    * REQUIRED with a named rebuild-once error (probes and folds must
-    * use the index's own prefix modulus; a mismatched modulus would
-    * silently prune away real postings).
-    */
-  def readIndexMeta(s: SparkSession, indexPath: String,
-      op: String): (Int, Int) = {
-    val metaDf =
-      try s.read.parquet(s"$indexPath/meta")
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"$op: cannot read $indexPath/meta — probes and folds must " +
-            "use the index's own prefix modulus (indexes written " +
-            "before the meta existed must be rebuilt once)", e)
-      }
-    val row = metaDf.head(1).headOption.getOrElse(
-      throw new IllegalStateException(s"$op: $indexPath/meta is empty"))
-    (row.getAs[Number]("prefix_partitions").intValue(),
-      row.getAs[Number]("layers").intValue())
+  /** The N-way reconcile rule of one table: how its layered runs read
+    * as one, at probe time and at compaction alike. */
+  sealed trait Reconcile
+  object Reconcile {
+    /** Per-row tables over disjoint ids: the union of runs IS the
+      * table. */
+    case object Disjoint extends Reconcile
+    /** Set union (distinct), minus the rows of the `minus` tombstone
+      * table when one is named. */
+    final case class SetUnion(minus: Option[String] = None) extends Reconcile
+    /** Capped (band, bkey, `__cs`) buckets with null-list tombstones,
+      * capped at the meta's `max_bucket` ([[DedupOps.mergeLayeredBuckets]]). */
+    case object Capped extends Reconcile
+    /** Additive (or signed) sums per key; `netPositive` drops keys whose
+      * first sum is <= 0 (the delete path of signed removal runs). */
+    final case class Summed(keys: Seq[String], sums: Seq[String],
+        netPositive: Boolean = false) extends Reconcile
+    /** Never appended: derived from the reconciled `from` table and the
+      * meta at build and compaction, and at probe time while layered
+      * (BM25's contributions from its postings). */
+    final case class Rebake(from: String, derive: (DataFrame, Meta) => DataFrame)
+      extends Reconcile
+    /** A tombstone table: plain single-file appends, emptied by
+      * compaction (the removal becomes durable in the table it names). */
+    case object Tombstones extends Reconcile
   }
 
-  // ---- per-run manifests (the SUM-reconciled families) ---------------
-  //
-  // The SET-reconciled families bump meta BEFORE their appends (a
-  // partial run is harmless under distinct); the SUM-reconciled
-  // families (gram / line / weighted edge) cannot — a partial run
-  // would corrupt totals — so their crash window between append and
-  // meta bump was covered only by the single-writer
-  // restore-on-failure contract. Per-run manifests close it
-  // STRUCTURALLY: every appended file set carries a fresh `__run` id
-  // column, the meta lists the COMMITTED run ids (written atomically
-  // with `layers`, AFTER the append), and readers filter to committed
-  // runs — a crash between append and meta bump leaves orphan files
-  // that are INVISIBLE to every read instead of contractually
-  // excluded. A retried fold mints a NEW id (so a partial first
-  // attempt can never merge into the retry's committed run), and
-  // compaction — which rewrites from the committed rows only — drops
-  // orphan bytes from disk. Cost: one dictionary-encoded constant
-  // string column per row and one pushed-down `isin` filter per read.
-
-  /** A fresh run id for one appended file set. */
-  def newRunId(): String = java.util.UUID.randomUUID().toString
-
-  /** [[writeIndexMeta]] with the committed-run manifest — the meta
-    * shape of the SUM-reconciled (prefix_partitions, layers) families
-    * (line-count, weighted edge). `layers` stays authoritative for
-    * compaction scheduling; `committed_runs` is authoritative for
-    * reads.
-    */
-  def writeIndexMetaRuns(s: SparkSession, path: String,
-      prefixPartitions: Int, layers: Int, runs: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{array, lit}
-    require(runs.nonEmpty, "writeIndexMetaRuns: empty run manifest")
-    s.range(1)
-      .select(lit(prefixPartitions).as("prefix_partitions"),
-        lit(layers).as("layers"),
-        array(runs.map(lit(_)): _*).as("committed_runs"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+  /** One persisted table: `$index/$dir`, range-laid-out by
+    * `partitionBy ++ sortCols` into `numFiles` files. `prefix` names a
+    * partition column the kernel derives as `pmod(key, prefix_partitions)`
+    * on write and drops on read (directory-level probe pruning);
+    * `partitionCols` are data columns partitioned as they are.
+    * `optional` tables exist only when the build wrote them. */
+  final case class Table(dir: String, sortCols: Seq[String], numFiles: Int,
+      reconcile: Reconcile = Reconcile.Disjoint,
+      prefix: Option[(String, Column)] = None,
+      partitionCols: Seq[String] = Nil, optional: Boolean = false) {
+    def partitionBy: Seq[String] = prefix.map(_._1).toSeq ++ partitionCols
   }
 
-  /** (prefixPartitions, layers, committedRuns) off a
-    * [[writeIndexMetaRuns]] meta — the [[readIndexMeta]] error
-    * contract, plus a named rebuild-once error for a manifest-less
-    * meta (an index written before the manifest existed must be
-    * rebuilt once; reading it WITHOUT the run filter would resurrect
-    * any orphan rows a past crash left behind).
-    */
-  def readIndexMetaRuns(s: SparkSession, indexPath: String,
-      op: String): (Int, Int, Seq[String]) = {
-    val (prefixPartitions, layers) = readIndexMeta(s, indexPath, op)
-    (prefixPartitions, layers, committedRunsOf(s, indexPath, op))
+  /** A persisted index family: its required meta fields (in on-disk
+    * order, manifest fields excluded), what they carry (named in
+    * errors), its manifest kind, and its tables — a function of the
+    * meta, since a family's geometry may size them. */
+  final case class Family(name: String, writer: String,
+      metaFields: Seq[String], carries: String, manifest: Manifest,
+      tables: Meta => Seq[Table], metaFirst: Boolean = false)
+
+  /** One index's meta row, fields in on-disk order. */
+  final case class Meta(fields: Seq[(String, Any)]) {
+    def apply(name: String): Any = fields.collectFirst {
+      case (`name`, v) => v
+    }.getOrElse(throw new NoSuchElementException(s"meta field $name"))
+    def int(name: String): Int = apply(name).asInstanceOf[Number].intValue()
+    def long(name: String): Long = apply(name).asInstanceOf[Number].longValue()
+    def doubles(name: String): Array[Double] =
+      apply(name).asInstanceOf[Seq[Any]].map(_.asInstanceOf[Double]).toArray
+    def strings(name: String): Seq[String] =
+      apply(name).asInstanceOf[Seq[Any]].map(_.asInstanceOf[String])
+    def layers: Int = int("layers")
+    def runs: Seq[String] = strings("committed_runs")
+    def tags: Seq[String] = strings("committed_tags")
+    /** Replace fields in place; unknown names append. */
+    def set(kvs: (String, Any)*): Meta = Meta(
+      fields.map { case (k, v) => k -> kvs.find(_._1 == k).fold(v)(_._2) } ++
+        kvs.filterNot(kv => fields.exists(_._1 == kv._1)))
   }
 
-  /** The committed-run manifest off any meta frame that carries one —
-    * shared by the (prefix_partitions, layers) families and the gram
-    * family's richer meta.
-    */
-  def committedRunsOf(s: SparkSession, indexPath: String,
-      op: String): Seq[String] = {
-    val row = s.read.parquet(s"$indexPath/meta").head()
-    if (!row.schema.fieldNames.contains("committed_runs"))
-      throw new IllegalStateException(
-        s"$op: $indexPath/meta carries no committed_runs manifest — " +
-          "SUM-reconciled indexes written before the per-run manifest " +
-          "existed must be rebuilt once (reading without the run " +
-          "filter would resurrect orphan rows from crashed folds)")
-    val runs = row.getSeq[String](row.fieldIndex("committed_runs"))
-    require(runs.nonEmpty, s"$op: $indexPath/meta has an empty run manifest")
-    runs
+  /** One fold's (or build's) rows per table directory — without prefix
+    * or `__run` columns, which the kernel stamps — plus the meta fields
+    * the fold changes besides the manifest (BM25's corpus stats). */
+  final class Delta(val rows: Seq[(String, DataFrame)],
+      val meta: Seq[(String, Any)] = Nil) {
+    def withMeta(kvs: (String, Any)*): Delta = new Delta(rows, meta ++ kvs)
   }
-
-  /** Keep only committed rows and drop the manifest column — the ONE
-    * read-side filter every SUM-family consumer applies before its
-    * reconcile aggregation.
-    */
-  def committedOnly(df: org.apache.spark.sql.DataFrame,
-      runs: Seq[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    df.filter(col("__run").isin(runs: _*)).drop("__run")
-  }
-
-  // ---- logical batch tags (exactly-once streaming folds) -------------
-  //
-  // The per-run manifest makes a CRASHED append invisible, but a
-  // RETRIED fold still lands as a new committed run — correct for a
-  // caller that retries deliberately, double-counting for a streaming
-  // engine that re-delivers a whole micro-batch after a failure
-  // (foreachBatch's at-least-once contract). Families maintained FROM
-  // a stream therefore carry a second, LOGICAL manifest next to the
-  // physical one: `committed_tags` lists the batch tags whose fold
-  // has committed, a tagged fold is a NO-OP when its tag is already
-  // listed, and the physical run id stays fresh per attempt (so a
-  // crashed attempt's orphan can never merge into the retry). The two
-  // manifests answer different questions — "which FILES are real"
-  // (runs; reset to one at compaction) vs "which BATCHES are applied"
-  // (tags; preserved ACROSS compaction, else a replay after compact
-  // would re-apply its batch).
-
-  /** [[writeIndexMetaRuns]] plus the logical `committed_tags`
-    * manifest. `tags` may be empty (a batch-built index that has seen
-    * no tagged folds yet).
-    */
-  def writeIndexMetaRunsTags(s: SparkSession, path: String,
-      prefixPartitions: Int, layers: Int, runs: Seq[String],
-      tags: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{array, lit}
-    require(runs.nonEmpty, "writeIndexMetaRunsTags: empty run manifest")
-    s.range(1)
-      .select(lit(prefixPartitions).as("prefix_partitions"),
-        lit(layers).as("layers"),
-        array(runs.map(lit(_)): _*).as("committed_runs"),
-        (if (tags.isEmpty) array().cast("array<string>")
-         else array(tags.map(lit(_)): _*)).as("committed_tags"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** (prefixPartitions, layers, committedRuns, committedTags) off a
-    * [[writeIndexMetaRunsTags]] meta. The tag manifest is REQUIRED by
-    * name — an index written without it cannot answer "was this batch
-    * applied", so a tagged fold against it must fail loudly rather
-    * than default to re-applying.
-    */
-  def readIndexMetaRunsTags(s: SparkSession, indexPath: String,
-      op: String): (Int, Int, Seq[String], Seq[String]) = {
-    val (prefixPartitions, layers, runs) =
-      readIndexMetaRuns(s, indexPath, op)
-    val row = s.read.parquet(s"$indexPath/meta").head()
-    if (!row.schema.fieldNames.contains("committed_tags"))
-      throw new IllegalStateException(
-        s"$op: $indexPath/meta carries no committed_tags manifest — " +
-          "tag-folded indexes written before the tag manifest existed " +
-          "must be rebuilt once (folding without it would re-apply " +
-          "re-delivered batches)")
-    (prefixPartitions, layers, runs,
-      row.getSeq[String](row.fieldIndex("committed_tags")))
+  object Delta {
+    def apply(rows: (String, DataFrame)*): Delta = new Delta(rows)
   }
 
   /** Compact once layer count reaches this many appended runs.
@@ -237,6 +178,333 @@ object IndexMaintenance {
     * 1/threshold of the fold cadence.
     */
   val DefaultCompactThreshold = 8
+
+  // ---- meta: one reader, one writer -----------------------------------
+
+  private def manifestFields(m: Manifest): Seq[String] = m match {
+    case Manifest.Layers => Seq("layers")
+    case Manifest.Runs => Seq("layers", "committed_runs")
+    case Manifest.RunsTags =>
+      Seq("layers", "committed_runs", "committed_tags")
+    case Manifest.Sidecar => Nil
+  }
+
+  private def hasRuns(m: Manifest): Boolean =
+    m == Manifest.Runs || m == Manifest.RunsTags
+
+  /** `$index/$file` (`meta`, or IVF-PQ's `runs` sidecar) as a [[Meta]].
+    * Every required field is checked by name: an unreadable file fails
+    * with an [[IllegalStateException]] naming its path, a missing field
+    * with an [[IllegalArgumentException]] naming the field and the
+    * rebuild — there is no defaulted field and no degraded mode.
+    */
+  def readMeta(s: SparkSession, indexPath: String, fam: Family, op: String,
+      file: String = "meta"): Meta = {
+    val at = s"$indexPath/$file"
+    val df =
+      try s.read.parquet(at)
+      catch {
+        case e: Exception => throw new IllegalStateException(
+          s"$op: cannot read $at — the ${fam.name} index is missing or " +
+            s"partially copied; its $file carries the ${fam.carries}, " +
+            "so there is no safe default", e)
+      }
+    val required =
+      if (file == "meta") fam.metaFields ++ manifestFields(fam.manifest)
+      else Seq("layers")
+    val missing = required.filterNot(df.columns.contains)
+    require(missing.isEmpty,
+      s"$op: $at lacks ${missing.mkString(", ")} — rebuild the " +
+        s"${fam.name} index once with the current ${fam.writer}: an index " +
+        s"written before its ${fam.carries} lived in meta cannot be " +
+        "folded or probed safely")
+    val row = df.head(1).headOption.getOrElse(
+      throw new IllegalStateException(s"$op: $at is empty"))
+    val m = Meta(df.columns.toSeq.map(c => c -> (row.getAs[Any](c) match {
+      case xs: scala.collection.Seq[_] => xs.toSeq
+      case v => v
+    })))
+    if (file == "meta" && hasRuns(fam.manifest))
+      require(m.runs.nonEmpty, s"$op: $at has an empty run manifest")
+    m
+  }
+
+  /** Overwrite `$index/$file` with one row holding `meta`'s fields. */
+  def writeMeta(s: SparkSession, indexPath: String, meta: Meta,
+      file: String = "meta"): Unit =
+    s.range(1)
+      .select(meta.fields.map { case (k, v) => metaLit(v).as(k) }: _*)
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/$file")
+
+  private def metaLit(v: Any): Column = v match {
+    case xs: Seq[_] if xs.isEmpty => array().cast("array<string>")
+    case xs: Seq[_] if xs.head.isInstanceOf[String] =>
+      array(xs.map(lit): _*)
+    case xs: Seq[_] => typedLit(xs.map(_.asInstanceOf[Double]))
+    case x => lit(x)
+  }
+
+  /** The manifest after one commit: `layers`, the committed run list
+    * and the tag list, per the family's manifest kind. */
+  private def committedMeta(fam: Family, m: Meta, layers: Int,
+      runs: Seq[String], tags: Seq[String]): Meta = fam.manifest match {
+    case Manifest.Layers => m.set("layers" -> layers)
+    case Manifest.Runs =>
+      m.set("layers" -> layers, "committed_runs" -> runs)
+    case Manifest.RunsTags => m.set("layers" -> layers,
+      "committed_runs" -> runs, "committed_tags" -> tags)
+    case Manifest.Sidecar => m
+  }
+
+  private def commit(s: SparkSession, indexPath: String, fam: Family,
+      m: Meta, layers: Int, rewriteMeta: Boolean): Unit =
+    if (fam.manifest == Manifest.Sidecar) {
+      if (rewriteMeta) writeMeta(s, indexPath, m)
+      writeMeta(s, indexPath, Meta(Seq("layers" -> layers)), "runs")
+    } else writeMeta(s, indexPath, m)
+
+  private def layersOf(s: SparkSession, indexPath: String, fam: Family,
+      m: Meta, op: String): Int =
+    if (fam.manifest == Manifest.Sidecar)
+      readMeta(s, indexPath, fam, op, "runs").layers
+    else m.layers
+
+  /** A fresh run id for one appended file set. */
+  private def newRunId(): String = java.util.UUID.randomUUID().toString
+
+  /** Keep only committed rows and drop the manifest column. */
+  def committedOnly(df: DataFrame, runs: Seq[String]): DataFrame =
+    df.filter(col("__run").isin(runs: _*)).drop("__run")
+
+  // ---- write / fold / foldTo / compact / maintain ----------------------
+
+  /** Build an index at `path`: `geometry` (the family's meta fields, in
+    * order) plus a one-run manifest; the rows derive against that meta.
+    * Tables a [[Reconcile.Rebake]] derives need no rows. */
+  def write(s: SparkSession, path: String, fam: Family,
+      geometry: (String, Any)*)(rows: Meta => Delta): Unit = {
+    val run = newRunId()
+    val m = committedMeta(fam, Meta(geometry), 1, Seq(run), Nil)
+    lay(s, path, fam, m, run, rows(m).rows.toMap)
+    commit(s, path, fam, m, 1, rewriteMeta = true)
+  }
+
+  /** The in-place O(delta) fold: the delta's rows append as their own
+    * sorted run per table, then the meta commits (before the appends
+    * for a [[Family.metaFirst]] family). Returns the post-fold layer
+    * count, or None when `tag` is already committed (a replay: nothing
+    * is written). */
+  def fold(s: SparkSession, indexPath: String, fam: Family, op: String,
+      tag: Option[String] = None)(rows: Meta => Delta): Option[Int] = {
+    val m = readMeta(s, indexPath, fam, op)
+    if (tag.exists(t => m.tags.contains(t))) None
+    else {
+      val layers = layersOf(s, indexPath, fam, m, op) + 1
+      val run = newRunId()
+      val d = rows(m)
+      val next = committedMeta(fam, m.set(d.meta: _*), layers,
+        if (hasRuns(fam.manifest)) m.runs :+ run else Nil,
+        if (fam.manifest == Manifest.RunsTags) m.tags ++ tag else Nil)
+      if (fam.metaFirst) commit(s, indexPath, fam, next, layers, false)
+      val tables = fam.tables(m)
+      Par.run(d.rows.flatMap { case (dir, df) =>
+        val t = table(fam, tables, dir)
+        if (t.optional && !exists(s, s"$indexPath/$dir")) None
+        else Some(() => put(s"$indexPath/$dir", t, stamp(df, t, fam, m, run),
+          append = true))
+      }: _*)
+      if (!fam.metaFirst) commit(s, indexPath, fam, next, layers, false)
+      Some(layers)
+    }
+  }
+
+  /** Fold-and-compact into a FRESH single-run index at `outPath`: the
+    * compaction of the committed runs plus the delta's run — O(index)
+    * read and write, the old index untouched (the atomic form). */
+  def foldTo(s: SparkSession, indexPath: String, outPath: String,
+      fam: Family, op: String)(rows: Meta => Delta): Unit = {
+    require(indexPath != outPath, s"$op: outPath must differ from " +
+      "indexPath (the merge reads the old index lazily while writing " +
+      "the new one)")
+    val m = readMeta(s, indexPath, fam, op)
+    val d = rows(m)
+    rewrite(s, indexPath, outPath, fam, m.set(d.meta: _*), d.rows.toMap, op)
+  }
+
+  /** Compact a layered index into ONE run per table at `outPath`: each
+    * table's committed runs reconciled by its rule (orphan rows of
+    * crashed folds dropped from disk), layers reset to 1, tags kept. */
+  def compact(s: SparkSession, indexPath: String, outPath: String,
+      fam: Family, op: String): Unit = {
+    require(indexPath != outPath, s"$op: outPath must differ from indexPath")
+    rewrite(s, indexPath, outPath, fam, readMeta(s, indexPath, fam, op),
+      Map.empty, op)
+  }
+
+  private def rewrite(s: SparkSession, indexPath: String, outPath: String,
+      fam: Family, m: Meta, delta: Map[String, DataFrame], op: String): Unit = {
+    val run = newRunId()
+    val tables = fam.tables(m)
+    def input(t: Table): DataFrame = {
+      val old = committed(s, indexPath, fam, m, t, op, None)
+      delta.get(t.dir).fold(old)(d => old.unionByName(d))
+    }
+    lay(s, outPath, fam, m, run, tables.collect {
+      case t if !t.reconcile.isInstanceOf[Reconcile.Rebake] &&
+          (!t.optional || exists(s, s"$indexPath/${t.dir}")) =>
+        t.dir -> reconcile(t, input(t), m,
+          d => committed(s, indexPath, fam, m, table(fam, tables, d), op, None))
+    }.toMap)
+    commit(s, outPath, fam, committedMeta(fam, m, 1, Seq(run),
+      if (fam.manifest == Manifest.RunsTags) m.tags else Nil),
+      1, rewriteMeta = true)
+  }
+
+  /** Lay out one complete table set at `path` — [[Reconcile.Rebake]]
+    * tables derived from their (materialized-once) source. */
+  private def lay(s: SparkSession, path: String, fam: Family, m: Meta,
+      run: String, frames: Map[String, DataFrame]): Unit = {
+    val tables = fam.tables(m)
+    val rebakes = tables.collect {
+      case t @ Table(_, _, _, Reconcile.Rebake(from, derive), _, _, _) =>
+        (t.dir, from, derive)
+    }
+    // a rebake source feeds two writes: compute it once
+    val shared = rebakes.map(_._2).distinct
+      .map(d => d -> frames(d).localCheckpoint()).toMap
+    try {
+      val all = frames ++ shared ++ rebakes.map { case (dir, from, derive) =>
+        dir -> derive(shared(from), m)
+      }
+      Par.run(all.toSeq.map { case (dir, df) =>
+        val t = table(fam, tables, dir)
+        () => put(s"$path/$dir", t, stamp(df, t, fam, m, run), append = false)
+      }: _*)
+    } finally shared.values.foreach(Lifecycle.releaseLocalCheckpoint)
+  }
+
+  /** The maintenance policy as one call: crash-recover at entry, fold
+    * in place, then compact-and-swap iff the post-fold layer count has
+    * reached `threshold` — all inside the writer lock. Some(compacted),
+    * or None when the tag was a replay (no fold, no compaction: a no-op
+    * must be a no-op). */
+  def maintain(s: SparkSession, indexPath: String, fam: Family, op: String,
+      threshold: Int, tag: Option[String] = None)(
+      rows: Meta => Delta): Option[Boolean] =
+    locked(s, indexPath) {
+      fold(s, indexPath, fam, op, tag)(rows).map(layers =>
+        compactIfLayered(s, indexPath, layers, threshold)(
+          compact(s, indexPath, _, fam, op)))
+    }
+
+  /** A maintain*-class mutation: [[withWriterLock]] + [[recoverAtEntry]]. */
+  def locked[T](s: SparkSession, indexPath: String)(body: => T): T =
+    withWriterLock(s, indexPath) {
+      recoverAtEntry(s, indexPath)
+      body
+    }
+
+  // ---- reads -----------------------------------------------------------
+
+  /** Table `dir` of a committed index: rows of committed runs only,
+    * pruned to the `prune` prefixes, prefix column dropped, and — when
+    * `reconciled` and the index is layered — read as one run through
+    * the table's rule (a [[Reconcile.Rebake]] table rebakes from its
+    * source; set-union tombstones apply at any layer count). */
+  def read(s: SparkSession, indexPath: String, fam: Family, m: Meta,
+      dir: String, op: String, prune: Option[Seq[Int]] = None,
+      reconciled: Boolean = true): DataFrame = {
+    val t = table(fam, fam.tables(m), dir)
+    val layered = reconciled && m.layers > 1
+    def other(d: String) =
+      read(s, indexPath, fam, m, d, op, prune, reconciled)
+    lazy val rows = committed(s, indexPath, fam, m, t, op, prune)
+    t.reconcile match {
+      case Reconcile.Rebake(from, derive) if layered => derive(other(from), m)
+      case Reconcile.Tombstones => rows
+      case Reconcile.SetUnion(Some(minus)) if reconciled && !layered =>
+        rows.join(other(minus), rows.columns.toSeq, "left_anti")
+      case _ if layered => reconcile(t, rows, m, other)
+      case _ => rows
+    }
+  }
+
+  /** The distinct `pmod(key, prefix_partitions)` prefixes of a probe's
+    * keys — at most prefix_partitions ints, collected driver-side as a
+    * partition-pruning list (Int literals: the read-back partition
+    * column infers as int, and a cast on it would defeat pruning). */
+  def prefixesOf(keys: DataFrame, key: Column, m: Meta): Seq[Int] =
+    keys.select(pmod(key, lit(m.int("prefix_partitions").toLong)))
+      .distinct().collect().map(_.getLong(0).toInt).toSeq
+
+  private def table(fam: Family, tables: Seq[Table], dir: String): Table =
+    tables.find(_.dir == dir).getOrElse(throw new IllegalArgumentException(
+      s"${fam.name} index has no table '$dir'"))
+
+  private def committed(s: SparkSession, indexPath: String, fam: Family,
+      m: Meta, t: Table, op: String, prune: Option[Seq[Int]]): DataFrame = {
+    val at = s"$indexPath/${t.dir}"
+    val raw =
+      try s.read.parquet(at)
+      catch {
+        case e: Exception => throw new IllegalStateException(
+          s"$op: cannot read $at — a ${fam.name} index written before " +
+            "this table existed must be rebuilt once", e)
+      }
+    val rows = (t.prefix, prune) match {
+      case (Some((p, _)), Some(ps)) => raw.filter(col(p).isin(ps: _*)).drop(p)
+      case (Some((p, _)), None) => raw.drop(p)
+      case _ => raw
+    }
+    if (hasRuns(fam.manifest) && t.reconcile != Reconcile.Tombstones)
+      committedOnly(rows, m.runs)
+    else rows
+  }
+
+  private def reconcile(t: Table, df: DataFrame, m: Meta,
+      other: String => DataFrame): DataFrame = t.reconcile match {
+    case Reconcile.Disjoint => df
+    case Reconcile.SetUnion(minus) =>
+      minus.fold(df.distinct())(d =>
+        df.distinct().join(other(d), df.columns.toSeq, "left_anti"))
+    case Reconcile.Capped => DedupOps.mergeLayeredBuckets(df, m.int("max_bucket"))
+    case Reconcile.Summed(keys, sums, netPositive) =>
+      val agg = df.groupBy(keys.map(col): _*)
+        .agg(sum(col(sums.head)).as(sums.head),
+          sums.tail.map(c => sum(col(c)).as(c)): _*)
+      if (netPositive) agg.filter(col(sums.head) > 0) else agg
+    case Reconcile.Tombstones => df.limit(0)
+    case Reconcile.Rebake(from, derive) => derive(other(from), m)
+  }
+
+  /** The kernel-owned columns: the prefix partition and the run id. */
+  private def stamp(df: DataFrame, t: Table, fam: Family, m: Meta,
+      run: String): DataFrame = {
+    val prefixed = t.prefix.fold(df) { case (p, key) =>
+      df.withColumn(p, pmod(key, lit(m.int("prefix_partitions").toLong)))
+    }
+    if (hasRuns(fam.manifest) && t.reconcile != Reconcile.Tombstones)
+      prefixed.withColumn("__run", lit(run))
+    else prefixed
+  }
+
+  private def put(path: String, t: Table, df: DataFrame,
+      append: Boolean): Unit = t.reconcile match {
+    case Reconcile.Tombstones =>
+      df.coalesce(1).write.mode(if (append) "append" else "overwrite")
+        .parquet(path)
+    case _ if append => graft.jobs.Sinks.layoutAppend(df, path,
+      t.partitionBy, t.sortCols, t.numFiles)
+    case _ => graft.jobs.Sinks.layout(df, path, t.partitionBy, t.sortCols,
+      t.numFiles)
+  }
+
+  private def exists(s: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  // ---- single-writer safety --------------------------------------------
 
   /** Best-effort single-writer guard wrapping every maintain* entry
     * point: atomically creates `<index>__writer.lock`

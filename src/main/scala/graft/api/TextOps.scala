@@ -1006,124 +1006,74 @@ object TextOps {
         .join(common, Seq("_kh"), "left"), idCol)
   }
 
-  /** Materialize the corpus side of [[dedupLinesAgainst]] to parquet —
-    * the EIGHTH persisted index family, sharing the gram-count
-    * family's reconcile algebra (exact BY ADDITIVITY): `$path/lines` =
-    * (lh, n_docs) per-normalized-line distinct-corpus-doc counts,
-    * partitioned by `__lp = lh mod prefixPartitions` (the `__bp`/
-    * `__gp` prefix-pruning discipline) and sorted by lh; `$path/meta`
-    * carries (prefix_partitions, layers, committed_runs — the per-run
-    * manifest of [[IndexMaintenance.writeIndexMetaRuns]], closing the
-    * SUM family's append-before-commit crash window structurally).
-    * RAW counts are stored — the
-    * probe applies `maxDocFreq` at read, so one index serves any
-    * threshold policy. Build once per corpus version, fold deltas
-    * daily ([[foldIntoLineIndex]] / [[maintainLineIndex]]), probe per
-    * ingest batch.
+  /** The line-count index family, sharing the gram family's reconcile
+    * algebra (exact BY ADDITIVITY): `lines` = (lh, n_docs)
+    * per-normalized-line distinct-corpus-doc counts, partitioned by
+    * `__lp = lh mod prefix_partitions` and sorted by lh; meta carries
+    * (prefix_partitions, layers, committed_runs — the per-run
+    * manifest, closing the SUM family's append-before-commit crash
+    * window structurally). RAW counts are stored — the probe applies
+    * `maxDocFreq` at read, so one index serves any threshold policy.
+    */
+  private[graft] val LineIndex = IndexMaintenance.Family("line",
+    "writeLineIndex", Seq("prefix_partitions"),
+    "prefix geometry and run manifest", IndexMaintenance.Manifest.Runs,
+    _ => Seq(IndexMaintenance.Table("lines", Seq("lh"), 8,
+      IndexMaintenance.Reconcile.Summed(Seq("lh"), Seq("n_docs")),
+      Some("__lp" -> col("lh")))))
+
+  private def lineRows(df: DataFrame, idCol: String,
+      textCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta =
+    IndexMaintenance.Delta("lines" -> linePositions(df, idCol, textCol)
+      .filter(col("_kh").isNotNull)
+      .select(col("_kh").as("lh"), col(idCol)).distinct()
+      .groupBy(col("lh")).agg(count(lit(1)).as("n_docs")))
+
+  /** Materialize the corpus side of [[dedupLinesAgainst]] to parquet
+    * ([[LineIndex]]'s layout). Build once per corpus version, fold
+    * deltas daily ([[foldIntoLineIndex]] / [[maintainLineIndex]]),
+    * probe per ingest batch.
     */
   def writeLineIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, prefixPartitions: Int = 64): Unit = {
     requireLineCols(idCol, "writeLineIndex")
-    val run = IndexMaintenance.newRunId()
-    graft.jobs.Sinks.layout(
-      lineCounts(corpus, idCol, textCol, prefixPartitions)
-        .withColumn("__run", lit(run)),
-      s"$path/lines", partitionCols = Seq("__lp"),
-      sortCols = Seq("lh"), numFiles = 8)
-    IndexMaintenance.writeIndexMetaRuns(corpus.sparkSession, path,
-      prefixPartitions, 1, Seq(run))
+    IndexMaintenance.write(corpus.sparkSession, path, LineIndex,
+      "prefix_partitions" -> prefixPartitions)(lineRows(corpus, idCol, textCol))
   }
-
-  private def lineCounts(df: DataFrame, idCol: String, textCol: String,
-      prefixPartitions: Int): DataFrame =
-    linePositions(df, idCol, textCol)
-      .filter(col("_kh").isNotNull)
-      .select(col("_kh").as("lh"), col(idCol)).distinct()
-      .groupBy(col("lh")).agg(count(lit(1)).as("n_docs"))
-      .withColumn("__lp", pmod(col("lh"), lit(prefixPartitions.toLong)))
-
-  // meta read/write is the shared (prefix_partitions, layers,
-  // committed_runs) triple in IndexMaintenance — one schema + one
-  // rebuild-once error for every SUM family of this shape
-  private def readLineMeta(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (Int, Int, Seq[String]) =
-    IndexMaintenance.readIndexMetaRuns(s, indexPath, op)
 
   /** Fold a DELTA of new documents into a persisted [[writeLineIndex]]
     * IN PLACE with O(delta) write bytes: the delta's per-line
-    * distinct-doc counts land as their own sorted run, meta bumps
-    * `layers`. Reconcile is EXACT BY ADDITIVITY — delta doc ids are
-    * disjoint from indexed ids (the incremental contract everywhere
-    * in this api), so a line's total distinct-doc count is the SUM of
-    * its per-run counts; no cap tombstones exist in this family
-    * because `maxDocFreq` is a probe-side threshold over reconciled
-    * totals, not a storage contract (the gram-count discipline).
-    * Crash consistency: the run lands under a fresh `__run` id and
-    * the meta — bumped AFTER the append — commits it
-    * ([[IndexMaintenance.writeIndexMetaRuns]]): a crash between
-    * append and commit leaves orphan files every reader filters out,
-    * and the retry's fresh id can never merge with them
-    * (RecoverySpec pins it).
+    * distinct-doc counts land as their own run under a fresh `__run`
+    * id the meta commits after the append (the gram-count discipline;
+    * RecoverySpec pins that an uncommitted run is invisible).
     */
   def foldIntoLineIndex(delta: DataFrame, idCol: String, textCol: String,
       indexPath: String): Unit = {
-    val s = delta.sparkSession
-    val (prefixPartitions, layers, runs) =
-      readLineMeta(s, indexPath, "foldIntoLineIndex")
-    val run = IndexMaintenance.newRunId()
-    graft.jobs.Sinks.layoutAppend(
-      lineCounts(delta, idCol, textCol, prefixPartitions)
-        .withColumn("__run", lit(run)),
-      s"$indexPath/lines", partitionCols = Seq("__lp"),
-      sortCols = Seq("lh"), numFiles = 8)
-    IndexMaintenance.writeIndexMetaRuns(s, indexPath, prefixPartitions,
-      layers + 1, runs :+ run)
+    IndexMaintenance.fold(delta.sparkSession, indexPath, LineIndex,
+      "foldIntoLineIndex")(lineRows(delta, idCol, textCol))
+    ()
   }
 
   /** Compact a layered line index back to ONE sorted run: per-line
-    * counts summed across COMMITTED runs (the exact reconcile
-    * arithmetic — orphan rows from crashed folds are dropped from
-    * disk here), meta reset to layers=1 with a single-run manifest.
-    * Identical probe results before and after.
+    * counts summed across COMMITTED runs (orphan rows from crashed
+    * folds dropped from disk), a single-run manifest. Identical probe
+    * results before and after.
     */
   def compactLineIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactLineIndex: outPath must differ from indexPath")
-    val (prefixPartitions, _, runs) =
-      readLineMeta(s, indexPath, "compactLineIndex")
-    val run = IndexMaintenance.newRunId()
-    graft.jobs.Sinks.layout(
-      IndexMaintenance.committedOnly(
-          s.read.parquet(s"$indexPath/lines").drop("__lp"), runs)
-        .groupBy(col("lh")).agg(sum(col("n_docs")).as("n_docs"))
-        .withColumn("__lp", pmod(col("lh"), lit(prefixPartitions.toLong)))
-        .withColumn("__run", lit(run)),
-      s"$outPath/lines", partitionCols = Seq("__lp"),
-      sortCols = Seq("lh"), numFiles = 8)
-    IndexMaintenance.writeIndexMetaRuns(s, outPath, prefixPartitions, 1,
-      Seq(run))
-  }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.compact(s, indexPath, outPath, LineIndex,
+      "compactLineIndex")
 
-  /** [[graft.api.DedupOps.maintainGramIndex]]'s line-count twin:
-    * crash-recover at entry, O(delta) fold, compact-and-swap iff
-    * post-fold layers reach `compactThreshold`. All inside
-    * [[IndexMaintenance.withWriterLock]]; NOT reader-safe across the
-    * swap.
+  /** [[graft.api.DedupOps.maintainGramIndex]]'s line-count twin. NOT
+    * reader-safe across the swap.
     */
   def maintainLineIndex(delta: DataFrame, idCol: String, textCol: String,
       indexPath: String,
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = delta.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoLineIndex(delta, idCol, textCol, indexPath)
-      val (_, layers, _) = readLineMeta(s, indexPath, "maintainLineIndex")
-      IndexMaintenance.compactIfLayered(s, indexPath, layers,
-        compactThreshold)(out => compactLineIndex(s, indexPath, out))
-    }
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    IndexMaintenance.maintain(delta.sparkSession, indexPath, LineIndex,
+      "maintainLineIndex", compactThreshold)(
+      lineRows(delta, idCol, textCol)).contains(true)
 
   /** [[dedupLinesAgainst]] probing a PERSISTED [[writeLineIndex]]:
     * the delta's lines normalize with the shared [[linePositions]]
@@ -1142,21 +1092,17 @@ object TextOps {
       s"dedupLinesAgainstIndex: maxDocFreq $maxDocFreq < 1")
     requireLineCols(idCol, "dedupLinesAgainstIndex")
     val s = newDf.sparkSession
-    val (prefixPartitions, layers, runs) =
-      readLineMeta(s, indexPath, "dedupLinesAgainstIndex")
+    val op = "dedupLinesAgainstIndex"
+    val m = IndexMaintenance.readMeta(s, indexPath, LineIndex, op)
     val lines = linePositions(newDf, idCol, textCol)
-    val prefixes = lines.filter(col("_kh").isNotNull)
-      .select(pmod(col("_kh"), lit(prefixPartitions.toLong)).as("__lp"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val pruned = IndexMaintenance.committedOnly(
-      s.read.parquet(s"$indexPath/lines")
-        .filter(col("__lp").isin(prefixes: _*)).drop("__lp"), runs)
-    val common = reconcileLineRuns(pruned, layers)
+    val prefixes = IndexMaintenance.prefixesOf(
+      lines.filter(col("_kh").isNotNull), col("_kh"), m)
+    val common = IndexMaintenance.read(s, indexPath, LineIndex, m, "lines",
+        op, Some(prefixes))
       .filter(col("n_docs") > maxDocFreq)
       .select(col("lh").as("_kh"), lit(1).as("_hit"))
     reassembleLines(lines.join(common, Seq("_kh"), "left"), idCol)
   }
-
   /** Apply a frame of per-line DROP DECISIONS — (idCol, pos) rows,
     * e.g. collected from [[graft.streaming.LineGate.drops]]'s append
     * sink — to the original documents: the consumer-side re-assembly
@@ -1185,14 +1131,6 @@ object TextOps {
         .join(marks, Seq(idCol, "pos"), "left"), idCol)
   }
 
-  /** Layered-run reconcile — per-line counts SUM across runs (exact
-    * by additivity); ONE definition shared by the batch probe and the
-    * streaming gate's author-time read. */
-  private[graft] def reconcileLineRuns(raw: DataFrame,
-      layers: Int): DataFrame =
-    if (layers <= 1) raw
-    else raw.groupBy(col("lh")).agg(sum(col("n_docs")).as("n_docs"))
-
   /** The streaming gate's author-time read of a persisted
     * [[writeLineIndex]]: full reconciled counts (no delta exists yet
     * to prune by), thresholded to the over-threshold key set.
@@ -1203,15 +1141,12 @@ object TextOps {
       maxDocFreq: Int): DataFrame = {
     require(maxDocFreq >= 1,
       s"commonLinesFromIndex: maxDocFreq $maxDocFreq < 1")
-    val (_, layers, runs) =
-      readLineMeta(s, indexPath, "commonLinesFromIndex")
-    reconcileLineRuns(
-        IndexMaintenance.committedOnly(
-          s.read.parquet(s"$indexPath/lines").drop("__lp"), runs), layers)
+    val op = "commonLinesFromIndex"
+    IndexMaintenance.read(s, indexPath, LineIndex,
+        IndexMaintenance.readMeta(s, indexPath, LineIndex, op), "lines", op)
       .filter(col("n_docs") > maxDocFreq)
       .select(col("lh").as("_kh"))
   }
-
   /** Quantized bigram language-model quality score — the CCNet/KenLM
     * perplexity filter (Wenzek et al. 2020, "CCNet: Extracting High
     * Quality Monolingual Datasets from Web Crawl Data") re-expressed
@@ -1819,14 +1754,42 @@ object TextOps {
       .select(col("_qid").as("qid"), col("rank"), col(idCol), col("score"))
   }
 
-  /** Materialize [[bm25ContribIndex]] to parquet — the retrieval
-    * deployment posture: `$path/contrib` = (term, doc, quantized
-    * contribution) PARTITIONED by `__bp = hash60(term) mod
-    * prefixPartitions` and sorted by `_t` within partitions (the
-    * writeCdcChunkIndex/writeMinhashIndex layout applied to an
-    * inverted index), `$path/meta` = prefix_partitions. Build once
-    * per corpus version; every query batch probes with
-    * [[bm25TopKAgainstIndex]], whose query-term prefixes prune the
+  /** The BM25 index family — the retrieval deployment posture:
+    * `contrib` = (term, doc, quantized contribution) and `postings` =
+    * the raw (term, doc, tf, dl) postings, both partitioned by
+    * `__bp = hash60(term) mod prefix_partitions` and sorted by `_t`;
+    * meta = (prefix_partitions, n, tt, max_dl, layers). BM25's
+    * global-stats problem — every baked `_c` changes when ANY document
+    * arrives — is solved by NOT baking on a fold: a fold appends only
+    * the delta's postings and merges the corpus stats in meta, and
+    * `contrib` is a [[IndexMaintenance.Reconcile.Rebake]] of the
+    * postings: while the index is layered the probe derives
+    * contributions from the PRUNED postings + meta stats through the
+    * verbatim [[bm25ContribFromPostings]] arithmetic (df per term is
+    * exact over a pruned directory: `__bp` partitions by term hash, so
+    * a touched directory holds EVERY posting of each term in it), and
+    * compaction rebakes it (the LSM posture: append daily, rebake
+    * weekly). Postings reconcile as a set — one row per (doc, term) —
+    * so a retried fold's duplicate run cannot double a term's df.
+    */
+  private[graft] val Bm25Index = {
+    val prefix = Some("__bp" -> TextHashing.hash60(col("_t")))
+    IndexMaintenance.Family("BM25", "writeBm25Index",
+      Seq("prefix_partitions", "n", "tt", "max_dl"),
+      "prefix geometry, corpus stats and layer count",
+      IndexMaintenance.Manifest.Layers,
+      _ => Seq(
+        IndexMaintenance.Table("contrib", Seq("_t"), 8,
+          IndexMaintenance.Reconcile.Rebake("postings", (p, m) =>
+            bm25ContribFromPostings(p, idColOf(p), m.long("n"), m.long("tt"),
+              m.long("max_dl"))), prefix),
+        IndexMaintenance.Table("postings", Seq("_t"), 8,
+          IndexMaintenance.Reconcile.SetUnion(), prefix)))
+  }
+
+  /** Materialize [[bm25ContribIndex]] to parquet ([[Bm25Index]]'s
+    * layout). Build once per corpus version; every query batch probes
+    * with [[bm25TopKAgainstIndex]], whose query-term prefixes prune the
     * contrib parquet to the directories they can hit — a handful of
     * query terms read a handful of directories, never the index.
     */
@@ -1835,210 +1798,75 @@ object TextOps {
     require(prefixPartitions >= 1,
       s"writeBm25Index: prefixPartitions $prefixPartitions < 1")
     val (n, tt, maxDl) = bm25CorpusStats(corpus, idCol, textCol)
-    val postings = bm25Postings(corpus, idCol, textCol).localCheckpoint()
-    try {
-      // both tables derive from the materialized postings checkpoint
-      // and write different paths — overlapped (guide §2.6)
-      Par.run(
-        () => graft.jobs.Sinks.layout(
-          bm25ContribFromPostings(postings, idCol, n, tt, maxDl)
-            .withColumn("__bp", pmod(TextHashing.hash60(col("_t")),
-              lit(prefixPartitions.toLong))),
-          s"$path/contrib", partitionCols = Seq("__bp"),
-          sortCols = Seq("_t"), numFiles = 8),
-        // the raw (term, doc, tf, dl) postings ride along:
-        // contributions are a function of corpus-GLOBAL stats, so
-        // maintenance ([[foldIntoBm25Index]]) must re-derive them —
-        // possible from raw postings at index size, impossible from
-        // baked _c values
-        () => graft.jobs.Sinks.layout(
-          postings.withColumn("__bp", pmod(TextHashing.hash60(col("_t")),
-            lit(prefixPartitions.toLong))),
-          s"$path/postings", partitionCols = Seq("__bp"),
-          sortCols = Seq("_t"), numFiles = 8))
-      writeBm25Meta(corpus.sparkSession, path, prefixPartitions,
-        n, tt, maxDl, 1)
-    } finally Lifecycle.releaseLocalCheckpoint(postings)
+    IndexMaintenance.write(corpus.sparkSession, path, Bm25Index,
+      "prefix_partitions" -> prefixPartitions, "n" -> n, "tt" -> tt,
+      "max_dl" -> maxDl)(_ => IndexMaintenance.Delta(
+      "postings" -> bm25Postings(corpus, idCol, textCol)))
   }
 
-  private def writeBm25Meta(s: org.apache.spark.sql.SparkSession,
-      path: String, prefixPartitions: Int, n: Long, tt: Long,
-      maxDl: Long, layers: Int): Unit =
-    s.range(1)
-      .select(lit(prefixPartitions).as("prefix_partitions"),
-        lit(n).as("n"), lit(tt).as("tt"), lit(maxDl).as("max_dl"),
-        lit(layers).as("layers"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-
-  /** Full BM25 meta (prefix_partitions, n, tt, max_dl, layers) with
-    * the fold's stats REQUIREMENT: a pre-fold index (no corpus stats
-    * in meta) fails with a named rebuild-once error. `layers`
-    * defaults to 1 for pre-layering indexes.
-    */
-  private[graft] def readBm25FullMeta(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (Int, Long, Long, Long, Int) = {
-    val metaDf =
-      try s.read.parquet(s"$indexPath/meta")
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"$op: cannot read $indexPath/meta — the index is missing " +
-            "or partially copied; the meta carries the prefix " +
-            "geometry, corpus stats, and layer count", e)
-      }
-    require(Seq("n", "tt", "max_dl").forall(metaDf.columns.contains),
-      s"$op: $indexPath/meta lacks corpus stats (n, tt, " +
-        "max_dl) — a pre-fold index must be rebuilt once with the " +
-        "current writeBm25Index")
-    val m = metaDf.head()
-    val layers =
-      if (metaDf.columns.contains("layers"))
-        m.getAs[Number]("layers").intValue()
-      else 1
-    (m.getAs[Number]("prefix_partitions").intValue(),
-      m.getAs[Number]("n").longValue(), m.getAs[Number]("tt").longValue(),
-      m.getAs[Number]("max_dl").longValue(), layers)
+  /** One fold's rows: the delta's raw postings (disjoint doc ids) and
+    * the merged corpus stats (N counts null-text docs, tt skips them —
+    * both sides computed the same way, so they add exactly). */
+  private def bm25Rows(delta: DataFrame, idCol: String,
+      textCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta = {
+    val (dn, dtt, dMax) = bm25CorpusStats(delta, idCol, textCol)
+    IndexMaintenance.Delta("postings" -> bm25Postings(delta, idCol, textCol))
+      .withMeta("n" -> (m.long("n") + dn), "tt" -> (m.long("tt") + dtt),
+        "max_dl" -> math.max(m.long("max_dl"), dMax))
   }
 
   /** Fold a DELTA of new documents into a persisted [[writeBm25Index]]
-    * IN PLACE with O(delta) write bytes. BM25's global-stats problem
-    * — every baked `_c` changes when ANY document arrives — is solved
-    * here by NOT baking: the delta's raw postings land as their own
-    * sorted run ([[graft.jobs.Sinks.layoutAppend]]; disjoint doc ids,
-    * so the multi-run read IS the postings union with no reconcile),
-    * the merged stats land in meta, and `layers > 1` tells the probe
-    * the baked `contrib/` is STALE — [[bm25TopKAgainstIndex]] then
-    * derives contributions at probe time from the PRUNED postings +
-    * meta stats through the verbatim [[bm25ContribFromPostings]]
-    * arithmetic (df per term is exact over a pruned directory: `__bp`
-    * partitions by term hash, so a touched directory holds EVERY
-    * posting of each term in it). Probe-time work grows only by the
-    * per-touched-term df agg — still O(query terms + pruned scan),
-    * never O(index). [[compactBm25Index]] rebakes contrib and resets
-    * layers=1 (the LSM posture: append daily, rebake weekly). Crash
-    * consistency: single-writer, restore-on-failure, never retry in
-    * place — see [[DedupOps.foldIntoMinhashIndex]]'s contract note
-    * (here a crash between the postings append and the meta write
-    * leaves the index behaving exactly as v1: layers stays 1, so the
-    * probe reads the baked contrib and never sees the orphan run).
+    * IN PLACE with O(delta) write bytes: the delta's raw postings land
+    * as their own sorted run, the merged stats land in meta, and
+    * `layers > 1` tells the probe the baked `contrib/` is STALE. Probe
+    * work grows only by the per-touched-term df agg — still O(query
+    * terms + pruned scan), never O(index). Crash consistency:
+    * [[DedupOps.foldIntoMinhashIndex]]'s contract (a crash between the
+    * postings append and the meta write leaves layers at its old
+    * count, so a single-run index keeps probing its baked contrib).
     */
   def foldIntoBm25Index(delta: DataFrame, idCol: String, textCol: String,
       indexPath: String): Unit = {
-    val s = delta.sparkSession
-    val (prefixes, oldN, oldTt, oldMax, layers) =
-      readBm25FullMeta(s, indexPath, "foldIntoBm25Index")
-    val (dn, dtt, dMax) = bm25CorpusStats(delta, idCol, textCol)
-    graft.jobs.Sinks.layoutAppend(
-      bm25Postings(delta, idCol, textCol)
-        .withColumn("__bp", pmod(TextHashing.hash60(col("_t")),
-          lit(prefixes.toLong))),
-      s"$indexPath/postings", partitionCols = Seq("__bp"),
-      sortCols = Seq("_t"), numFiles = 8)
-    writeBm25Meta(s, indexPath, prefixes, oldN + dn, oldTt + dtt,
-      math.max(oldMax, dMax), layers + 1)
+    IndexMaintenance.fold(delta.sparkSession, indexPath, Bm25Index,
+      "foldIntoBm25Index")(bm25Rows(delta, idCol, textCol))
+    ()
   }
 
-  /** Fold a DELTA of new documents into a persisted [[writeBm25Index]]
-    * WITHOUT re-tokenizing the corpus — completing the maintenance
-    * story across every index family (minhash, sign, CDC, BM25).
-    * BM25 is the interesting case: contributions depend on
-    * corpus-GLOBAL stats (N, total tokens, per-term df), so every
-    * `_c` in the index changes when ANY document arrives — no
-    * per-bucket merge exists. What IS incremental: the raw postings
-    * union (the delta tokenizes itself, disjoint doc ids), the stats
-    * add (old N/tt off the meta + the delta's own), and df re-derives
-    * from the unioned postings. The fold is therefore an INDEX-SIZED
-    * rewrite (one pass over ids+counts parquet, the same cost class
-    * as the minhash fold's bucket merge) instead of a CORPUS-sized
-    * re-tokenization — at 100 TB the corpus text is orders of
-    * magnitude larger than its postings. Exactness: the contrib
-    * arithmetic is [[bm25ContribFromPostings]] shared verbatim with
-    * the build, and the merged stats reproduce the from-scratch agg
-    * (N counts null-text docs, tt skips them — both sides computed
-    * the same way), so a folded index probes identically to
-    * `writeBm25Index(corpus ∪ delta)` (ApiSpec parity). Meta without
-    * stats (a pre-fold index) fails loudly: rebuild once.
+  /** Fold-and-COMPACT: the postings union re-baked under the merged
+    * stats into a fresh single-run index at `outPath` — an INDEX-sized
+    * rewrite instead of a CORPUS-sized re-tokenization. A folded index
+    * probes identically to `writeBm25Index(corpus ∪ delta)` (ApiSpec
+    * parity). Meta without stats (a pre-fold index) fails loudly:
+    * rebuild once.
     */
   def foldIntoBm25Index(delta: DataFrame, idCol: String, textCol: String,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "foldIntoBm25Index: outPath must differ from indexPath")
-    val s = delta.sparkSession
-    val (prefixes, oldN, oldTt, oldMax, _) =
-      readBm25FullMeta(s, indexPath, "foldIntoBm25Index")
-    val (dn, dtt, dMax) = bm25CorpusStats(delta, idCol, textCol)
-    val (n, tt, maxDl) = (oldN + dn, oldTt + dtt, math.max(oldMax, dMax))
-    val postings = s.read.parquet(s"$indexPath/postings").drop("__bp")
-      .unionByName(bm25Postings(delta, idCol, textCol))
-      .localCheckpoint()
-    try {
-      graft.jobs.Sinks.layout(
-        bm25ContribFromPostings(postings, idCol, n, tt, maxDl)
-          .withColumn("__bp", pmod(TextHashing.hash60(col("_t")),
-            lit(prefixes.toLong))),
-        s"$outPath/contrib", partitionCols = Seq("__bp"),
-        sortCols = Seq("_t"), numFiles = 8)
-      graft.jobs.Sinks.layout(
-        postings.withColumn("__bp", pmod(TextHashing.hash60(col("_t")),
-          lit(prefixes.toLong))),
-        s"$outPath/postings", partitionCols = Seq("__bp"),
-        sortCols = Seq("_t"), numFiles = 8)
-      writeBm25Meta(s, outPath, prefixes, n, tt, maxDl, 1)
-    } finally Lifecycle.releaseLocalCheckpoint(postings)
-  }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.foldTo(delta.sparkSession, indexPath, outPath,
+      Bm25Index, "foldIntoBm25Index")(bm25Rows(delta, idCol, textCol))
 
-  /** Compact a layered BM25 index (in-place [[foldIntoBm25Index]]
-    * appends): rebake `contrib/` from the full postings with the
-    * meta's merged stats (restoring the baked-score fast probe),
-    * re-layout the postings runs into one, reset layers=1 — O(index)
-    * read/write, the amortized cost the daily O(delta) appends defer.
-    * Identical probe results before and after (bake-at-compact ==
-    * derive-at-probe, same [[bm25ContribFromPostings]] arithmetic).
-    */
   /** [[DedupOps.maintainMinhashIndex]]'s BM25 twin: O(delta) fold,
     * then compact-and-swap iff post-fold layers ≥ `compactThreshold`.
-    * Returns true when this fold triggered the compaction. (For BM25
-    * compaction additionally re-bakes the contrib parquet, so probes
-    * after it read baked `_c` rows instead of deriving from layered
-    * postings — same arithmetic, less per-probe work.)
+    * Returns true when this fold triggered the compaction.
     */
   def maintainBm25Index(delta: DataFrame, idCol: String, textCol: String,
       indexPath: String,
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = delta.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoBm25Index(delta, idCol, textCol, indexPath)
-      val (_, _, _, _, layers) =
-        readBm25FullMeta(s, indexPath, "maintainBm25Index")
-      IndexMaintenance.compactIfLayered(s, indexPath, layers,
-        compactThreshold)(out => compactBm25Index(s, indexPath, out))
-    }
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    IndexMaintenance.maintain(delta.sparkSession, indexPath, Bm25Index,
+      "maintainBm25Index", compactThreshold)(
+      bm25Rows(delta, idCol, textCol)).contains(true)
 
+  /** Compact a layered BM25 index: rebake `contrib/` from the full
+    * postings with the meta's merged stats (restoring the baked-score
+    * fast probe), re-lay the postings runs into one, reset layers=1 —
+    * O(index) read/write. Identical probe results before and after
+    * (bake-at-compact == derive-at-probe, same
+    * [[bm25ContribFromPostings]] arithmetic).
+    */
   def compactBm25Index(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactBm25Index: outPath must differ from indexPath")
-    val (prefixes, n, tt, maxDl, _) =
-      readBm25FullMeta(s, indexPath, "compactBm25Index")
-    val postings = s.read.parquet(s"$indexPath/postings").drop("__bp")
-      .localCheckpoint()
-    try {
-      graft.jobs.Sinks.layout(
-        bm25ContribFromPostings(postings, idColOf(postings), n, tt, maxDl)
-          .withColumn("__bp", pmod(TextHashing.hash60(col("_t")),
-            lit(prefixes.toLong))),
-        s"$outPath/contrib", partitionCols = Seq("__bp"),
-        sortCols = Seq("_t"), numFiles = 8)
-      graft.jobs.Sinks.layout(
-        postings.withColumn("__bp", pmod(TextHashing.hash60(col("_t")),
-          lit(prefixes.toLong))),
-        s"$outPath/postings", partitionCols = Seq("__bp"),
-        sortCols = Seq("_t"), numFiles = 8)
-      writeBm25Meta(s, outPath, prefixes, n, tt, maxDl, 1)
-    } finally Lifecycle.releaseLocalCheckpoint(postings)
-  }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.compact(s, indexPath, outPath, Bm25Index,
+      "compactBm25Index")
 
   /** The postings' doc-id column name: postings are (_t, <id>, _tf,
     * _dl) with the id column the only non-underscore-prefixed one —
@@ -2048,56 +1876,31 @@ object TextOps {
   private def idColOf(postings: DataFrame): String =
     postings.columns.find(c => !c.startsWith("_")).getOrElse(
       throw new IllegalStateException(
-        "compactBm25Index: postings carry no doc-id column " +
+        "bm25 postings carry no doc-id column " +
           s"(columns: ${postings.columns.mkString(", ")})"))
 
   /** [[bm25TopK]] probing a PERSISTED [[writeBm25Index]] instead of
     * building the index in-process: identical output on the same
     * corpus (parity-tested), per-batch cost O(query terms + pruned
-    * index scan). The query set's distinct `__bp` prefixes (at most
-    * prefix_partitions ints, collected driver-side — the CDC-probe
-    * discipline) prune the contrib parquet; the `_t` sort prunes row
-    * groups within the touched directories. The meta is REQUIRED (it
-    * carries the prefix geometry): a partially copied index fails
-    * with a named error rather than probing unpruned with a guessed
-    * layout.
+    * index scan). The query set's distinct `__bp` prefixes prune the
+    * contrib (or, while layered, postings) parquet; the `_t` sort
+    * prunes row groups within the touched directories. The meta is
+    * REQUIRED (it carries the prefix geometry and stats).
     */
   def bm25TopKAgainstIndex(queries: DataFrame, qidCol: String,
       textCol: String, indexPath: String, idCol: String,
       k: Int = 10): DataFrame = {
     require(k >= 1, s"bm25TopKAgainstIndex: k must be >= 1, got $k")
     val s = queries.sparkSession
-    // ONE meta read serves prefixes + stats + layer count (the named
-    // missing-meta error included)
-    val (prefixes, n, tt, maxDl, layers) =
-      readBm25FullMeta(s, indexPath, "bm25 index probe")
+    val op = "bm25 index probe"
+    val m = IndexMaintenance.readMeta(s, indexPath, Bm25Index, op)
     val qTerms = bm25QueryTerms(queries, qidCol, textCol).localCheckpoint()
-    val touched = qTerms
-      .select(pmod(TextHashing.hash60(col("_t")), lit(prefixes.toLong))
-        .as("__bp"))
-      .distinct().collect().map(_.getLong(0))
-    // LAYERED index (in-place foldIntoBm25Index appends): the baked
-    // contrib/ predates the folds' stat shifts — every _c in it is
-    // stale — so derive contributions at probe time from the PRUNED
-    // postings + the meta's merged stats instead. df per term is
-    // exact over the touched directories (__bp partitions by term
-    // hash: a directory holds every posting of each term in it), and
-    // the arithmetic is the build's own bm25ContribFromPostings, so
-    // layered and compacted indexes rank identically. Single-layer
-    // indexes keep the baked fast path.
-    val idx =
-      if (layers <= 1)
-        s.read.parquet(s"$indexPath/contrib")
-          .filter(col("__bp").isin(touched.toSeq: _*))
-          .select(col("_t"), col(idCol), col("_c"))
-      else {
-        val postings = s.read.parquet(s"$indexPath/postings")
-          .filter(col("__bp").isin(touched.toSeq: _*)).drop("__bp")
-        bm25ContribFromPostings(postings, idCol, n, tt, maxDl)
-      }
-    bm25Rank(idx, qTerms, idCol, k)
+    val touched = IndexMaintenance.prefixesOf(qTerms,
+      TextHashing.hash60(col("_t")), m)
+    bm25Rank(IndexMaintenance.read(s, indexPath, Bm25Index, m, "contrib",
+        op, Some(touched)).select(col("_t"), col(idCol), col("_c")),
+      qTerms, idCol, k)
   }
-
   /** Train the quantized bigram LM on `corpus` and return it as ONE
     * vocabulary-sized frame (w1, w2, c2, c1, v) — the persistable
     * artifact of the "train on a reference corpus once, score every

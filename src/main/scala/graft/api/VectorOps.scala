@@ -166,204 +166,104 @@ object VectorOps {
       .filter(col("sim_x1000") >= simX1000Threshold)
   }
 
-  /** Materialize the corpus side of [[probeSignIndex]] to parquet:
-    * `$path/buckets` = capped (band, bkey, __cs) sign-signature bucket
-    * index sorted by (band, bkey), `$path/vectors` = (vec_old, vo, no)
-    * normalized vectors for the exact-cosine verify. The vector twin
-    * of DedupOps.writeMinhashIndex — one normalize pass feeds both
-    * outputs; build once per corpus version, probe per ingest batch.
+  /** The sign-LSH index family — the vector twin of
+    * [[DedupOps.MinhashIndex]]: `buckets` = capped (band, bkey, `__cs`)
+    * sign-signature buckets WITH over-cap tombstones, sorted by
+    * (band, bkey) (no prefix partition); `vectors` = (vec_old, vo, no)
+    * normalized vectors for the exact-cosine verify; meta =
+    * (max_bucket, rows_per_band, layers). `planes` are the caller's
+    * (the LSH contract: the build's own planes on every side).
+    */
+  private[graft] val SignIndex = IndexMaintenance.Family("sign",
+    "writeSignIndex", Seq("max_bucket", "rows_per_band"),
+    "cap/banding geometry and layer count", IndexMaintenance.Manifest.Layers,
+    _ => Seq(DedupOps.bucketTable(withPrefix = false),
+      IndexMaintenance.Table("vectors", Seq("vec_old"), 8)))
+
+  /** Row derivation over one persisted normalize pass, banded with the
+    * INDEX's rows_per_band. */
+  private def signRows[T](df: DataFrame, idCol: String, vecCol: String,
+      planes: Seq[Seq[Double]], op: String)(go: (IndexMaintenance.Meta =>
+        IndexMaintenance.Delta) => T): T = {
+    graft.functions.SketchAggregates.register(df.sparkSession)
+    val base = normalized(df, idCol, vecCol).persist()
+    try go { m =>
+      val rowsPerBand = m.int("rows_per_band")
+      require(planes.nonEmpty && planes.size % rowsPerBand == 0,
+        s"$op: ${planes.size} planes not divisible into the index's " +
+          s"bands of $rowsPerBand")
+      IndexMaintenance.Delta(
+        "buckets" -> DedupOps.bandBucketsAll(
+          signBands(base, idCol, planes, rowsPerBand), idCol,
+          m.int("max_bucket")),
+        "vectors" -> base.select(col(idCol).as("vec_old"), col("v").as("vo"),
+          col("nrm").as("no")))
+    } finally { base.unpersist(); () }
+  }
+
+  /** Materialize the corpus side of [[probeSignIndex]] to parquet
+    * ([[SignIndex]]'s layout) — one normalize pass feeds both tables;
+    * build once per corpus version, probe per ingest batch.
     */
   def writeSignIndex(corpus: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], path: String, rowsPerBand: Int = 4,
-      maxBucket: Int = DedupOps.DefaultMaxBucket): Unit = {
-    require(planes.nonEmpty && planes.size % rowsPerBand == 0,
-      s"writeSignIndex: ${planes.size} planes not divisible into bands of $rowsPerBand")
-    graft.functions.SketchAggregates.register(corpus.sparkSession)
-    val base = normalized(corpus, idCol, vecCol).persist()
-    try {
-      graft.jobs.Sinks.layout(
-        // tombstones included (bandBucketsAll) so [[foldIntoSignIndex]]
-        // can reproduce the cap arithmetic — the writeMinhashIndex
-        // contract; probes explode __cs and skip nulls for free
-        DedupOps.bandBucketsAll(signBands(base, idCol, planes, rowsPerBand),
-          idCol, maxBucket),
-        s"$path/buckets", partitionCols = Nil,
-        sortCols = Seq("band", "bkey"), numFiles = 8)
-      graft.jobs.Sinks.layout(
-        base.select(col(idCol).as("vec_old"), col("v").as("vo"),
-          col("nrm").as("no")),
-        s"$path/vectors", partitionCols = Nil,
-        sortCols = Seq("vec_old"), numFiles = 8)
-      writeSignMeta(corpus.sparkSession, path, maxBucket, rowsPerBand, 1)
-    } finally base.unpersist()
-  }
-
-  /** (max_bucket, rows_per_band, layers) off a [[writeSignIndex]]
-    * meta — REQUIRED with a named rebuild-once error (the fold must
-    * reproduce the build's cap/banding geometry); `layers` defaults
-    * to 1 for pre-layering indexes.
-    */
-  private def readSignMeta(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (Int, Int, Int) = {
-    val metaDf =
-      try s.read.parquet(s"$indexPath/meta")
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"$op: cannot read $indexPath/meta — the fold " +
-            "must reproduce the build's cap/banding geometry (indexes " +
-            "written before the meta existed must be rebuilt once)", e)
-      }
-    val row = metaDf.head(1).headOption.getOrElse(
-      throw new IllegalStateException(s"$op: $indexPath/meta is empty"))
-    val layers =
-      if (metaDf.columns.contains("layers"))
-        row.getAs[Number]("layers").intValue()
-      else 1
-    (row.getAs[Number]("max_bucket").intValue(),
-      row.getAs[Number]("rows_per_band").intValue(), layers)
-  }
-
-  private def writeSignMeta(s: org.apache.spark.sql.SparkSession,
-      path: String, maxBucket: Int, rowsPerBand: Int, layers: Int): Unit =
-    s.range(1)
-      .select(lit(maxBucket).as("max_bucket"),
-        lit(rowsPerBand).as("rows_per_band"), lit(layers).as("layers"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      maxBucket: Int = DedupOps.DefaultMaxBucket): Unit =
+    signRows(corpus, idCol, vecCol, planes, "writeSignIndex")(
+      IndexMaintenance.write(corpus.sparkSession, path, SignIndex,
+        "max_bucket" -> maxBucket, "rows_per_band" -> rowsPerBand))
 
   /** Fold a DELTA of new vectors into a persisted [[writeSignIndex]]
-    * IN PLACE with O(delta) write bytes — the embedding sibling of
-    * the in-place [[DedupOps.foldIntoMinhashIndex]]: the delta's
-    * capped sign buckets and normalized vectors land as their own
-    * sorted runs ([[graft.jobs.Sinks.layoutAppend]]); `layers` in
-    * meta counts the runs, [[probeSignIndex]] reconciles per-key
-    * duplicates through [[DedupOps.mergeLayeredBuckets]] (exact
-    * fold==rebuild arithmetic, q113's driver-checked hash), and the
-    * `vectors/` runs need no reconcile (disjoint delta ids). Compact
-    * with [[compactSignIndex]] when run count starts to matter. Crash
-    * consistency: single-writer, restore-on-failure, never retry in
-    * place — see [[DedupOps.foldIntoMinhashIndex]]'s contract note.
+    * IN PLACE with O(delta) write bytes — the embedding sibling of the
+    * in-place [[DedupOps.foldIntoMinhashIndex]] (same reconcile, q113's
+    * driver-checked hash; same crash contract).
     */
   def foldIntoSignIndex(delta: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], indexPath: String): Unit = {
-    val s = delta.sparkSession
-    graft.functions.SketchAggregates.register(s)
-    val (maxBucket, rowsPerBand, layers) =
-      readSignMeta(s, indexPath, "foldIntoSignIndex")
-    require(planes.size % rowsPerBand == 0,
-      s"foldIntoSignIndex: ${planes.size} planes not divisible into " +
-        s"the index's bands of $rowsPerBand")
-    val base = normalized(delta, idCol, vecCol).persist()
-    try {
-      graft.jobs.Sinks.layoutAppend(
-        DedupOps.bandBucketsAll(
-          signBands(base, idCol, planes, rowsPerBand), idCol, maxBucket),
-        s"$indexPath/buckets", partitionCols = Nil,
-        sortCols = Seq("band", "bkey"), numFiles = 8)
-      graft.jobs.Sinks.layoutAppend(
-        base.select(col(idCol).as("vec_old"), col("v").as("vo"),
-          col("nrm").as("no")),
-        s"$indexPath/vectors", partitionCols = Nil,
-        sortCols = Seq("vec_old"), numFiles = 8)
-      writeSignMeta(s, indexPath, maxBucket, rowsPerBand, layers + 1)
-    } finally base.unpersist()
+    signRows(delta, idCol, vecCol, planes, "foldIntoSignIndex")(
+      IndexMaintenance.fold(delta.sparkSession, indexPath, SignIndex,
+        "foldIntoSignIndex"))
+    ()
   }
 
   /** Fold-and-COMPACT variant: delta + old index merged into a fresh
-    * single-layer index at `outPath` — O(index) read AND write, the
-    * right shape when fold cadence == compaction cadence. Same
-    * exactness contract (folded index probes == from-scratch rebuild,
-    * cap tombstones and all, via the shared
-    * [[DedupOps.mergeCappedBuckets]] arithmetic; a layered old index
-    * is first reconciled through [[DedupOps.mergeLayeredBuckets]] so
-    * both fold shapes compose). `planes` must be the index's own
-    * build planes (the LSH contract everywhere); rows_per_band and
-    * max_bucket come off the index's meta. Delta ids disjoint from
-    * indexed ids, as in every incremental path.
+    * single-layer index at `outPath` — O(index) read AND write. Folded
+    * index probes == from-scratch rebuild, cap tombstones and all.
+    * Delta ids disjoint from indexed ids, as in every incremental path.
     */
   def foldIntoSignIndex(delta: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], indexPath: String,
-      outPath: String): Unit = {
-    require(indexPath != outPath,
-      "foldIntoSignIndex: outPath must differ from indexPath")
-    val s = delta.sparkSession
-    graft.functions.SketchAggregates.register(s)
-    val (maxBucket, rowsPerBand, layers) =
-      readSignMeta(s, indexPath, "foldIntoSignIndex")
-    require(planes.size % rowsPerBand == 0,
-      s"foldIntoSignIndex: ${planes.size} planes not divisible into " +
-        s"the index's bands of $rowsPerBand")
-    val base = normalized(delta, idCol, vecCol).persist()
-    try {
-      val deltaBuckets = DedupOps.bandBucketsAll(
-        signBands(base, idCol, planes, rowsPerBand), idCol, maxBucket)
-      val oldRaw = s.read.parquet(s"$indexPath/buckets")
-      val oldBuckets =
-        if (layers > 1) DedupOps.mergeLayeredBuckets(oldRaw, maxBucket)
-        else oldRaw
-      graft.jobs.Sinks.layout(
-        DedupOps.mergeCappedBuckets(oldBuckets, deltaBuckets, maxBucket),
-        s"$outPath/buckets", partitionCols = Nil,
-        sortCols = Seq("band", "bkey"), numFiles = 8)
-      graft.jobs.Sinks.layout(
-        s.read.parquet(s"$indexPath/vectors").unionByName(
-          base.select(col(idCol).as("vec_old"), col("v").as("vo"),
-            col("nrm").as("no"))),
-        s"$outPath/vectors", partitionCols = Nil,
-        sortCols = Seq("vec_old"), numFiles = 8)
-      writeSignMeta(s, outPath, maxBucket, rowsPerBand, 1)
-    } finally base.unpersist()
-  }
+      outPath: String): Unit =
+    signRows(delta, idCol, vecCol, planes, "foldIntoSignIndex")(
+      IndexMaintenance.foldTo(delta.sparkSession, indexPath, outPath,
+        SignIndex, "foldIntoSignIndex"))
 
-  /** [[DedupOps.maintainMinhashIndex]]'s sign-LSH twin: O(delta)
-    * fold, then compact-and-swap iff post-fold layers ≥
-    * `compactThreshold`. Returns true when this fold triggered the
-    * compaction.
+  /** [[DedupOps.maintainMinhashIndex]]'s sign-LSH twin. Returns true
+    * when this fold triggered the compaction.
     */
   def maintainSignIndex(delta: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], indexPath: String,
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = delta.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoSignIndex(delta, idCol, vecCol, planes, indexPath)
-      val (_, _, layers) = readSignMeta(s, indexPath, "maintainSignIndex")
-      IndexMaintenance.compactIfLayered(s, indexPath, layers,
-        compactThreshold)(out => compactSignIndex(s, indexPath, out))
-    }
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    signRows(delta, idCol, vecCol, planes, "maintainSignIndex")(
+      IndexMaintenance.maintain(delta.sparkSession, indexPath, SignIndex,
+        "maintainSignIndex", compactThreshold)).contains(true)
 
-  /** Compact a layered sign index (in-place [[foldIntoSignIndex]]
-    * appends) back to one sorted run per side: buckets reconciled
-    * through [[DedupOps.mergeLayeredBuckets]], vectors re-laid sorted,
-    * meta reset to layers=1. Identical probe results before and after.
+  /** Compact a layered sign index back to one sorted run per table.
+    * Identical probe results before and after.
     */
   def compactSignIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactSignIndex: outPath must differ from indexPath")
-    val (maxBucket, rowsPerBand, _) =
-      readSignMeta(s, indexPath, "compactSignIndex")
-    graft.jobs.Sinks.layout(
-      DedupOps.mergeLayeredBuckets(
-        s.read.parquet(s"$indexPath/buckets"), maxBucket),
-      s"$outPath/buckets", partitionCols = Nil,
-      sortCols = Seq("band", "bkey"), numFiles = 8)
-    graft.jobs.Sinks.layout(
-      s.read.parquet(s"$indexPath/vectors"),
-      s"$outPath/vectors", partitionCols = Nil,
-      sortCols = Seq("vec_old"), numFiles = 8)
-    writeSignMeta(s, outPath, maxBucket, rowsPerBand, 1)
-  }
+      indexPath: String, outPath: String): Unit =
+    IndexMaintenance.compact(s, indexPath, outPath, SignIndex,
+      "compactSignIndex")
 
   /** [[nearDupPairsAgainst]] probing a PERSISTED index
     * ([[writeSignIndex]]): delta vectors band map-only, join the
-    * bucket parquet, verify exact cosine against the stored normalized
-    * vectors — identical output to the inline path on the same split
-    * (parity-tested), with no corpus re-normalization or re-banding
-    * per batch. `planes`/`rowsPerBand` must match the index build
-    * (same banding on both sides is the LSH contract). Output:
-    * vec_new, vec_old, sim_x1000.
+    * bucket parquet (layered runs reconciled through the exact
+    * cross-run cap arithmetic), verify exact cosine against the stored
+    * normalized vectors — identical output to the inline path on the
+    * same split (parity-tested), with no corpus re-normalization or
+    * re-banding per batch. `planes`/`rowsPerBand` must match the index
+    * build. Output: vec_new, vec_old, sim_x1000.
     */
   def probeSignIndex(newDf: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], indexPath: String,
@@ -371,36 +271,11 @@ object VectorOps {
     require(planes.nonEmpty && planes.size % rowsPerBand == 0,
       s"probeSignIndex: ${planes.size} planes not divisible into bands of $rowsPerBand")
     val s = newDf.sparkSession
-    val bucketsRaw = s.read.parquet(s"$indexPath/buckets")
-    // LAYERED index (in-place foldIntoSignIndex appends): reconcile
-    // per-key duplicate runs through the exact cross-run cap
-    // arithmetic; single-layer indexes (builds, compactions,
-    // pre-layering indexes without the meta column) skip the agg.
-    // The meta read must NOT degrade silently: every writeSignIndex
-    // has shipped a meta, so an unreadable one means a partial copy —
-    // and since layered folds exist, probing without the layer count
-    // could silently skip the reconcile and emit pairs a rebuild
-    // would suppress. Fail loudly (the CDC/BM25/minhash posture).
-    val metaDf =
-      try s.read.parquet(s"$indexPath/meta")
-      catch {
-        case e: Exception => throw new IllegalStateException(
-          s"probeSignIndex: cannot read $indexPath/meta — the index " +
-            "is missing or partially copied; the meta carries the " +
-            "layer count, and probing a possibly-layered index " +
-            "without reconcile would be silently wrong", e)
-      }
-    val layers =
-      if (metaDf.columns.contains("layers"))
-        metaDf.head(1).headOption
-          .map(_.getAs[Number]("layers").intValue()).getOrElse(1)
-      else 1
-    val buckets =
-      if (layers <= 1) bucketsRaw
-      else DedupOps.mergeLayeredBuckets(bucketsRaw,
-        metaDf.head().getAs[Number]("max_bucket").intValue())
-        .filter(col("__cs").isNotNull)
-    val vecs = s.read.parquet(s"$indexPath/vectors")
+    val m = IndexMaintenance.readMeta(s, indexPath, SignIndex, "probeSignIndex")
+    val buckets = IndexMaintenance.read(s, indexPath, SignIndex, m, "buckets",
+      "probeSignIndex").filter(col("__cs").isNotNull)
+    val vecs = IndexMaintenance.read(s, indexPath, SignIndex, m, "vectors",
+      "probeSignIndex")
     val bNew = normalized(newDf, idCol, vecCol)
     signBands(bNew, idCol, planes, rowsPerBand)
       .join(buckets, Seq("band", "bkey"))
@@ -414,7 +289,6 @@ object VectorOps {
           .cast("long").as("sim_x1000"))
       .filter(col("sim_x1000") >= simX1000Threshold)
   }
-
   /** Brute-force cosine top-k: rows matching `queryPred` are the query
     * set (broadcast), ranked per query with deterministic ties. Output:
     * qid, nid, rn. The recall baseline — LSH/IVF prune at scale.
@@ -721,96 +595,91 @@ object VectorOps {
     } finally { pool.shutdown(); cached.unpersist(); () }
   }
 
-  /** Persist the IVF-PQ index: `codes` = (id, cell, codes[m]) parquet
+  /** The IVF-PQ index family: `codes` = (id, cell, codes[m]) parquet
     * PARTITIONED BY cell — a probe that routes to `nprobe` cells reads
-    * ONLY those directories (literal partition pruning, the same
-    * contract as the MinHash index's `__bp` layout) — plus a one-row
-    * `meta` holding both codebooks. At rest the corpus is m bytes of
-    * codes + one int per vector; with `storeVectors = false` the raw
-    * embeddings stay wherever they live and are only fetched for
-    * exact re-ranks.
-    *
-    * `storeVectors = true` additionally persists `vectors` =
-    * (vid, cell, vec) — the RAW input vectors under the SAME cell
-    * partitioning — so an exact-refine consumer
-    * ([[TextOps.passageTopKIvfPq]]) can join its ADC shortlist
-    * against a cell-pruned stored-vector read instead of recomputing
-    * the corpus embeddings per retrieval batch (the FAISS
-    * `IndexRefineFlat` posture: codes do the winnowing, stored floats
-    * only the finish). Folds ([[foldIntoIvfPqIndex]]) keep `vectors`
-    * in sync automatically when it exists.
+    * ONLY those directories — plus a one-row `meta` holding both
+    * codebooks, and optionally `vectors` = (vid, cell, vec), the RAW
+    * input vectors under the same cell partitioning. The codebooks are
+    * FROZEN (the FAISS `add` contract), so folds never rewrite `meta`
+    * and the run count lives in the `runs` sidecar
+    * ([[IndexMaintenance.Manifest.Sidecar]]); codes rows are per-vector
+    * over disjoint ids, so no read-side reconcile exists and compaction
+    * is a pure re-layout that buys file count (every fold adds up to
+    * `numFiles` files per routed cell). `idCol` is the codes table's
+    * sort column — the id column the build wrote.
     */
-  def writeIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
-      model: IvfPqModel, path: String,
-      storeVectors: Boolean = false): Unit = {
+  private[graft] def IvfPqIndex(idCol: String): IndexMaintenance.Family =
+    IndexMaintenance.Family("IVF-PQ", "writeIvfPqIndex",
+      Seq("c_m", "c_k", "c_sub", "c_flat", "p_m", "p_k", "p_sub", "p_flat"),
+      "coarse and PQ codebooks", IndexMaintenance.Manifest.Sidecar,
+      m => Seq(
+        IndexMaintenance.Table("codes", Seq(idCol), m.int("c_k"),
+          partitionCols = Seq("cell")),
+        IndexMaintenance.Table("vectors", Seq("vid"), m.int("c_k"),
+          partitionCols = Seq("cell"), optional = true)))
+
+  /** Row derivation: normalize + coarse-route + PQ-encode against the
+    * index's codebooks; `vectors` rows land only where the index
+    * stores them. */
+  private def ivfPqRows(df: DataFrame, idCol: String, vecCol: String,
+      model: IvfPqModel): IndexMaintenance.Delta =
+    ivfPqTables(ivfPqRouted(df, idCol, vecCol, model), idCol, model)
+
+  private def ivfPqRouted(df: DataFrame, idCol: String, vecCol: String,
+      model: IvfPqModel): DataFrame = {
     VectorExpressions.register(df.sparkSession)
-    val raw = normalized(df, idCol, vecCol)
+    normalized(df, idCol, vecCol)
       .withColumn("u", expr("transform(v, x -> x / nrm)"))
       .withColumn("cell",
         element_at(call_function("pq_encode", col("u"),
           typedLit(model.coarse.flat), lit(1), lit(model.coarse.k)), 1))
-    // both outputs consume the normalize + coarse-encode frame; when
+  }
+
+  private def ivfPqTables(routed: DataFrame, idCol: String,
+      model: IvfPqModel): IndexMaintenance.Delta = IndexMaintenance.Delta(
+    "codes" -> routed.select(col(idCol), col("cell"),
+      call_function("pq_encode", col("u"), typedLit(model.pq.flat),
+        lit(model.pq.m), lit(model.pq.k)).as("codes")),
+    "vectors" -> routed.select(col(idCol).as("vid"), col("cell"),
+      col("v").as("vec")))
+
+  private def modelOf(m: IndexMaintenance.Meta): IvfPqModel = IvfPqModel(
+    coarse = PqCodebooks(m.int("c_m"), m.int("c_k"), m.int("c_sub"),
+      m.doubles("c_flat")),
+    pq = PqCodebooks(m.int("p_m"), m.int("p_k"), m.int("p_sub"),
+      m.doubles("p_flat")))
+
+  /** Persist the IVF-PQ index ([[IvfPqIndex]]'s layout). At rest the
+    * corpus is m bytes of codes + one int per vector; with
+    * `storeVectors = false` the raw embeddings stay wherever they live
+    * and are only fetched for exact re-ranks.
+    *
+    * `storeVectors = true` additionally persists `vectors`, so an
+    * exact-refine consumer ([[TextOps.passageTopKIvfPq]]) can join its
+    * ADC shortlist against a cell-pruned stored-vector read instead of
+    * recomputing the corpus embeddings per retrieval batch (the FAISS
+    * `IndexRefineFlat` posture: codes do the winnowing, stored floats
+    * only the finish); the normalize + encode frame is then persisted
+    * so a costly upstream (a chunk explode + embed) runs ONCE. Folds
+    * ([[foldIntoIvfPqIndex]]) keep `vectors` in sync when it exists.
+    */
+  def writeIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
+      model: IvfPqModel, path: String,
+      storeVectors: Boolean = false): Unit = {
+    // both tables consume the normalize + coarse-encode frame; when
     // vectors are stored too, persist it so the upstream (possibly a
-    // chunk explode + embed) runs ONCE — the writeFingerprintIndex
-    // single-scan discipline
-    val base = if (storeVectors) raw.persist() else raw
-    try {
-      val enc = base.select(col(idCol), col("cell"),
-        call_function("pq_encode", col("u"), typedLit(model.pq.flat),
-          lit(model.pq.m), lit(model.pq.k)).as("codes"))
-      // codes and stored vectors are independent given the shared
-      // persisted encode frame — overlapped (guide §2.6)
-      val writes = Seq(
-        () => graft.jobs.Sinks.layout(enc, s"$path/codes",
-          partitionCols = Seq("cell"), sortCols = Seq(idCol),
-          numFiles = model.coarse.k)) ++
-        (if (storeVectors) Seq(
-          () => graft.jobs.Sinks.layout(
-            base.select(col(idCol).as("vid"), col("cell"),
-              col("v").as("vec")),
-            s"$path/vectors", partitionCols = Seq("cell"),
-            sortCols = Seq("vid"), numFiles = model.coarse.k))
-         else Seq.empty)
-      Par.run(writes: _*)
-      writeIvfPqMeta(df.sparkSession, path, model)
-      writeIvfPqRuns(df.sparkSession, path, 1)
-    } finally { if (storeVectors) { base.unpersist(); () } }
+    // chunk explode + embed) runs ONCE
+    val routed = ivfPqRouted(df, idCol, vecCol, model)
+    val base = if (storeVectors) routed.persist() else routed
+    try IndexMaintenance.write(df.sparkSession, path, IvfPqIndex(idCol),
+      "c_m" -> model.coarse.m, "c_k" -> model.coarse.k,
+      "c_sub" -> model.coarse.subDim, "c_flat" -> model.coarse.flat.toSeq,
+      "p_m" -> model.pq.m, "p_k" -> model.pq.k, "p_sub" -> model.pq.subDim,
+      "p_flat" -> model.pq.flat.toSeq)(_ => IndexMaintenance.Delta(
+      ivfPqTables(base, idCol, model).rows
+        .filter(storeVectors || _._1 == "codes"): _*))
+    finally if (storeVectors) { base.unpersist(); () }
   }
-
-  private def writeIvfPqMeta(s: org.apache.spark.sql.SparkSession,
-      path: String, model: IvfPqModel): Unit = {
-    import s.implicits._
-    Seq((model.coarse.m, model.coarse.k, model.coarse.subDim,
-        model.coarse.flat.toSeq,
-        model.pq.m, model.pq.k, model.pq.subDim, model.pq.flat.toSeq))
-      .toDF("c_m", "c_k", "c_sub", "c_flat", "p_m", "p_k", "p_sub", "p_flat")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** The IVF-PQ run count lives in a `$path/runs` SIDECAR, deliberately
-    * NOT in `meta` like the other five families: the fold-while-serving
-    * contract ([[ivfPqProbeEachBatch]] caches the model at stream-author
-    * time; batch probes re-read meta per probe) rests on "folds never
-    * rewrite meta", and a layers column in meta would put every fold's
-    * overwrite in a serving probe's read path. Nothing on the probe
-    * path reads `runs` — only the maintain* compaction policy does, so
-    * folds bump it without weakening the serving contract.
-    */
-  private def writeIvfPqRuns(s: org.apache.spark.sql.SparkSession,
-      path: String, runs: Int): Unit =
-    s.range(1).select(lit(runs).as("layers"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/runs")
-
-  /** Run count off the `runs` sidecar; 1 when absent (indexes written
-    * before the sidecar existed under-count until their next fold —
-    * conservative: compaction is delayed, never wrong, since IVF-PQ
-    * probes need no read-side reconcile at any layer count).
-    */
-  private def readIvfPqRuns(s: org.apache.spark.sql.SparkSession,
-      path: String): Int =
-    try s.read.parquet(s"$path/runs").head(1).headOption
-      .map(_.getAs[Number]("layers").intValue()).getOrElse(1)
-    catch { case _: org.apache.spark.sql.AnalysisException => 1 }
 
   /** Read back the raw vectors persisted by
     * [[writeIvfPqIndex]]`(..., storeVectors = true)` as
@@ -830,157 +699,76 @@ object VectorOps {
             "re-embedding the corpus per retrieval batch", e)
     }
 
-  /** Read back the codebooks persisted by [[writeIvfPqIndex]]. A
-    * missing or empty meta dir (partially copied index) fails with a
-    * NAMED error rather than an opaque head()-on-empty — there is no
-    * degraded mode without the codebooks, unlike the MinHash index's
-    * unpruned fallback.
-    */
   /** Fold a DELTA of new vectors into a persisted [[writeIvfPqIndex]]
-    * IN PLACE with O(delta) cost on BOTH sides — completing the
-    * incremental-maintenance story across every index family (minhash,
-    * sign, CDC, BM25, and now IVF-PQ). The codebooks are FROZEN (the
-    * FAISS `add` contract: train the quantizers once, encode every
-    * later delta with them), so the fold is a map-only encode of the
-    * delta against the broadcast codebooks plus a sorted-run append
-    * ([[graft.jobs.Sinks.layoutAppend]]) into the existing
-    * cell-partition directories. Uniquely in the family, NO read-side
-    * reconcile exists to need: codes rows are per-vector (disjoint
-    * delta ids by the incremental contract everywhere in this api) and
-    * [[ivfPqProbe]] already reads every file inside its routed cells —
-    * a folded index probes identically to re-encoding corpus ∪ delta
-    * under the SAME model (ApiSpec parity, exact: same codebooks ⇒
-    * same codes ⇒ same ADC sums). The honest caveat is drift, not
-    * arithmetic: codebooks trained on yesterday's distribution encode
-    * a drifted corpus with growing quantization error — monitor the
-    * in-band recall floor (the q99/q115 oracle) and retrain+rebuild
-    * when it sags, exactly the production FAISS posture. Crash
-    * consistency: single-writer, restore-on-failure, never retry in
-    * place — see [[DedupOps.foldIntoMinhashIndex]]'s contract note
-    * (here the failure mode is mildest: codes rows are per-vector, so
-    * a partial append is a partially-visible delta, not a wrong
-    * probe). File-count growth per fold is [[maintainIvfPqIndex]]'s
-    * job — this fold bumps the `runs` sidecar (never `meta`) so the
-    * compaction policy can see the run count.
+    * IN PLACE with O(delta) cost on BOTH sides: a map-only encode of
+    * the delta against the frozen codebooks plus a sorted-run append
+    * into the existing cell-partition directories (codes AND, when the
+    * index stores them, vectors — skipping those would break the
+    * exact-refine contract the moment a fold lands). A folded index
+    * probes identically to re-encoding corpus ∪ delta under the SAME
+    * model (ApiSpec parity, exact: same codebooks ⇒ same codes ⇒ same
+    * ADC sums). The honest caveat is drift, not arithmetic: codebooks
+    * trained on yesterday's distribution encode a drifted corpus with
+    * growing quantization error — monitor the in-band recall floor
+    * (the q99/q115 oracle) and retrain+rebuild when it sags. Crash
+    * consistency: [[DedupOps.foldIntoMinhashIndex]]'s contract (codes
+    * rows are per-vector, so a partial append is a partially-visible
+    * delta, not a wrong probe). The fold bumps the `runs` sidecar,
+    * never `meta`.
     */
   def foldIntoIvfPqIndex(delta: DataFrame, idCol: String, vecCol: String,
       indexPath: String): Unit = {
-    val s = delta.sparkSession
-    VectorExpressions.register(s)
-    val model = readIvfPqModel(s, indexPath)
-    val base = normalized(delta, idCol, vecCol)
-      .withColumn("u", expr("transform(v, x -> x / nrm)"))
-      .withColumn("cell",
-        element_at(call_function("pq_encode", col("u"),
-          typedLit(model.coarse.flat), lit(1), lit(model.coarse.k)), 1))
-    graft.jobs.Sinks.layoutAppend(
-      base.select(col(idCol), col("cell"),
-        call_function("pq_encode", col("u"), typedLit(model.pq.flat),
-          lit(model.pq.m), lit(model.pq.k)).as("codes")),
-      s"$indexPath/codes", partitionCols = Seq("cell"),
-      sortCols = Seq(idCol), numFiles = model.coarse.k)
-    // an index written with storeVectors=true keeps its stored-vector
-    // sibling in sync: the delta's raw vectors append as their own
-    // sorted run under the same cell partitioning (still O(delta) —
-    // skipping this would silently break the exact-refine contract
-    // the moment a fold lands: shortlisted delta ids would have no
-    // stored vector to join)
-    val vecPath = new org.apache.hadoop.fs.Path(s"$indexPath/vectors")
-    val fs = vecPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(vecPath)) {
-      graft.jobs.Sinks.layoutAppend(
-        base.select(col(idCol).as("vid"), col("cell"),
-          col("v").as("vec")),
-        s"$indexPath/vectors", partitionCols = Seq("cell"),
-        sortCols = Seq("vid"), numFiles = model.coarse.k)
-    }
-    // bump the runs sidecar (NOT meta — see writeIvfPqRuns): the
-    // maintain* compaction policy reads it; no probe path does
-    writeIvfPqRuns(s, indexPath, readIvfPqRuns(s, indexPath) + 1)
+    IndexMaintenance.fold(delta.sparkSession, indexPath, IvfPqIndex(idCol),
+      "foldIntoIvfPqIndex")(m => ivfPqRows(delta, idCol, vecCol, modelOf(m)))
+    ()
   }
 
-  /** Compact a run-layered IVF-PQ index ([[foldIntoIvfPqIndex]]
-    * appends) back to ONE sorted run per cell directory — codes and,
-    * when present, the stored-vectors sibling, re-laid under the same
-    * cell partitioning; meta re-written with the SAME codebooks; runs
-    * reset to 1. Unlike the bucket families there is no read-side
-    * reconcile to fold in (codes rows are per-vector, disjoint ids), so
-    * compaction is a pure re-layout: probes are identical before and
-    * after — what it buys is file-count: every fold adds up to
-    * `numFiles` files per routed cell, and at daily-fold cadence a
-    * probe's cell-pruned scan opens `runs ×` more files than one run
-    * needs. O(index) read and write.
+  /** Compact a run-layered IVF-PQ index back to ONE sorted run per cell
+    * directory — codes and, when present, the stored-vectors sibling;
+    * meta re-written with the SAME codebooks; runs reset to 1. Probes
+    * are identical before and after; what it buys is file count.
+    * O(index) read and write.
     */
   def compactIvfPqIndex(s: org.apache.spark.sql.SparkSession,
       indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactIvfPqIndex: outPath must differ from indexPath")
-    VectorExpressions.register(s)
-    val model = readIvfPqModel(s, indexPath)
     val codes = s.read.parquet(s"$indexPath/codes")
     val idCol = codes.columns.filterNot(Set("cell", "codes")).headOption
       .getOrElse(throw new IllegalStateException(
         s"compactIvfPqIndex: cannot find the id column in " +
           s"$indexPath/codes (columns: ${codes.columns.mkString(", ")})"))
-    graft.jobs.Sinks.layout(codes, s"$outPath/codes",
-      partitionCols = Seq("cell"), sortCols = Seq(idCol),
-      numFiles = model.coarse.k)
-    val vecPath = new org.apache.hadoop.fs.Path(s"$indexPath/vectors")
-    val fs = vecPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(vecPath)) {
-      graft.jobs.Sinks.layout(
-        s.read.parquet(s"$indexPath/vectors"), s"$outPath/vectors",
-        partitionCols = Seq("cell"), sortCols = Seq("vid"),
-        numFiles = model.coarse.k)
-    }
-    writeIvfPqMeta(s, outPath, model)
-    writeIvfPqRuns(s, outPath, 1)
+    IndexMaintenance.compact(s, indexPath, outPath, IvfPqIndex(idCol),
+      "compactIvfPqIndex")
   }
 
-  /** [[DedupOps.maintainMinhashIndex]]'s IVF-PQ sibling — the sixth
-    * persisted index family under the maintain* policy:
-    * crash-recover at entry, O(delta) frozen-codebook fold
-    * ([[foldIntoIvfPqIndex]] — codes AND the stored-vectors sibling
-    * when present), compact-and-swap iff post-fold runs reach
-    * `compactThreshold`. Returns true when this fold compacted. All
-    * inside [[IndexMaintenance.withWriterLock]]; NOT reader-safe across
-    * the swap (quiesce probes and gates — see [[IndexMaintenance]]'s
-    * reader contract). Plain [[foldIntoIvfPqIndex]] remains the
-    * fold-while-serving-safe path for serving deployments that schedule
-    * compaction inside their own quiesce windows.
+  /** [[DedupOps.maintainMinhashIndex]]'s IVF-PQ sibling: crash-recover
+    * at entry, O(delta) frozen-codebook fold, compact-and-swap iff
+    * post-fold runs reach `compactThreshold`. Returns true when this
+    * fold compacted. NOT reader-safe across the swap (quiesce probes
+    * and gates — see [[IndexMaintenance]]'s reader contract); plain
+    * [[foldIntoIvfPqIndex]] remains the fold-while-serving-safe path.
     */
   def maintainIvfPqIndex(delta: DataFrame, idCol: String, vecCol: String,
       indexPath: String,
       compactThreshold: Int =
-        IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = delta.sparkSession
-    IndexMaintenance.withWriterLock(s, indexPath) {
-      IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoIvfPqIndex(delta, idCol, vecCol, indexPath)
-      IndexMaintenance.compactIfLayered(s, indexPath,
-        readIvfPqRuns(s, indexPath), compactThreshold)(
-        out => compactIvfPqIndex(s, indexPath, out))
-    }
-  }
+        IndexMaintenance.DefaultCompactThreshold): Boolean =
+    IndexMaintenance.maintain(delta.sparkSession, indexPath,
+      IvfPqIndex(idCol), "maintainIvfPqIndex", compactThreshold)(
+      m => ivfPqRows(delta, idCol, vecCol, modelOf(m))).contains(true)
 
+  /** Read back the codebooks persisted by [[writeIvfPqIndex]]. A
+    * missing or empty meta (a partially copied index) fails with a
+    * NAMED error — there is no degraded mode without the codebooks.
+    */
   def readIvfPqModel(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfPqModel = {
-    val meta = try spark.read.parquet(s"$path/meta") catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"readIvfPqModel: no meta at $path/meta — not an IVF-PQ index " +
-            "(or a partial copy missing its codebooks)", e)
+      path: String): IvfPqModel =
+    // a meta read touches no table, so the codes' id column is immaterial
+    try modelOf(IndexMaintenance.readMeta(spark, path, IvfPqIndex(""),
+      "readIvfPqModel"))
+    catch {
+      case e: IllegalStateException => throw new IllegalArgumentException(
+        s"${e.getMessage} — not an IVF-PQ index (or a partial copy " +
+          "missing its codebooks)", e)
     }
-    val rows = meta.limit(1).collect()
-    require(rows.nonEmpty,
-      s"readIvfPqModel: empty meta at $path/meta — partial index copy?")
-    val r = rows.head
-    def arr(i: Int) = r.getSeq[Double](i).toArray
-    IvfPqModel(
-      coarse = PqCodebooks(r.getInt(0), r.getInt(1), r.getInt(2), arr(3)),
-      pq = PqCodebooks(r.getInt(4), r.getInt(5), r.getInt(6), arr(7)))
-  }
-
   /** Probe a persisted IVF-PQ index: each query routes to its `nprobe`
     * L2-nearest cells (ranked via the native `pq_dists` kernel on the
     * TINY query side), the cell equi-join prunes the codes parquet to

@@ -162,11 +162,18 @@ case class QuantCodeSum(child: Expression)
 object PqUtil {
   /** PQ encode: per subspace, the index of the L2-nearest centroid
     * (strict `<` — first minimum wins, deterministic). Output: m ints.
-    * Vector dims beyond `m·subDim` are ignored; missing dims read 0.
+    * The vector must have exactly `m·subDim` dims: a ragged vector
+    * fails by name here, where the data enters, instead of being
+    * truncated or zero-padded into a wrong code (training only sees
+    * its sample). Null elements read 0.
     */
   def encode(v: ArrayData, cb: ArrayData, m: Int, k: Int): ArrayData = {
     val subDim = cb.numElements() / (m * k)
     val d = v.numElements()
+    if (d != m * subDim) throw new IllegalArgumentException(
+      s"pq_encode: ragged vector — $d dims, but the codebook encodes " +
+        s"m·subDim = ${m * subDim}; every vector must match the " +
+        "dimension the codebooks were trained on")
     val out = new Array[Int](m)
     var s = 0
     while (s < m) {
@@ -179,7 +186,7 @@ object PqUtil {
         var j = 0
         while (j < subDim) {
           val off = s * subDim + j
-          val x = if (off < d && !v.isNullAt(off)) v.getDouble(off) else 0.0
+          val x = if (!v.isNullAt(off)) v.getDouble(off) else 0.0
           val diff = x - cb.getDouble(base + j)
           dist += diff * diff
           j += 1

@@ -114,7 +114,8 @@ object Sinks {
     * forcing a corpus-sized rewrite; each appended run keeps its own
     * row-group min/max stats, so point/range pruning still works per
     * file. Readers that need one logical row per key reconcile the
-    * runs at read (see DedupOps.mergeLayeredBuckets).
+    * runs at read through their table's rule
+    * ([[graft.api.IndexMaintenance.read]]).
     */
   def layoutAppend(df: DataFrame, path: String, partitionCols: Seq[String],
       sortCols: Seq[String], numFiles: Int): Unit =

@@ -426,250 +426,183 @@ object PageRank {
   // distinct DIRECTED host-pair set is host-graph-sized and ADDITIVE
   // under set union — a day's crawl folds in as its own sorted run and
   // layered runs reconcile by DISTINCT (the set-semantics sibling of
-  // the gram/line families' reconcile-by-SUM). Both consumers
-  // ([[ranksByKeyAgainstIndex]] PageRank, [[hitsByKeyAgainstIndex]]
-  // HITS) read one reconciled graph, so the two crawl signals can
-  // never rank different edge sets.
+  // the gram/line families' reconcile-by-SUM), minus the tombstone
+  // set. Both consumers ([[ranksByKeyAgainstIndex]] PageRank,
+  // [[hitsByKeyAgainstIndex]] HITS) read one reconciled graph, so the
+  // two crawl signals can never rank different edge sets.
   // ------------------------------------------------------------------
 
+  /** The edge index family: `edges` = (s, t) 60-bit hash pairs
+    * partitioned by `__ep = s mod prefix_partitions` and sorted by
+    * (s, t); `vertices` = (id, key) the hash→key map, `__vp`-
+    * partitioned; `removals` = the (s, t) tombstone set; meta =
+    * (prefix_partitions, layers). The meta bump lands BEFORE the
+    * appends ([[IndexMaintenance.Family.metaFirst]]): under SET-UNION
+    * reconcile a bumped layer count with a missing or partial run is
+    * harmless (distinct is idempotent and any readable subset of the
+    * delta is a consistent edge set), whereas appends landing before
+    * the bump would leave layers=1 with duplicate cross-run rows that
+    * the layers<=1 fast path reads WITHOUT the distinct. A crashed fold
+    * still means the delta is partially applied and must be retried
+    * (re-folding the same delta is safe). One cost, stated for
+    * operators: a fold whose delta job fails before any append still
+    * bumped `layers`, so a layered meta does NOT imply layered data —
+    * reads stay correct throughout (DedupSpec pins the harmless bump).
+    */
+  private[graft] val EdgeIndex = graft.api.IndexMaintenance.Family("edge",
+    "writeEdgeIndex", Seq("prefix_partitions"),
+    "prefix geometry and layer count",
+    graft.api.IndexMaintenance.Manifest.Layers,
+    _ => Seq(
+      graft.api.IndexMaintenance.Table("edges", Seq("s", "t"), 4,
+        graft.api.IndexMaintenance.Reconcile.SetUnion(Some("removals")),
+        Some("__ep" -> col("s"))),
+      graft.api.IndexMaintenance.Table("vertices", Seq("id"), 4,
+        graft.api.IndexMaintenance.Reconcile.SetUnion(),
+        Some("__vp" -> col("id"))),
+      graft.api.IndexMaintenance.Table("removals", Nil, 1,
+        graft.api.IndexMaintenance.Reconcile.Tombstones)),
+    metaFirst = true)
+
   /** Shared write-side derivation: distinct directed hash pairs
-    * (self-loops dropped) + the vertex key map, both prefix-
-    * partitioned for the layout discipline. ONE definition serves
+    * (self-loops dropped) + the vertex key map. ONE definition serves
     * write and fold, so a fold cannot band edges differently from the
     * index it folds into.
     */
-  private def edgeRows(edges: DataFrame, srcCol: String, dstCol: String,
-      prefixPartitions: Int): (DataFrame, DataFrame) = {
+  private def edgeRows(edges: DataFrame, srcCol: String,
+      dstCol: String): graft.api.IndexMaintenance.Delta = {
     val h = keyedEdges(edges, srcCol, dstCol)
-    val e = h.select(col("s"), col("t")).distinct()
-      .withColumn("__ep", pmod(col("s"), lit(prefixPartitions.toLong)))
-    val v = vertexMap(h)
-      .withColumn("__vp", pmod(col("id"), lit(prefixPartitions.toLong)))
-    (e, v)
+    graft.api.IndexMaintenance.Delta(
+      "edges" -> h.select(col("s"), col("t")).distinct(),
+      "vertices" -> vertexMap(h))
   }
-
-  // meta read/write is the shared (prefix_partitions, layers) pair in
-  // IndexMaintenance — the line family's exact shape, no clone
-  private def writeEdgeMeta(s: org.apache.spark.sql.SparkSession,
-      path: String, prefixPartitions: Int, layers: Int): Unit =
-    graft.api.IndexMaintenance.writeIndexMeta(s, path, prefixPartitions, layers)
-
-  private def readEdgeMeta(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (Int, Int) =
-    graft.api.IndexMaintenance.readIndexMeta(s, indexPath, op)
 
   /** Materialize a link stream's distinct directed host graph to
-    * parquet: `$path/edges` = (s, t) 60-bit hash pairs partitioned by
-    * `__ep = s mod prefixPartitions` and sorted by (s, t);
-    * `$path/vertices` = (id, key) the hash→key map;
-    * `$path/meta` = (prefix_partitions, layers). Build once per
-    * corpus version, fold daily ([[foldIntoEdgeIndex]] /
-    * [[maintainEdgeIndex]]), rank any time
-    * ([[ranksByKeyAgainstIndex]] / [[hitsByKeyAgainstIndex]]).
+    * parquet ([[EdgeIndex]]'s layout; the tombstone table starts as
+    * one empty schema-bearing file, so reads are unconditional). Build
+    * once per corpus version, fold daily ([[foldIntoEdgeIndex]] /
+    * [[maintainEdgeIndex]]), rank any time ([[ranksByKeyAgainstIndex]]
+    * / [[hitsByKeyAgainstIndex]]).
     */
   def writeEdgeIndex(edges: DataFrame, srcCol: String, dstCol: String,
-      path: String, prefixPartitions: Int = 16): Unit = {
-    val (e, v) = edgeRows(edges, srcCol, dstCol, prefixPartitions)
-    // independent tables — overlapped writes (guide §2.6)
-    graft.api.Par.run(
-      () => graft.jobs.Sinks.layout(e, s"$path/edges",
-        partitionCols = Seq("__ep"), sortCols = Seq("s", "t"), numFiles = 4),
-      () => graft.jobs.Sinks.layout(v, s"$path/vertices",
-        partitionCols = Seq("__vp"), sortCols = Seq("id"), numFiles = 4),
-      // the (empty) tombstone table — one schema-bearing file, so reads
-      // are unconditional (no absent-dir fallback to get silently wrong)
-      () => e.select(col("s"), col("t")).limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/removals"))
-    writeEdgeMeta(edges.sparkSession, path, prefixPartitions, 1)
-  }
+      path: String, prefixPartitions: Int = 16): Unit =
+    graft.api.IndexMaintenance.write(edges.sparkSession, path, EdgeIndex,
+      "prefix_partitions" -> prefixPartitions) { _ =>
+      val d = edgeRows(edges, srcCol, dstCol)
+      graft.api.IndexMaintenance.Delta(
+        d.rows :+ ("removals" -> d.rows.toMap.apply("edges").limit(0)): _*)
+    }
 
   /** Fold edge TOMBSTONES into a persisted [[writeEdgeIndex]] — the
-    * delete path a robots change or host takedown needs (without it
-    * only a full rebuild honors a removal). Tombstones are (src, dst)
-    * rows in the STORED orientation; they land as their own run in
-    * `$indexPath/removals` and reconcile BY ANTI-JOIN at read: a
-    * tombstoned pair is invisible no matter how many edge runs assert
-    * it — including runs folded AFTER the tombstone — until a
+    * delete path a robots change or host takedown needs. Tombstones
+    * are (src, dst) rows in the STORED orientation; they land as their
+    * own run in `$indexPath/removals` and reconcile BY ANTI-JOIN at
+    * read: a tombstoned pair is invisible no matter how many edge runs
+    * assert it — including runs folded AFTER the tombstone — until a
     * compaction makes the removal durable and CLEARS the tombstone
-    * set, after which a re-fold re-adds (the LSM delete contract
-    * without sequence numbers, stated honestly: tombstones are
-    * absolute within a compaction epoch). Set semantics make this
-    * crash-shaped like [[foldIntoEdgeIndex]]: the meta bumps FIRST
-    * (a partial tombstone run read early is a consistent
-    * partially-applied removal; anti-join is idempotent, so the retry
-    * completes it). To take down a whole host use
-    * [[removeKeysFromEdgeIndex]], which derives the incident pairs
-    * from the index itself.
+    * set, after which a re-fold re-adds (tombstones are absolute
+    * within a compaction epoch). Crash-shaped like
+    * [[foldIntoEdgeIndex]] (meta first; anti-join is idempotent, so the
+    * retry completes it). To take down a whole host use
+    * [[removeKeysFromEdgeIndex]].
     */
   def foldRemovalsIntoEdgeIndex(removals: DataFrame, srcCol: String,
       dstCol: String, indexPath: String): Unit = {
-    val s = removals.sparkSession
-    val (prefixPartitions, layers) =
-      readEdgeMeta(s, indexPath, "foldRemovalsIntoEdgeIndex")
-    writeEdgeMeta(s, indexPath, prefixPartitions, layers + 1)
-    keyedEdges(removals, srcCol, dstCol)
-      .select(col("s"), col("t")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(s"$indexPath/removals")
+    graft.api.IndexMaintenance.fold(removals.sparkSession, indexPath,
+      EdgeIndex, "foldRemovalsIntoEdgeIndex")(_ =>
+      graft.api.IndexMaintenance.Delta("removals" ->
+        keyedEdges(removals, srcCol, dstCol).select(col("s"), col("t"))
+          .distinct()))
+    ()
   }
 
   /** Take DOWN whole hosts (keys): every stored edge incident to any
-    * of `keys` — either endpoint, any run — tombstones in one call,
-    * the removal a robots Disallow-all or a de-listing demands. The
-    * incident pairs derive from the index's own reconciled edge set
+    * of `keys` — either endpoint, any run — tombstones in one call.
+    * The incident pairs derive from the index's own reconciled edge set
     * (one index-sized scan, tombstone-sized write), so the caller
-    * needs no link re-extraction. Runs under the writer lock with
-    * crash recovery at entry (it is a maintain*-class mutation).
+    * needs no link re-extraction. A maintain*-class mutation: writer
+    * lock and crash recovery at entry.
     */
   def removeKeysFromEdgeIndex(s: org.apache.spark.sql.SparkSession,
       keys: Seq[String], indexPath: String): Unit = {
     require(keys.nonEmpty, "removeKeysFromEdgeIndex: no keys")
-    graft.api.IndexMaintenance.withWriterLock(s, indexPath) {
-      graft.api.IndexMaintenance.recoverAtEntry(s, indexPath)
-      val (prefixPartitions, layers) =
-        readEdgeMeta(s, indexPath, "removeKeysFromEdgeIndex")
-      writeEdgeMeta(s, indexPath, prefixPartitions, layers + 1)
-      import s.implicits._
-      val kid = broadcast(keys.toDF("key")
-        .select(graft.functions.TextHashing.hash60(col("key")).as("kid")))
-      val (e, _) = edgesFromIndex(s, indexPath, "removeKeysFromEdgeIndex")
-      e.join(kid, col("s") === col("kid"), "left_semi")
-        .union(e.join(kid, col("t") === col("kid"), "left_semi"))
-        .distinct()
-        .coalesce(1)
-        .write.mode("append").parquet(s"$indexPath/removals")
+    val op = "removeKeysFromEdgeIndex"
+    graft.api.IndexMaintenance.locked(s, indexPath) {
+      graft.api.IndexMaintenance.fold(s, indexPath, EdgeIndex, op) { m =>
+        val kid = broadcast(keyIds(s, keys))
+        val (e, _) = edgesFromIndex(s, indexPath, m, op)
+        graft.api.IndexMaintenance.Delta("removals" ->
+          e.join(kid, col("s") === col("kid"), "left_semi")
+            .union(e.join(kid, col("t") === col("kid"), "left_semi"))
+            .distinct())
+      }
     }
+  }
+
+  private def keyIds(s: org.apache.spark.sql.SparkSession,
+      keys: Seq[String]): DataFrame = {
+    import s.implicits._
+    keys.toDF("key")
+      .select(graft.functions.TextHashing.hash60(col("key")).as("kid"))
   }
 
   /** Fold a DELTA of links into a persisted [[writeEdgeIndex]] IN
     * PLACE with O(delta) write bytes: the delta's distinct pairs and
-    * vertices land as their own sorted runs, meta bumps `layers`.
+    * vertices land as their own sorted runs after the meta bump.
     * Reconcile is EXACT BY SET UNION — an edge present in several
-    * runs is still ONE edge after the read-side distinct (unlike the
-    * count families nothing sums, so duplicate-ACROSS-runs edges are
-    * the reconcile hazard: without the distinct they would inflate
-    * degrees and corrupt every rank). Same single-writer
-    * restore-on-failure crash contract as every in-place fold — but
-    * the meta bump deliberately lands BEFORE the appends (ADVICE
-    * r14): under SET-UNION reconcile a bumped layer count with a
-    * missing or partial run is harmless (distinct is idempotent and
-    * any readable subset of the delta is a consistent edge set),
-    * whereas appends landing before the bump would leave layers=1
-    * with duplicate cross-run rows that [[edgesFromIndex]]'s
-    * layers<=1 fast path reads WITHOUT the distinct — silently
-    * inflated degrees until the next successful fold. A crashed fold
-    * still means the delta is partially applied and must be retried
-    * (re-folding the same delta is safe: duplicates collapse in the
-    * read-side distinct). This ordering is exclusive to the SET
-    * families; the SUM-reconciled count families (gram/line/weighted
-    * edge) cannot use it — for them a partial run corrupts totals
-    * either way, so they carry per-run manifests instead (see
-    * [[foldIntoWeightedEdgeIndex]]). One cost of meta-first, stated
-    * for operators: a fold whose delta job fails BEFORE any append
-    * still bumped `layers`, so repeated failed folds creep the layer
-    * count toward the compaction threshold without adding data —
-    * reads stay correct throughout (distinct is idempotent and a
-    * bumped count merely disables the layers<=1 fast path until the
-    * next compaction), i.e. a layered meta does NOT imply layered
-    * data. DedupSpec pins the harmless-bump property.
+    * runs is still ONE edge after the read-side distinct (without it,
+    * duplicate-across-runs edges would inflate degrees and corrupt
+    * every rank).
     */
   def foldIntoEdgeIndex(edges: DataFrame, srcCol: String, dstCol: String,
       indexPath: String): Unit = {
-    val s = edges.sparkSession
-    val (prefixPartitions, layers) =
-      readEdgeMeta(s, indexPath, "foldIntoEdgeIndex")
-    writeEdgeMeta(s, indexPath, prefixPartitions, layers + 1)
-    val (e, v) = edgeRows(edges, srcCol, dstCol, prefixPartitions)
-    graft.api.Par.run(
-      () => graft.jobs.Sinks.layoutAppend(e, s"$indexPath/edges",
-        partitionCols = Seq("__ep"), sortCols = Seq("s", "t"), numFiles = 4),
-      () => graft.jobs.Sinks.layoutAppend(v, s"$indexPath/vertices",
-        partitionCols = Seq("__vp"), sortCols = Seq("id"), numFiles = 4))
+    graft.api.IndexMaintenance.fold(edges.sparkSession, indexPath,
+      EdgeIndex, "foldIntoEdgeIndex")(_ => edgeRows(edges, srcCol, dstCol))
+    ()
   }
 
   /** Compact a layered edge index back to ONE sorted run per table
     * (the set-union reconcile AND the tombstone anti-join made
     * durable — removed edges' bytes drop from disk and the tombstone
-    * set RESETS to empty, opening the next compaction epoch: a fold
-    * after this point may re-add a previously removed edge), meta
-    * reset to layers=1. Identical reads before and after.
+    * set RESETS to empty, opening the next compaction epoch), layers
+    * reset to 1. Identical reads before and after.
     */
   def compactEdgeIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactEdgeIndex: outPath must differ from indexPath")
-    val (prefixPartitions, _) =
-      readEdgeMeta(s, indexPath, "compactEdgeIndex")
-    val removals = removalsOf(s, indexPath, "compactEdgeIndex")
-    graft.jobs.Sinks.layout(
-      s.read.parquet(s"$indexPath/edges").drop("__ep").distinct()
-        .join(removals, Seq("s", "t"), "left_anti")
-        .withColumn("__ep", pmod(col("s"), lit(prefixPartitions.toLong))),
-      s"$outPath/edges",
-      partitionCols = Seq("__ep"), sortCols = Seq("s", "t"), numFiles = 4)
-    graft.jobs.Sinks.layout(
-      s.read.parquet(s"$indexPath/vertices").drop("__vp").distinct()
-        .withColumn("__vp", pmod(col("id"), lit(prefixPartitions.toLong))),
-      s"$outPath/vertices",
-      partitionCols = Seq("__vp"), sortCols = Seq("id"), numFiles = 4)
-    removals.limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$outPath/removals")
-    writeEdgeMeta(s, outPath, prefixPartitions, 1)
-  }
+      indexPath: String, outPath: String): Unit =
+    graft.api.IndexMaintenance.compact(s, indexPath, outPath, EdgeIndex,
+      "compactEdgeIndex")
 
-  /** The edge family's maintain* entry point — crash-recover at
-    * entry, O(delta) fold, compact-and-swap iff post-fold layers
-    * reach `compactThreshold`; all inside
-    * [[graft.api.IndexMaintenance.withWriterLock]]. NOT reader-safe
-    * across the swap (the family reader contract).
+  /** The edge family's maintain* entry point
+    * ([[graft.api.IndexMaintenance.maintain]]). NOT reader-safe across
+    * the swap (the family reader contract).
     */
   def maintainEdgeIndex(edges: DataFrame, srcCol: String, dstCol: String,
       indexPath: String,
       compactThreshold: Int =
-        graft.api.IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = edges.sparkSession
-    graft.api.IndexMaintenance.withWriterLock(s, indexPath) {
-      graft.api.IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoEdgeIndex(edges, srcCol, dstCol, indexPath)
-      val (_, layers) = readEdgeMeta(s, indexPath, "maintainEdgeIndex")
-      graft.api.IndexMaintenance.compactIfLayered(s, indexPath, layers,
-        compactThreshold)(out => compactEdgeIndex(s, indexPath, out))
-    }
-  }
+        graft.api.IndexMaintenance.DefaultCompactThreshold): Boolean =
+    graft.api.IndexMaintenance.maintain(edges.sparkSession, indexPath,
+      EdgeIndex, "maintainEdgeIndex", compactThreshold)(_ =>
+      edgeRows(edges, srcCol, dstCol)).contains(true)
 
   /** Reconciled reads: (directed distinct edges (s, t) minus the
     * tombstone set, vertex map (id, key)). The distinct is skipped at
-    * layers=1 — one compacted run is distinct by construction. The
-    * tombstone anti-join always applies (the removals table is
-    * takedown-sized; a missing table means the index predates the
-    * delete path and must be rebuilt once — the named error below).
+    * layers=1 — one compacted run is distinct by construction; the
+    * tombstone anti-join always applies (a missing removals table
+    * means the index predates the delete path: rebuild once).
     */
   private def edgesFromIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (DataFrame, DataFrame) = {
-    val (_, layers) = readEdgeMeta(s, indexPath, op)
-    val e0 = s.read.parquet(s"$indexPath/edges").select(col("s"), col("t"))
-    val v0 = s.read.parquet(s"$indexPath/vertices")
-      .select(col("id"), col("key"))
-    val e1 = e0.join(removalsOf(s, indexPath, op), Seq("s", "t"),
-      "left_anti")
-    if (layers <= 1) (e1, v0) else (e1.distinct(), v0.distinct())
+      indexPath: String, m: graft.api.IndexMaintenance.Meta,
+      op: String): (DataFrame, DataFrame) = {
+    def read(dir: String) =
+      graft.api.IndexMaintenance.read(s, indexPath, EdgeIndex, m, dir, op)
+    (read("edges").select(col("s"), col("t")),
+      read("vertices").select(col("id"), col("key")))
   }
 
-  /** The tombstone table of a [[writeEdgeIndex]], with the
-    * rebuild-once error contract (an index written before the delete
-    * path existed has no removals table; silently treating that as
-    * empty would be correct TODAY but would hide a path typo
-    * forever).
-    */
-  private def removalsOf(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): DataFrame =
-    try s.read.parquet(s"$indexPath/removals").select(col("s"), col("t"))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"$op: cannot read $indexPath/removals — indexes written " +
-            "before the tombstone path existed must be rebuilt once", e)
-    }
+  private def edgesFromIndex(s: org.apache.spark.sql.SparkSession,
+      indexPath: String, op: String): (DataFrame, DataFrame) =
+    edgesFromIndex(s, indexPath,
+      graft.api.IndexMaintenance.readMeta(s, indexPath, EdgeIndex, op), op)
 
   /** [[ranksByKey]] over a persisted [[writeEdgeIndex]] — identical
     * output to ranking the raw link stream the index was built+folded
@@ -773,29 +706,50 @@ object PageRank {
         dampingPct, scale), vertexMap(h))
   }
 
+  /** The weighted edge index family: `edges` = (s, t, w) per-run
+    * partial sums per directed 60-bit hash pair, `__ep`-partitioned and
+    * (s, t)-sorted; `vertices` as in [[EdgeIndex]]; meta = the
+    * committed-run AND tag manifests. Edge weights reconcile by the
+    * signed SUM ([[foldRemovalsIntoWeightedEdgeIndex]]'s negated runs
+    * net a removed pair to 0, dropped at compaction), vertices by set
+    * union. The weighted consumers read the committed rows raw: their
+    * canonical pair aggregation ([[weightedPairs]] / [[weightedHits]])
+    * IS the cross-run reconcile, so reads are correct at any layer
+    * count and `layers` only schedules compaction. Appends land BEFORE
+    * the meta commit under a fresh `__run` id (a partial run corrupts
+    * totals under SUM, so the SET family's meta-first trick does not
+    * apply): a crash between append and commit leaves orphan files
+    * every consumer filters out, and the retried fold's fresh id can
+    * never merge with them (RecoverySpec pins it).
+    */
+  private[graft] val WeightedEdgeIndex = graft.api.IndexMaintenance.Family(
+    "weighted edge", "writeWeightedEdgeIndex", Seq("prefix_partitions"),
+    "run and tag manifests", graft.api.IndexMaintenance.Manifest.RunsTags,
+    _ => Seq(
+      graft.api.IndexMaintenance.Table("edges", Seq("s", "t"), 4,
+        graft.api.IndexMaintenance.Reconcile.Summed(Seq("s", "t"), Seq("w"),
+          netPositive = true), Some("__ep" -> col("s"))),
+      graft.api.IndexMaintenance.Table("vertices", Seq("id"), 4,
+        graft.api.IndexMaintenance.Reconcile.SetUnion(),
+        Some("__vp" -> col("id")))))
+
   /** Shared write-side derivation for the weighted family: per-run
     * partial sums over distinct DIRECTED hash pairs (self-loops
-    * dropped) + the vertex key map, prefix-partitioned. Directed like
-    * [[edgeRows]] — orientation is preserved in storage (the
+    * dropped) + the vertex key map. Directed like [[edgeRows]] —
+    * orientation is preserved in storage (the
     * [[weightedHitsByKeyAgainstIndex]] consumer iterates the directed
     * graph) and the undirected consumer collapses at read.
     */
   private def weightedEdgeRows(edges: DataFrame, srcCol: String,
-      dstCol: String, weightCol: String,
-      prefixPartitions: Int): (DataFrame, DataFrame) = {
+      dstCol: String, weightCol: String): graft.api.IndexMaintenance.Delta = {
     val h = keyedWeightedEdges(edges, srcCol, dstCol, weightCol)
-    val e = h.groupBy(col("s"), col("t")).agg(sum(col("w")).as("w"))
-      .withColumn("__ep", pmod(col("s"), lit(prefixPartitions.toLong)))
-    val v = vertexMap(h)
-      .withColumn("__vp", pmod(col("id"), lit(prefixPartitions.toLong)))
-    (e, v)
+    graft.api.IndexMaintenance.Delta(
+      "edges" -> h.groupBy(col("s"), col("t")).agg(sum(col("w")).as("w")),
+      "vertices" -> vertexMap(h))
   }
 
   /** Materialize a link stream's weighted directed host graph to
-    * parquet: `$path/edges` = (s, t, w) with w the summed weight per
-    * directed 60-bit hash pair, partitioned by `__ep = s mod
-    * prefixPartitions` and sorted by (s, t); `$path/vertices` and
-    * `$path/meta` as in [[writeEdgeIndex]]. Build once per corpus
+    * parquet ([[WeightedEdgeIndex]]'s layout). Build once per corpus
     * version, fold daily ([[foldIntoWeightedEdgeIndex]] /
     * [[maintainWeightedEdgeIndex]]), rank any time
     * ([[weightedRanksByKeyAgainstIndex]]). Pass `lit(1)`-style unit
@@ -804,40 +758,15 @@ object PageRank {
     */
   def writeWeightedEdgeIndex(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, path: String,
-      prefixPartitions: Int = 16): Unit = {
-    val (e, v) = weightedEdgeRows(edges, srcCol, dstCol, weightCol,
-      prefixPartitions)
-    val run = graft.api.IndexMaintenance.newRunId()
-    graft.api.Par.run(
-      () => graft.jobs.Sinks.layout(e.withColumn("__run", lit(run)),
-        s"$path/edges",
-        partitionCols = Seq("__ep"), sortCols = Seq("s", "t"),
-        numFiles = 4),
-      () => graft.jobs.Sinks.layout(v.withColumn("__run", lit(run)),
-        s"$path/vertices",
-        partitionCols = Seq("__vp"), sortCols = Seq("id"),
-        numFiles = 4))
-    graft.api.IndexMaintenance.writeIndexMetaRunsTags(edges.sparkSession,
-      path, prefixPartitions, 1, Seq(run), Seq.empty)
-  }
+      prefixPartitions: Int = 16): Unit =
+    graft.api.IndexMaintenance.write(edges.sparkSession, path,
+      WeightedEdgeIndex, "prefix_partitions" -> prefixPartitions)(_ =>
+      weightedEdgeRows(edges, srcCol, dstCol, weightCol))
 
   /** Fold a DELTA of weighted links into a persisted
     * [[writeWeightedEdgeIndex]] IN PLACE with O(delta) write bytes:
     * the delta's per-pair partial sums land as their own sorted runs,
-    * meta bumps `layers`. Reconcile is EXACT BY SUM-ADDITIVITY — an
-    * edge present in several runs totals the sum of its run weights
-    * (the gram/line algebra with DISTINCT swapped for SUM), applied
-    * at read inside the consumer's canonical pair aggregation. Meta
-    * bumps AFTER the appends (the count families' order — a partial
-    * run corrupts totals either way under SUM, so the SET family's
-    * harmless meta-first trick does not apply here) — and the meta
-    * COMMITS the run: both tables' appended rows carry a fresh
-    * `__run` id that only becomes readable once
-    * [[graft.api.IndexMaintenance.writeIndexMetaRuns]] lists it, so a
-    * crash between append and commit leaves orphan files every
-    * consumer filters out, and the retried fold's fresh id can never
-    * merge with them (RecoverySpec pins it). Single-writer still
-    * governs (the lock). `tag = Some(t)` is the exactly-once form
+    * committed by the meta. `tag = Some(t)` is the exactly-once form
     * (the card family's discipline): a tag already in the meta's
     * logical `committed_tags` manifest makes the fold a NO-OP
     * (returns false) — the streaming maintainer's re-delivery
@@ -847,29 +776,10 @@ object PageRank {
     */
   def foldIntoWeightedEdgeIndex(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, indexPath: String,
-      tag: Option[String] = None): Boolean = {
-    val s = edges.sparkSession
-    val (prefixPartitions, layers, runs, tags) = graft.api.IndexMaintenance
-      .readIndexMetaRunsTags(s, indexPath, "foldIntoWeightedEdgeIndex")
-    if (tag.exists(tags.contains)) false
-    else {
-      val (e, v) = weightedEdgeRows(edges, srcCol, dstCol, weightCol,
-        prefixPartitions)
-      val run = graft.api.IndexMaintenance.newRunId()
-      graft.api.Par.run(
-        () => graft.jobs.Sinks.layoutAppend(e.withColumn("__run", lit(run)),
-          s"$indexPath/edges",
-          partitionCols = Seq("__ep"), sortCols = Seq("s", "t"),
-          numFiles = 4),
-        () => graft.jobs.Sinks.layoutAppend(v.withColumn("__run", lit(run)),
-          s"$indexPath/vertices",
-          partitionCols = Seq("__vp"), sortCols = Seq("id"),
-          numFiles = 4))
-      graft.api.IndexMaintenance.writeIndexMetaRunsTags(s, indexPath,
-        prefixPartitions, layers + 1, runs :+ run, tags ++ tag)
-      true
-    }
-  }
+      tag: Option[String] = None): Boolean =
+    graft.api.IndexMaintenance.fold(edges.sparkSession, indexPath,
+      WeightedEdgeIndex, "foldIntoWeightedEdgeIndex", tag)(_ =>
+      weightedEdgeRows(edges, srcCol, dstCol, weightCol)).isDefined
 
   /** The weighted family's DELETE path — a SIGNED run the existing
     * SUM reconcile absorbs for free: the removal rows fold in with
@@ -897,42 +807,29 @@ object PageRank {
     * directed pair incident to any of `keys` folds back in at its
     * NEGATED reconciled net weight, so the pair nets to exactly 0 —
     * gone from both weighted consumers — with no link re-extraction
-    * (one index-sized scan, tombstone-sized write). Runs under the
-    * writer lock with crash recovery at entry.
+    * (one index-sized scan, tombstone-sized write). The negation is its
+    * own manifested run, so the meta commit makes the takedown atomic;
+    * the tag manifest carries through untouched. Runs under the writer
+    * lock with crash recovery at entry.
     */
   def removeKeysFromWeightedEdgeIndex(s: org.apache.spark.sql.SparkSession,
       keys: Seq[String], indexPath: String): Unit = {
     require(keys.nonEmpty, "removeKeysFromWeightedEdgeIndex: no keys")
-    graft.api.IndexMaintenance.withWriterLock(s, indexPath) {
-      graft.api.IndexMaintenance.recoverAtEntry(s, indexPath)
-      import s.implicits._
-      val kid = broadcast(keys.toDF("key")
-        .select(graft.functions.TextHashing.hash60(col("key")).as("kid")))
-      val (e, _) = weightedFromIndex(s, indexPath,
-        "removeKeysFromWeightedEdgeIndex")
-      // reconciled net per directed pair, incident to any key
-      val nets = e.groupBy(col("s"), col("t")).agg(sum(col("w")).as("w"))
-        .filter(col("w") > 0)
-      val incident = nets
-        .join(kid, col("s") === col("kid"), "left_semi")
-        .union(nets.join(kid, col("t") === col("kid"), "left_semi"))
-        .distinct()
-      // fold the negation as its own (manifested) run — the meta
-      // commit inside makes the takedown atomic; the logical tag
-      // manifest carries through untouched
-      val (prefixPartitions, layers, runs, tags) =
-        graft.api.IndexMaintenance.readIndexMetaRunsTags(s, indexPath,
-          "removeKeysFromWeightedEdgeIndex")
-      val run = graft.api.IndexMaintenance.newRunId()
-      graft.jobs.Sinks.layoutAppend(
-        incident.select(col("s"), col("t"), (-col("w")).as("w"))
-          .withColumn("__ep", pmod(col("s"), lit(prefixPartitions.toLong)))
-          .withColumn("__run", lit(run)),
-        s"$indexPath/edges",
-        partitionCols = Seq("__ep"), sortCols = Seq("s", "t"),
-        numFiles = 4)
-      graft.api.IndexMaintenance.writeIndexMetaRunsTags(s, indexPath,
-        prefixPartitions, layers + 1, runs :+ run, tags)
+    val op = "removeKeysFromWeightedEdgeIndex"
+    graft.api.IndexMaintenance.locked(s, indexPath) {
+      graft.api.IndexMaintenance.fold(s, indexPath, WeightedEdgeIndex, op) {
+        m =>
+          val kid = broadcast(keyIds(s, keys))
+          val (e, _) = weightedFromIndex(s, indexPath, m, op)
+          // reconciled net per directed pair, incident to any key
+          val nets = e.groupBy(col("s"), col("t")).agg(sum(col("w")).as("w"))
+            .filter(col("w") > 0)
+          graft.api.IndexMaintenance.Delta("edges" -> nets
+            .join(kid, col("s") === col("kid"), "left_semi")
+            .union(nets.join(kid, col("t") === col("kid"), "left_semi"))
+            .distinct()
+            .select(col("s"), col("t"), (-col("w")).as("w")))
+      }
     }
   }
 
@@ -940,58 +837,25 @@ object PageRank {
     * (per-pair sums over COMMITTED runs and the vertex distinct made
     * durable — orphan rows from crashed folds are dropped from disk
     * here, and so are pairs whose net weight is <= 0: signed removal
-    * runs become durable deletions, their bytes gone and any
-    * over-removal's residual negative balance NOT carried into the
-    * next epoch), meta reset to layers=1 with a single-run manifest.
-    * Identical reads before and after.
+    * runs become durable deletions), a single-run manifest with the
+    * tag manifest preserved. Identical reads before and after.
     */
   def compactWeightedEdgeIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, outPath: String): Unit = {
-    require(indexPath != outPath,
-      "compactWeightedEdgeIndex: outPath must differ from indexPath")
-    val (prefixPartitions, _, runs, tags) = graft.api.IndexMaintenance
-      .readIndexMetaRunsTags(s, indexPath, "compactWeightedEdgeIndex")
-    val run = graft.api.IndexMaintenance.newRunId()
-    graft.jobs.Sinks.layout(
-      graft.api.IndexMaintenance.committedOnly(
-          s.read.parquet(s"$indexPath/edges").drop("__ep"), runs)
-        .groupBy(col("s"), col("t")).agg(sum(col("w")).as("w"))
-        .filter(col("w") > 0)
-        .withColumn("__ep", pmod(col("s"), lit(prefixPartitions.toLong)))
-        .withColumn("__run", lit(run)),
-      s"$outPath/edges",
-      partitionCols = Seq("__ep"), sortCols = Seq("s", "t"), numFiles = 4)
-    graft.jobs.Sinks.layout(
-      graft.api.IndexMaintenance.committedOnly(
-          s.read.parquet(s"$indexPath/vertices").drop("__vp"), runs)
-        .distinct()
-        .withColumn("__vp", pmod(col("id"), lit(prefixPartitions.toLong)))
-        .withColumn("__run", lit(run)),
-      s"$outPath/vertices",
-      partitionCols = Seq("__vp"), sortCols = Seq("id"), numFiles = 4)
-    // the tag manifest SURVIVES the rewrite — a streaming epoch
-    // replayed after a compaction must still no-op
-    graft.api.IndexMaintenance.writeIndexMetaRunsTags(s, outPath,
-      prefixPartitions, 1, Seq(run), tags)
-  }
+      indexPath: String, outPath: String): Unit =
+    graft.api.IndexMaintenance.compact(s, indexPath, outPath,
+      WeightedEdgeIndex, "compactWeightedEdgeIndex")
 
   /** The weighted family's maintain* entry point — the
-    * [[maintainEdgeIndex]] policy verbatim: crash-recover at entry,
-    * O(delta) fold, compact-and-swap iff post-fold layers reach
-    * `compactThreshold`, all inside the writer lock. NOT reader-safe
-    * across the swap.
+    * [[maintainEdgeIndex]] policy verbatim. NOT reader-safe across the
+    * swap.
     */
   def maintainWeightedEdgeIndex(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, indexPath: String,
       compactThreshold: Int =
-        graft.api.IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = edges.sparkSession
-    graft.api.IndexMaintenance.withWriterLock(s, indexPath) {
-      graft.api.IndexMaintenance.recoverAtEntry(s, indexPath)
-      foldIntoWeightedEdgeIndex(edges, srcCol, dstCol, weightCol, indexPath)
-      compactWeightedIfDue(s, indexPath, compactThreshold)
-    }
-  }
+        graft.api.IndexMaintenance.DefaultCompactThreshold): Boolean =
+    graft.api.IndexMaintenance.maintain(edges.sparkSession, indexPath,
+      WeightedEdgeIndex, "maintainWeightedEdgeIndex", compactThreshold)(_ =>
+      weightedEdgeRows(edges, srcCol, dstCol, weightCol)).contains(true)
 
   /** [[maintainWeightedEdgeIndex]] with the exactly-once logical tag
     * (the [[graft.api.CardOps.maintainCardIndexTagged]] discipline for
@@ -1005,42 +869,29 @@ object PageRank {
   def maintainWeightedEdgeIndexTagged(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, indexPath: String, tag: String,
       compactThreshold: Int =
-        graft.api.IndexMaintenance.DefaultCompactThreshold): Boolean = {
-    val s = edges.sparkSession
-    graft.api.IndexMaintenance.withWriterLock(s, indexPath) {
-      graft.api.IndexMaintenance.recoverAtEntry(s, indexPath)
-      val applied = foldIntoWeightedEdgeIndex(edges, srcCol, dstCol,
-        weightCol, indexPath, Some(tag))
-      if (applied) compactWeightedIfDue(s, indexPath, compactThreshold)
-      applied
-    }
-  }
+        graft.api.IndexMaintenance.DefaultCompactThreshold): Boolean =
+    graft.api.IndexMaintenance.maintain(edges.sparkSession, indexPath,
+      WeightedEdgeIndex, "maintainWeightedEdgeIndex", compactThreshold,
+      Some(tag))(_ =>
+      weightedEdgeRows(edges, srcCol, dstCol, weightCol)).isDefined
 
-  private def compactWeightedIfDue(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, compactThreshold: Int): Boolean = {
-    val (_, layers, _) = graft.api.IndexMaintenance
-      .readIndexMetaRuns(s, indexPath, "maintainWeightedEdgeIndex")
-    graft.api.IndexMaintenance.compactIfLayered(s, indexPath, layers,
-      compactThreshold)(out => compactWeightedEdgeIndex(s, indexPath, out))
-  }
-
-  /** Committed reads of a weighted index's two tables: rows filter to
-    * the meta's run manifest (orphans from crashed folds are
-    * invisible), then project to the consumer columns. ONE definition
-    * behind both weighted consumers.
+  /** Committed reads of a weighted index's two tables (orphans from
+    * crashed folds are invisible), projected to the consumer columns.
+    * ONE definition behind both weighted consumers.
     */
   private def weightedFromIndex(s: org.apache.spark.sql.SparkSession,
-      indexPath: String, op: String): (DataFrame, DataFrame) = {
-    val (_, _, runs) =
-      graft.api.IndexMaintenance.readIndexMetaRuns(s, indexPath, op)
-    val e = graft.api.IndexMaintenance.committedOnly(
-        s.read.parquet(s"$indexPath/edges"), runs)
-      .select(col("s"), col("t"), col("w"))
-    val v = graft.api.IndexMaintenance.committedOnly(
-        s.read.parquet(s"$indexPath/vertices"), runs)
-      .select(col("id"), col("key")).distinct()
-    (e, v)
+      indexPath: String, m: graft.api.IndexMaintenance.Meta,
+      op: String): (DataFrame, DataFrame) = {
+    def raw(dir: String) = graft.api.IndexMaintenance.read(s, indexPath,
+      WeightedEdgeIndex, m, dir, op, reconciled = false)
+    (raw("edges").select(col("s"), col("t"), col("w")),
+      raw("vertices").select(col("id"), col("key")).distinct())
   }
+
+  private def weightedFromIndex(s: org.apache.spark.sql.SparkSession,
+      indexPath: String, op: String): (DataFrame, DataFrame) =
+    weightedFromIndex(s, indexPath, graft.api.IndexMaintenance.readMeta(s,
+      indexPath, WeightedEdgeIndex, op), op)
 
   /** [[weightedRanksByKey]] over a persisted
     * [[writeWeightedEdgeIndex]] — identical output to weighted-ranking

@@ -76,15 +76,10 @@ object Bm25Gate {
     // stream's term set is unbounded). Compaction restores the baked
     // fast path. The ONE meta read is also the completeness check
     // (missing/partial index fails at graph build with a named error).
-    val (_, n, tt, maxDl, layers) =
-      TextOps.readBm25FullMeta(s, indexPath, "Bm25Gate")
-    val idx =
-      if (layers <= 1)
-        s.read.parquet(s"$indexPath/contrib")
-          .select(col("_t"), col(idCol), col("_c"))
-      else TextOps.bm25ContribFromPostings(
-        s.read.parquet(s"$indexPath/postings").drop("__bp"),
-        idCol, n, tt, maxDl)
+    val idx = graft.api.IndexMaintenance.read(s, indexPath, TextOps.Bm25Index,
+        graft.api.IndexMaintenance.readMeta(s, indexPath, TextOps.Bm25Index,
+          "Bm25Gate"), "contrib", "Bm25Gate")
+      .select(col("_t"), col(idCol), col("_c"))
     gateCore(queries, qidCol, textCol, tsCol, delay, window,
       idx, idCol, k, declareWatermark)
   }

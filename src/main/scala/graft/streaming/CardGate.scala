@@ -57,8 +57,8 @@ object CardGate {
         "CardOps.maintainCardIndex directly")
     // a missing / pre-manifest index fails HERE by name, at stream
     // author time, not at the first epoch
-    IndexMaintenance.readIndexMetaRunsTags(docs.sparkSession, indexPath,
-      "CardGate.maintainEachBatch")
+    IndexMaintenance.readMeta(docs.sparkSession, indexPath,
+      CardOps.CardIndex, "CardGate.maintainEachBatch")
     docs.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
         CardOps.maintainCardIndexTagged(batch.toDF(), idCol, textCol,

@@ -61,8 +61,11 @@ object CdcGate {
       tsCol: String, delay: String, window: String, indexPath: String,
       declareWatermark: Boolean = true): DataFrame = {
     val s = docs.sparkSession
-    val (_, modulus, w) = DedupOps.readCdcMeta(s, indexPath)
-    val corpus = s.read.parquet(s"$indexPath/chunks")
+    val m = graft.api.IndexMaintenance.readMeta(s, indexPath,
+      DedupOps.CdcIndex, "CdcGate.hitsGate")
+    val (modulus, w) = (m.int("modulus"), m.int("window"))
+    val corpus = graft.api.IndexMaintenance.read(s, indexPath,
+        DedupOps.CdcIndex, m, "chunks", "CdcGate.hitsGate", reconciled = false)
       .select(col("c").as("_c"), lit(1L).as("_hit"))
 
     val src = if (declareWatermark) docs.withWatermark(tsCol, delay) else docs

@@ -63,8 +63,8 @@ object EdgeGate {
         "PageRank.maintainWeightedEdgeIndex directly")
     // a missing / pre-manifest index fails HERE by name, at stream
     // author time, not at the first epoch
-    IndexMaintenance.readIndexMetaRunsTags(docs.sparkSession, indexPath,
-      "EdgeGate.maintainEachBatch")
+    IndexMaintenance.readMeta(docs.sparkSession, indexPath,
+      graft.operators.PageRank.WeightedEdgeIndex, "EdgeGate.maintainEachBatch")
     docs.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
         val links = TextOps.extractLinks(batch.toDF(), srcHostCol, textCol)

@@ -115,20 +115,18 @@ object FingerprintGate {
     */
   def indexFromPath(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, snapshotPath: Option[String] = None): FpIndex = {
-    val (_, maxBucket, bits, hammingMax, layers) =
-      DedupOps.readFingerprintIndexMeta(spark, indexPath,
-        "FingerprintGate.indexFromPath")
-    val raw = spark.read.parquet(s"$indexPath/buckets").drop("__bp")
-    val buckets =
-      (if (layers <= 1) raw
-       else DedupOps.mergeLayeredBuckets(raw, maxBucket))
-        .filter(col("__cs").isNotNull)
+    val op = "FingerprintGate.indexFromPath"
+    val m = graft.api.IndexMaintenance.readMeta(spark, indexPath,
+      DedupOps.FingerprintIndex, op)
+    def read(dir: String) = graft.api.IndexMaintenance.read(spark,
+      indexPath, DedupOps.FingerprintIndex, m, dir, op)
     FpIndex(
-      GateSnapshot.of(buckets, snapshotPath.map(p => s"$p/buckets")),
-      GateSnapshot.of(spark.read.parquet(s"$indexPath/fps")
+      GateSnapshot.of(read("buckets").filter(col("__cs").isNotNull),
+        snapshotPath.map(p => s"$p/buckets")),
+      GateSnapshot.of(read("fps")
         .select(col("doc_old"), col("fp_old").as("sh_old")),
         snapshotPath.map(p => s"$p/fps")),
-      bits, hammingMax)
+      m.int("bits"), m.int("hamming_max"))
   }
 
   /** newFps: a STREAMING frame with (idCol, fpCol, tsCol). Emits

@@ -16,8 +16,8 @@ import graft.api.DedupOps
   * The gate splits author time from serve time (the LineGate shape):
   *
   *   - [[indexFromPath]] authors a [[GramSet]] ONCE — layered runs
-  *     reconcile by the shared
-  *     [[graft.api.DedupOps.reconcileGramRuns]] SUM, the min/cap
+  *     reconcile by the kernel's per-gram SUM
+  *     ([[graft.api.IndexMaintenance.read]]), the min/cap
   *     thresholds apply to the reconciled totals (exactly the batch
   *     probe's read), and the resulting over-threshold gram-hash set
   *     snapshots eagerly (localCheckpoint, cache-owned — the
@@ -93,16 +93,15 @@ object GramGate {
     require(maxDocsPerGram >= minCorpusDocs,
       s"GramGate.indexFromPath: maxDocsPerGram $maxDocsPerGram < " +
         s"minCorpusDocs $minCorpusDocs — the cap would reject every gram")
-    val (gramTokens, _, layers, runs) =
-      DedupOps.readGramMeta(spark, indexPath, "GramGate.indexFromPath")
-    val cp = GateSnapshot.of(DedupOps.reconcileGramRuns(
-        graft.api.IndexMaintenance.committedOnly(
-          spark.read.parquet(s"$indexPath/grams").drop("__gp"), runs),
-        layers)
+    val op = "GramGate.indexFromPath"
+    val m = graft.api.IndexMaintenance.readMeta(spark, indexPath,
+      DedupOps.GramIndex, op)
+    val cp = GateSnapshot.of(graft.api.IndexMaintenance.read(spark,
+        indexPath, DedupOps.GramIndex, m, "grams", op)
       .filter(col("n_docs") >= minCorpusDocs &&
         col("n_docs") <= maxDocsPerGram)
       .select(col("gh").as("__gh"), lit(1L).as("_hit")), snapshotPath)
-    GramSet(cp, gramTokens)
+    GramSet(cp, m.int("gram_tokens"))
   }
 
   /** docs: a STREAMING frame with (idCol, textCol, tsCol). See the

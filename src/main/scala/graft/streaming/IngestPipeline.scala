@@ -167,8 +167,12 @@ object IngestPipeline {
     val pivoted = graft.api.ClassifyOps.nbPivoted(nbModel, st)
       .select(col("w").as("_pw") +:
         st.classes.indices.map(i => col(s"_cw$i")): _*)
-    val (_, cdcMod, cdcW) = graft.api.DedupOps.readCdcMeta(spark, cdcIndexPath)
-    val chunkIdx = spark.read.parquet(s"$cdcIndexPath/chunks")
+    val cdcMeta = graft.api.IndexMaintenance.readMeta(spark, cdcIndexPath,
+      graft.api.DedupOps.CdcIndex, "IngestPipeline")
+    val (cdcMod, cdcW) = (cdcMeta.int("modulus"), cdcMeta.int("window"))
+    val chunkIdx = graft.api.IndexMaintenance.read(spark, cdcIndexPath,
+        graft.api.DedupOps.CdcIndex, cdcMeta, "chunks", "IngestPipeline",
+        reconciled = false)
       .select(col("c").as("_ic"), lit(1L).as("_cdchit"))
     val lmV = lmModel.agg(max(col("v"))).head().getLong(0)
     val m2 = lmModel.select(col("w1").as("_mw1"), col("w2").as("_mw2"),

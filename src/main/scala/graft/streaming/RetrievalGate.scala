@@ -78,7 +78,8 @@ object RetrievalGate {
       "RetrievalGate.hybridEachBatch: batch frames take " +
         "TextOps.hybridTopKAgainstIndexes directly")
     val s = queries.sparkSession
-    TextOps.readBm25FullMeta(s, bm25IndexPath, "RetrievalGate")
+    graft.api.IndexMaintenance.readMeta(s, bm25IndexPath, TextOps.Bm25Index,
+      "RetrievalGate")
     val model = VectorOps.readIvfPqModel(s, ivfPqIndexPath)
     require(nprobe >= 1 && nprobe <= model.coarse.k,
       s"RetrievalGate.hybridEachBatch: nprobe $nprobe outside " +

@@ -35,8 +35,9 @@ class CardSpec extends SparkSpec {
     assert(!CardOps.maintainCardIndex(docs.filter(col("doc_id") % 7 === 0),
       "doc_id", "text", "source", "lang", dir),
       "fixture must stay layered")
-    val (_, layers, runs, _) = IndexMaintenance.readIndexMetaRunsTags(
-      spark, dir, "test")
+    val meta = IndexMaintenance.readMeta(spark, dir, CardOps.CardIndex,
+      "test")
+    val (layers, runs) = (meta.layers, meta.runs)
     assert(layers == 2 && runs.size == 2)
     // non-vacuity: the runs share leaves, so reading without the SUM
     // reconcile would emit duplicate leaf rows
@@ -62,20 +63,21 @@ class CardSpec extends SparkSpec {
       "source", "lang", dir, tag = "b-1"), "fresh tag must apply")
     val after = cardSet(CardOps.datasetCardAgainstIndex(spark, dir))
     val runsAfter = IndexMaintenance
-      .readIndexMetaRunsTags(spark, dir, "test")._3
+      .readMeta(spark, dir, CardOps.CardIndex, "test").runs
     // the replay: same batch re-delivered — no new run, same card
     assert(!CardOps.maintainCardIndexTagged(d1, "doc_id", "text",
       "source", "lang", dir, tag = "b-1"), "replayed tag must no-op")
-    assert(IndexMaintenance.readIndexMetaRunsTags(spark, dir, "test")._3
-      == runsAfter, "a no-op fold appended a run")
+    assert(IndexMaintenance.readMeta(spark, dir, CardOps.CardIndex, "test")
+      .runs == runsAfter, "a no-op fold appended a run")
     assert(cardSet(CardOps.datasetCardAgainstIndex(spark, dir)) == after)
     // a DIFFERENT tag applies — and with threshold 2 it compacts;
     // replaying EITHER tag after the rewrite must still no-op
     assert(CardOps.maintainCardIndexTagged(
       docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
       "source", "lang", dir, tag = "b-2", compactThreshold = 2))
-    val (_, layersC, runsC, tagsC) = IndexMaintenance
-      .readIndexMetaRunsTags(spark, dir, "test")
+    val metaC = IndexMaintenance.readMeta(spark, dir, CardOps.CardIndex,
+      "test")
+    val (layersC, runsC, tagsC) = (metaC.layers, metaC.runs, metaC.tags)
     assert(layersC == 1 && runsC.size == 1, "threshold-2 fold must compact")
     assert(tagsC.toSet == Set("b-1", "b-2"),
       "compaction dropped the tag manifest — replays would re-apply")

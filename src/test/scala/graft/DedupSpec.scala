@@ -644,7 +644,9 @@ class DedupSpec extends SparkSpec {
     assert(folded == full)
     // the fold copied the geometry meta verbatim (modulus 32, not the
     // writeCdcChunkIndex default 64)
-    val (_, m, w) = DedupOps.readCdcMeta(spark, s"$dir/v2")
+    val cdcMeta = graft.api.IndexMaintenance.readMeta(spark, s"$dir/v2",
+      DedupOps.CdcIndex, "test")
+    val (m, w) = (cdcMeta.int("modulus"), cdcMeta.int("window"))
     assert(m == 32 && w == 4)
     // IN-PLACE layered fold: delta appended as its own run, identical
     // probe (the semi-join never sees the duplicates)
@@ -1619,7 +1621,9 @@ class DedupSpec extends SparkSpec {
     // with no appended run — the read-side distinct is idempotent, so
     // the graph must be unchanged (the reason the SET family bumps
     // meta BEFORE its appends)
-    graft.api.IndexMaintenance.writeIndexMeta(spark, s"$dir/ix", 16, 2)
+    graft.api.IndexMaintenance.writeMeta(spark, s"$dir/ix",
+      graft.api.IndexMaintenance.readMeta(spark, s"$dir/ix",
+        PageRank.EdgeIndex, "test").set("layers" -> 2))
     assert(got() == healthy,
       "layers=2 with a missing run must read identically (distinct is " +
         "idempotent) — the meta-first crash window is harmless")

@@ -125,6 +125,29 @@ class MlSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("pq_encode: a ragged vector outside the training sample fails " +
+      "writeIvfPqIndex by name instead of encoding truncated or " +
+      "zero-padded dims") {
+    import spark.implicits._
+    val flat = (0 until 40).map(i => Seq.tabulate(8)(j =>
+      if (j == i % 8) 1.0 else 0.1 * (i % 3)))
+    val sample = flat.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    val model = graft.api.VectorOps.ivfPqTrain(sample, "vec_id",
+      "embedding", nCells = 2, m = 2, k = 2, seed = 1L)
+    val corpus = sample.union(Seq((99L, Seq(1.0, 0.0, 0.0, 0.0)))
+      .toDF("vec_id", "embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-pqragged-")
+    val e = intercept[Exception] {
+      graft.api.VectorOps.writeIvfPqIndex(corpus, "vec_id", "embedding",
+        model, s"$dir/ix")
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(chain.exists(m => m.contains("pq_encode") &&
+      m.contains("ragged")), chain.mkString(" | "))
+  }
+
   test("readIvfPqModel: missing index fails with a named error") {
     val e = intercept[IllegalArgumentException] {
       graft.api.VectorOps.readIvfPqModel(spark, "/tmp/graft-no-such-index")

@@ -497,10 +497,11 @@ class RecoverySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toSet
     val before = probeSet(s"$dir/ix")
-    val (pp, layers0, runs0) = IndexMaintenance.readIndexMetaRuns(
-      spark, s"$dir/ix", "test")
+    val meta0 = IndexMaintenance.readMeta(spark, s"$dir/ix",
+      TextOps.LineIndex, "test")
+    val runs0 = meta0.runs
     TextOps.foldIntoLineIndex(d1, "doc_id", "text", s"$dir/ix")
-    IndexMaintenance.writeIndexMetaRuns(spark, s"$dir/ix", pp, layers0, runs0)
+    IndexMaintenance.writeMeta(spark, s"$dir/ix", meta0)
     assert(probeSet(s"$dir/ix") == before,
       "an uncommitted run changed a read — the crash window is open")
     // non-vacuity: the orphan rows physically exist and carry counts
@@ -529,8 +530,8 @@ class RecoverySpec extends SparkSpec {
     TextOps.compactLineIndex(spark, s"$dir/ix", s"$dir/ixc")
     val rawC = spark.read.parquet(s"$dir/ixc/lines")
     assert(rawC.select("__run").distinct().count() == 1)
-    val (_, _, runs2) = IndexMaintenance.readIndexMetaRuns(
-      spark, s"$dir/ix", "test")
+    val runs2 = IndexMaintenance.readMeta(spark, s"$dir/ix",
+      TextOps.LineIndex, "test").runs
     val committedNow = IndexMaintenance.committedOnly(
         spark.read.parquet(s"$dir/ix/lines").drop("__lp"), runs2)
       .agg(sqlSum("n_docs")).head().getLong(0)
@@ -563,10 +564,11 @@ class RecoverySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
     val before = probeSet(s"$dir/ix")
-    val (gt, pp, layers0, runs0) = DedupOps.readGramMeta(
-      spark, s"$dir/ix", "test")
+    val meta0 = IndexMaintenance.readMeta(spark, s"$dir/ix",
+      DedupOps.GramIndex, "test")
+    val runs0 = meta0.runs
     DedupOps.foldIntoGramIndex(d1, "doc_id", "text", s"$dir/ix")
-    DedupOps.writeGramMeta(spark, s"$dir/ix", gt, pp, layers0, runs0)
+    IndexMaintenance.writeMeta(spark, s"$dir/ix", meta0)
     assert(probeSet(s"$dir/ix") == before,
       "an uncommitted gram run changed a probe — the crash window is open")
     val raw = spark.read.parquet(s"$dir/ix/grams")
@@ -614,11 +616,11 @@ class RecoverySpec extends SparkSpec {
       PageRank.weightedHitsByKeyAgainstIndex(spark, path).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val (rank0, hits0) = (rankSet(s"$dir/ix"), hitsSet(s"$dir/ix"))
-    val (pp, layers0, runs0, tags0) = IndexMaintenance
-      .readIndexMetaRunsTags(spark, s"$dir/ix", "test")
+    val meta0 = IndexMaintenance.readMeta(spark, s"$dir/ix",
+      PageRank.WeightedEdgeIndex, "test")
+    val runs0 = meta0.runs
     PageRank.foldIntoWeightedEdgeIndex(d1, "src", "dst", "w", s"$dir/ix")
-    IndexMaintenance.writeIndexMetaRunsTags(spark, s"$dir/ix", pp,
-      layers0, runs0, tags0)
+    IndexMaintenance.writeMeta(spark, s"$dir/ix", meta0)
     assert(rankSet(s"$dir/ix") == rank0 && hitsSet(s"$dir/ix") == hits0,
       "an uncommitted weighted run changed a consumer — window open")
     val rawE = spark.read.parquet(s"$dir/ix/edges")
@@ -667,13 +669,12 @@ class RecoverySpec extends SparkSpec {
       PageRank.weightedRanksByKeyAgainstIndex(spark, path).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val healthy = rankSet(s"$dir/wix")
-    val (pp, layers0, runs0, tags0) = IndexMaintenance
-      .readIndexMetaRunsTags(spark, s"$dir/wix", "test")
+    val meta0 = IndexMaintenance.readMeta(spark, s"$dir/wix",
+      PageRank.WeightedEdgeIndex, "test")
     PageRank.foldRemovalsIntoWeightedEdgeIndex(
       Seq(("a.org", "b.org", 5L)).toDF("src", "dst", "w"),
       "src", "dst", "w", s"$dir/wix")
-    IndexMaintenance.writeIndexMetaRunsTags(spark, s"$dir/wix", pp,
-      layers0, runs0, tags0)
+    IndexMaintenance.writeMeta(spark, s"$dir/wix", meta0)
     assert(rankSet(s"$dir/wix") == healthy,
       "an uncommitted signed removal run changed a read")
     // the retried removal then applies exactly once
@@ -694,9 +695,10 @@ class RecoverySpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSet
     val eHealthy = eGot()
-    val (epp, elayers) = IndexMaintenance.readIndexMeta(
-      spark, s"$dir/eix", "test")
-    IndexMaintenance.writeIndexMeta(spark, s"$dir/eix", epp, elayers + 1)
+    val emeta = IndexMaintenance.readMeta(spark, s"$dir/eix",
+      PageRank.EdgeIndex, "test")
+    IndexMaintenance.writeMeta(spark, s"$dir/eix",
+      emeta.set("layers" -> (emeta.layers + 1)))
     assert(eGot() == eHealthy,
       "a bumped meta with no tombstone run changed the set-family read")
   }
@@ -717,14 +719,14 @@ class RecoverySpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSet
     val before = cardNow(s"$dir/ix")
-    val (pp, layers0, runs0, tags0) = IndexMaintenance
-      .readIndexMetaRunsTags(spark, s"$dir/ix", "test")
+    val meta0 = IndexMaintenance.readMeta(spark, s"$dir/ix",
+      CardOps.CardIndex, "test")
+    val runs0 = meta0.runs
     // crash between append and commit: fold lands, meta restored —
     // the TAGGED form, so a lost tag would also be visible
     CardOps.foldIntoCardIndex(d1, "doc_id", "text", "source", "lang",
       s"$dir/ix", tag = Some("day-1"))
-    IndexMaintenance.writeIndexMetaRunsTags(spark, s"$dir/ix", pp,
-      layers0, runs0, tags0)
+    IndexMaintenance.writeMeta(spark, s"$dir/ix", meta0)
     assert(cardNow(s"$dir/ix") == before,
       "an uncommitted card run changed a read — the crash window is open")
     val raw = spark.read.parquet(s"$dir/ix/stats")
@@ -754,5 +756,210 @@ class RecoverySpec extends SparkSpec {
     val rawC = spark.read.parquet(s"$dir/ixc/stats")
     assert(rawC.select("__run").distinct().count() == 1)
     assert(cardNow(s"$dir/ixc") == want)
+  }
+
+  // ---- the crash-point matrix: every persisted index family ----------
+
+  /** One persisted index family, driven only through its public entry
+    * points. Rows split by `idCol % 6`: 0-2 build the index, 3/4/5 are
+    * three deltas, and `idCol % 4 == 0` rows probe it. `commitFile` is
+    * the manifest a fold commits last (`runs` for IVF-PQ's sidecar).
+    */
+  private case class IndexFamily(name: String,
+      family: graft.api.IndexMaintenance.Family, commitFile: String,
+      rows: org.apache.spark.sql.DataFrame, idCol: String,
+      build: (org.apache.spark.sql.DataFrame, String) => Unit,
+      fold: (org.apache.spark.sql.DataFrame, String) => Unit,
+      maintain: (org.apache.spark.sql.DataFrame, String) => Boolean,
+      compact: (String, String) => Unit,
+      probe: String => Set[Seq[Any]])
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  private lazy val indexFamilies: Seq[IndexFamily] = {
+    import org.apache.spark.sql.functions.{col, concat, concat_ws, lit}
+    import graft.api.{CardOps, DedupOps, TextOps, VectorOps}
+    import graft.operators.PageRank
+    val docs = Tables.documents(spark, sf)
+    val probeDocs = docs.filter(col("doc_id") % 4 === 0)
+    // every third doc shares a banner line: a banner's corpus count
+    // crosses maxDocFreq only once deltas land
+    val lined = docs.select(col("doc_id"), concat_ws("\n",
+      concat(lit("banner "), col("doc_id") % 3), col("text")).as("text"))
+    val fps = DedupOps.simhashFingerprint(docs, "doc_id", "text")
+      .select(col("doc_id"), col("simhash"))
+    val emb = Tables.embeddings(spark, sf)
+    val planes = graft.queries.DedupQueries.lshPlanes
+    val model = VectorOps.ivfPqTrain(emb.filter(col("vec_id") % 6 < 3),
+      "vec_id", "embedding", nCells = 4, m = 8, k = 8, seed = 7L)
+    val links = docs.select(col("doc_id"),
+      concat(lit("h"), col("doc_id") % 17).as("src"),
+      concat(lit("h"), (col("doc_id") * 7) % 23).as("dst"),
+      (col("doc_id") % 3 + 1).as("w"))
+    def probeOf(df: org.apache.spark.sql.DataFrame, idCol: String) =
+      df.filter(col(idCol) % 4 === 0)
+    Seq(
+      IndexFamily("minhash", DedupOps.MinhashIndex, "meta", docs, "doc_id",
+        DedupOps.writeMinhashIndex(_, "doc_id", "text", _),
+        DedupOps.foldIntoMinhashIndex(_, "doc_id", "text", _),
+        DedupOps.maintainMinhashIndex(_, "doc_id", "text", _),
+        DedupOps.compactMinhashIndex(spark, _, _),
+        ix => rowsOf(DedupOps.minhashPairsAgainstIndex(probeDocs, "doc_id",
+          "text", ix, jaccardX1000Threshold = 0))),
+      IndexFamily("fingerprint", DedupOps.FingerprintIndex, "meta", fps,
+        "doc_id",
+        DedupOps.writeFingerprintIndex(_, "doc_id", "simhash", 60, 3, _),
+        DedupOps.foldIntoFingerprintIndex(_, "doc_id", "simhash", _),
+        DedupOps.maintainFingerprintIndex(_, "doc_id", "simhash", _),
+        DedupOps.compactFingerprintIndex(spark, _, _),
+        ix => rowsOf(DedupOps.fingerprintPairsAgainstIndex(
+          probeOf(fps, "doc_id"), "doc_id", "simhash", ix))),
+      IndexFamily("gram", DedupOps.GramIndex, "meta", docs, "doc_id",
+        DedupOps.writeGramIndex(_, "doc_id", "text", _, gramTokens = 3),
+        DedupOps.foldIntoGramIndex(_, "doc_id", "text", _),
+        DedupOps.maintainGramIndex(_, "doc_id", "text", _),
+        DedupOps.compactGramIndex(spark, _, _),
+        ix => rowsOf(DedupOps.exactSubstringSpansAgainstIndex(probeDocs,
+          "doc_id", "text", ix, maxDocsPerGram = 40))),
+      IndexFamily("CDC", DedupOps.CdcIndex, "meta", docs, "doc_id",
+        DedupOps.writeCdcChunkIndex(_, "doc_id", "text", _, modulus = 8),
+        DedupOps.foldIntoCdcChunkIndex(_, "doc_id", "text", _),
+        DedupOps.maintainCdcChunkIndex(_, "doc_id", "text", _),
+        DedupOps.compactCdcChunkIndex(spark, _, _),
+        ix => rowsOf(DedupOps.cdcChunkHitsAgainstIndex(probeDocs, "doc_id",
+          "text", ix))),
+      IndexFamily("sign", VectorOps.SignIndex, "meta", emb, "vec_id",
+        VectorOps.writeSignIndex(_, "vec_id", "embedding", planes, _),
+        VectorOps.foldIntoSignIndex(_, "vec_id", "embedding", planes, _),
+        VectorOps.maintainSignIndex(_, "vec_id", "embedding", planes, _),
+        VectorOps.compactSignIndex(spark, _, _),
+        ix => rowsOf(VectorOps.probeSignIndex(probeOf(emb, "vec_id"),
+          "vec_id", "embedding", planes, ix, simX1000Threshold = 400))),
+      IndexFamily("IVF-PQ", VectorOps.IvfPqIndex("vec_id"), "runs", emb,
+        "vec_id",
+        VectorOps.writeIvfPqIndex(_, "vec_id", "embedding", model, _,
+          storeVectors = true),
+        VectorOps.foldIntoIvfPqIndex(_, "vec_id", "embedding", _),
+        VectorOps.maintainIvfPqIndex(_, "vec_id", "embedding", _),
+        VectorOps.compactIvfPqIndex(spark, _, _),
+        ix => rowsOf(VectorOps.ivfPqProbe(probeOf(emb, "vec_id"), "vec_id",
+          "embedding", ix, adcX1000Threshold = -2000, nprobe = 2)) ++
+          rowsOf(VectorOps.readIvfPqVectors(spark, ix))),
+      IndexFamily("BM25", TextOps.Bm25Index, "meta", docs, "doc_id",
+        TextOps.writeBm25Index(_, "doc_id", "text", _),
+        TextOps.foldIntoBm25Index(_, "doc_id", "text", _),
+        TextOps.maintainBm25Index(_, "doc_id", "text", _),
+        TextOps.compactBm25Index(spark, _, _),
+        ix => rowsOf(TextOps.bm25TopKAgainstIndex(
+          probeDocs.select(col("doc_id").as("qid"), col("text")), "qid",
+          "text", ix, "doc_id", k = 5))),
+      IndexFamily("line", TextOps.LineIndex, "meta", lined, "doc_id",
+        TextOps.writeLineIndex(_, "doc_id", "text", _),
+        TextOps.foldIntoLineIndex(_, "doc_id", "text", _),
+        TextOps.maintainLineIndex(_, "doc_id", "text", _),
+        TextOps.compactLineIndex(spark, _, _),
+        ix => rowsOf(TextOps.dedupLinesAgainstIndex(probeOf(lined, "doc_id"),
+          "doc_id", "text", ix, maxDocFreq = 100))),
+      IndexFamily("card", CardOps.CardIndex, "meta", docs, "doc_id",
+        CardOps.writeCardIndex(_, "doc_id", "text", "source", "lang", _),
+        CardOps.foldIntoCardIndex(_, "doc_id", "text", "source", "lang", _),
+        CardOps.maintainCardIndex(_, "doc_id", "text", "source", "lang", _),
+        CardOps.compactCardIndex(spark, _, _),
+        ix => rowsOf(CardOps.datasetCardAgainstIndex(spark, ix))),
+      IndexFamily("edge", PageRank.EdgeIndex, "meta", links, "doc_id",
+        PageRank.writeEdgeIndex(_, "src", "dst", _),
+        PageRank.foldIntoEdgeIndex(_, "src", "dst", _),
+        PageRank.maintainEdgeIndex(_, "src", "dst", _),
+        PageRank.compactEdgeIndex(spark, _, _),
+        ix => rowsOf(PageRank.ranksByKeyAgainstIndex(spark, ix)) ++
+          rowsOf(PageRank.hitsByKeyAgainstIndex(spark, ix))),
+      IndexFamily("weighted edge", PageRank.WeightedEdgeIndex, "meta", links,
+        "doc_id",
+        PageRank.writeWeightedEdgeIndex(_, "src", "dst", "w", _),
+        PageRank.foldIntoWeightedEdgeIndex(_, "src", "dst", "w", _),
+        PageRank.maintainWeightedEdgeIndex(_, "src", "dst", "w", _),
+        PageRank.compactWeightedEdgeIndex(spark, _, _),
+        ix => rowsOf(PageRank.weightedRanksByKeyAgainstIndex(spark, ix)) ++
+          rowsOf(PageRank.weightedHitsByKeyAgainstIndex(spark, ix))))
+  }
+
+  test("crash-point matrix: every index family recovers at its next " +
+      "maintain* from a crash before the meta commit, a crash between " +
+      "the swap's renames and stale siblings, and a stale writer lock " +
+      "fails naming the lock file") {
+    import org.apache.spark.sql.functions.col
+    import graft.api.IndexMaintenance
+    assert(indexFamilies.map(_.name).distinct.size == 11)
+    indexFamilies.foreach { f =>
+      def slice(k: Int*) = f.rows.filter((col(f.idCol) % 6).isin(k: _*))
+      val ix = Files.createTempDirectory("graft-crashmx-").toString + "/ix"
+      def path(suffix: String) = java.nio.file.Paths.get(s"$ix$suffix")
+      f.build(slice(0, 1, 2), ix)
+
+      // (1) crash after the append, before the meta commit: the real
+      // fold lands its runs, then the pre-fold manifest is put back;
+      // the next maintain* retries the same delta
+      val committed = IndexMaintenance.readMeta(spark, ix, f.family, "test",
+        f.commitFile)
+      f.fold(slice(3), ix)
+      IndexMaintenance.writeMeta(spark, ix, committed, f.commitFile)
+      assert(!f.maintain(slice(3), ix), s"${f.name}: unexpected compaction")
+
+      // (2) crash between the swap's two renames: the compacted copy
+      // sits in __compacting, the live index was moved to __old
+      f.compact(ix, s"${ix}__compacting")
+      Files.move(path(""), path("__old"))
+      assert(!f.maintain(slice(4), ix))
+      assert(Files.exists(path("")) && !Files.exists(path("__compacting")) &&
+        !Files.exists(path("__old")), s"${f.name}: swap not recovered")
+
+      // (3) stale __compacting/__old siblings next to a healthy index,
+      // behind (4) a stale writer lock, which must fail by name first
+      Files.createDirectories(path("__compacting"))
+      Files.createDirectories(path("__old"))
+      Files.createFile(path("__writer.lock"))
+      val e = intercept[IllegalStateException](f.maintain(slice(5), ix))
+      assert(e.getMessage.contains(s"${ix}__writer.lock"),
+        s"${f.name}: ${e.getMessage}")
+      Files.delete(path("__writer.lock"))
+      assert(!f.maintain(slice(5), ix))
+      assert(!Files.exists(path("__compacting")) &&
+        !Files.exists(path("__old")),
+        s"${f.name}: stale siblings must be cleared")
+
+      // every recovery composed: the probe equals a from-scratch build
+      // over the corpus plus each delta applied exactly once
+      val fresh = s"$ix-rebuild"
+      f.build(slice(0, 1, 2, 3, 4, 5), fresh)
+      val want = f.probe(fresh)
+      assert(want.nonEmpty, s"${f.name}: empty probe — the check is vacuous")
+      assert(f.probe(ix) == want,
+        s"${f.name}: the recovered index probes unlike a rebuild")
+    }
+  }
+
+  test("every index family fails loudly, naming the path, when a fold " +
+      "or a probe meets a deleted meta (IVF-PQ: a fold meets a deleted " +
+      "runs sidecar)") {
+    import org.apache.spark.sql.functions.col
+    indexFamilies.foreach { f =>
+      val dir = Files.createTempDirectory("graft-nometa-").toString
+      val ix = s"$dir/ix"
+      f.build(f.rows.filter(col(f.idCol) % 6 < 3), ix)
+      val delta = f.rows.filter(col(f.idCol) % 6 === 3)
+      def assertNamed(file: String)(body: => Any): Unit = {
+        val e = intercept[Exception](body)
+        assert(e.getMessage.contains(s"$ix/$file"),
+          s"${f.name}: unnamed error: ${e.getMessage}")
+      }
+      def rm(file: String): Unit = org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(s"$ix/$file"))
+      rm(f.commitFile)
+      assertNamed(f.commitFile)(f.fold(delta, ix))
+      rm("meta")
+      assertNamed("meta")(f.fold(delta, ix))
+      assertNamed("meta")(f.probe(ix))
+    }
   }
 }

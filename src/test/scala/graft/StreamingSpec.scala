@@ -3302,8 +3302,9 @@ class StreamingSpec extends SparkSpec {
       linksOf(e1.toSeq.toDF("src_host", "text")),
       "src_host", "host", "__w1", s"$dir/ix", tag = "edges-9",
       compactThreshold = 2), "fresh tag must apply")
-    val (_, layersC, runsC, tagsC) = graft.api.IndexMaintenance
-      .readIndexMetaRunsTags(spark, s"$dir/ix", "test")
+    val metaC = graft.api.IndexMaintenance.readMeta(spark, s"$dir/ix",
+      PageRank.WeightedEdgeIndex, "test")
+    val (layersC, runsC, tagsC) = (metaC.layers, metaC.runs, metaC.tags)
     assert(layersC == 1 && runsC.size == 1, "threshold-2 fold must compact")
     assert(tagsC.toSet == Set("edges-0", "edges-1", "edges-9"),
       "compaction dropped the tag manifest — replays would re-apply")
