@@ -2,25 +2,21 @@ package graft
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps executed (AQE-final) formatted plans for the flagship queries —
-  * the `.explain("formatted")` audit artifact (PLANS.md).
+/** Dumps executed (AQE-final) `.explain("formatted")` plans of catalog
+  * queries — the audit artifact of PLANS.md and the before/after plan
+  * evidence of optimization rounds (plans/r16/<query>_<tag>.txt).
+  *
+  * {{{
+  * sbt "runMain graft.PlanDump [outFile]"        # flagship list, one file
+  * sbt "runMain graft.PlanDump <outDir> <tag> <q1,q2,...> [sfDir]"
+  *                                               # named, one file each
+  * }}}
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("/tmp/plans.txt")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchHarness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     val names = Seq("q01_pricing_summary", "q02_hot_items_topn",
@@ -49,16 +45,33 @@ object PlanDump {
       "q107_cdc_incremental_dedup", "q108_bm25_retrieval",
       "q110_fold_minhash_probe", "q111_fold_cdc_probe", "q113_fold_sign_probe",
       "q112_hybrid_retrieval", "q151_line_dedup", "q152_host_centrality")
-    val pw = new PrintWriter(out)
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sf)
+    def plan(n: String, sfDir: String): String = {
+      val df = SparkEntry.queries(n)(spark, sfDir)
       df.collect() // finalize AQE in place
-      pw.println(s"===== $n =====")
-      pw.println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-      pw.println()
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     }
-    pw.close()
-    println(s"WROTE $out")
+    if (args.length >= 3) {
+      val Array(outDir, tag, list) = args.take(3)
+      val sfDir = args.lift(3).getOrElse(sf)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+      list.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
+        val path = s"$outDir/${n}_$tag.txt"
+        val pw = new PrintWriter(path)
+        pw.println(plan(n, sfDir))
+        pw.close()
+        println(s"dumped $n -> $path")
+      }
+    } else {
+      val out = args.headOption.getOrElse("/tmp/plans.txt")
+      val pw = new PrintWriter(out)
+      names.foreach { n =>
+        pw.println(s"===== $n =====")
+        pw.println(plan(n, sf))
+        pw.println()
+      }
+      pw.close()
+      println(s"WROTE $out")
+    }
     spark.stop()
   }
 }

@@ -48,10 +48,10 @@ object Bm25Gate {
   def topKGate(queries: DataFrame, qidCol: String, textCol: String,
       tsCol: String, delay: String, window: String,
       corpus: DataFrame, corpusIdCol: String, corpusTextCol: String,
-      k: Int = 10, declareWatermark: Boolean = true): DataFrame =
+      k: Int = 10): DataFrame =
     gateCore(queries, qidCol, textCol, tsCol, delay, window,
       TextOps.bm25ContribIndex(corpus, corpusIdCol, corpusTextCol),
-      corpusIdCol, k, declareWatermark)
+      corpusIdCol, k)
 
   /** [[topKGate]] fed from a PERSISTED [[TextOps.writeBm25Index]]
     * instead of building the contribution index in-process — the
@@ -66,8 +66,7 @@ object Bm25Gate {
     */
   def topKGateAgainstIndex(queries: DataFrame, qidCol: String,
       textCol: String, tsCol: String, delay: String, window: String,
-      indexPath: String, idCol: String, k: Int = 10,
-      declareWatermark: Boolean = true): DataFrame = {
+      indexPath: String, idCol: String, k: Int = 10): DataFrame = {
     val s = queries.sparkSession
     // layered index (in-place TextOps.foldIntoBm25Index appends): the
     // baked contrib/ is stale, so the static side derives
@@ -81,7 +80,7 @@ object Bm25Gate {
           "Bm25Gate"), "contrib", "Bm25Gate")
       .select(col("_t"), col(idCol), col("_c"))
     gateCore(queries, qidCol, textCol, tsCol, delay, window,
-      idx, idCol, k, declareWatermark)
+      idx, idCol, k)
   }
 
   /** The one ranking graph behind both index sources: stream-static
@@ -91,14 +90,11 @@ object Bm25Gate {
     */
   private def gateCore(queries: DataFrame, qidCol: String,
       textCol: String, tsCol: String, delay: String, window: String,
-      idx: DataFrame, corpusIdCol: String, k: Int,
-      declareWatermark: Boolean): DataFrame = {
+      idx: DataFrame, corpusIdCol: String, k: Int): DataFrame = {
     require(k >= 1, s"Bm25Gate: k must be >= 1, got $k")
     graft.functions.SketchAggregates.register(queries.sparkSession)
-    val src =
-      if (declareWatermark) queries.withWatermark(tsCol, delay) else queries
-    val qTerms = TextOps.bm25QueryTerms(src, qidCol, textCol,
-      extraCols = Seq(tsCol))
+    val qTerms = TextOps.bm25QueryTerms(Watermark.on(queries, tsCol, delay),
+      qidCol, textCol, extraCols = Seq(tsCol))
     qTerms.join(idx, Seq("_t"))
       .filter(col("_qid") =!= col(corpusIdCol))
       .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window),

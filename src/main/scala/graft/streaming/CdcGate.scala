@@ -58,8 +58,8 @@ import graft.api.DedupOps
 object CdcGate {
 
   def hitsGate(docs: DataFrame, idCol: String, textCol: String,
-      tsCol: String, delay: String, window: String, indexPath: String,
-      declareWatermark: Boolean = true): DataFrame = {
+      tsCol: String, delay: String, window: String,
+      indexPath: String): DataFrame = {
     val s = docs.sparkSession
     val m = graft.api.IndexMaintenance.readMeta(s, indexPath,
       DedupOps.CdcIndex, "CdcGate.hitsGate")
@@ -68,7 +68,7 @@ object CdcGate {
         DedupOps.CdcIndex, m, "chunks", "CdcGate.hitsGate", reconciled = false)
       .select(col("c").as("_c"), lit(1L).as("_hit"))
 
-    val src = if (declareWatermark) docs.withWatermark(tsCol, delay) else docs
+    val src = Watermark.on(docs, tsCol, delay)
     // the SAME chunking front end as the batch probe (null contract
     // and kernel geometry live in one place — stream/batch parity by
     // construction, not by parallel maintenance)

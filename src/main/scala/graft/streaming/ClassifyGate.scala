@@ -41,13 +41,12 @@ import graft.api.ClassifyOps
 object ClassifyGate {
 
   def nbGate(docs: DataFrame, idCol: String, textCol: String,
-      tsCol: String, delay: String, window: String, model: DataFrame,
-      declareWatermark: Boolean = true): DataFrame = {
+      tsCol: String, delay: String, window: String,
+      model: DataFrame): DataFrame = {
     val st = ClassifyOps.nbStats(model)
     val pivoted = ClassifyOps.nbPivoted(model, st)
 
-    val src = if (declareWatermark) docs.withWatermark(tsCol, delay) else docs
-    val toks = src.select(col(idCol), col(tsCol),
+    val toks = Watermark.on(docs, tsCol, delay).select(col(idCol), col(tsCol),
         split(col(textCol), " ", -1).as("_toks"))
       .withColumn("_m", coalesce(size(col("_toks")), lit(-1)))
 

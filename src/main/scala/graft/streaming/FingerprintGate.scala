@@ -134,40 +134,17 @@ object FingerprintGate {
     * hammingMax, append mode: band map-only → stream-static join on
     * (band, bkey) → candidate explode → within-watermark pair dedup →
     * exact bit_count(xor) verify against the static fingerprints.
-    *
-    * `declareWatermark = false` is for callers whose stream already
-    * carries an UPSTREAM watermark (e.g. the gate composes after a
-    * windowed stage); the within-watermark pair dedup still needs
-    * one, so the gate verifies the precondition at graph-author time
-    * and fails BY NAME instead of letting the query die at analysis
-    * with a raw Spark error (the named-error posture of the gate's
-    * column-collision checks).
     */
   def pairs(newFps: DataFrame, idCol: String, fpCol: String,
-      tsCol: String, delay: String, corpus: FpIndex,
-      declareWatermark: Boolean = true): DataFrame = {
+      tsCol: String, delay: String, corpus: FpIndex): DataFrame = {
     val reserved = Set("band", "bkey", "pos", "col", "__cs",
       "doc_new", "doc_old", "sh_a", "sh_old", "hamming")
     Seq(idCol, fpCol, tsCol).foreach(c => require(!reserved.contains(c),
       s"FingerprintGate.pairs: column '$c' collides with a working " +
         s"column (${reserved.mkString(", ")}) — rename it first"))
-    if (!declareWatermark && newFps.isStreaming) {
-      val hasUpstreamWatermark = newFps.queryExecution.analyzed.exists {
-        case _: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => true
-        case _ => false
-      }
-      require(hasUpstreamWatermark,
-        "FingerprintGate.pairs: declareWatermark=false but the input " +
-          "stream declares no watermark — the within-watermark pair " +
-          s"dedup requires one. Either call .withWatermark(\"$tsCol\", " +
-          s"\"$delay\") upstream or pass declareWatermark=true to let " +
-          "the gate declare it")
-    }
     val banded = DedupOps.fingerprintBands(newFps, idCol, fpCol,
       corpus.bits, corpus.hammingMax, carry = Seq(tsCol, fpCol))
-    val probe =
-      if (declareWatermark) banded.withWatermark(tsCol, delay) else banded
-    probe
+    Watermark.on(banded, tsCol, delay)
       .join(corpus.buckets, Seq("band", "bkey"))
       .select(col(idCol).as("doc_new"), col(tsCol),
         col(fpCol).as("sh_a"), explode(col("__cs")).as("doc_old"))

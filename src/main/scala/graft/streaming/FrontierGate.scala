@@ -40,8 +40,7 @@ object FrontierGate {
     * re-schedule the entire crawl history.
     */
   def discoveries(docs: DataFrame, idCol: String, textCol: String,
-      tsCol: String, delay: String, visitedPath: String,
-      declareWatermark: Boolean = true): DataFrame = {
+      tsCol: String, delay: String, visitedPath: String): DataFrame = {
     require(docs.isStreaming,
       "FrontierGate.discoveries: batch frames take the q147 batch " +
         "composition (extractLinks + canonicalUrl + anti-join) directly")
@@ -58,9 +57,8 @@ object FrontierGate {
     require(visited.columns.contains("canonical_url"),
       s"FrontierGate: visited set at $visitedPath has no canonical_url " +
         s"column (found: ${visited.columns.mkString(", ")})")
-    val src =
-      if (declareWatermark) docs.withWatermark(tsCol, delay) else docs
-    TextOps.extractLinks(src, idCol, textCol, extraCols = Seq(tsCol))
+    TextOps.extractLinks(Watermark.on(docs, tsCol, delay), idCol, textCol,
+        extraCols = Seq(tsCol))
       .filter(col("host") =!= "")
       .select(col(idCol), col(tsCol),
         TextOps.canonicalUrl(col("href")).as("canonical_url"))

@@ -109,7 +109,7 @@ object GramGate {
     */
   def spansGate(docs: DataFrame, idCol: String, textCol: String,
       tsCol: String, delay: String, window: String,
-      corpus: GramSet, declareWatermark: Boolean = true): DataFrame = {
+      corpus: GramSet): DataFrame = {
     val reserved = Set("doc_id", "pos", "window", "window_end",
       "n_grams", "n_hit", "n_spans", "covered_tokens",
       "__tk", "__p", "__gh", "_hit", "_h", "_hp", "_agg", "_n")
@@ -123,12 +123,11 @@ object GramGate {
           s"output/working column — rename it first")
     }
     val gramTokens = corpus.gramTokens
-    val src = if (declareWatermark) docs.withWatermark(tsCol, delay)
-      else docs
     // ONE tokenize per row serves both branches; null text splits to
     // null → size null → gram-less branch (never a crash)
-    val pre = src.select(col(idCol).as("doc_id"), col(tsCol),
-      split(col(textCol), " ", -1).as("__tk"))
+    val pre = Watermark.on(docs, tsCol, delay)
+      .select(col(idCol).as("doc_id"), col(tsCol),
+        split(col(textCol), " ", -1).as("__tk"))
     val win = org.apache.spark.sql.functions.window(col(tsCol), window)
 
     val grams = DedupOps.gramPositionsTokens(pre, gramTokens,

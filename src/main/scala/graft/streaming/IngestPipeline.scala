@@ -26,29 +26,31 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   *                                 drop decision for the ingest sink)
   *
   * Spark 4 runs this as one query graph: every stateful operator is in
-  * append mode (multiple fMGWS/dedup states chain under the
-  * multi-stateful-operator support), and the event-time column is
-  * re-watermarked after the quota stage — a fMGWS output is a NEW row
-  * set, so the watermark annotation must be re-declared before the
-  * downstream stateful ops.
+  * append mode (dedup/fMGWS states chain under the
+  * multi-stateful-operator support). StreamingSpec proves the
+  * composition end-to-end against a batch-computed oracle of the same
+  * semantics, including a checkpointed kill-and-restart mid-stream.
   *
-  * Why the quota stage is the `transformWithState` variant and not the
-  * fMGWS one: a fMGWS output carries NO event-time column — Spark both
-  * fails the conservative global-watermark pattern check and, more
-  * fundamentally, leaves downstream `dropDuplicatesWithinWatermark`
-  * with no watermark to run against ("not supported ... without
-  * watermark"). `transformWithState` declares `ts` as its OUTPUT
-  * event-time column, so the source watermark propagates through the
-  * quota stage and the downstream dedup states chain legally — this
-  * composition is precisely what the tws migration buys. Spark
-  * validates at runtime that emitted rows are not behind the
-  * watermark (UpdateEventTimeWatermarkColumn); the quota satisfies it
-  * by construction (it emits only current-batch rows). Inherited
-  * requirement: the RocksDB state store provider (tws rejects the
-  * default store) — the production-store choice anyway.
-  * StreamingSpec proves the composition end-to-end against a
-  * batch-computed oracle of the same semantics, including a
-  * checkpointed kill-and-restart mid-stream.
+  * STATEFUL-OPERATOR POLICY of the streaming layer (stated once, here):
+  *  - `flatMapGroupsWithState` is the implementation of every stateful
+  *    contract (SequenceMatch, OrderTimeoutMatcher, TxReconcile,
+  *    QuotaCap, Cep); it runs on the default and the RocksDB state
+  *    store alike.
+  *  - `transformWithState` is used only where a downstream stateful
+  *    operator needs the operator's output event-time column — the
+  *    horizon quota in front of this pipeline's dedup states
+  *    ([[QuotaCap.firstNPerKeyWithinHorizonTws]]). A fMGWS output
+  *    carries no event-time column, so a downstream
+  *    `dropDuplicatesWithinWatermark` would have no watermark to run
+  *    against; tws declares `ts` as its output event time, so the
+  *    source watermark propagates (Spark checks at runtime that emitted
+  *    rows are not behind it, which holds: the quota emits only
+  *    current-batch rows). It needs the RocksDB state store.
+  *  - Watermarks: an upstream watermark on `tsCol` is inherited, and a
+  *    gate's `delay` then serves only its own horizon; without one the
+  *    gate declares `withWatermark(tsCol, delay)` itself
+  *    ([[Watermark.on]] — Spark rejects a re-declaration after a
+  *    stateful operator, and a within-watermark dedup needs one).
   *
   * Scale notes: state is one counter per ACTIVE source (quota), one
   * 16-byte digest per in-watermark doc (exact dedup), one pair key per
@@ -93,8 +95,7 @@ object IngestPipeline {
     NearDupIngest.pairs(
       exact.select(col("docId").as("doc_id"), col("payload").as("text"),
         col("ts")),
-      "doc_id", "text", "ts", delay, corpus, jaccardX1000Threshold,
-      declareWatermark = false)
+      "doc_id", "text", "ts", delay, corpus, jaccardX1000Threshold)
   }
 
   /** The FULL curation stack as ONE streaming query — every scoring

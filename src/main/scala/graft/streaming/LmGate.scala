@@ -36,8 +36,7 @@ object LmGate {
 
   def score(docs: DataFrame, idCol: String, textCol: String,
       tsCol: String, delay: String, window: String, model: DataFrame,
-      keepAvgQx1000: Long = -9000L,
-      declareWatermark: Boolean = true): DataFrame = {
+      keepAvgQx1000: Long = -9000L): DataFrame = {
     graft.functions.TextHashExpressions.register(docs.sparkSession)
     // V is a property of the static model — one driver-side read at
     // build time (the model is vocabulary-sized parquet, this is a
@@ -47,8 +46,7 @@ object LmGate {
       col("c2").as("_c2"))
     val m1 = model.select(col("w1").as("_w1"), col("c1").as("_c1")).distinct()
 
-    val src = if (declareWatermark) docs.withWatermark(tsCol, delay) else docs
-    val toks = src.select(col(idCol), col(tsCol),
+    val toks = Watermark.on(docs, tsCol, delay).select(col(idCol), col(tsCol),
         split(col(textCol), " ", -1).as("_toks"))
       .withColumn("_m", coalesce(size(col("_toks")), lit(-1)))
 

@@ -89,8 +89,7 @@ object NearDupIngest {
     */
   def pairs(newDocs: DataFrame, idCol: String, textCol: String,
       tsCol: String, delay: String, corpus: CorpusIndex,
-      jaccardX1000Threshold: Int = 500,
-      declareWatermark: Boolean = true): DataFrame = {
+      jaccardX1000Threshold: Int = 500): DataFrame = {
     // working/output names of the banding + probe pipeline — a caller
     // column shadowing one would go ambiguous deep in the streaming
     // plan or be silently clobbered; fail fast instead (the
@@ -100,13 +99,9 @@ object NearDupIngest {
     Seq(idCol, tsCol).foreach(c => require(!reserved.contains(c),
       s"NearDupIngest.pairs: column '$c' collides with a working " +
         s"column (${reserved.mkString(", ")}) — rename it first"))
-    // declareWatermark = false: the composed-graph case (one watermark
-    // declaration per chain; see QuotaCap.firstNPerKeyWithinHorizon)
     val banded = DedupOps.withBandKeys(
       DedupOps.shingleHashed(newDocs, idCol, textCol, carry = Seq(tsCol)))
-    val probe =
-      if (declareWatermark) banded.withWatermark(tsCol, delay) else banded
-    probe
+    Watermark.on(banded, tsCol, delay)
       .join(corpus.buckets, Seq("band", "bkey"))
       .select(col(idCol).as("doc_new"), col(tsCol), col("hs").as("hs_new"),
         explode(col("__cs")).as("doc_old"))

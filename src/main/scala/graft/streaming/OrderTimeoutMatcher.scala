@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode}
 
 /** F3/J4: order-payment timeout detection — the reference's
   * `OrderPayMatch` KeyedProcessFunction with event-time timers
@@ -49,80 +48,21 @@ object OrderTimeoutMatcher {
     OrderOutcome(0L, if (p.hasCreate) p.createMs else -1L, msg)
   }
 
-  /** [[detect]] re-expressed on Spark 4's `transformWithState` — the
-    * second (and richest) fMGWS operator migrated after the QuotaCap
-    * pilot: 4 outcomes, an event-time timer per in-flight key, and
-    * match-and-clear resolution. Same contract as [[detect]];
-    * StreamingSpec asserts outcome parity against the batch q09
-    * catalog query under the RocksDB store (which `transformWithState`
-    * requires — the fMGWS path stays the default-store default).
-    *
-    * Timer discipline (vs fMGWS's single implicit timeout slot): the
-    * armed deadline is always derivable from state (`base(p) +
-    * timeoutMs`), so a re-arm deletes the previously-armed timer
-    * first, and the expiry handler re-checks against the CURRENT
-    * deadline before resolving — an undeleted stale timer can never
-    * time out a key whose deadline moved.
-    */
-  def detectTws(events: Dataset[StreamEvent], timeoutMs: Long)
-      : Dataset[OrderOutcome] = {
-    events
-      .groupByKey(_.userId)
-      .transformWithState(new TimeoutProcessor(timeoutMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+  private val NoOrder = Pending(-1L, false, -1L, false)
 
-  /** Unresolved deadline base: create if seen, else the lone pay. */
-  private def base(p: Pending): Long = if (p.hasCreate) p.createMs else p.payMs
-
-  /** [[detectTws]]'s state machine: Pending in a named ValueState +
-    * one real event-time timer at base + timeout.
-    */
-  private class TimeoutProcessor(timeoutMs: Long)
-      extends StatefulProcessor[Long, StreamEvent, OrderOutcome] {
-    @transient private var st: ValueState[Pending] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Pending]("pending", pendingEnc, TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[StreamEvent],
-        timerValues: TimerValues): Iterator[OrderOutcome] = {
-      val prev = if (st.exists()) Some(st.get()) else None
-      var p = prev.getOrElse(Pending(-1L, false, -1L, false))
-      rows.toSeq.sortBy(e => (e.tsMs, e.eventId)).foreach { e =>
-        if (e.eventType == "create" && (!p.hasCreate || e.tsMs < p.createMs))
-          p = p.copy(createMs = e.tsMs, hasCreate = true)
-        if (e.eventType == "pay" && (!p.hasPay || e.tsMs < p.payMs))
-          p = p.copy(payMs = e.tsMs, hasPay = true)
-      }
-      // the deadline armed by the previous batch, if any — recomputed
-      // from prior state, so no extra timer bookkeeping state
-      prev.foreach { q =>
-        if (base(q) != base(p)) getHandle.deleteTimer(base(q) + timeoutMs)
-      }
-      if (p.hasCreate && p.hasPay) {
-        if (prev.exists(q => base(q) == base(p)))
-          getHandle.deleteTimer(base(p) + timeoutMs)
-        st.clear()
-        Iterator.single(resolve(p, timeoutMs).copy(userId = userId))
-      } else {
-        st.update(p)
-        getHandle.registerTimer(base(p) + timeoutMs)
-        Iterator.empty
-      }
+  /** `p` with the earliest create and the earliest pay of `events`. */
+  private def absorb(p: Pending, events: Seq[StreamEvent]): Pending =
+    events.foldLeft(p) { (q, e) =>
+      if (e.eventType == "create" && (!q.hasCreate || e.tsMs < q.createMs))
+        q.copy(createMs = e.tsMs, hasCreate = true)
+      else if (e.eventType == "pay" && (!q.hasPay || e.tsMs < q.payMs))
+        q.copy(payMs = e.tsMs, hasPay = true)
+      else q
     }
 
-    override def handleExpiredTimer(userId: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[OrderOutcome] = {
-      // staleness guard: resolve only at the CURRENT deadline
-      if (st.exists() &&
-          expiredTimerInfo.getExpiryTimeInMs() >= base(st.get()) + timeoutMs) {
-        val out = resolve(st.get(), timeoutMs).copy(userId = userId)
-        st.clear()
-        Iterator.single(out)
-      } else Iterator.empty
-    }
-  }
+  /** Timer at create+timeout (ref :55); lone pays flush at +timeout too. */
+  private def deadline(p: Pending, timeoutMs: Long): Long =
+    (if (p.hasCreate) p.createMs else p.payMs) + timeoutMs
 
   private def machine(timeoutMs: Long)(userId: Long,
       events: Iterator[StreamEvent], state: GroupState[Pending])
@@ -132,23 +72,28 @@ object OrderTimeoutMatcher {
       state.remove()
       return out.iterator
     }
-    var p = state.getOption.getOrElse(Pending(-1L, false, -1L, false))
-    events.toSeq.sortBy(e => (e.tsMs, e.eventId)).foreach { e =>
-      if (e.eventType == "create" && (!p.hasCreate || e.tsMs < p.createMs))
-        p = p.copy(createMs = e.tsMs, hasCreate = true)
-      if (e.eventType == "pay" && (!p.hasPay || e.tsMs < p.payMs))
-        p = p.copy(payMs = e.tsMs, hasPay = true)
-    }
-    if (p.hasCreate && p.hasPay) {
+    val held = state.getOption
+    val batch = events.toSeq
+    val p = absorb(held.getOrElse(NoOrder), batch)
+    // The watermark passed the held order's deadline before its timeout
+    // batch ran (a data batch came first, and Spark rejects a timeout
+    // behind the watermark): emit that timeout now; this batch's events,
+    // all ahead of the watermark, open the next order — what the
+    // timeout batch would have left.
+    lazy val expired =
+      held.filter(deadline(_, timeoutMs) < state.getCurrentWatermarkMs())
+    val (emit, next) =
       // Resolved: emit now, clear state (ref :58-69 match-and-clear).
-      state.remove()
-      Iterator.single(resolve(p, timeoutMs).copy(userId = userId))
-    } else {
-      state.update(p)
-      // Timer at create+timeout (ref :55); lone pays flush at +timeout too.
-      val base = if (p.hasCreate) p.createMs else p.payMs
-      state.setTimeoutTimestamp(base + timeoutMs)
-      Iterator.empty
+      if (p.hasCreate && p.hasPay) (Some(p), None)
+      else if (expired.isDefined)
+        (expired, Some(absorb(NoOrder, batch)).filter(q => q.hasCreate || q.hasPay))
+      else (None, Some(p))
+    next match {
+      case Some(q) =>
+        state.update(q)
+        state.setTimeoutTimestamp(deadline(q, timeoutMs))
+      case None => state.remove()
     }
+    emit.map(o => resolve(o, timeoutMs).copy(userId = userId)).iterator
   }
 }

@@ -87,56 +87,6 @@ object QuotaCap {
     }
   }
 
-  /** [[firstNPerKey]] re-expressed on Spark 4's `transformWithState`
-    * (the arbitrary-stateful successor to `flatMapGroupsWithState`:
-    * named state variables, richer timers, TTL) — the PILOT migration
-    * that de-risks the streaming layer against fMGWS stagnation. Same
-    * contract, same bounded admission; StreamingSpec asserts output
-    * parity against [[firstNPerKey]] on identical input.
-    *
-    * Operational delta: `transformWithState` REQUIRES the RocksDB
-    * state store provider (Spark rejects the default HDFS-backed store
-    * at query start), so the fMGWS path remains the default-store
-    * implementation and this one is opt-in. State layout here is a
-    * named ValueState[Long] counter per key; the richer surface (real
-    * timers, output event-time declaration) is what
-    * [[firstNPerKeyWithinHorizonTws]] builds on — and the output
-    * event-time column is the capability that makes the COMPOSED
-    * ingest graph (streaming.IngestPipeline) possible at all.
-    */
-  def firstNPerKeyTws(docs: Dataset[KeyedDoc], cap: Int): Dataset[KeyedDoc] = {
-    require(cap > 0, s"firstNPerKeyTws: cap must be positive, got $cap")
-    docs.groupByKey(_.key)
-      .transformWithState(new QuotaProcessor(cap), TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  /** The [[firstNPerKeyTws]] state machine: admitted-count ValueState +
-    * the shared bounded [[takeFirstK]] admission. No timers
-    * (TimeMode.None — the unbounded-quota contract); TTLConfig.NONE
-    * keeps counters for the stream's lifetime, exactly like
-    * [[firstNPerKey]]'s NoTimeout.
-    */
-  private class QuotaProcessor(cap: Int)
-      extends StatefulProcessor[String, KeyedDoc, KeyedDoc] {
-    @transient private var count: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      count = getHandle.getValueState[Long]("count", Encoders.scalaLong,
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[KeyedDoc],
-        timerValues: TimerValues): Iterator[KeyedDoc] = {
-      val n = if (count.exists()) count.get() else 0L
-      if (n >= cap) Iterator.empty
-      else {
-        val admitted = takeFirstK(rows, (cap - n).toInt)._1
-        count.update(n + admitted.length)
-        admitted.iterator
-      }
-    }
-  }
-
   // ---- token-budget admission (the q142 mixture, streaming) -----------
 
   /** Whitespace token count of a payload — the SAME unit as the batch
@@ -209,41 +159,6 @@ object QuotaCap {
     }
   }
 
-  /** [[tokenBudgetPerKey]] on `transformWithState` (the
-    * [[firstNPerKeyTws]] migration applied to the token quota): same
-    * contract, named ValueState[Long] token counter, RocksDB-only as
-    * the engine requires. StreamingSpec asserts output parity against
-    * the fMGWS variant on identical input.
-    */
-  def tokenBudgetPerKeyTws(docs: Dataset[KeyedDoc],
-      budget: Long): Dataset[KeyedDoc] = {
-    require(budget > 0,
-      s"tokenBudgetPerKeyTws: budget must be positive, got $budget")
-    docs.groupByKey(_.key)
-      .transformWithState(new TokenBudgetProcessor(budget), TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  private class TokenBudgetProcessor(budget: Long)
-      extends StatefulProcessor[String, KeyedDoc, KeyedDoc] {
-    @transient private var used: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      used = getHandle.getValueState[Long]("tokens", Encoders.scalaLong,
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[KeyedDoc],
-        timerValues: TimerValues): Iterator[KeyedDoc] = {
-      val u = if (used.exists()) used.get() else 0L
-      if (u >= budget) Iterator.empty
-      else {
-        val (admitted, tokens) = takeToBudget(rows, budget - u)
-        used.update(u + tokens)
-        admitted.iterator
-      }
-    }
-  }
-
   /** Horizon-quota state: admitted count + latest activity seen, so
     * the purge timer is MONOTONE (an out-of-order batch must never
     * move it backward). Public: Catalyst codegen instantiates it.
@@ -264,29 +179,19 @@ object QuotaCap {
     * here (the unbounded variant, which declares no watermark, admits
     * it) — the usual bounded-state trade, same as
     * `dropDuplicatesWithinWatermark`.
+    *
+    * A watermark already declared upstream on `ts` (e.g.
+    * [[SchedulerGate]], whose FrontierGate stage declares it) is
+    * inherited, and `delay` then only arms the purge timer. Purge
+    * safety is monotone in the watermark delay: a tighter upstream
+    * delay only makes the watermark pass a retired key's horizon
+    * sooner, and rows behind the watermark never reach the state
+    * function, so a purged key cannot be re-admitted.
     */
   def firstNPerKeyWithinHorizon(docs: Dataset[KeyedDoc], cap: Int,
-      delay: String): Dataset[KeyedDoc] =
-    firstNPerKeyWithinHorizon(docs, cap, delay, declareWatermark = true)
-
-  /** [[firstNPerKeyWithinHorizon]] with the watermark declaration
-    * under caller control: Spark disallows REDEFINING a watermark, so
-    * a caller whose chain already declared one upstream (e.g.
-    * [[graft.streaming.SchedulerGate]] — FrontierGate declares it on
-    * the event-time column, and the metadata rides the `ts` alias
-    * into [[KeyedDoc]]) passes `declareWatermark = false` and the
-    * stage inherits the upstream watermark; `delay` then serves only
-    * as the purge horizon for the timeout timer. Purge safety is
-    * monotone in the watermark delay: a TIGHTER upstream delay only
-    * makes the watermark pass a retired key's horizon sooner, and the
-    * no-readmission argument (rows behind the watermark are dropped
-    * before the state function) is unchanged.
-    */
-  def firstNPerKeyWithinHorizon(docs: Dataset[KeyedDoc], cap: Int,
-      delay: String, declareWatermark: Boolean): Dataset[KeyedDoc] = {
+      delay: String): Dataset[KeyedDoc] = {
     require(cap > 0, s"firstNPerKeyWithinHorizon: cap must be positive, got $cap")
-    val src = if (declareWatermark) docs.withWatermark("ts", delay) else docs
-    src.groupByKey(_.key)
+    Watermark.on(docs, "ts", delay).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(admitWithTimeout(cap, delay) _)
   }

@@ -27,9 +27,7 @@ import graft.api.TextOps
   *   → per-(host, window) fetch budget
   *                                  ([[QuotaCap.firstNPerKeyWithinHorizon]]
   *                                  on key = host × window start;
-  *                                  fMGWS by default, the
-  *                                  transformWithState twin behind
-  *                                  `useTws`; stateful op #2 and the
+  *                                  stateful op #2 and the
   *                                  LAST stateful op — nothing
   *                                  downstream needs the watermark, so
   *                                  the no-event-time-output limitation
@@ -53,7 +51,7 @@ import graft.api.TextOps
   * fold-while-serving snapshot contract for the rank side, and the
   * quota-state expiry below (state rows for a closed window are GONE
   * once the watermark passes, read back through the state-store
-  * reader, on both state lanes).
+  * reader, under both state stores).
   *
   * QUOTA-STATE LIFECYCLE (bounded, by construction): the budget
   * counter is keyed by host × window-start, so every elapsed
@@ -148,17 +146,13 @@ object SchedulerGate {
   /** docs: a STREAMING frame with (idCol: Long doc ids, textCol,
     * tsCol). `window` is the politeness cycle ("1 hour": at most
     * `budgetPerWindow` fetches per host per hour); `visitedPath` per
-    * [[FrontierGate.discoveries]]. `useTws` selects the
-    * transformWithState quota lane (RocksDB state store required, the
-    * [[QuotaCap.firstNPerKeyWithinHorizonTws]] contract) instead of
-    * the default-store fMGWS lane; both purge a (host, window)
-    * counter once the watermark passes its horizon (see the
+    * [[FrontierGate.discoveries]]. The (host, window) counter is
+    * purged once the watermark passes its horizon (see the
     * quota-state lifecycle note above).
     */
   def schedule(docs: DataFrame, idCol: String, textCol: String,
       tsCol: String, delay: String, window: String, visitedPath: String,
-      state: SchedulerState, budgetPerWindow: Int,
-      useTws: Boolean = false): DataFrame = {
+      state: SchedulerState, budgetPerWindow: Int): DataFrame = {
     require(budgetPerWindow >= 1,
       s"SchedulerGate.schedule: budgetPerWindow must be >= 1, got " +
         s"$budgetPerWindow")
@@ -192,20 +186,10 @@ object SchedulerGate {
         col("canonical_url").as("payload"),
         col(tsCol).as("ts"))
       .as[KeyedDoc]
-    val budgeted =
-      if (useTws)
-        // tws declares `ts` as its output event time and inherits the
-        // upstream watermark (FrontierGate declared `delay` on tsCol);
-        // purge safety needs only watermark > activity + horizon,
-        // which holds a fortiori under the tighter upstream delay
-        QuotaCap.firstNPerKeyWithinHorizonTws(keyed, budgetPerWindow,
-          horizon).toDF()
-      else
-        // declareWatermark = false: FrontierGate already declared it
-        // (redefinition is an analysis error) — the horizon only arms
-        // the purge timer
-        QuotaCap.firstNPerKeyWithinHorizon(keyed, budgetPerWindow,
-          horizon, declareWatermark = false).toDF()
+    // the quota inherits FrontierGate's watermark on tsCol (`ts` is its
+    // alias); the horizon only arms the purge timer
+    val budgeted = QuotaCap.firstNPerKeyWithinHorizon(keyed,
+      budgetPerWindow, horizon).toDF()
     // host = the key minus its trailing "|<window-start>" (hosts come
     // from HostPattern and cannot contain '/' but may contain anything
     // else, so strip by LENGTH of the last segment, not by regex);

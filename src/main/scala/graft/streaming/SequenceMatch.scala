@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
-  ValueState}
+  OutputMode}
 
 /** F1/J3: consecutive-failure detector — the reference's
   * `LoginWarning` KeyedProcessFunction (LoginFail.scala:51-105) and its
@@ -52,54 +51,5 @@ object SequenceMatch {
     }
     last.foreach(state.update)
     out.result().iterator
-  }
-
-  /** [[consecutiveFails]] re-expressed on Spark 4's
-    * `transformWithState` — the third migration twin (after QuotaCap's
-    * pilot and OrderTimeoutMatcher's timer-rich port), covering the
-    * remaining stateful-operator SHAPE in the layer: per-key
-    * last-event memory with batch-internal event-time ordering and no
-    * timers. With this, every fMGWS state machine here (counter,
-    * 4-outcome timer matcher, last-event pair detector) has a
-    * RocksDB-backed tws twin, so a fMGWS deprecation strands nothing.
-    *
-    * Same semantics as [[consecutiveFails]] (StreamingSpec asserts
-    * output parity on identical input); requires the RocksDB state
-    * store provider, like every `transformWithState` operator.
-    */
-  def consecutiveFailsTws(fails: Dataset[StreamEvent], gapMs: Long)
-      : Dataset[FailWarning] = {
-    fails.groupByKey(_.userId)
-      .transformWithState(new LastFailProcessor(gapMs), TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  /** The [[consecutiveFailsTws]] state machine: one named
-    * ValueState[LastFail] per key (TTL-less, matching NoTimeout), the
-    * SAME adjacency/gap logic as [[detect]].
-    */
-  private class LastFailProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, StreamEvent, FailWarning] {
-    @transient private var last: ValueState[LastFail] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[LastFail]("last", lastFailEnc,
-        TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[StreamEvent],
-        timerValues: TimerValues): Iterator[FailWarning] = {
-      val sorted = rows.toSeq.sortBy(e => (e.tsMs, e.eventId))
-      var prev = if (last.exists()) Some(last.get()) else None
-      val out = Seq.newBuilder[FailWarning]
-      sorted.foreach { e =>
-        prev.foreach { lf =>
-          if (e.tsMs - lf.tsMs <= gapMs && e.tsMs >= lf.tsMs)
-            out += FailWarning(userId, lf.eventId, e.eventId, lf.tsMs, e.tsMs)
-        }
-        prev = Some(LastFail(e.eventId, e.tsMs))
-      }
-      prev.foreach(last.update)
-      out.result().iterator
-    }
   }
 }

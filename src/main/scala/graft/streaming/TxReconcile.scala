@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode}
 
 /** J2/F5: dual-stream reconciliation — the reference's `TxPayMatch`
   * CoProcessFunction over connected keyed streams with one ValueState
@@ -35,85 +34,6 @@ object TxReconcile {
       .groupByKey(_.txKey)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(machine(toleranceMs) _)
-  }
-
-  /** [[reconcile]] re-expressed on Spark 4's `transformWithState` —
-    * the LAST fMGWS operator to get its tws twin (QuotaCap,
-    * OrderTimeoutMatcher, SequenceMatch preceded it), and the only
-    * TWO-SIDED one: state carries both stream sides and the timer
-    * deadline moves whenever the pending side changes. Same contract
-    * as [[reconcile]] (StreamingSpec asserts golden-scenario parity
-    * under the RocksDB store, which transformWithState requires).
-    *
-    * Timer discipline (the OrderTimeoutMatcher rule applied two-sided):
-    * the armed deadline is always derivable from state
-    * (`pendingBase(s) + toleranceMs`), so every batch first deletes
-    * the deadline the PREVIOUS state had armed, then arms the current
-    * one; the expiry handler re-checks against the CURRENT deadline,
-    * so a stale timer can never flush a key whose pending side moved.
-    */
-  def reconcileTws(events: Dataset[TxEvent], toleranceMs: Long)
-      : Dataset[TxResult] = {
-    events
-      .groupByKey(_.txKey)
-      .transformWithState(new ReconcileProcessor(toleranceMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  private def emptySide = SideState(-1L, -1L, false, -1L, -1L, false)
-
-  /** Deadline base of a one-sided pending state. */
-  private def pendingBase(s: SideState): Long =
-    if (s.hasPay) s.payMs else s.receiptMs
-
-  private def flushResult(txKey: String, s: SideState): TxResult =
-    if (s.hasPay) TxResult(txKey, "unmatched_pay", s.payId, -1L)
-    else TxResult(txKey, "unmatched_receipt", -1L, s.receiptId)
-
-  private class ReconcileProcessor(toleranceMs: Long)
-      extends StatefulProcessor[String, TxEvent, TxResult] {
-    @transient private var st: ValueState[SideState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SideState]("side", sideEnc, TTLConfig.NONE)
-
-    override def handleInputRows(txKey: String, rows: Iterator[TxEvent],
-        timerValues: TimerValues): Iterator[TxResult] = {
-      val prev = if (st.exists()) Some(st.get()) else None
-      var s = prev.getOrElse(emptySide)
-      val out = Seq.newBuilder[TxResult]
-      rows.toSeq.sortBy(e => (e.tsMs, e.eventId)).foreach { e =>
-        if (e.side == 0)
-          s = s.copy(payId = e.eventId, payMs = e.tsMs, hasPay = true)
-        else
-          s = s.copy(receiptId = e.eventId, receiptMs = e.tsMs,
-            hasReceipt = true)
-        if (s.hasPay && s.hasReceipt) {
-          out += TxResult(txKey, "matched", s.payId, s.receiptId)
-          s = emptySide
-        }
-      }
-      // state is only ever KEPT one-sided, so a previous state always
-      // armed exactly one deadline — delete it before (re-)arming
-      prev.foreach(q => getHandle.deleteTimer(pendingBase(q) + toleranceMs))
-      if (s.hasPay || s.hasReceipt) {
-        st.update(s)
-        getHandle.registerTimer(pendingBase(s) + toleranceMs)
-      } else st.clear()
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(txKey: String,
-        timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo)
-        : Iterator[TxResult] = {
-      // staleness guard: flush only at the CURRENT deadline
-      if (st.exists() && expiredTimerInfo.getExpiryTimeInMs() >=
-          pendingBase(st.get()) + toleranceMs) {
-        val out = flushResult(txKey, st.get())
-        st.clear()
-        Iterator.single(out)
-      } else Iterator.empty
-    }
   }
 
   private def machine(toleranceMs: Long)(txKey: String,

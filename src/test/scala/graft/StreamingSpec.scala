@@ -66,43 +66,8 @@ class StreamingSpec extends SparkSpec {
     assert(want.nonEmpty)
   }
 
-  test("transformWithState SequenceMatch == fMGWS twin == batch q08 " +
-      "(RocksDB) — the last stateful shape's migration twin") {
-    val fails = Tables.events(spark, sf)
-      .filter(col("event_type") === "error")
-      .select(col("user_id"), col("event_id"),
-        expr("ts_ns div 1000000").as("ms"))
-      .collect()
-      .map(r => StreamEvent(r.getLong(0), r.getLong(1), "fail",
-        ts(r.getLong(2))))
-    StateStoreVariants.withRocksDB(spark) {
-      val input = MemoryStream[StreamEvent]
-      val out = SequenceMatch.consecutiveFailsTws(input.toDS(), 3600 * 1000L)
-      val q = out.writeStream.format("memory").queryName("seq_warn_tws")
-        .outputMode("append").start()
-      try {
-        val (a, b) = fails.splitAt(fails.length / 2)
-        input.addData(a.toSeq); q.processAllAvailable()
-        input.addData(b.toSeq); q.processAllAvailable()
-      } finally q.stop()
-    }
-    val got = spark.table("seq_warn_tws").as[FailWarning].collect()
-      .map(w => (w.userId, w.firstEvent, w.lastEvent)).toSet
-    val want = SparkEntry.queries("q08_login_fail_consecutive")(spark, sf)
-      .collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("first_event"),
-        r.getAs[Long]("last_event"))).toSet
-    assert(got == want)
-    assert(want.nonEmpty)
-  }
-
-  /** q09 outcome parity, parameterized by the matcher formulation so
-    * the transformWithState twin reruns it (under RocksDB, which tws
-    * requires; state layout and timer API differ — outcomes must not).
-    */
-  private def assertOrderTimeoutParity(sinkName: String,
-      detect: org.apache.spark.sql.Dataset[StreamEvent] =>
-        org.apache.spark.sql.Dataset[OrderOutcome]): Unit = {
+  /** q09 outcome parity, run under each state store. */
+  private def assertOrderTimeoutParity(sinkName: String): Unit = {
     val evs = Tables.events(spark, sf)
       .filter(col("event_type").isin("signup", "purchase"))
       .select(col("user_id"), col("event_id"), col("event_type"),
@@ -121,7 +86,8 @@ class StreamingSpec extends SparkSpec {
     // enter the matcher's state machine (arms a timer, leaves pending
     // state); whatever outcome it may emit is excluded from the
     // assertion by the userId >= 0 filter below.
-    val out = detect(input.toDS().withWatermark("ts", "0 seconds"))
+    val out = OrderTimeoutMatcher.detect(
+      input.toDS().withWatermark("ts", "0 seconds"), 1800 * 1000L)
     val q = out.writeStream.format("memory").queryName(sinkName)
       .outputMode("append").start()
     try {
@@ -141,59 +107,106 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("OrderTimeoutMatcher streaming == batch q09 outcomes") {
-    assertOrderTimeoutParity("order_out",
-      OrderTimeoutMatcher.detect(_, 1800 * 1000L))
+    assertOrderTimeoutParity("order_out")
   }
 
-  test("OrderTimeoutMatcher transformWithState twin == batch q09 " +
-    "outcomes under RocksDB") {
+  test("OrderTimeoutMatcher under RocksDB == batch q09 outcomes") {
     StateStoreVariants.withRocksDB(spark) {
-      assertOrderTimeoutParity("order_out_tws",
-        OrderTimeoutMatcher.detectTws(_, 1800 * 1000L))
+      assertOrderTimeoutParity("order_out_rocks")
     }
   }
 
-  test("OrderTimeoutMatcher tws: cross-batch resolution + stale-timer " +
-    "guard golden scenarios") {
+  private def assertOrderTimeoutGolden(sinkName: String): Unit = {
+    val input = MemoryStream[StreamEvent]
+    // 1-minute watermark delay: batch 2 delivers events with EARLIER
+    // times than batch 1's max (the cross-batch out-of-order cases);
+    // a 0s delay would drop them as late before the matcher runs.
+    // Sentinels flow through unfiltered (see assertOrderTimeoutParity)
+    // and are excluded from the assertion by key.
+    val out = OrderTimeoutMatcher.detect(
+      input.toDS().withWatermark("ts", "1 minute"), 10000L)
+    val q = out.writeStream.format("memory").queryName(sinkName)
+      .outputMode("append").start()
+    try {
+      // u1: create then (next batch) pay in time — the armed
+      //     deadline must not fire later
+      // u2: create, never pays — times out at create + 10s
+      // u3: lone pay — "no create log" flushes at pay + 10s
+      // u4: pay first batch, create second (out of order across
+      //     batches, resolves against the EARLIER create)
+      input.addData(
+        StreamEvent(1L, 10L, "create", ts(1000L)),
+        StreamEvent(2L, 20L, "create", ts(2000L)),
+        StreamEvent(3L, 30L, "pay", ts(3000L)),
+        StreamEvent(4L, 40L, "pay", ts(8000L)))
+      q.processAllAvailable()
+      input.addData(
+        StreamEvent(1L, 11L, "pay", ts(5000L)),
+        StreamEvent(4L, 41L, "create", ts(4000L)))
+      q.processAllAvailable()
+      flush(input, q, 10 * 60 * 1000L)
+    } finally q.stop()
+    val got = spark.table(sinkName).as[OrderOutcome].collect()
+      .filter(_.userId >= 0)
+      .map(o => (o.userId, o.createTsMs, o.resultMsg)).toSet
+    assert(got == Set(
+      (1L, 1000L, "payed successfully"),
+      (2L, 2000L, "order timeout"),
+      (3L, -1L, "payed but no create log"),
+      (4L, 4000L, "payed successfully")))
+  }
+
+  test("OrderTimeoutMatcher: cross-batch golden scenarios, both state stores") {
+    assertOrderTimeoutGolden("order_golden")
     StateStoreVariants.withRocksDB(spark) {
+      assertOrderTimeoutGolden("order_golden_rocks")
+    }
+  }
+
+  /** Batch 3 reaches u1 after its deadline (1000 + 10s) fell behind
+    * the watermark (100000). With no-data batches off — continuous
+    * arrival, where a data batch beats the no-data batch that would
+    * fire the timeout — u1's data batch meets the passed deadline.
+    */
+  private def lateRearmOutcomes(noDataBatches: Boolean): Set[(Long, Long, String)] = {
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(noData)
+    spark.conf.set(noData, noDataBatches.toString)
+    try {
       val input = MemoryStream[StreamEvent]
-      // 1-minute watermark delay: batch 2 delivers events with EARLIER
-      // times than batch 1's max (the cross-batch out-of-order cases);
-      // a 0s delay would drop them as late before the processor runs.
-      // Sentinels flow through unfiltered (see assertOrderTimeoutParity)
-      // and are excluded from the assertion by key.
-      val out = OrderTimeoutMatcher.detectTws(
-        input.toDS().withWatermark("ts", "1 minute"), 10000L)
-      val q = out.writeStream.format("memory").queryName("order_tws_golden")
+      val out = OrderTimeoutMatcher.detect(
+        input.toDS().withWatermark("ts", "0 seconds"), 10000L)
+      val sink = s"order_late_rearm_$noDataBatches"
+      val q = out.writeStream.format("memory").queryName(sink)
         .outputMode("append").start()
       try {
-        // u1: create then (next batch) pay in time — the deadline timer
-        //     must be deleted, not fire later
-        // u2: create, never pays — times out at create + 10s
-        // u3: lone pay — "no create log" flushes at pay + 10s
-        // u4: pay first batch, create second (out of order across
-        //     batches, re-arms the timer to the EARLIER create base)
-        input.addData(
-          StreamEvent(1L, 10L, "create", ts(1000L)),
-          StreamEvent(2L, 20L, "create", ts(2000L)),
-          StreamEvent(3L, 30L, "pay", ts(3000L)),
-          StreamEvent(4L, 40L, "pay", ts(8000L)))
+        input.addData(StreamEvent(1L, 10L, "create", ts(1000L)),
+          StreamEvent(2L, 20L, "create", ts(1000L)))
         q.processAllAvailable()
-        input.addData(
-          StreamEvent(1L, 11L, "pay", ts(5000L)),
-          StreamEvent(4L, 41L, "create", ts(4000L)))
+        input.addData(StreamEvent(3L, 30L, "create", ts(100000L)))
+        q.processAllAvailable()
+        input.addData(StreamEvent(1L, 11L, "create", ts(200000L)))
         q.processAllAvailable()
         flush(input, q, 10 * 60 * 1000L)
+        assert(q.isActive && q.exception.isEmpty, s"query died: ${q.exception}")
       } finally q.stop()
-      val got = spark.table("order_tws_golden").as[OrderOutcome].collect()
-        .filter(_.userId >= 0)
+      spark.table(sink).as[OrderOutcome].collect().filter(_.userId >= 0)
         .map(o => (o.userId, o.createTsMs, o.resultMsg)).toSet
-      assert(got == Set(
-        (1L, 1000L, "payed successfully"),
-        (2L, 2000L, "order timeout"),
-        (3L, -1L, "payed but no create log"),
-        (4L, 4000L, "payed successfully")))
+    } finally prev match {
+      case Some(v) => spark.conf.set(noData, v)
+      case None => spark.conf.unset(noData)
     }
+  }
+
+  test("OrderTimeoutMatcher: a deadline passed before its timeout batch " +
+      "times out") {
+    // the query keeps running, u1's first order times out, and its
+    // second create opens the next order — exactly what the run with
+    // no-data batches (timeout fired first) emits
+    val want = Set((1L, 1000L, "order timeout"), (2L, 1000L, "order timeout"),
+      (3L, 100000L, "order timeout"), (1L, 200000L, "order timeout"))
+    assert(lateRearmOutcomes(noDataBatches = false) == want)
+    assert(lateRearmOutcomes(noDataBatches = true) == want)
   }
 
   test("TxReconcile: golden scenarios (match both orders, lone sides, overwrite)") {
@@ -223,46 +236,50 @@ class StreamingSpec extends SparkSpec {
     assert(got.contains(("t4", "unmatched_receipt", -1L, 40L)))
   }
 
-  test("TxReconcile tws twin: golden parity + cross-batch re-match under RocksDB") {
-    // the last fMGWS operator to get its transformWithState port, and
-    // the only two-sided one — the fMGWS golden scenarios verbatim,
-    // plus cross-batch cases the timer discipline must survive: a key
-    // matching AFTER its lone side armed a deadline (timer deleted,
-    // not fired) and a key whose pending side re-arms to a new base.
+  /** The golden scenarios plus cross-batch cases: a key matching
+    * AFTER its lone side armed a deadline (the deadline must not fire)
+    * and keys whose lone side flushes at its deadline.
+    */
+  private def assertTxCrossBatch(sinkName: String): Unit = {
+    val input = MemoryStream[TxEvent]
+    // 1-minute delay so batch-2 events older than batch-1's max are
+    // not dropped late (the cross-batch out-of-order cases)
+    val out = TxReconcile.reconcile(
+      input.toDS().withWatermark("ts", "1 minute"), 5000L)
+    val q = out.writeStream.format("memory").queryName(sinkName)
+      .outputMode("append").start()
+    try {
+      input.addData(
+        TxEvent("t1", 0, 10L, ts(1000)), TxEvent("t1", 1, 11L, ts(2000)),
+        TxEvent("t2", 1, 20L, ts(1000)), TxEvent("t2", 0, 21L, ts(2000)),
+        TxEvent("t3", 0, 30L, ts(1000)),  // lone pay, flushes
+        TxEvent("t4", 1, 40L, ts(1000)),  // lone receipt, flushes
+        TxEvent("t5", 0, 50L, ts(3000)))  // pay now, receipt next batch
+      q.processAllAvailable()
+      input.addData(
+        TxEvent("t5", 1, 51L, ts(4000)))  // cross-batch match: t5's
+      q.processAllAvailable()             // armed deadline must die
+      input.addData(TxEvent("flush", 0, -1L, ts(10 * 60 * 1000L)))
+      q.processAllAvailable()
+      input.addData(TxEvent("flush2", 1, -2L, ts(20 * 60 * 1000L)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table(sinkName).as[TxResult].collect()
+      .filter(r => r.txKey.startsWith("t"))
+      .map(r => (r.txKey, r.tag, r.payId, r.receiptId)).toSet
+    assert(got == Set(
+      ("t1", "matched", 10L, 11L),
+      ("t2", "matched", 21L, 20L),
+      ("t3", "unmatched_pay", 30L, -1L),
+      ("t4", "unmatched_receipt", -1L, 40L),
+      ("t5", "matched", 50L, 51L)),
+      s"reconcile diverged: $got")
+  }
+
+  test("TxReconcile: cross-batch re-match golden scenarios, both state stores") {
+    assertTxCrossBatch("tx_cross")
     StateStoreVariants.withRocksDB(spark) {
-      val input = MemoryStream[TxEvent]
-      // 1-minute delay so batch-2 events older than batch-1's max are
-      // not dropped late (the cross-batch out-of-order cases)
-      val out = TxReconcile.reconcileTws(
-        input.toDS().withWatermark("ts", "1 minute"), 5000L)
-      val q = out.writeStream.format("memory").queryName("tx_tws_out")
-        .outputMode("append").start()
-      try {
-        input.addData(
-          TxEvent("t1", 0, 10L, ts(1000)), TxEvent("t1", 1, 11L, ts(2000)),
-          TxEvent("t2", 1, 20L, ts(1000)), TxEvent("t2", 0, 21L, ts(2000)),
-          TxEvent("t3", 0, 30L, ts(1000)),  // lone pay, flushes
-          TxEvent("t4", 1, 40L, ts(1000)),  // lone receipt, flushes
-          TxEvent("t5", 0, 50L, ts(3000)))  // pay now, receipt next batch
-        q.processAllAvailable()
-        input.addData(
-          TxEvent("t5", 1, 51L, ts(4000)))  // cross-batch match: t5's
-        q.processAllAvailable()             // armed deadline must die
-        input.addData(TxEvent("flush", 0, -1L, ts(10 * 60 * 1000L)))
-        q.processAllAvailable()
-        input.addData(TxEvent("flush2", 1, -2L, ts(20 * 60 * 1000L)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("tx_tws_out").as[TxResult].collect()
-        .filter(r => r.txKey.startsWith("t"))
-        .map(r => (r.txKey, r.tag, r.payId, r.receiptId)).toSet
-      assert(got == Set(
-        ("t1", "matched", 10L, 11L),
-        ("t2", "matched", 21L, 20L),
-        ("t3", "unmatched_pay", 30L, -1L),
-        ("t4", "unmatched_receipt", -1L, 40L),
-        ("t5", "matched", 50L, 51L)),
-        s"tws reconcile diverged: $got")
+      assertTxCrossBatch("tx_cross_rocks")
     }
   }
 
@@ -1288,8 +1305,7 @@ class StreamingSpec extends SparkSpec {
     } finally idx.unpersist()
   }
 
-  test("FingerprintGate declareWatermark=false: a watermark-less input " +
-      "fails by name at author time; an upstream watermark flows through") {
+  test("FingerprintGate inherits an upstream watermark on its ts column") {
     import spark.implicits._
     val corpusFps = Seq((1L, 0x0FL), (2L, -4096L)).toDF("doc_id", "fp")
     val idx = streaming.FingerprintGate.index(
@@ -1297,19 +1313,16 @@ class StreamingSpec extends SparkSpec {
     try {
       val input = MemoryStream[(Long, Long, Timestamp)]
       val noWm = input.toDF().toDF("doc_id", "fp", "ts")
-      // before the check this died at stream analysis with a raw
-      // Spark watermark error pointing at dropDuplicatesWithinWatermark
-      val e = intercept[IllegalArgumentException](
-        streaming.FingerprintGate.pairs(noWm, "doc_id", "fp", "ts",
-          delay = "1 hour", idx, declareWatermark = false))
-      assert(e.getMessage.contains("declareWatermark") &&
-        e.getMessage.contains("withWatermark"), e.getMessage)
-      // the documented caller shape — an UPSTREAM watermark — authors
-      // and answers: 0x0E is hamming-1 from corpus doc 1
+      // an UPSTREAM watermark authors and answers: 0x0E is hamming-1
+      // from corpus doc 1, and the gate declares no second one
       val base = 1558430000000L
       val out = streaming.FingerprintGate.pairs(
         noWm.withWatermark("ts", "1 hour"), "doc_id", "fp", "ts",
-        delay = "1 hour", idx, declareWatermark = false)
+        delay = "1 hour", idx)
+      val declared = out.queryExecution.analyzed.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w
+      }
+      assert(declared.size == 1, s"watermarks: $declared")
       val q = out.writeStream.format("memory").queryName("fp_gate_upwm")
         .outputMode("append").start()
       try {
@@ -1587,12 +1600,11 @@ class StreamingSpec extends SparkSpec {
     * arrival order — every admitted doc starts under budget, the
     * crossing doc is admitted, exhaustion persists across batches.
     */
-  private def assertTokenBudget(sinkName: String,
-      gate: org.apache.spark.sql.Dataset[KeyedDoc] =>
-        org.apache.spark.sql.Dataset[KeyedDoc]): Unit = {
+  private def assertTokenBudget(sinkName: String): Unit = {
     def p(n: Int) = Seq.fill(n)("w").mkString(" ")
     val input = MemoryStream[KeyedDoc]
-    val q = gate(input.toDS()).writeStream.format("memory")
+    val q = QuotaCap.tokenBudgetPerKey(input.toDS(), budget = 10L)
+      .writeStream.format("memory")
       .queryName(sinkName).outputMode("append").start()
     try {
       // budget 10. batch 1: key a admits 4+4=8 tokens (under);
@@ -1618,17 +1630,12 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming token-budget quota: fill-to-budget across batches, " +
       "crossing doc admitted, exhaustion persists") {
-    assertTokenBudget("tokquota_stream",
-      QuotaCap.tokenBudgetPerKey(_, budget = 10L))
+    assertTokenBudget("tokquota_stream")
   }
 
-  test("token-budget quota under RocksDB, and the transformWithState " +
-      "twin matches the fMGWS variant") {
+  test("token-budget quota holds under the RocksDB state store") {
     StateStoreVariants.withRocksDB(spark) {
-      assertTokenBudget("tokquota_rocks",
-        QuotaCap.tokenBudgetPerKey(_, budget = 10L))
-      assertTokenBudget("tokquota_tws",
-        QuotaCap.tokenBudgetPerKeyTws(_, budget = 10L))
+      assertTokenBudget("tokquota_rocks")
     }
   }
 
@@ -1684,36 +1691,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getAs[Long]("docId")).toSeq.sorted
     // first 3 by (ts, id): (0,1), (0,10000), (200,2)
     assert(got == Seq(1L, 2L, 10000L), s"got $got")
-  }
-
-  test("transformWithState quota == flatMapGroupsWithState quota (pilot migration)") {
-    // the Spark-4 successor API must reproduce firstNPerKey exactly on
-    // the same batched input — admitted set AND cross-batch exhaustion.
-    // transformWithState requires the RocksDB state store provider
-    // (query start rejects the default HDFS-backed store), which is why
-    // the fMGWS path stays the default implementation.
-    StateStoreVariants.withRocksDB(spark) {
-      val input = MemoryStream[KeyedDoc]
-      val out = QuotaCap.firstNPerKeyTws(input.toDS(), cap = 3)
-      val q = out.writeStream.format("memory").queryName("quota_tws")
-        .outputMode("append").start()
-      try {
-        input.addData(
-          KeyedDoc("a", 1L, "p", ts(1000)), KeyedDoc("a", 2L, "p", ts(2000)),
-          KeyedDoc("b", 10L, "p", ts(1000)), KeyedDoc("b", 11L, "p", ts(2000)),
-          KeyedDoc("b", 12L, "p", ts(3000)), KeyedDoc("b", 13L, "p", ts(4000)))
-        q.processAllAvailable()
-        input.addData(
-          KeyedDoc("a", 3L, "p", ts(5000)), KeyedDoc("a", 4L, "p", ts(6000)),
-          KeyedDoc("b", 14L, "p", ts(5000)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("quota_tws").collect()
-        .map(r => (r.getAs[String]("key"), r.getAs[Long]("docId"))).toSet
-      // identical to assertQuotaCap's expectation — the fMGWS contract
-      assert(got == Set(("a", 1L), ("a", 2L), ("a", 3L),
-        ("b", 10L), ("b", 11L), ("b", 12L)), s"got $got")
-    }
   }
 
   private def assertHorizonQuota(sinkName: String): Unit = {
@@ -2983,17 +2960,13 @@ class StreamingSpec extends SparkSpec {
     * reader across the checkpoint's operators. The scheduler's quota
     * keys are `host|windowStartSec`, so callers filter on the `|`
     * shape; the dedup operator's canonical-URL keys (also one string)
-    * never collide with it. Under the tws lane the quota state lives
-    * in the named variable `quota`; operators/variants that don't
-    * match are skipped.
+    * never collide with it. Operators that don't match are skipped.
     */
-  private def quotaStateKeys(ckpt: String, useTws: Boolean): Seq[String] =
+  private def quotaStateKeys(ckpt: String): Seq[String] =
     (0 to 3).flatMap { op =>
       try {
-        val rd = spark.read.format("statestore")
-          .option("operatorId", op)
-        val df = (if (useTws) rd.option("stateVarName", "quota") else rd)
-          .load(ckpt)
+        val df = spark.read.format("statestore")
+          .option("operatorId", op).load(ckpt)
         val keyFields = df.select(col("key.*")).schema.fields
         if (keyFields.length == 1 &&
             keyFields(0).dataType == org.apache.spark.sql.types.StringType)
@@ -3002,8 +2975,7 @@ class StreamingSpec extends SparkSpec {
       } catch { case _: Exception => Seq.empty[String] }
     }
 
-  private def assertSchedulerQuotaExpiry(useTws: Boolean,
-      sink: String): Unit = {
+  private def assertSchedulerQuotaExpiry(sink: String): Unit = {
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft-schedx-").toString
@@ -3019,7 +2991,7 @@ class StreamingSpec extends SparkSpec {
     val out = SchedulerGate.schedule(
       input.toDF().toDF("doc_id", "text", "at"), "doc_id", "text", "at",
       delay = "10 seconds", window = "1 hour", s"$dir/visited", state,
-      budgetPerWindow = 2, useTws = useTws)
+      budgetPerWindow = 2)
     val q = out.writeStream.format("memory").queryName(sink)
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode("append").start()
@@ -3047,7 +3019,7 @@ class StreamingSpec extends SparkSpec {
     // state read-back: the closed window's quota counter is GONE, the
     // live window's counter is still there (non-vacuity: the reader
     // does see quota state)
-    val keys = quotaStateKeys(s"$dir/ckpt", useTws)
+    val keys = quotaStateKeys(s"$dir/ckpt")
     assert(keys.exists(_.startsWith("zz9.net|")),
       s"state read-back vacuous — no live quota key visible: $keys")
     assert(!keys.exists(_.startsWith("ex1.org|")),
@@ -3059,31 +3031,28 @@ class StreamingSpec extends SparkSpec {
       "counter is purged once the watermark passes its horizon (state-" +
       "store read-back), the budget law is unchanged across windows — " +
       "fMGWS lane") {
-    assertSchedulerQuotaExpiry(useTws = false, "sched_expiry_fmgws")
+    assertSchedulerQuotaExpiry("sched_expiry")
   }
 
-  test("SchedulerGate quota expiry holds on the transformWithState lane " +
-      "under the RocksDB state store") {
+  test("SchedulerGate quota expiry holds under the RocksDB state store") {
     StateStoreVariants.withRocksDB(spark) {
-      assertSchedulerQuotaExpiry(useTws = true, "sched_expiry_tws")
+      assertSchedulerQuotaExpiry("sched_expiry_rocks")
     }
   }
 
   test("SchedulerGate weighted leg end-to-end: parseRobots bodies -> " +
       "authorWith(weighted ranks off the maintained weighted index) -> " +
       "schedule == the batch composition on a budget-non-binding split") {
-    assertWeightedSchedulerParity(useTws = false, "sched_weighted")
+    assertWeightedSchedulerParity("sched_weighted")
   }
 
-  test("SchedulerGate weighted leg parity holds on the " +
-      "transformWithState quota lane under the RocksDB state store") {
+  test("SchedulerGate weighted leg parity holds under the RocksDB state store") {
     StateStoreVariants.withRocksDB(spark) {
-      assertWeightedSchedulerParity(useTws = true, "sched_weighted_tws")
+      assertWeightedSchedulerParity("sched_weighted_rocks")
     }
   }
 
-  private def assertWeightedSchedulerParity(useTws: Boolean,
-      sinkName: String): Unit = {
+  private def assertWeightedSchedulerParity(sinkName: String): Unit = {
     import graft.api.TextOps
     import graft.operators.PageRank
     import spark.implicits._
@@ -3172,7 +3141,7 @@ class StreamingSpec extends SparkSpec {
     val out = SchedulerGate.schedule(
       input.toDF().toDF("doc_id", "text", "at"), "doc_id", "text", "at",
       delay = "2 hours", window = "1 hour", s"$dir/visited", stateW,
-      budgetPerWindow = 100000, useTws = useTws)
+      budgetPerWindow = 100000)
     val q = out.writeStream.format("memory").queryName(sinkName)
       .outputMode("append").start()
     try {
