@@ -87,21 +87,14 @@ object Bench {
       probeCounts(name) = (pJobs.get - j0, pStages.get - s0, pTasks.get - t0)
       r
     }
-    // A failed build is a FAILED entry (-1.0, so it lands in `failed`)
-    // whose exception class and message ride the full line's
-    // `build_errors` — never a fast success whose consumer then pays
-    // for the build inside its timed run 1.
-    val buildErrors =
-      scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timedBuild(name: String)(body: => Unit): Double = probed(name) {
-      val t0 = System.nanoTime()
-      try { body; (System.nanoTime() - t0) / 1e9 }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          buildErrors(name) = s"${e.getClass.getName}: ${e.getMessage}"
-          -1.0
-      }
-    }
+    // A failed build or query run is a FAILED entry (-1.0, so it lands
+    // in `failed`) whose exception class and message ride the full
+    // line's `build_errors` under the entry's name — never a fast
+    // success whose consumer then pays for the build inside its timed
+    // run 1, and never a bare -1.0.
+    val failures = new BenchHarness.Failures
+    def timedBuild(name: String)(body: => Unit): Double =
+      probed(name)(BenchHarness.timed(name, failures)(body))
     val stageBuild = timedBuild("shared_stage_build")(
       queries.SharedStages.clusters(spark, sfDir).count())
     // The lazy per-SF temp IVF-PQ indexes (session-cached by dir) are
@@ -150,7 +143,7 @@ object Bench {
     var drained = 0
     val raw = (("shared_stage_build" -> Seq(stageBuild)) +: indexBuilds) ++
       selected.toSeq.sortBy(_._1).map { case (name, _) =>
-        val rs = probed(name)(BenchHarness.timedRuns(3,
+        val rs = probed(name)(BenchHarness.timedRuns(name, 3, failures)(
           () => SparkEntry.queries(name)(spark, sfDir)))
         drained += BenchHarness.drainLocalCheckpoints(spark)
         name -> rs
@@ -182,7 +175,7 @@ object Bench {
     def cleanRetest(k: String): Seq[Double] = {
       BenchHarness.drainLocalCheckpoints(spark)
       System.gc()
-      val rs = BenchHarness.timedRuns(3,
+      val rs = BenchHarness.timedRuns(k, 3, failures)(
         () => SparkEntry.queries(k)(spark, sfDir))
       drained += BenchHarness.drainLocalCheckpoints(spark)
       rs
@@ -245,9 +238,6 @@ object Bench {
       "\"" + k + "\":" + rs.map(BenchHarness.num).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val driftsJson = drifts.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val buildErrorsJson = buildErrors.map { case (k, m) =>
-      "\"" + k + "\":" + BenchHarness.jsonString(m)
-    }.mkString("{", ",", "}")
     // job/stage/task counts ride the FULL line + sidecar only (the
     // compact line stays small); BenchHarness.parseBenchMins strips
     // this object before its run-array fallback, like leak_retests and
@@ -256,7 +246,7 @@ object Bench {
       "\"" + k + "\":[" + j + "," + s + "," + t + "]"
     }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"failed":$failedJson,"build_errors":$buildErrorsJson,"leak_suspects":$leaksJson,"drift_suspects":$driftsJson,"prior_source":"$priorSource","leak_retests":$retestsJson,"probe_jst":$probeJson,"drained_checkpoints":$drained,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"failed":$failedJson,"build_errors":${failures.json},"leak_suspects":$leaksJson,"drift_suspects":$driftsJson,"prior_source":"$priorSource","leak_retests":$retestsJson,"probe_jst":$probeJson,"drained_checkpoints":$drained,"sf":"$sfDir"}"""
     println(line)
     // COMPACT final line (VERDICT r16 #1): the full line above is
     // ~14 KB and the driver captures stdout with a bounded tail, so
@@ -279,7 +269,11 @@ object Bench {
     if (only.isEmpty)
       try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
         (line + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch {
+        case scala.util.control.NonFatal(e) => System.err.println(
+          "Bench: bench_out.json not written — " +
+            s"${e.getClass.getName}: ${e.getMessage}")
+      }
     spark.stop()
   }
 }

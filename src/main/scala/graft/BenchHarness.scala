@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE benchmark methodology, shared by [[Bench]] (per-round driver
@@ -47,31 +49,53 @@ object BenchHarness {
     df.write.format("noop").mode("overwrite").save()
 
   /** JIT/codegen warmup on the smallest SF so per-query numbers measure
-    * the plan, not first-call classloading.
+    * the plan, not first-call classloading. A query that fails here is
+    * named on stderr; its timed runs record the failure.
     */
   def warmup(spark: SparkSession, names: Iterable[String],
       warmDir: String = "/root/testdata/sf0.001"): Unit =
     names.foreach { q =>
       try exec(SparkEntry.queries(q)(spark, warmDir))
-      catch { case _: Throwable => () }
+      catch {
+        case NonFatal(e) => System.err.println(
+          s"warmup: $q failed — ${e.getClass.getName}: ${e.getMessage}")
+      }
     }
 
-  /** `n` timed runs of a plan thunk, raw times in order. A failed run
-    * short-circuits to a single -1.0. The raw array is part of the
-    * bench artifact (bench_out.json `runs`): a one-off 6× outlier
-    * under driver load is then self-diagnosing instead of reading as
-    * a regression.
-    */
-  def timedRuns(n: Int, build: () => DataFrame): Seq[Double] = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      try exec(build())
-      catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+  /** Failed timed calls, `class: message` keyed by bench entry — the
+    * full bench line's `build_errors` object. */
+  final class Failures {
+    private val byEntry =
+      scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def record(entry: String, e: Throwable): Unit = synchronized {
+      byEntry(entry) = s"${e.getClass.getName}: ${e.getMessage}"
     }
+    def json: String = synchronized {
+      byEntry.map { case (k, m) => "\"" + k + "\":" + jsonString(m) }
+        .mkString("{", ",", "}")
+    }
+  }
+
+  /** THE timed call of both benches: wall seconds of `body`, or -1.0
+    * when it throws — the failure kept under `entry` in `failures`,
+    * never discarded. */
+  def timed(entry: String, failures: Failures)(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try { body; (System.nanoTime() - t0) / 1e9 }
+    catch { case NonFatal(e) => failures.record(entry, e); -1.0 }
+  }
+
+  /** `n` timed runs of a plan thunk, raw times in order. A failed run
+    * short-circuits to a single -1.0 (its cause in `failures`). The
+    * raw array is part of the bench artifact (bench_out.json `runs`):
+    * a one-off 6× outlier under host load is then self-diagnosing
+    * instead of reading as a regression.
+    */
+  def timedRuns(entry: String, n: Int, failures: Failures)(
+      build: () => DataFrame): Seq[Double] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var i = 0
-    while (i < n && (out.isEmpty || out.last >= 0)) { out += once(); i += 1 }
+    while (out.size < n && (out.isEmpty || out.last >= 0))
+      out += timed(entry, failures)(exec(build()))
     out.toSeq
   }
 
@@ -82,17 +106,13 @@ object BenchHarness {
   def minOfRuns(rs: Seq[Double]): Double =
     if (rs.isEmpty || rs.exists(_ < 0)) -1.0 else rs.min
 
-  /** min of two timed runs (BenchScale's per-SF rows; Bench proper
-    * uses three runs and reports the raw array too).
+  /** min of two timed runs of a plan thunk (BenchScale's per-SF rows
+    * and const-delta probes; Bench proper uses three runs and reports
+    * the raw array too).
     */
-  def minOf2(spark: SparkSession, name: String, dir: String): Double =
-    minOf2Of(() => SparkEntry.queries(name)(spark, dir))
-
-  /** [[minOf2]] for any plan thunk (BenchScale's const-delta probes
-    * time API calls that are not catalog entries).
-    */
-  def minOf2Of(build: () => DataFrame): Double =
-    minOfRuns(timedRuns(2, build))
+  def minOf2(entry: String, failures: Failures)(
+      build: () => DataFrame): Double =
+    minOfRuns(timedRuns(entry, 2, failures)(build))
 
   /** Leak signature on a raw run array: strictly monotone-increasing
     * with meaningful growth (≥1.2× first→last and ≥0.2s absolute).

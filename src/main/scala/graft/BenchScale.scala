@@ -211,26 +211,33 @@ object BenchScale {
 
     BenchHarness.warmup(spark, Heavy)
 
+    // every timed call keeps its failure: -1.0 in the row, the
+    // exception's class and message in the line's build_errors
+    val failures = new BenchHarness.Failures
+    def timed(entry: String)(body: => Unit): Double =
+      BenchHarness.timed(entry, failures)(body)
+    def minOf2(entry: String)(build: () => DataFrame): Double =
+      BenchHarness.minOf2(entry, failures)(build)
+    def minOf2Query(entry: String, q: String, dir: String): Double =
+      minOf2(entry)(() => graft.SparkEntry.queries(q)(spark, dir))
+
     // one-shot shared-stage build per SF (pairs parquet + clusters
     // parquet), timed before any consumer query can trigger it — this
     // is the cost min-of-two would silently discard
-    def stageBuild(dir: String): Double = {
-      val t0 = System.nanoTime()
-      try graft.queries.SharedStages.clusters(spark, dir).count()
-      catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def stageBuild(side: String, dir: String): Double =
+      timed(s"shared_stage_build/$side")(
+        graft.queries.SharedStages.clusters(spark, dir).count())
     val stageRow = {
-      val base = stageBuild(baseDir)
-      val scaled = stageBuild(outDir)
+      val base = stageBuild("base", baseDir)
+      val scaled = stageBuild("scaled", outDir)
       val ratio = if (base <= 0 || scaled <= 0) -1.0
         else scaled / math.max(base, 0.15)
       ("shared_stage_build", base, scaled, ratio)
     }
 
     val rows = stageRow +: Heavy.map { q =>
-      val base = BenchHarness.minOf2(spark, q, baseDir)
-      val scaled = BenchHarness.minOf2(spark, q, outDir)
+      val base = minOf2Query(s"$q/base", q, baseDir)
+      val scaled = minOf2Query(s"$q/scaled", q, outDir)
       // leak hygiene between query families (same discipline as Bench)
       BenchHarness.drainLocalCheckpoints(spark)
       // floor tiny bases: a 0.08s query is fixed-overhead-dominated and
@@ -254,11 +261,6 @@ object BenchScale {
     // O(delta) probe contract.
     import graft.api.{DedupOps, VectorOps}
     val idxDir = Files.createTempDirectory("graft-scale-idx-").toString
-    def timedUnit(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try f catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
     def cRatio(base: Double, scaled: Double): Double =
       if (base <= 0 || scaled <= 0) -1.0 else scaled / math.max(base, 0.15)
 
@@ -266,13 +268,13 @@ object BenchScale {
       load(spark, dir, "documents").filter(col("doc_id") % 5 =!= 0)
     val deltaDocs = load(spark, baseDir, "documents")
       .filter(col("doc_id") % 5 === 0)
-    val tIdxB = timedUnit(DedupOps.writeMinhashIndex(
+    val tIdxB = timed("q59_index_build/base")(DedupOps.writeMinhashIndex(
       corpusDocs(baseDir), "doc_id", "text", s"$idxDir/text_base"))
-    val tIdxS = timedUnit(DedupOps.writeMinhashIndex(
+    val tIdxS = timed("q59_index_build/scaled")(DedupOps.writeMinhashIndex(
       corpusDocs(outDir), "doc_id", "text", s"$idxDir/text_scaled"))
-    val tPrbB = BenchHarness.minOf2Of(() => DedupOps.minhashPairsAgainstIndex(
+    val tPrbB = minOf2("q59_probe_const_delta/base")(() => DedupOps.minhashPairsAgainstIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/text_base"))
-    val tPrbS = BenchHarness.minOf2Of(() => DedupOps.minhashPairsAgainstIndex(
+    val tPrbS = minOf2("q59_probe_const_delta/scaled")(() => DedupOps.minhashPairsAgainstIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/text_scaled"))
 
     val planes = graft.queries.DedupQueries.lshPlanes
@@ -280,14 +282,14 @@ object BenchScale {
       load(spark, dir, "embeddings").filter(col("vec_id") % 5 =!= 0)
     val deltaVecs = load(spark, baseDir, "embeddings")
       .filter(col("vec_id") % 5 === 0)
-    val vIdxB = timedUnit(VectorOps.writeSignIndex(
+    val vIdxB = timed("q83_index_build/base")(VectorOps.writeSignIndex(
       corpusVecs(baseDir), "vec_id", "embedding", planes, s"$idxDir/vec_base"))
-    val vIdxS = timedUnit(VectorOps.writeSignIndex(
+    val vIdxS = timed("q83_index_build/scaled")(VectorOps.writeSignIndex(
       corpusVecs(outDir), "vec_id", "embedding", planes, s"$idxDir/vec_scaled"))
-    val vPrbB = BenchHarness.minOf2Of(() => VectorOps.probeSignIndex(
+    val vPrbB = minOf2("q83_probe_const_delta/base")(() => VectorOps.probeSignIndex(
       deltaVecs, "vec_id", "embedding", planes, s"$idxDir/vec_base",
       simX1000Threshold = 400))
-    val vPrbS = BenchHarness.minOf2Of(() => VectorOps.probeSignIndex(
+    val vPrbS = minOf2("q83_probe_const_delta/scaled")(() => VectorOps.probeSignIndex(
       deltaVecs, "vec_id", "embedding", planes, s"$idxDir/vec_scaled",
       simX1000Threshold = 400))
 
@@ -300,13 +302,13 @@ object BenchScale {
     import graft.api.TextOps
     val bmQueries = deltaDocs.filter(col("doc_id") % 25 === 0)
       .select(col("doc_id").as("qid"), col("text")).localCheckpoint()
-    val bIdxB = timedUnit(TextOps.writeBm25Index(
+    val bIdxB = timed("q108_index_build/base")(TextOps.writeBm25Index(
       corpusDocs(baseDir), "doc_id", "text", s"$idxDir/bm25_base"))
-    val bIdxS = timedUnit(TextOps.writeBm25Index(
+    val bIdxS = timed("q108_index_build/scaled")(TextOps.writeBm25Index(
       corpusDocs(outDir), "doc_id", "text", s"$idxDir/bm25_scaled"))
-    val bPrbB = BenchHarness.minOf2Of(() => TextOps.bm25TopKAgainstIndex(
+    val bPrbB = minOf2("q108_probe_const_delta/base")(() => TextOps.bm25TopKAgainstIndex(
       bmQueries, "qid", "text", s"$idxDir/bm25_base", "doc_id"))
-    val bPrbS = BenchHarness.minOf2Of(() => TextOps.bm25TopKAgainstIndex(
+    val bPrbS = minOf2("q108_probe_const_delta/scaled")(() => TextOps.bm25TopKAgainstIndex(
       bmQueries, "qid", "text", s"$idxDir/bm25_scaled", "doc_id"))
 
     // fingerprint family (round 13): index the corpus slices' image
@@ -324,15 +326,15 @@ object BenchScale {
         Multimodal.documentsAsBmpMedia(spark, baseDir))
       .select(col("doc_id"), col("dhash64"))
       .filter(col("doc_id") % 5 === 0).localCheckpoint()
-    val fIdxB = timedUnit(DedupOps.writeFingerprintIndex(
+    val fIdxB = timed("q138_index_build/base")(DedupOps.writeFingerprintIndex(
       corpusFps(baseDir), "doc_id", "dhash64", bits = 64, hammingMax = 6,
       s"$idxDir/fp_base"))
-    val fIdxS = timedUnit(DedupOps.writeFingerprintIndex(
+    val fIdxS = timed("q138_index_build/scaled")(DedupOps.writeFingerprintIndex(
       corpusFps(outDir), "doc_id", "dhash64", bits = 64, hammingMax = 6,
       s"$idxDir/fp_scaled"))
-    val fPrbB = BenchHarness.minOf2Of(() => DedupOps.fingerprintPairsAgainstIndex(
+    val fPrbB = minOf2("q137_probe_const_delta/base")(() => DedupOps.fingerprintPairsAgainstIndex(
       fpDelta, "doc_id", "dhash64", s"$idxDir/fp_base"))
-    val fPrbS = BenchHarness.minOf2Of(() => DedupOps.fingerprintPairsAgainstIndex(
+    val fPrbS = minOf2("q137_probe_const_delta/scaled")(() => DedupOps.fingerprintPairsAgainstIndex(
       fpDelta, "doc_id", "dhash64", s"$idxDir/fp_scaled"))
 
     // video family (round 14): q143 rides the q137 engine but pays the
@@ -348,15 +350,15 @@ object BenchScale {
     def deltaVfps() = Multimodal.videoFingerprints(
         Multimodal.documentsAsAviMedia(spark, baseDir))
       .filter(col("doc_id") % 5 === 0)
-    val vfIdxB = timedUnit(DedupOps.writeFingerprintIndex(
+    val vfIdxB = timed("q143_index_build/base")(DedupOps.writeFingerprintIndex(
       corpusVfps(baseDir), "doc_id", "vhash64", bits = 64, hammingMax = 6,
       s"$idxDir/vfp_base"))
-    val vfIdxS = timedUnit(DedupOps.writeFingerprintIndex(
+    val vfIdxS = timed("q143_index_build/scaled")(DedupOps.writeFingerprintIndex(
       corpusVfps(outDir), "doc_id", "vhash64", bits = 64, hammingMax = 6,
       s"$idxDir/vfp_scaled"))
-    val vfPrbB = BenchHarness.minOf2Of(() => DedupOps.fingerprintPairsAgainstIndex(
+    val vfPrbB = minOf2("q143_probe_const_delta/base")(() => DedupOps.fingerprintPairsAgainstIndex(
       deltaVfps(), "doc_id", "vhash64", s"$idxDir/vfp_base"))
-    val vfPrbS = BenchHarness.minOf2Of(() => DedupOps.fingerprintPairsAgainstIndex(
+    val vfPrbS = minOf2("q143_probe_const_delta/scaled")(() => DedupOps.fingerprintPairsAgainstIndex(
       deltaVfps(), "doc_id", "vhash64", s"$idxDir/vfp_scaled"))
 
     // gram-count family (round 14): the q149/q150 decontamination
@@ -365,13 +367,13 @@ object BenchScale {
     // is fixed; the prefix-pruned count scan must not track the
     // corpus behind the index); the builds are the one-shot
     // corpus-linear gram aggregations
-    val gIdxB = timedUnit(DedupOps.writeGramIndex(
+    val gIdxB = timed("q150_index_build/base")(DedupOps.writeGramIndex(
       corpusDocs(baseDir), "doc_id", "text", s"$idxDir/gram_base"))
-    val gIdxS = timedUnit(DedupOps.writeGramIndex(
+    val gIdxS = timed("q150_index_build/scaled")(DedupOps.writeGramIndex(
       corpusDocs(outDir), "doc_id", "text", s"$idxDir/gram_scaled"))
-    val gPrbB = BenchHarness.minOf2Of(() => DedupOps.exactSubstringSpansAgainstIndex(
+    val gPrbB = minOf2("q150_probe_const_delta/base")(() => DedupOps.exactSubstringSpansAgainstIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/gram_base"))
-    val gPrbS = BenchHarness.minOf2Of(() => DedupOps.exactSubstringSpansAgainstIndex(
+    val gPrbS = minOf2("q150_probe_const_delta/scaled")(() => DedupOps.exactSubstringSpansAgainstIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/gram_scaled"))
 
     // line-count family (round 14): the q151/q153 boilerplate posture
@@ -386,13 +388,13 @@ object BenchScale {
         concat(lit("Shared "), expr("(doc_id div 5) % 24").cast("string")))
         .as("text"))
     val linedDelta = linedDocs(deltaDocs)
-    val lIdxB = timedUnit(TextOps.writeLineIndex(
+    val lIdxB = timed("q153_index_build/base")(TextOps.writeLineIndex(
       linedDocs(corpusDocs(baseDir)), "doc_id", "text", s"$idxDir/line_base"))
-    val lIdxS = timedUnit(TextOps.writeLineIndex(
+    val lIdxS = timed("q153_index_build/scaled")(TextOps.writeLineIndex(
       linedDocs(corpusDocs(outDir)), "doc_id", "text", s"$idxDir/line_scaled"))
-    val lPrbB = BenchHarness.minOf2Of(() => TextOps.dedupLinesAgainstIndex(
+    val lPrbB = minOf2("q153_probe_const_delta/base")(() => TextOps.dedupLinesAgainstIndex(
       linedDelta, "doc_id", "text", s"$idxDir/line_base"))
-    val lPrbS = BenchHarness.minOf2Of(() => TextOps.dedupLinesAgainstIndex(
+    val lPrbS = minOf2("q153_probe_const_delta/scaled")(() => TextOps.dedupLinesAgainstIndex(
       linedDelta, "doc_id", "text", s"$idxDir/line_scaled"))
 
     // ---- fold-cost rows: the O(delta) MAINTENANCE claim, measured ----
@@ -416,41 +418,41 @@ object BenchScale {
         .mapToLong(java.nio.file.Files.size(_)).sum()
       finally st.close()
     }
-    val cIdxB = timedUnit(DedupOps.writeCdcChunkIndex(
+    val cIdxB = timed("q111_index_build/base")(DedupOps.writeCdcChunkIndex(
       corpusDocs(baseDir), "doc_id", "text", s"$idxDir/cdc_base"))
-    val cIdxS = timedUnit(DedupOps.writeCdcChunkIndex(
+    val cIdxS = timed("q111_index_build/scaled")(DedupOps.writeCdcChunkIndex(
       corpusDocs(outDir), "doc_id", "text", s"$idxDir/cdc_scaled"))
     val mhIdxBytesB = dirBytes(s"$idxDir/text_base")
     val mhIdxBytesS = dirBytes(s"$idxDir/text_scaled")
-    val tFldB = timedUnit(DedupOps.foldIntoMinhashIndex(
+    val tFldB = timed("q110_fold_const_delta/base")(DedupOps.foldIntoMinhashIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/text_base"))
-    val tFldS = timedUnit(DedupOps.foldIntoMinhashIndex(
+    val tFldS = timed("q110_fold_const_delta/scaled")(DedupOps.foldIntoMinhashIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/text_scaled"))
     val mhFoldBytesB = dirBytes(s"$idxDir/text_base") - mhIdxBytesB
     val mhFoldBytesS = dirBytes(s"$idxDir/text_scaled") - mhIdxBytesS
-    val vFldB = timedUnit(VectorOps.foldIntoSignIndex(
+    val vFldB = timed("q113_fold_const_delta/base")(VectorOps.foldIntoSignIndex(
       deltaVecs, "vec_id", "embedding", planes, s"$idxDir/vec_base"))
-    val vFldS = timedUnit(VectorOps.foldIntoSignIndex(
+    val vFldS = timed("q113_fold_const_delta/scaled")(VectorOps.foldIntoSignIndex(
       deltaVecs, "vec_id", "embedding", planes, s"$idxDir/vec_scaled"))
-    val cFldB = timedUnit(DedupOps.foldIntoCdcChunkIndex(
+    val cFldB = timed("q111_fold_const_delta/base")(DedupOps.foldIntoCdcChunkIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/cdc_base"))
-    val cFldS = timedUnit(DedupOps.foldIntoCdcChunkIndex(
+    val cFldS = timed("q111_fold_const_delta/scaled")(DedupOps.foldIntoCdcChunkIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/cdc_scaled"))
-    val bFldB = timedUnit(TextOps.foldIntoBm25Index(
+    val bFldB = timed("q108_fold_const_delta/base")(TextOps.foldIntoBm25Index(
       deltaDocs, "doc_id", "text", s"$idxDir/bm25_base"))
-    val bFldS = timedUnit(TextOps.foldIntoBm25Index(
+    val bFldS = timed("q108_fold_const_delta/scaled")(TextOps.foldIntoBm25Index(
       deltaDocs, "doc_id", "text", s"$idxDir/bm25_scaled"))
-    val fFldB = timedUnit(DedupOps.foldIntoFingerprintIndex(
+    val fFldB = timed("q138_fold_const_delta/base")(DedupOps.foldIntoFingerprintIndex(
       fpDelta, "doc_id", "dhash64", s"$idxDir/fp_base"))
-    val fFldS = timedUnit(DedupOps.foldIntoFingerprintIndex(
+    val fFldS = timed("q138_fold_const_delta/scaled")(DedupOps.foldIntoFingerprintIndex(
       fpDelta, "doc_id", "dhash64", s"$idxDir/fp_scaled"))
-    val gFldB = timedUnit(DedupOps.foldIntoGramIndex(
+    val gFldB = timed("q150_fold_const_delta/base")(DedupOps.foldIntoGramIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/gram_base"))
-    val gFldS = timedUnit(DedupOps.foldIntoGramIndex(
+    val gFldS = timed("q150_fold_const_delta/scaled")(DedupOps.foldIntoGramIndex(
       deltaDocs, "doc_id", "text", s"$idxDir/gram_scaled"))
-    val lFldB = timedUnit(TextOps.foldIntoLineIndex(
+    val lFldB = timed("q153_fold_const_delta/base")(TextOps.foldIntoLineIndex(
       linedDelta, "doc_id", "text", s"$idxDir/line_base"))
-    val lFldS = timedUnit(TextOps.foldIntoLineIndex(
+    val lFldS = timed("q153_fold_const_delta/scaled")(TextOps.foldIntoLineIndex(
       linedDelta, "doc_id", "text", s"$idxDir/line_scaled"))
 
     // edge family (round 14): the q160/q161 host-graph posture — the
@@ -470,19 +472,19 @@ object BenchScale {
           lit(".net")).as("dst"))
     val edgeDelta = edgeLinksOf(baseDir)
       .filter(col("doc_id") % 5 === 0).localCheckpoint()
-    val eIdxB = timedUnit(PageRank.writeEdgeIndex(
+    val eIdxB = timed("q160_index_build/base")(PageRank.writeEdgeIndex(
       edgeLinksOf(baseDir).filter(col("doc_id") % 5 =!= 0),
       "src", "dst", s"$idxDir/edge_base"))
-    val eIdxS = timedUnit(PageRank.writeEdgeIndex(
+    val eIdxS = timed("q160_index_build/scaled")(PageRank.writeEdgeIndex(
       edgeLinksOf(outDir).filter(col("doc_id") % 5 =!= 0),
       "src", "dst", s"$idxDir/edge_scaled"))
-    val ePrbB = BenchHarness.minOf2Of(() =>
+    val ePrbB = minOf2("q160_probe_const_delta/base")(() =>
       PageRank.ranksByKeyAgainstIndex(spark, s"$idxDir/edge_base"))
-    val ePrbS = BenchHarness.minOf2Of(() =>
+    val ePrbS = minOf2("q160_probe_const_delta/scaled")(() =>
       PageRank.ranksByKeyAgainstIndex(spark, s"$idxDir/edge_scaled"))
-    val eFldB = timedUnit(PageRank.foldIntoEdgeIndex(
+    val eFldB = timed("q160_fold_const_delta/base")(PageRank.foldIntoEdgeIndex(
       edgeDelta, "src", "dst", s"$idxDir/edge_base"))
-    val eFldS = timedUnit(PageRank.foldIntoEdgeIndex(
+    val eFldS = timed("q160_fold_const_delta/scaled")(PageRank.foldIntoEdgeIndex(
       edgeDelta, "src", "dst", s"$idxDir/edge_scaled"))
     graft.api.Lifecycle.releaseLocalCheckpoint(edgeDelta)
     // weighted edge family (round 15): the q165 posture — the same
@@ -495,28 +497,28 @@ object BenchScale {
       edgeLinksOf(dir).withColumn("w1", lit(1L))
     val wEdgeDelta = wEdgeLinksOf(baseDir)
       .filter(col("doc_id") % 5 === 0).localCheckpoint()
-    val weIdxB = timedUnit(PageRank.writeWeightedEdgeIndex(
+    val weIdxB = timed("q165_index_build/base")(PageRank.writeWeightedEdgeIndex(
       wEdgeLinksOf(baseDir).filter(col("doc_id") % 5 =!= 0),
       "src", "dst", "w1", s"$idxDir/wedge_base"))
-    val weIdxS = timedUnit(PageRank.writeWeightedEdgeIndex(
+    val weIdxS = timed("q165_index_build/scaled")(PageRank.writeWeightedEdgeIndex(
       wEdgeLinksOf(outDir).filter(col("doc_id") % 5 =!= 0),
       "src", "dst", "w1", s"$idxDir/wedge_scaled"))
-    val wePrbB = BenchHarness.minOf2Of(() =>
+    val wePrbB = minOf2("q165_probe_const_delta/base")(() =>
       PageRank.weightedRanksByKeyAgainstIndex(spark, s"$idxDir/wedge_base"))
-    val wePrbS = BenchHarness.minOf2Of(() =>
+    val wePrbS = minOf2("q165_probe_const_delta/scaled")(() =>
       PageRank.weightedRanksByKeyAgainstIndex(spark, s"$idxDir/wedge_scaled"))
     // weighted HITS (round 16): the directed consumer over the SAME
     // indexes — host-pair-sized rounds, so it must stay as flat as the
     // weighted-rank probe under 10x the links behind the index
-    val whPrbB = BenchHarness.minOf2Of(() =>
+    val whPrbB = minOf2("q168_probe_const_delta/base")(() =>
       PageRank.weightedHitsByKeyAgainstIndex(spark, s"$idxDir/wedge_base"))
-    val whPrbS = BenchHarness.minOf2Of(() =>
+    val whPrbS = minOf2("q168_probe_const_delta/scaled")(() =>
       PageRank.weightedHitsByKeyAgainstIndex(spark, s"$idxDir/wedge_scaled"))
-    val weFldB = timedUnit {
+    val weFldB = timed("q165_fold_const_delta/base") {
       PageRank.foldIntoWeightedEdgeIndex(
         wEdgeDelta, "src", "dst", "w1", s"$idxDir/wedge_base"); ()
     }
-    val weFldS = timedUnit {
+    val weFldS = timed("q165_fold_const_delta/scaled") {
       PageRank.foldIntoWeightedEdgeIndex(
         wEdgeDelta, "src", "dst", "w1", s"$idxDir/wedge_scaled"); ()
     }
@@ -532,21 +534,21 @@ object BenchScale {
       .select(col("doc_id"), col("text"), col("source"), col("lang"))
     val cardDelta = cardDocsOf(baseDir)
       .filter(col("doc_id") % 7 === 0).localCheckpoint()
-    val cdIdxB = timedUnit(CardOps.writeCardIndex(
+    val cdIdxB = timed("q171_index_build/base")(CardOps.writeCardIndex(
       cardDocsOf(baseDir).filter(col("doc_id") % 7 =!= 0),
       "doc_id", "text", "source", "lang", s"$idxDir/card_base"))
-    val cdIdxS = timedUnit(CardOps.writeCardIndex(
+    val cdIdxS = timed("q171_index_build/scaled")(CardOps.writeCardIndex(
       cardDocsOf(outDir).filter(col("doc_id") % 7 =!= 0),
       "doc_id", "text", "source", "lang", s"$idxDir/card_scaled"))
-    val cdPrbB = BenchHarness.minOf2Of(() =>
+    val cdPrbB = minOf2("q171_probe_const_delta/base")(() =>
       CardOps.datasetCardAgainstIndex(spark, s"$idxDir/card_base"))
-    val cdPrbS = BenchHarness.minOf2Of(() =>
+    val cdPrbS = minOf2("q171_probe_const_delta/scaled")(() =>
       CardOps.datasetCardAgainstIndex(spark, s"$idxDir/card_scaled"))
-    val cdFldB = timedUnit {
+    val cdFldB = timed("q171_fold_const_delta/base") {
       CardOps.foldIntoCardIndex(cardDelta, "doc_id", "text",
         "source", "lang", s"$idxDir/card_base"); ()
     }
-    val cdFldS = timedUnit {
+    val cdFldS = timed("q171_fold_const_delta/scaled") {
       CardOps.foldIntoCardIndex(cardDelta, "doc_id", "text",
         "source", "lang", s"$idxDir/card_scaled"); ()
     }
@@ -560,9 +562,9 @@ object BenchScale {
     BenchHarness.drainLocalCheckpoints(spark)
     // compaction: the amortized index-sized operation the appends
     // defer — compacting the now-2-layer minhash indexes
-    val tCmpB = timedUnit(DedupOps.compactMinhashIndex(
+    val tCmpB = timed("q110_compact_cost/base")(DedupOps.compactMinhashIndex(
       spark, s"$idxDir/text_base", s"$idxDir/text_base_c"))
-    val tCmpS = timedUnit(DedupOps.compactMinhashIndex(
+    val tCmpS = timed("q110_compact_cost/scaled")(DedupOps.compactMinhashIndex(
       spark, s"$idxDir/text_scaled", s"$idxDir/text_scaled_c"))
 
     // ---- curated-stream throughput: the one-graph ingest pipeline
@@ -572,7 +574,7 @@ object BenchScale {
     // broadcast; corpus joins are index-side stream-static), so
     // docs/sec should hold ~flat as the corpus behind the gates grows
     // kx. RocksDB provider (the tws quota stage requires it).
-    def curatedThroughput(corpusDir: String): (Double, Long) = {
+    def curatedThroughput(side: String, corpusDir: String): (Double, Long) = {
       import spark.implicits._
       val corpusDf = load(spark, corpusDir, "documents")
         .filter(col("doc_id") % 5 =!= 0)
@@ -632,7 +634,11 @@ object BenchScale {
           q.processAllAvailable()
           (batch.length / elapsed, outRows.get())
         } finally q.stop()
-      } catch { case _: Throwable => (-1.0, 0L) }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          failures.record(s"curated_throughput/$side", e)
+          (-1.0, 0L)
+      }
       finally {
         prevProvider match {
           case Some(v) => spark.conf.set(
@@ -649,8 +655,8 @@ object BenchScale {
         graft.api.Lifecycle.releaseLocalCheckpoint(nbModel)
       }
     }
-    val (curB, curOutB) = curatedThroughput(baseDir)
-    val (curS, curOutS) = curatedThroughput(outDir)
+    val (curB, curOutB) = curatedThroughput("base", baseDir)
+    val (curS, curOutS) = curatedThroughput("scaled", outDir)
 
     // ---- Heaps-law vocabulary fixture: the q95/q98/q101 upper bounds
     // under the bijective rename measure a 10x vocabulary; this corpus
@@ -673,8 +679,8 @@ object BenchScale {
       // q125 applies the merge chain per DISTINCT word, so its cost is
       // vocabulary-sensitive — the Heaps fixture is the honest one
       "q125_tokenizer_fit").map { q =>
-      val base = BenchHarness.minOf2(spark, q, baseDir)
-      val scaled = BenchHarness.minOf2(spark, q, heapsDir)
+      val base = minOf2Query(s"${q}_heaps/base", q, baseDir)
+      val scaled = minOf2Query(s"${q}_heaps/scaled", q, heapsDir)
       val ratio = if (base <= 0 || scaled <= 0) -1.0
         else scaled / math.max(base, 0.15)
       (s"${q}_heaps", base, scaled, ratio)
@@ -739,7 +745,7 @@ object BenchScale {
       s""""base_docs_per_sec":${num(curB)},"scaled_docs_per_sec":${num(curS)},""" +
       s""""ratio":${num(if (curB <= 0 || curS <= 0) -1.0 else curB / curS)},""" +
       s""""out_rows_base":$curOutB,"out_rows_scaled":$curOutS"""
-    println(s"""{"metric":"scale_worst_ratio","value":$worst,"unit":"x","k":$k,"base":"$baseDir","linear_ok":$ok,"const_delta_ok":$constOk,"heaps_vocab_ratio":${num(vocabRatio)},"fold_bytes":{$foldBytes},"curated_throughput":{$curated},"queries":$qs}""")
+    println(s"""{"metric":"scale_worst_ratio","value":$worst,"unit":"x","k":$k,"base":"$baseDir","linear_ok":$ok,"const_delta_ok":$constOk,"heaps_vocab_ratio":${num(vocabRatio)},"fold_bytes":{$foldBytes},"curated_throughput":{$curated},"queries":$qs,"build_errors":${failures.json}}""")
     spark.stop()
   }
 }

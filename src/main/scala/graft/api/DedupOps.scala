@@ -45,19 +45,6 @@ object DedupOps {
       .dropDuplicates(aCol, bCol)
   }
 
-  /** MinHash+LSH near-duplicate pairs with exact shingle-Jaccard
-    * verification. Output: doc_a, doc_b, jaccard_x1000 (>= threshold).
-    * Band keys shuffle id-only; shingle sets rejoin candidates only.
-    *
-    * Skew safety: candidates come from a `capped_list` aggregation per
-    * (band, bucket) — a bucket with more than `maxBucket` ids evaluates
-    * to NULL and yields NO pairs, so one pathological band key (10k
-    * docs sharing a signature) costs O(cap²), never O(10k²). Giant
-    * buckets are mass-duplication, which the O(n) digest pass
-    * ([[exactDuplicates]]) catches without pair explosion — LSH's job
-    * is the near-dups. Requires a BIGINT id column (as do
-    * [[ngramJaccardPairs]] and [[clusters]]).
-    */
   /** doc → (idCol, carry..., hs): the shared shingle→hash front end.
     * `private[graft]` so the streaming ingest probe
     * (streaming.NearDupIngest) derives its hashes through the EXACT
@@ -96,20 +83,12 @@ object DedupOps {
       .withColumnRenamed("col", "bkey")
   }
 
-  /** Corpus band rows → the capped (band, bkey, __cs) bucket index —
-    * the [[DefaultMaxBucket]] skew contract applied to an index that a
-    * delta (batch or stream) probes: an over-hot corpus bucket
-    * aggregates to NULL and blocks nothing.
-    */
-  private[graft] def bandBuckets(bands: DataFrame, idCol: String,
-      maxBucket: Int): DataFrame =
-    bandBucketsAll(bands, idCol, maxBucket)
-      .filter(col("__cs").isNotNull)
-
-  /** [[bandBuckets]] KEEPING the over-cap buckets as `__cs = null`
-    * TOMBSTONE rows. In-process consumers filter them (a null bucket
-    * blocks nothing, so carrying it is pure overhead), but the
-    * PERSISTED index must record them: a fold
+  /** Corpus band rows → the capped (band, bkey, `__cs`) bucket index
+    * of every bucket family (minhash, fingerprint, sign) — the
+    * [[DefaultMaxBucket]] skew contract applied to an index that a
+    * delta (batch or stream) probes — KEEPING the over-cap buckets as
+    * `__cs = null` TOMBSTONE rows. Probes filter them (a null bucket
+    * blocks nothing), but the PERSISTED index must record them: a fold
     * ([[foldIntoMinhashIndex]]) cannot otherwise distinguish "bucket
     * never seen" from "bucket already over cap", and would resurrect
     * a skipped bucket with only its delta members — diverging from
@@ -122,72 +101,108 @@ object DedupOps {
     bands.groupBy(col("band"), col("bkey"))
       .agg(call_function("capped_list", col(idCol), lit(maxBucket)).as("__cs"))
 
-  /** Shared MinHash front end: (hashed = id + distinct shingle hashes,
-    * bands = id + LSH band keys). Factored so self-join dedup
-    * ([[minhashPairs]]) and incremental new-vs-corpus dedup
-    * ([[minhashPairsAgainst]]) block on identical signatures.
+  /** THE exact-Jaccard verify, written once for every shingle-set
+    * pair path (the minhash self-join and probes, the n-gram pairs and
+    * the [[graft.streaming.NearDupIngest]] gate): candidate pairs
+    * carrying both sides' hash sets as `hs_a`/`hs_b` → aCol, bCol,
+    * jaccard_x1000 (>= threshold).
     */
-  private def shingleBands(df: DataFrame, idCol: String,
-      textCol: String): (DataFrame, DataFrame) = {
-    val hashed = shingleHashed(df, idCol, textCol)
-    (hashed, withBandKeys(hashed).select(col(idCol), col("band"), col("bkey")))
-  }
-
-  /** Exact-Jaccard verification of candidate pairs against the shingle
-    * sets of each side (shared by the self-join and two-corpus paths).
-    */
-  private def verifyJaccard(cand: DataFrame, leftHashed: DataFrame,
-      rightHashed: DataFrame, idCol: String, aCol: String, bCol: String,
-      jaccardX1000Threshold: Int): DataFrame =
-    cand
-      .join(leftHashed.select(col(idCol).as(aCol), col("hs").as("hs_a")),
-        Seq(aCol))
-      .join(rightHashed.select(col(idCol).as(bCol), col("hs").as("hs_b")),
-        Seq(bCol))
+  private[graft] def verifyJaccard(pairs: DataFrame, aCol: String,
+      bCol: String, jaccardX1000Threshold: Int): DataFrame =
+    pairs
       .withColumn("it", size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
       .withColumn("un", size(array_distinct(concat(col("hs_a"), col("hs_b")))).cast("long"))
       .select(col(aCol), col(bCol),
         expr("(it * 1000) div un").as("jaccard_x1000"))
       .filter(col("jaccard_x1000") >= jaccardX1000Threshold)
 
+  /** Candidate pairs (aCol, bCol) joined to both sides' `hs` sets as
+    * `hs_a`/`hs_b` (the self-join paths' verify input). */
+  private def withHashSets(cand: DataFrame, hashed: DataFrame, idCol: String,
+      hsCol: String): DataFrame =
+    cand
+      .join(hashed.select(col(idCol).as("doc_a"), col(hsCol).as("hs_a")),
+        Seq("doc_a"))
+      .join(hashed.select(col(idCol).as("doc_b"), col(hsCol).as("hs_b")),
+        Seq("doc_b"))
+
+  /** MinHash+LSH near-duplicate pairs with exact shingle-Jaccard
+    * verification. Output: doc_a, doc_b, jaccard_x1000 (>= threshold).
+    * Band keys shuffle id-only; shingle sets rejoin candidates only.
+    *
+    * Skew safety: candidates come from a `capped_list` aggregation per
+    * (band, bucket) — a bucket with more than `maxBucket` ids evaluates
+    * to NULL and yields NO pairs, so one pathological band key (10k
+    * docs sharing a signature) costs O(cap²), never O(10k²). Giant
+    * buckets are mass-duplication, which the O(n) digest pass
+    * ([[exactDuplicates]]) catches without pair explosion — LSH's job
+    * is the near-dups. Requires a BIGINT id column (as do
+    * [[ngramJaccardPairs]] and [[clusters]]).
+    */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       jaccardX1000Threshold: Int = 500,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val (hashed, bands) = shingleBands(df, idCol, textCol)
+    val hashed = shingleHashed(df, idCol, textCol)
     // one bounded shuffle replaces the unbounded bucket self-join:
     // partials carry <= cap+1 ids per bucket, pairs explode from the
     // capped set only
-    val cand = cappedCandidatePairs(bands, Seq(col("band"), col("bkey")),
-      idCol, maxBucket, "doc_a", "doc_b")
-    verifyJaccard(cand, hashed, hashed, idCol, "doc_a", "doc_b",
+    val cand = cappedCandidatePairs(
+      withBandKeys(hashed).select(col(idCol), col("band"), col("bkey")),
+      Seq(col("band"), col("bkey")), idCol, maxBucket, "doc_a", "doc_b")
+    verifyJaccard(withHashSets(cand, hashed, idCol, "hs"), "doc_a", "doc_b",
       jaccardX1000Threshold)
   }
 
   /** Incremental dedup: near-dup pairs between a NEW batch and the
     * EXISTING corpus (the daily-ingestion path — never re-pair the
-    * corpus against itself, only the delta against the index). Corpus
-    * band buckets aggregate to capped id-lists (the [[DefaultMaxBucket]]
-    * skew contract: an over-hot corpus bucket blocks nothing), then the
-    * new batch's band keys probe them — a join whose build side is
-    * O(corpus buckets), carrying <= cap ids each, and whose probe side
-    * is only the delta. Exact-Jaccard verify joins candidates only.
-    * At 100TB the corpus bucket index is the thing you materialize
-    * once and re-probe per batch. Output: doc_new, doc_old,
-    * jaccard_x1000 (>= threshold).
+    * corpus against itself, only the delta against the index). The
+    * corpus tables are [[minhashRows]] derived in memory from
+    * `corpusDf` — capped band buckets (the [[DefaultMaxBucket]] skew
+    * contract: an over-hot corpus bucket blocks nothing) plus shingle
+    * sets — and [[minhashProbe]] probes them exactly as
+    * [[minhashPairsAgainstIndex]] probes the persisted tables: a join
+    * whose build side is O(corpus buckets), carrying <= cap ids each,
+    * whose probe side is only the delta, and an exact-Jaccard verify
+    * over candidates only. Output: doc_new, doc_old, jaccard_x1000
+    * (>= threshold).
     */
   def minhashPairsAgainst(newDf: DataFrame, corpusDf: DataFrame,
       idCol: String, textCol: String,
       jaccardX1000Threshold: Int = 500,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val (hashedNew, bandsNew) = shingleBands(newDf, idCol, textCol)
-    val (hashedOld, bandsOld) = shingleBands(corpusDf, idCol, textCol)
-    val buckets = bandBuckets(bandsOld, idCol, maxBucket)
-    val cand = bandsNew
-      .join(buckets, Seq("band", "bkey"))
-      .select(col(idCol).as("doc_new"), explode(col("__cs")).as("doc_old"))
-      .dropDuplicates("doc_new", "doc_old")
-    verifyJaccard(cand, hashedNew, hashedOld, idCol, "doc_new", "doc_old",
-      jaccardX1000Threshold)
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    minhashProbe(newDf, idCol, textCol,
+      IndexMaintenance.Corpus.derived("max_bucket" -> maxBucket)(
+        minhashRows(shingleHashed(corpusDf, idCol, textCol), idCol)),
+      jaccardX1000Threshold, "minhashPairsAgainst")
+
+  /** The minhash probe, ONE body for both corpus sources: the delta
+    * bands map-only, its band keys join the live (non-tombstone)
+    * buckets — pruned to the delta's `__bp` prefixes when the source
+    * is an index (the prefix list re-derives the delta's band keys,
+    * map-only over the delta — cheap by the delta-size contract) —
+    * and the candidates carry the delta's shingle set into the
+    * [[verifyJaccard]] against the corpus's `hashed` table.
+    */
+  private def minhashProbe(newDf: DataFrame, idCol: String,
+      textCol: String, corpus: IndexMaintenance.Corpus,
+      jaccardX1000Threshold: Int, op: String): DataFrame = {
+    val reserved = Set("hs", "band", "bkey", "pos", "col", "__mh",
+      "__cs", "toks", "doc_new", "doc_old", "hs_a", "hs_b", "hs_old", "__bp")
+    require(!reserved.contains(idCol),
+      s"$op: id column '$idCol' collides with a " +
+        s"working column (${reserved.mkString(", ")}) — rename it first")
+    val deltaBands = withBandKeys(shingleHashed(newDf, idCol, textCol))
+    val buckets = corpus.pruned("buckets", deltaBands,
+        xxhash64(col("band"), col("bkey")))
+      .filter(col("__cs").isNotNull)
+    verifyJaccard(deltaBands
+        .join(buckets, Seq("band", "bkey"))
+        .select(col(idCol).as("doc_new"), col("hs").as("hs_a"),
+          explode(col("__cs")).as("doc_old"))
+        .dropDuplicates("doc_new", "doc_old")
+        .join(corpus("hashed").select(col("doc_old"), col("hs_old").as("hs_b")),
+          Seq("doc_old")),
+      "doc_new", "doc_old", jaccardX1000Threshold)
   }
 
   /** The minhash index family: `buckets` = the capped (band, bkey,
@@ -210,22 +225,19 @@ object DedupOps {
       if (withPrefix) Some("__bp" -> xxhash64(col("band"), col("bkey")))
       else None)
 
-  /** The family's row derivation over one persisted shingle pass (the
-    * NearDupIngest.index single-scan discipline): tombstones INCLUDED
+  /** The minhash family's corpus tables — the ONE derivation behind
+    * the index build/fold, the inline probe and the NearDupIngest gate —
+    * over a shingle pass ([[shingleHashed]]): tombstones INCLUDED
     * ([[bandBucketsAll]]) — a fold must see which buckets are already
-    * over cap. */
-  private def minhashRows[T](df: DataFrame, idCol: String,
-      textCol: String)(go: (IndexMaintenance.Meta =>
-        IndexMaintenance.Delta) => T): T = {
-    val hashed = shingleHashed(df, idCol, textCol).persist()
-    try go(m => IndexMaintenance.Delta(
+    * over cap; probes keep the live buckets. */
+  private[graft] def minhashRows(hashed: DataFrame, idCol: String)(
+      m: IndexMaintenance.Meta): IndexMaintenance.Delta =
+    IndexMaintenance.Delta(
       "buckets" -> bandBucketsAll(withBandKeys(hashed)
         .select(col(idCol), col("band"), col("bkey")), idCol,
         m.int("max_bucket")),
       "hashed" -> hashed.select(col(idCol).as("doc_old"),
-        col("hs").as("hs_old"))))
-    finally { hashed.unpersist(); () }
-  }
+        col("hs").as("hs_old")))
 
   /** Materialize the corpus side of [[minhashPairsAgainstIndex]] to
     * parquet ([[MinhashIndex]]'s layout). This is the "build once,
@@ -244,7 +256,8 @@ object DedupOps {
       prefixPartitions: Int = 64): Unit = {
     require(prefixPartitions >= 1,
       s"writeMinhashIndex: prefixPartitions $prefixPartitions < 1")
-    minhashRows(corpus, idCol, textCol)(
+    IndexMaintenance.pinned(shingleHashed(corpus, idCol, textCol),
+      minhashRows(_, idCol))(
       IndexMaintenance.write(corpus.sparkSession, path, MinhashIndex,
         "prefix_partitions" -> prefixPartitions, "max_bucket" -> maxBucket))
   }
@@ -297,7 +310,8 @@ object DedupOps {
     */
   def foldIntoMinhashIndex(delta: DataFrame, idCol: String,
       textCol: String, indexPath: String): Unit = {
-    minhashRows(delta, idCol, textCol)(IndexMaintenance.fold(
+    IndexMaintenance.pinned(shingleHashed(delta, idCol, textCol),
+      minhashRows(_, idCol))(IndexMaintenance.fold(
       delta.sparkSession, indexPath, MinhashIndex, "foldIntoMinhashIndex"))
     ()
   }
@@ -311,7 +325,8 @@ object DedupOps {
     */
   def foldIntoMinhashIndex(delta: DataFrame, idCol: String,
       textCol: String, indexPath: String, outPath: String): Unit =
-    minhashRows(delta, idCol, textCol)(IndexMaintenance.foldTo(
+    IndexMaintenance.pinned(shingleHashed(delta, idCol, textCol),
+      minhashRows(_, idCol))(IndexMaintenance.foldTo(
       delta.sparkSession, indexPath, outPath, MinhashIndex,
       "foldIntoMinhashIndex"))
 
@@ -325,7 +340,8 @@ object DedupOps {
       textCol: String, indexPath: String,
       compactThreshold: Int =
         IndexMaintenance.DefaultCompactThreshold): Boolean =
-    minhashRows(delta, idCol, textCol)(IndexMaintenance.maintain(
+    IndexMaintenance.pinned(shingleHashed(delta, idCol, textCol),
+      minhashRows(_, idCol))(IndexMaintenance.maintain(
       delta.sparkSession, indexPath, MinhashIndex, "maintainMinhashIndex",
       compactThreshold)).contains(true)
 
@@ -340,48 +356,22 @@ object DedupOps {
 
   /** [[minhashPairsAgainst]] probing a PERSISTED index
     * ([[writeMinhashIndex]]) instead of re-deriving the corpus side:
-    * the delta bands map-only, joins the bucket parquet, and verifies
-    * against the hashed parquet — identical output to the inline path
-    * on the same split (parity-tested), at O(delta work + index scan)
-    * per batch with NO corpus shingle/minhash re-derivation. The scan is
-    * PRUNED: the delta's distinct `__bp` prefixes filter the bucket
-    * parquet to the directories its keys can hit, and a layered index
-    * reconciles only that pruned subset. Output: doc_new, doc_old,
-    * jaccard_x1000.
+    * the same [[minhashProbe]] over the index's tables — identical
+    * output to the inline path on the same split (parity-tested), at
+    * O(delta work + index scan) per batch with NO corpus
+    * shingle/minhash re-derivation. The scan is PRUNED: the delta's
+    * distinct `__bp` prefixes filter the bucket parquet to the
+    * directories its keys can hit, and a layered index reconciles only
+    * that pruned subset. Output: doc_new, doc_old, jaccard_x1000.
     */
   def minhashPairsAgainstIndex(newDf: DataFrame, idCol: String,
       textCol: String, indexPath: String,
-      jaccardX1000Threshold: Int = 500): DataFrame = {
-    val reserved = Set("hs", "band", "bkey", "pos", "col", "__mh",
-      "__cs", "toks", "doc_new", "doc_old", "hs_new", "hs_old", "__bp")
-    require(!reserved.contains(idCol),
-      s"minhashPairsAgainstIndex: id column '$idCol' collides with a " +
-        s"working column (${reserved.mkString(", ")}) — rename it first")
-    val s = newDf.sparkSession
-    val op = "minhashPairsAgainstIndex"
-    val m = IndexMaintenance.readMeta(s, indexPath, MinhashIndex, op)
-    val deltaBands = withBandKeys(shingleHashed(newDf, idCol, textCol))
-    // the delta re-derives its band keys for this list (map-only over
-    // the delta — cheap by the delta-size contract); the returned plan
-    // recomputes them for the join itself
-    val prefixes = IndexMaintenance.prefixesOf(deltaBands,
-      xxhash64(col("band"), col("bkey")), m)
-    val buckets = IndexMaintenance.read(s, indexPath, MinhashIndex, m,
-        "buckets", op, Some(prefixes))
-      .filter(col("__cs").isNotNull)
-    deltaBands
-      .join(buckets, Seq("band", "bkey"))
-      .select(col(idCol).as("doc_new"), col("hs").as("hs_new"),
-        explode(col("__cs")).as("doc_old"))
-      .dropDuplicates("doc_new", "doc_old")
-      .join(IndexMaintenance.read(s, indexPath, MinhashIndex, m, "hashed",
-        op), Seq("doc_old"))
-      .withColumn("it", size(array_intersect(col("hs_new"), col("hs_old"))).cast("long"))
-      .withColumn("un", size(array_distinct(concat(col("hs_new"), col("hs_old")))).cast("long"))
-      .select(col("doc_new"), col("doc_old"),
-        expr("(it * 1000) div un").as("jaccard_x1000"))
-      .filter(col("jaccard_x1000") >= jaccardX1000Threshold)
-  }
+      jaccardX1000Threshold: Int = 500): DataFrame =
+    minhashProbe(newDf, idCol, textCol,
+      IndexMaintenance.Corpus.indexed(newDf.sparkSession, indexPath,
+        MinhashIndex, "minhashPairsAgainstIndex"),
+      jaccardX1000Threshold, "minhashPairsAgainstIndex")
+
   /** Passage-level (sub-document) near-dup spans — duplicate
     * PARAGRAPHS across documents (license blocks, boilerplate
     * passages, syndicated fragments) that doc-level [[minhashPairs]]
@@ -454,16 +444,8 @@ object DedupOps {
     val cand = cappedCandidatePairs(
       grams.select(col(idCol), explode(col("gs")).as("g")),
       Seq(col("g")), idCol, maxDf, "doc_a", "doc_b")
-    cand
-      .join(grams.select(col(idCol).as("doc_a"), col("gs").as("gs_a")),
-        Seq("doc_a"))
-      .join(grams.select(col(idCol).as("doc_b"), col("gs").as("gs_b")),
-        Seq("doc_b"))
-      .withColumn("it", size(array_intersect(col("gs_a"), col("gs_b"))).cast("long"))
-      .withColumn("un", size(array_distinct(concat(col("gs_a"), col("gs_b")))).cast("long"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("(it * 1000) div un").as("jaccard_x1000"))
-      .filter(col("jaccard_x1000") >= jaccardX1000Threshold)
+    verifyJaccard(withHashSets(cand, grams, idCol, "gs"), "doc_a", "doc_b",
+      jaccardX1000Threshold)
   }
 
   /** 60-bit SimHash + 12-bit blocking prefix. Output: idCol, simhash,
@@ -522,17 +504,27 @@ object DedupOps {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     fingerprintValidate("fingerprintPairs", idCol, fpCol, bits, hammingMax)
     val bands = fingerprintBands(fps, idCol, fpCol, bits, hammingMax)
-    cappedCandidatePairs(bands, Seq(col("band"), col("bkey")),
+    verifyHamming(cappedCandidatePairs(bands, Seq(col("band"), col("bkey")),
         idCol, maxBucket, "doc_a", "doc_b")
       .join(fps.select(col(idCol).as("doc_a"), col(fpCol).as("sh_a")),
         Seq("doc_a"))
       .join(fps.select(col(idCol).as("doc_b"), col(fpCol).as("sh_b")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
+        Seq("doc_b")), "doc_a", "doc_b", hammingMax)
+  }
+
+  /** THE exact hamming verify, written once for every fingerprint pair
+    * path (the self-join, the probes and the
+    * [[graft.streaming.FingerprintGate]]): candidate pairs carrying
+    * both fingerprints as `sh_a`/`sh_b` → aCol, bCol, hamming
+    * (<= hammingMax).
+    */
+  private[graft] def verifyHamming(pairs: DataFrame, aCol: String,
+      bCol: String, hammingMax: Int): DataFrame =
+    pairs
+      .select(col(aCol), col(bCol),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long")
           .as("hamming"))
       .filter(col("hamming") <= hammingMax)
-  }
 
   private[graft] def fingerprintValidate(op: String, idCol: String,
       fpCol: String, bits: Int, hammingMax: Int): Unit = {
@@ -540,18 +532,18 @@ object DedupOps {
     require(hammingMax >= 0 && bits / (hammingMax + 1) >= 4,
       s"$op: hammingMax $hammingMax leaves blocks under 4 bits at " +
         s"width $bits — blocking would degenerate to hot buckets")
-    // the OUTPUT and working names are fixed; an id column shadowing one
-    // would go ambiguous deep in the plan — fail fast instead
-    val reserved = Set(fpCol, "band", "bkey", "pos", "col", "doc_a",
-      "doc_b", "doc_new", "doc_old", "sh_a", "sh_b", "hamming")
-    require(!reserved.contains(idCol),
-      s"$op: id column '$idCol' collides with an output/working column " +
-        s"(${reserved.mkString(", ")}) — rename it first")
-    val fpReserved = Set(idCol, "band", "bkey", "pos", "col", "doc_a",
-      "doc_b", "doc_new", "doc_old", "sh_a", "sh_b", "hamming")
-    require(!fpReserved.contains(fpCol),
-      s"$op: fingerprint column '$fpCol' collides with an output/" +
-        s"working column (${fpReserved.mkString(", ")}) — rename it first")
+    // the OUTPUT and working names are fixed; an id or fingerprint
+    // column shadowing one (or the other) would go ambiguous deep in the
+    // plan — fail fast instead
+    val working = Seq("band", "bkey", "pos", "col", "doc_a", "doc_b",
+      "doc_new", "doc_old", "sh_a", "sh_b", "hamming")
+    for ((what, c, other) <- Seq(("id", idCol, fpCol),
+        ("fingerprint", fpCol, idCol))) {
+      val reserved = (other +: working).toSet
+      require(!reserved.contains(c),
+        s"$op: $what column '$c' collides with an output/working column " +
+          s"(${reserved.mkString(", ")}) — rename it first")
+    }
   }
 
   /** The pigeonhole block keys of a `bits`-wide fingerprint at
@@ -593,12 +585,15 @@ object DedupOps {
     * for the 64-bit hash modalities (text simhash, image dHash, audio
     * envelope, video majority-dHash): a DELTA of fingerprints probes
     * the CORPUS's capped pigeonhole block buckets and verifies
-    * candidates by exact bit_count(xor). The corpus is never
-    * self-paired; probe cost is proportional to the delta (bands
-    * map-only, candidates bounded by blocks × cap per delta row).
-    * Output: doc_new, doc_old, hamming (<= hammingMax). The streaming
-    * twin is [[graft.streaming.FingerprintGate]] — same blocks, same
-    * caps, same verify, StreamingSpec-pinned parity.
+    * candidates by exact bit_count(xor): [[fingerprintProbe]] over
+    * the [[fingerprintRows]] tables derived in memory from `corpusFps`,
+    * the body [[fingerprintPairsAgainstIndex]] runs over a persisted
+    * index. The corpus is never self-paired; probe cost is
+    * proportional to the delta (bands map-only, candidates bounded by
+    * blocks × cap per delta row). Output: doc_new, doc_old, hamming
+    * (<= hammingMax). The streaming twin is
+    * [[graft.streaming.FingerprintGate]] — same row derivation, same
+    * verify, StreamingSpec-pinned parity.
     *
     * PRECONDITION (here, the index twin, and the gate): `newFps`
     * carries each id AT MOST ONCE. Candidate pairs dedupe on
@@ -616,25 +611,40 @@ object DedupOps {
     */
   def fingerprintPairsAgainst(newFps: DataFrame, corpusFps: DataFrame,
       idCol: String, fpCol: String, bits: Int, hammingMax: Int = 3,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    fingerprintValidate("fingerprintPairsAgainst", idCol, fpCol, bits,
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    fingerprintProbe(newFps, idCol, fpCol,
+      IndexMaintenance.Corpus.derived("max_bucket" -> maxBucket,
+        "bits" -> bits, "hamming_max" -> hammingMax)(
+        fingerprintRows(corpusFps, idCol, fpCol)),
+      "fingerprintPairsAgainst")
+
+  /** The fingerprint probe, ONE body for both corpus sources: delta
+    * fingerprints band map-only with the corpus's geometry (the
+    * caller's parameters inline, the index's own meta otherwise —
+    * never a caller knob), the block keys join the live buckets
+    * (pruned to the delta's `__bp` prefixes when the source is an
+    * index), and candidates verify by exact bit_count(xor) against the
+    * corpus `fps` table.
+    */
+  private def fingerprintProbe(newFps: DataFrame, idCol: String,
+      fpCol: String, corpus: IndexMaintenance.Corpus, op: String): DataFrame = {
+    val (bits, hammingMax) =
+      (corpus.meta.int("bits"), corpus.meta.int("hamming_max"))
+    fingerprintValidate(op, idCol, fpCol, bits, hammingMax)
+    val deltaBands = fingerprintBands(newFps, idCol, fpCol, bits,
       hammingMax)
-    graft.functions.SketchAggregates.register(newFps.sparkSession)
-    val buckets = bandBuckets(
-      fingerprintBands(corpusFps, idCol, fpCol, bits, hammingMax),
-      idCol, maxBucket)
-    fingerprintBands(newFps, idCol, fpCol, bits, hammingMax)
-      .join(buckets, Seq("band", "bkey"))
-      .select(col(idCol).as("doc_new"), explode(col("__cs")).as("doc_old"))
-      .dropDuplicates("doc_new", "doc_old")
-      .join(newFps.select(col(idCol).as("doc_new"), col(fpCol).as("sh_a")),
-        Seq("doc_new"))
-      .join(corpusFps.select(col(idCol).as("doc_old"),
-        col(fpCol).as("sh_b")), Seq("doc_old"))
-      .select(col("doc_new"), col("doc_old"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= hammingMax)
+    val buckets = corpus.pruned("buckets", deltaBands,
+        xxhash64(col("band"), col("bkey")))
+      .filter(col("__cs").isNotNull)
+    verifyHamming(deltaBands
+        .join(buckets, Seq("band", "bkey"))
+        .select(col(idCol).as("doc_new"), explode(col("__cs")).as("doc_old"))
+        .dropDuplicates("doc_new", "doc_old")
+        .join(newFps.select(col(idCol).as("doc_new"), col(fpCol).as("sh_a")),
+          Seq("doc_new"))
+        .join(corpus("fps").select(col("doc_old"), col("fp_old").as("sh_b")),
+          Seq("doc_old")),
+      "doc_new", "doc_old", hammingMax)
   }
 
   /** The fingerprint index family — the [[MinhashIndex]] layout applied
@@ -654,19 +664,18 @@ object DedupOps {
     _ => Seq(bucketTable(withPrefix = true),
       IndexMaintenance.Table("fps", Seq("doc_old"), 8)))
 
-  /** Row derivation: both tables consume the input frame, so it is
-    * persisted — an expensive upstream lineage (a real media decode)
-    * runs ONCE; banding uses the INDEX's meta geometry. */
-  private def fingerprintRows[T](df: DataFrame, idCol: String,
-      fpCol: String)(go: (IndexMaintenance.Meta =>
-        IndexMaintenance.Delta) => T): T = {
-    graft.functions.SketchAggregates.register(df.sparkSession)
-    val fps = df.select(col(idCol), col(fpCol)).persist()
-    try go(m => IndexMaintenance.Delta(
+  /** The fingerprint family's corpus tables — the ONE derivation behind
+    * the index build/fold, the inline probe and the FingerprintGate —
+    * banded with the meta's geometry, tombstones included. Build and
+    * fold pin the input: both tables consume it, so an expensive
+    * upstream lineage (a real media decode) runs ONCE. */
+  private[graft] def fingerprintRows(fps: DataFrame, idCol: String,
+      fpCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta = {
+    graft.functions.SketchAggregates.register(fps.sparkSession)
+    IndexMaintenance.Delta(
       "buckets" -> bandBucketsAll(fingerprintBands(fps, idCol, fpCol,
         m.int("bits"), m.int("hamming_max")), idCol, m.int("max_bucket")),
-      "fps" -> fps.select(col(idCol).as("doc_old"), col(fpCol).as("fp_old"))))
-    finally { fps.unpersist(); () }
+      "fps" -> fps.select(col(idCol).as("doc_old"), col(fpCol).as("fp_old")))
   }
 
   /** Materialize the corpus side of [[fingerprintPairsAgainstIndex]]
@@ -679,59 +688,37 @@ object DedupOps {
       hammingMax)
     require(prefixPartitions >= 1,
       s"writeFingerprintIndex: prefixPartitions $prefixPartitions < 1")
-    fingerprintRows(corpusFps, idCol, fpCol)(IndexMaintenance.write(
+    IndexMaintenance.pinned(corpusFps.select(col(idCol), col(fpCol)),
+      fingerprintRows(_, idCol, fpCol))(IndexMaintenance.write(
       corpusFps.sparkSession, path, FingerprintIndex,
       "prefix_partitions" -> prefixPartitions, "max_bucket" -> maxBucket,
       "bits" -> bits, "hamming_max" -> hammingMax))
   }
 
   /** [[fingerprintPairsAgainst]] probing a PERSISTED
-    * [[writeFingerprintIndex]]: delta fingerprints band map-only with
-    * the INDEX's own geometry (read off meta — never a caller knob),
-    * the `__bp` prefix list prunes the bucket parquet to only the
-    * directories the delta's keys can hit, layered runs reconcile
-    * through the SHARED [[mergeLayeredBuckets]] cap arithmetic over
-    * just the pruned subset, and candidates verify by exact
-    * bit_count(xor) against the fps parquet. Identical output to the
-    * inline path on the same split (DedupSpec parity); per-batch cost
-    * O(delta work + pruned buckets + fps sidecar scan). Output:
-    * doc_new, doc_old, hamming.
+    * [[writeFingerprintIndex]]: the same [[fingerprintProbe]] over the
+    * index's tables — geometry read off meta, the `__bp` prefix list
+    * prunes the bucket parquet to only the directories the delta's
+    * keys can hit, and layered runs reconcile through the SHARED
+    * [[mergeLayeredBuckets]] cap arithmetic over just the pruned
+    * subset. Identical output to the inline path on the same split
+    * (DedupSpec parity); per-batch cost O(delta work + pruned buckets +
+    * fps sidecar scan). Output: doc_new, doc_old, hamming.
     */
   def fingerprintPairsAgainstIndex(newFps: DataFrame, idCol: String,
-      fpCol: String, indexPath: String): DataFrame = {
-    val s = newFps.sparkSession
-    val op = "fingerprintPairsAgainstIndex"
-    val m = IndexMaintenance.readMeta(s, indexPath, FingerprintIndex, op)
-    val (bits, hammingMax) = (m.int("bits"), m.int("hamming_max"))
-    fingerprintValidate(op, idCol, fpCol, bits, hammingMax)
-    val deltaBands = fingerprintBands(newFps, idCol, fpCol, bits,
-      hammingMax)
-    val prefixes = IndexMaintenance.prefixesOf(deltaBands,
-      xxhash64(col("band"), col("bkey")), m)
-    val reconciled = IndexMaintenance.read(s, indexPath, FingerprintIndex,
-        m, "buckets", op, Some(prefixes))
-      .filter(col("__cs").isNotNull)
-    deltaBands
-      .join(reconciled, Seq("band", "bkey"))
-      .select(col(idCol).as("doc_new"), explode(col("__cs")).as("doc_old"))
-      .dropDuplicates("doc_new", "doc_old")
-      .join(newFps.select(col(idCol).as("doc_new"), col(fpCol).as("sh_a")),
-        Seq("doc_new"))
-      .join(IndexMaintenance.read(s, indexPath, FingerprintIndex, m, "fps",
-          op).select(col("doc_old"), col("fp_old").as("sh_b")),
-        Seq("doc_old"))
-      .select(col("doc_new"), col("doc_old"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= hammingMax)
-  }
+      fpCol: String, indexPath: String): DataFrame =
+    fingerprintProbe(newFps, idCol, fpCol,
+      IndexMaintenance.Corpus.indexed(newFps.sparkSession, indexPath,
+        FingerprintIndex, "fingerprintPairsAgainstIndex"),
+      "fingerprintPairsAgainstIndex")
 
   /** Fold a DELTA of fingerprints into a persisted index IN PLACE with
     * O(delta) write bytes — the [[foldIntoMinhashIndex]] posture for
     * the fingerprint family (same crash contract). */
   def foldIntoFingerprintIndex(delta: DataFrame, idCol: String,
       fpCol: String, indexPath: String): Unit = {
-    fingerprintRows(delta, idCol, fpCol)(IndexMaintenance.fold(
+    IndexMaintenance.pinned(delta.select(col(idCol), col(fpCol)),
+      fingerprintRows(_, idCol, fpCol))(IndexMaintenance.fold(
       delta.sparkSession, indexPath, FingerprintIndex,
       "foldIntoFingerprintIndex"))
     ()
@@ -752,7 +739,8 @@ object DedupOps {
       fpCol: String, indexPath: String,
       compactThreshold: Int =
         IndexMaintenance.DefaultCompactThreshold): Boolean =
-    fingerprintRows(delta, idCol, fpCol)(IndexMaintenance.maintain(
+    IndexMaintenance.pinned(delta.select(col(idCol), col(fpCol)),
+      fingerprintRows(_, idCol, fpCol))(IndexMaintenance.maintain(
       delta.sparkSession, indexPath, FingerprintIndex,
       "maintainFingerprintIndex", compactThreshold)).contains(true)
   /** Exact-substring duplicate SPANS (the ExactSubstr dedup of Lee et
@@ -889,28 +877,50 @@ object DedupOps {
     * The corpus is never self-paired and the delta never counts toward
     * the threshold; at 100 TB the corpus side is materialized once
     * ([[writeGramIndex]]) and probed per ingest batch
-    * ([[exactSubstringSpansAgainstIndex]]). Output: doc_id (the NEW
-    * doc), span_start, span_end, span_tokens.
+    * ([[exactSubstringSpansAgainstIndex]]) — the same [[gramProbe]],
+    * over the index's table instead of the [[gramRows]] derived here.
+    * Output: doc_id (the NEW doc), span_start, span_end, span_tokens.
     */
   def exactSubstringSpansAgainst(newDf: DataFrame, corpusDf: DataFrame,
       idCol: String, textCol: String, gramTokens: Int = 8,
       minCorpusDocs: Int = 1, maxDocsPerGram: Int = 1000): DataFrame = {
     require(gramTokens >= 2,
       s"exactSubstringSpansAgainst: gramTokens $gramTokens < 2")
-    require(minCorpusDocs >= 1,
-      s"exactSubstringSpansAgainst: minCorpusDocs $minCorpusDocs < 1")
+    gramProbe(newDf, idCol, textCol,
+      IndexMaintenance.Corpus.derived("gram_tokens" -> gramTokens)(
+        gramRows(corpusDf, idCol, textCol)),
+      sharedGrams(minCorpusDocs, maxDocsPerGram,
+        "exactSubstringSpansAgainst"))
+  }
+
+  /** The gram probe, ONE body for both corpus sources: the delta grams
+    * with the corpus's gram width, semi-joins the `shared` corpus grams
+    * (pruned to the delta's `__gp` prefixes when the source is an
+    * index) and island-merges the covered positions. */
+  private def gramProbe(newDf: DataFrame, idCol: String, textCol: String,
+      corpus: IndexMaintenance.Corpus,
+      shared: DataFrame => DataFrame): DataFrame = {
+    val gramTokens = corpus.meta.int("gram_tokens")
+    val deltaGrams = gramPositions(newDf, idCol, textCol, gramTokens)
+    mergeSpans(deltaGrams
+      .join(shared(corpus.pruned("grams", deltaGrams, col("__gh"))),
+        Seq("__gh"), "left_semi")
+      .select(col("doc_id"), col("pos")), gramTokens)
+  }
+
+  /** THE corpus-side threshold of every gram probe and of
+    * [[graft.streaming.GramGate]]: (gh, n_docs) counts → the `__gh`
+    * of grams in [minCorpusDocs, maxDocsPerGram] corpus docs. The
+    * bounds are checked here, before any index is read. */
+  private[graft] def sharedGrams(minCorpusDocs: Int, maxDocsPerGram: Int,
+      op: String): DataFrame => DataFrame = {
+    require(minCorpusDocs >= 1, s"$op: minCorpusDocs $minCorpusDocs < 1")
     require(maxDocsPerGram >= minCorpusDocs,
-      s"exactSubstringSpansAgainst: maxDocsPerGram $maxDocsPerGram < " +
+      s"$op: maxDocsPerGram $maxDocsPerGram < " +
         s"minCorpusDocs $minCorpusDocs — the cap would reject every gram")
-    val shared = gramPositions(corpusDf, idCol, textCol, gramTokens)
-      .select(col("__gh"), col("doc_id")).distinct()
-      .groupBy(col("__gh")).agg(count(lit(1)).as("__nd"))
-      .filter(col("__nd") >= minCorpusDocs && col("__nd") <= maxDocsPerGram)
-      .select(col("__gh"))
-    mergeSpans(
-      gramPositions(newDf, idCol, textCol, gramTokens)
-        .join(shared, Seq("__gh"), "left_semi")
-        .select(col("doc_id"), col("pos")), gramTokens)
+    _.filter(col("n_docs") >= minCorpusDocs &&
+        col("n_docs") <= maxDocsPerGram)
+      .select(col("gh").as("__gh"))
   }
 
   /** The gram-count index family — the simplest: `grams` = (gh,
@@ -931,6 +941,9 @@ object DedupOps {
       IndexMaintenance.Reconcile.Summed(Seq("gh"), Seq("n_docs")),
       Some("__gp" -> col("gh")))))
 
+  /** The gram family's corpus table — the ONE derivation behind the
+    * index build/fold and the inline probe: per-gram distinct-doc
+    * counts at the meta's gram width. */
   private def gramRows(df: DataFrame, idCol: String,
       textCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta =
     IndexMaintenance.Delta("grams" ->
@@ -993,31 +1006,21 @@ object DedupOps {
     * directory pruning (decisive for the primary use — an eval set's
     * handful of documents touches a handful of prefixes, never the
     * corpus-wide gram table), layered runs reconcile by per-gram SUM,
-    * and the min/cap thresholds apply to the reconciled totals. Output
-    * identical to the inline path on the same split (DedupSpec parity;
-    * q150 gates fold==rebuild on the driver's hash).
+    * and the min/cap thresholds apply to the reconciled totals — the
+    * one [[gramProbe]]. Output identical to the inline path on the same
+    * split (DedupSpec parity; q150 gates fold==rebuild on its oracle
+    * hash).
     */
   def exactSubstringSpansAgainstIndex(newDf: DataFrame, idCol: String,
       textCol: String, indexPath: String, minCorpusDocs: Int = 1,
       maxDocsPerGram: Int = 1000): DataFrame = {
-    require(minCorpusDocs >= 1,
-      s"exactSubstringSpansAgainstIndex: minCorpusDocs $minCorpusDocs < 1")
-    require(maxDocsPerGram >= minCorpusDocs,
-      s"exactSubstringSpansAgainstIndex: maxDocsPerGram $maxDocsPerGram " +
-        s"< minCorpusDocs $minCorpusDocs — the cap would reject every gram")
-    val s = newDf.sparkSession
     val op = "exactSubstringSpansAgainstIndex"
-    val m = IndexMaintenance.readMeta(s, indexPath, GramIndex, op)
-    val gramTokens = m.int("gram_tokens")
-    val deltaGrams = gramPositions(newDf, idCol, textCol, gramTokens)
-    val shared = IndexMaintenance.read(s, indexPath, GramIndex, m, "grams",
-        op, Some(IndexMaintenance.prefixesOf(deltaGrams, col("__gh"), m)))
-      .filter(col("n_docs") >= minCorpusDocs &&
-        col("n_docs") <= maxDocsPerGram)
-      .select(col("gh").as("__gh"))
-    mergeSpans(deltaGrams.join(shared, Seq("__gh"), "left_semi")
-      .select(col("doc_id"), col("pos")), gramTokens)
+    val shared = sharedGrams(minCorpusDocs, maxDocsPerGram, op)
+    gramProbe(newDf, idCol, textCol,
+      IndexMaintenance.Corpus.indexed(newDf.sparkSession, indexPath,
+        GramIndex, op), shared)
   }
+
   /** Transitive near-dup clusters over a pair frame. Output: doc_id,
     * cluster_id (= component min). See ConnectedComponents for rounds.
     */
@@ -1179,17 +1182,26 @@ object DedupOps {
     * [[cdcChunkHitsAgainstIndex]]'s O(delta + pruned index scan).
     */
   def cdcChunkHits(newDf: DataFrame, corpus: DataFrame, idCol: String,
-      textCol: String, modulus: Int = 64, window: Int = 4): DataFrame = {
-    val delta = cdcChunked(newDf, idCol, textCol, modulus, window)
-    val corpusSet = cdcChunked(corpus, idCol, textCol, modulus, window)
-      .select(explode(col("_ch")).as("_c")).distinct()
-    cdcHitsRollup(delta, corpusSet, idCol)
-  }
+      textCol: String, modulus: Int = 64, window: Int = 4): DataFrame =
+    cdcProbe(newDf, idCol, textCol,
+      IndexMaintenance.Corpus.derived("modulus" -> modulus,
+        "window" -> window)(cdcRows(corpus, idCol, textCol)))
 
-  private def cdcHitsRollup(delta: DataFrame, corpusSet: DataFrame,
-      idCol: String): DataFrame = {
-    val posting = delta.select(col(idCol), explode(col("_ch")).as("_c"))
-    val hits = posting.join(corpusSet, Seq("_c"), "left_semi")
+  /** The CDC probe, ONE body for both corpus sources: the delta chunks
+    * with the corpus's geometry, its chunk postings semi-join the
+    * corpus chunk set (pruned to the delta's `__bp` prefixes when the
+    * source is an index), and the per-doc rollup keys the delta id.
+    * The prefix list re-chunks the delta (map-only, the delta-size
+    * contract) rather than pinning it. */
+  private def cdcProbe(newDf: DataFrame, idCol: String, textCol: String,
+      corpus: IndexMaintenance.Corpus): DataFrame = {
+    val delta = cdcChunked(newDf, idCol, textCol, corpus.meta.int("modulus"),
+      corpus.meta.int("window"))
+    val corpusSet = corpus.pruned("chunks",
+        delta.select(explode(col("_ch")).as("_c")), xxhash64(col("_c")))
+      .select(col("c").as("_c"))
+    val hits = delta.select(col(idCol), explode(col("_ch")).as("_c"))
+      .join(corpusSet, Seq("_c"), "left_semi")
       .groupBy(col(idCol)).agg(count(lit(1)).as("_nh"))
     delta.select(col(idCol), size(col("_ch")).cast("long").as("n_chunks"))
       .join(hits, Seq(idCol), "left")
@@ -1208,7 +1220,7 @@ object DedupOps {
     * index's geometry — a CDC probe against an index built with
     * different parameters would be silently meaningless. Reconcile is
     * set union; probes need none at all — the corpus set feeds a
-    * duplicate-insensitive `left_semi` join ([[cdcHitsRollup]]), so
+    * duplicate-insensitive `left_semi` join ([[cdcProbe]]), so
     * compaction is pure read-amplification cleanup.
     */
   private[graft] val CdcIndex = IndexMaintenance.Family("CDC",
@@ -1218,6 +1230,9 @@ object DedupOps {
     _ => Seq(IndexMaintenance.Table("chunks", Seq("c"), 8,
       IndexMaintenance.Reconcile.SetUnion(), Some("__bp" -> xxhash64(col("c"))))))
 
+  /** The CDC family's corpus table — the ONE derivation behind the
+    * index build/fold and the inline probe: the distinct chunk hashes
+    * at the meta's geometry. */
   private def cdcRows(df: DataFrame, idCol: String,
       textCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta =
     IndexMaintenance.Delta("chunks" ->
@@ -1288,18 +1303,9 @@ object DedupOps {
     * the chunking geometry.
     */
   def cdcChunkHitsAgainstIndex(newDf: DataFrame, idCol: String,
-      textCol: String, indexPath: String): DataFrame = {
-    val s = newDf.sparkSession
-    val op = "cdcChunkHitsAgainstIndex"
-    val m = IndexMaintenance.readMeta(s, indexPath, CdcIndex, op)
-    val delta = cdcChunked(newDf, idCol, textCol, m.int("modulus"),
-        m.int("window"))
-      .localCheckpoint() // consumed twice (prefix list + rollup)
-    val touched = IndexMaintenance.prefixesOf(
-      delta.select(explode(col("_ch")).as("_c")), xxhash64(col("_c")), m)
-    val corpusSet = IndexMaintenance.read(s, indexPath, CdcIndex, m,
-        "chunks", op, Some(touched), reconciled = false)
-      .select(col("c").as("_c"))
-    cdcHitsRollup(delta, corpusSet, idCol)
-  }
+      textCol: String, indexPath: String): DataFrame =
+    // a duplicate-insensitive left_semi: layered runs need no reconcile
+    cdcProbe(newDf, idCol, textCol,
+      IndexMaintenance.Corpus.indexed(newDf.sparkSession, indexPath,
+        CdcIndex, "cdcChunkHitsAgainstIndex", reconciled = false))
 }

@@ -26,6 +26,14 @@ import org.apache.spark.sql.functions._
   *   - the committed and reconciled [[read]] behind every probe and
   *     every streaming gate's snapshot.
   *
+  * The two-source rule: a family derives its corpus tables in ONE
+  * place, the row derivation its write and fold persist; every probe
+  * reads them through a [[Corpus]] — that derivation over a corpus
+  * frame in memory (`*Against`, gates authored from a frame) or [[read]]
+  * with prefix pruning over an index (`*AgainstIndex`, gates authored
+  * from a path) — with one probe body and one verify per family in
+  * between. Only write and fold pin storage ([[pinned]]).
+  *
   * Reconcile-at-read == reconcile-at-compact: both apply the same
   * per-table rule, so probes are identical before and after a
   * compaction, and fold==rebuild holds by the rule's arithmetic
@@ -436,6 +444,46 @@ object IndexMaintenance {
   def prefixesOf(keys: DataFrame, key: Column, m: Meta): Seq[Int] =
     keys.select(pmod(key, lit(m.int("prefix_partitions").toLong)))
       .distinct().collect().map(_.getLong(0).toInt).toSeq
+
+  /** A family's corpus tables as its one probe body reads them (the
+    * two-source rule above). `pruned(dir, keys, key)`: an index prunes
+    * its prefix directories to the `keys`' prefixes ([[prefixesOf]],
+    * one collect job); a derived table returns whole, so an inline
+    * probe adds no job. The meta is read on first use. */
+  final class Corpus private (meta0: => Meta,
+      tableOf: (String, Option[(DataFrame, Column)]) => DataFrame) {
+    lazy val meta: Meta = meta0
+    def apply(dir: String): DataFrame = tableOf(dir, None)
+    def pruned(dir: String, keys: DataFrame, key: Column): DataFrame =
+      tableOf(dir, Some(keys -> key))
+  }
+  object Corpus {
+    /** `rows` over a corpus frame, with the caller's parameters as the
+      * `geometry` meta fields — nothing is pinned and no job runs. */
+    def derived(geometry: (String, Any)*)(rows: Meta => Delta): Corpus = {
+      val m = Meta(geometry)
+      lazy val tables = rows(m).rows.toMap
+      new Corpus(m, (dir, _) => tables(dir))
+    }
+    /** The committed [[read]] of the index at `indexPath`, geometry off
+      * its meta. `reconciled = false` skips the layered reconcile for a
+      * probe that is insensitive to duplicate rows. */
+    def indexed(s: SparkSession, indexPath: String, fam: Family,
+        op: String, reconciled: Boolean = true): Corpus = {
+      lazy val m = readMeta(s, indexPath, fam, op)
+      new Corpus(m, (dir, keys) => read(s, indexPath, fam, m, dir, op,
+        keys.map { case (k, c) => prefixesOf(k, c, m) }, reconciled))
+    }
+  }
+
+  /** `rows` over `df` persisted for the duration of `go` — the
+    * build/fold side's discipline when several tables (or an expensive
+    * upstream lineage) consume one derivation. Probes never pin. */
+  def pinned[T](df: DataFrame, rows: DataFrame => Meta => Delta)(
+      go: (Meta => Delta) => T): T = {
+    val p = df.persist()
+    try go(rows(p)) finally { p.unpersist(); () }
+  }
 
   private def table(fam: Family, tables: Seq[Table], dir: String): Table =
     tables.find(_.dir == dir).getOrElse(throw new IllegalArgumentException(

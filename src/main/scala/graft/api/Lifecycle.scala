@@ -11,6 +11,23 @@ import org.apache.spark.sql.DataFrame
   */
 object Lifecycle {
 
+  private val tempDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    tempDirs.forEach { d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
+      ()
+    }))
+
+  /** A fresh directory under the system temp dir for a JVM-lifetime
+    * cache (the catalog's session-cached stages and indexes), deleted
+    * with its contents when the JVM exits. */
+  private[graft] def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
   /** Unpersist the locally-checkpointed RDD(s) backing `df`. Only
     * valid once every consumer of `df` has materialized: a
     * localCheckpoint truncates lineage, so after release the frame

@@ -475,38 +475,6 @@ object TextOps {
         col("col.1").as("anchor"))
   }
 
-  /** Frontier rollup + politeness budget — the consumer of
-    * [[extractLinks]] that turns raw anchors into a crawl schedule:
-    * absolute links aggregate per (host, href) with their in-link
-    * count, each host's URLs rank most-referenced-first (ties by href
-    * — deterministic, replayable), and the per-host fetch budget keeps
-    * only the first `budgetPerHost` (politeness: a crawler issues at
-    * most that many fetches per host per cycle). Each kept URL carries
-    * its host's frontier rollup: host_urls (distinct URLs seen),
-    * host_links (total anchor occurrences), host_docs (distinct
-    * documents linking into the host). Output: hostCol, href, n_refs,
-    * fetch_rank, host_urls, host_links, host_docs.
-    *
-    * Scale shape — exactly ONE host-keyed exchange on URL-sized rows,
-    * in ONE linear pipeline (PlanSpec-asserted): the explicit
-    * repartition on `hostCol` is the only shuffle, and every
-    * downstream stage — the (host, href, doc) dedup aggregate, the
-    * host-level stats, the rank cut — runs partition-local on that
-    * clustering. The host stats are WINDOW aggregates over the same
-    * frame rather than a groupBy + self-join: a branching DAG here
-    * would re-plan the scan → extract → exchange subtree once per
-    * consumer (column pruning specializes each branch's copy below
-    * the exchange, which defeats exchange reuse), where the window
-    * formulation keeps a single subtree — one scan, one shuffle, a
-    * few per-host sorts of URL-sized rows. The rank filter keeps
-    * `budgetPerHost` rows per host, so the output is budget-shaped:
-    * O(hosts × budget), never link-count-shaped. The unit-weight
-    * specialization of the q50/q142 fill-to-budget discipline —
-    * fetches all cost 1, so the exclusive prefix sum IS rank−1 and
-    * the cut `rank <= budget`. A pathological mega-host lands on one
-    * task (inherent to any per-host contract); its sorts spill rather
-    * than fail, and the budget bounds what survives.
-    */
   /** Parses raw robots.txt BODIES into the (host, prefix, allow)
     * rules frame [[robotsFilter]] consumes — the text→rules step
     * between fetching `/robots.txt` and enforcing it, so the crawl
@@ -584,89 +552,44 @@ object TextOps {
   /** Robots-exclusion filtering over extracted/discovered URLs — the
     * compliance step between frontier discovery and the fetch queue.
     * `rules` is a (host, prefix, allow) frame (one row per
-    * Allow/Disallow line, pre-resolved per user-agent — parsing
-    * robots.txt bodies is an I/O concern upstream of the engine);
-    * verdict per URL follows the robots REP longest-match semantics:
-    * the longest rule prefix matching the URL's path (query included,
-    * as in the spec's string model) decides, an Allow and a Disallow
-    * of EQUAL length resolve to allow, and a URL matching no rule —
-    * including relative/non-http(s) URLs, which carry no host — is
-    * allowed. Output: idCol, hrefCol, allowed, matched_prefix ('' when
-    * no rule matched); one verdict row per input row, nothing dropped
-    * (the caller chooses to filter — keeping verdicts makes the op
-    * auditable, which a crawler's compliance layer must be).
+    * Allow/Disallow line, pre-resolved per user-agent — [[parseRobots]]
+    * derives it from robots.txt bodies); verdict per URL follows the
+    * robots REP longest-match semantics: the longest rule prefix
+    * matching the URL's path (query included, as in the spec's string
+    * model) decides, an Allow and a Disallow of EQUAL length resolve to
+    * allow, and a URL matching no rule — including relative/non-http(s)
+    * URLs, which carry no host — is allowed. Output: idCol, hrefCol,
+    * extraCols..., allowed, matched_prefix ('' when no rule matched);
+    * one verdict row per input row, nothing dropped (the caller chooses
+    * to filter — keeping verdicts makes the op auditable, which a
+    * crawler's compliance layer must be). `extraCols` carry through
+    * untouched.
     *
-    * Scale shape: the rules frame is tiny by nature (robots lines per
-    * host) and BROADCASTS; match + longest-match ranking shuffle only
-    * (id, href)-keyed candidate rows — never document payloads — and
-    * the rank window partitions per URL, so no host-level skew point
-    * exists (a mega-host's URLs spread across tasks).
+    * Evaluated MAP-ONLY per row: rules group once into (host,
+    * array<(prefix, allow)>) (rules are tiny by nature), broadcast-join
+    * on host, and the winning rule is `array_min` over the matching
+    * entries ordered by (-len(prefix), NOT allow, prefix) — the
+    * (len DESC, allow DESC, prefix ASC) rank the q148/q166 oracles
+    * replay with a window. Zero shuffles on the URL side and no window
+    * operator, so the same verdict runs inside a STREAMING plan
+    * ([[graft.streaming.SchedulerGate]] — non-time windows cannot run
+    * on streaming frames). A row with a null id is judged like any
+    * other row.
     */
   def robotsFilter(urls: DataFrame, idCol: String, hrefCol: String,
-      rules: DataFrame, ruleHostCol: String = "host",
-      rulePrefixCol: String = "prefix",
-      ruleAllowCol: String = "allow"): DataFrame = {
-    val reserved = Set("allowed", "matched_prefix", "_h", "_p", "_rn")
-    require(!reserved.contains(idCol) && !reserved.contains(hrefCol),
-      s"robotsFilter: id/href column collides with an output/working " +
-        s"column (${reserved.mkString(", ")}) — rename it first")
-    val base = urls.select(col(idCol), col(hrefCol),
-      regexp_extract(col(hrefCol), HostPattern, 1).as("_h"),
-      regexp_replace(col(hrefCol), "^https?://[^/]+", "").as("_p"))
-    val r = rules.select(col(ruleHostCol).as("_h"),
-      col(rulePrefixCol).as("_prefix"),
-      col(ruleAllowCol).cast("boolean").as("_allow"))
-    val verdicts = base
-      .filter(col("_h") =!= "")
-      .join(broadcast(r), Seq("_h"))
-      .filter(col("_p").startsWith(col("_prefix")))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(idCol), col(hrefCol))
-          .orderBy(length(col("_prefix")).desc, col("_allow").desc,
-            col("_prefix").asc)))
-      .filter(col("_rn") === 1)
-      .select(col(idCol), col(hrefCol), col("_allow").as("__a"),
-        col("_prefix").as("__mp"))
-    urls.select(col(idCol), col(hrefCol))
-      .join(verdicts, Seq(idCol, hrefCol), "left")
-      .select(col(idCol), col(hrefCol),
-        coalesce(col("__a"), lit(true)).as("allowed"),
-        coalesce(col("__mp"), lit("")).as("matched_prefix"))
-  }
-
-  /** [[robotsFilter]] re-expressed MAP-ONLY — the same verdict
-    * contract (one row per input URL: allowed + matched_prefix under
-    * REP longest-match, equal-length Allow wins, unmatched/host-less
-    * URLs allowed) evaluated per row over a per-host rule ARRAY
-    * instead of a candidate join + rank window: rules group once into
-    * (host, array<(prefix, allow)>) at plan time (rules are tiny by
-    * nature), broadcast-join on host, and the winning rule is
-    * `array_min` over the matching entries ordered by
-    * (-len(prefix), NOT allow, prefix) — exactly the window's
-    * (len DESC, allow DESC, prefix ASC). Zero shuffles on the URL
-    * side and NO window operator, which is what makes this form legal
-    * inside a STREAMING plan ([[graft.streaming.SchedulerGate]] —
-    * non-time windows cannot run on streaming frames); batch callers
-    * keep [[robotsFilter]], whose declarative join+window shape is
-    * what the q148/q166 oracles replay. ApiSpec pins row-for-row
-    * equality between the two forms on the branch-covering fixture.
-    * `extraCols` carry through untouched (one row in, one row out).
-    */
-  def robotsFilterMapOnly(urls: DataFrame, idCol: String, hrefCol: String,
       rules: DataFrame, ruleHostCol: String = "host",
       rulePrefixCol: String = "prefix", ruleAllowCol: String = "allow",
       extraCols: Seq[String] = Nil): DataFrame = {
     val reserved = Set("allowed", "matched_prefix", "_h", "_pth", "_rs",
       "_best")
     require((idCol +: hrefCol +: extraCols).forall(!reserved.contains(_)),
-      s"robotsFilterMapOnly: id/href/extra column collides with an " +
+      s"robotsFilter: id/href/extra column collides with an " +
         s"output/working column (${reserved.mkString(", ")}) — rename " +
         "it first")
     // drop empty-host rule rows BEFORE grouping: host-less URLs (and
-    // rules) key to _h = '', and the batch form's URL-side `_h != ''`
-    // filter guarantees host-less URLs are ALWAYS allowed — without
-    // this guard an ''-keyed rule group would join those rows here and
-    // could flip their verdict (the two forms must agree row-for-row)
+    // rules) key to _h = '', and host-less URLs are ALWAYS allowed —
+    // without this guard an ''-keyed rule group would join those rows
+    // and could flip their verdict
     val r = rules.select(col(ruleHostCol).as("_h"),
         struct(col(rulePrefixCol).cast("string").as("p"),
           col(ruleAllowCol).cast("boolean").as("a")).as("_r"))
@@ -687,6 +610,38 @@ object TextOps {
         coalesce(col("_best.p"), lit("")).as("matched_prefix"): _*)
   }
 
+  /** Frontier rollup + politeness budget — the consumer of
+    * [[extractLinks]] that turns raw anchors into a crawl schedule:
+    * absolute links aggregate per (host, href) with their in-link
+    * count, each host's URLs rank most-referenced-first (ties by href
+    * — deterministic, replayable), and the per-host fetch budget keeps
+    * only the first `budgetPerHost` (politeness: a crawler issues at
+    * most that many fetches per host per cycle). Each kept URL carries
+    * its host's frontier rollup: host_urls (distinct URLs seen),
+    * host_links (total anchor occurrences), host_docs (distinct
+    * documents linking into the host). Output: hostCol, href, n_refs,
+    * fetch_rank, host_urls, host_links, host_docs.
+    *
+    * Scale shape — exactly ONE host-keyed exchange on URL-sized rows,
+    * in ONE linear pipeline (PlanSpec-asserted): the explicit
+    * repartition on `hostCol` is the only shuffle, and every
+    * downstream stage — the (host, href, doc) dedup aggregate, the
+    * host-level stats, the rank cut — runs partition-local on that
+    * clustering. The host stats are WINDOW aggregates over the same
+    * frame rather than a groupBy + self-join: a branching DAG here
+    * would re-plan the scan → extract → exchange subtree once per
+    * consumer (column pruning specializes each branch's copy below
+    * the exchange, which defeats exchange reuse), where the window
+    * formulation keeps a single subtree — one scan, one shuffle, a
+    * few per-host sorts of URL-sized rows. The rank filter keeps
+    * `budgetPerHost` rows per host, so the output is budget-shaped:
+    * O(hosts × budget), never link-count-shaped. The unit-weight
+    * specialization of the q50/q142 fill-to-budget discipline —
+    * fetches all cost 1, so the exclusive prefix sum IS rank−1 and
+    * the cut `rank <= budget`. A pathological mega-host lands on one
+    * task (inherent to any per-host contract); its sorts spill rather
+    * than fail, and the budget bounds what survives.
+    */
   def frontierBudget(links: DataFrame, idCol: String, hostCol: String,
       hrefCol: String, budgetPerHost: Int): DataFrame = {
     require(budgetPerHost >= 1,
@@ -908,9 +863,8 @@ object TextOps {
     * Shape at 100 TB: lines explode with their ordinal (the Generate
     * stays in its input partition — no shuffle to split); the
     * document-frequency aggregate shuffles ONLY (id, hash60) longs —
-    * never line text (the [[commonGramRatio]] discipline) — with
-    * countDistinct's two-phase partial dedup collapsing repeats
-    * map-side; the common set (keys over `maxDocFreq`) is tiny by
+    * never line text (the [[commonGramRatio]] discipline) — with the
+    * (key, id) distinct collapsing repeats map-side; the common set (keys over `maxDocFreq`) is tiny by
     * construction — boilerplate cardinality, not corpus cardinality —
     * so AQE broadcasts the marker join back onto the unshuffled line
     * stream; re-assembly is the single doc-keyed exchange, memory
@@ -918,31 +872,46 @@ object TextOps {
     * line keys corpus-wide (P(collision) ~ n²/2^61) — acceptable for
     * a boilerplate filter and exactly replayed by the oracle, which
     * computes the same hashes.
+    *
+    * The self pass is [[linesProbe]] with the frame as its own corpus:
+    * the same body, over the same [[lineRows]] derivation, as
+    * [[dedupLinesAgainst]] and [[dedupLinesAgainstIndex]] (a row with a
+    * null id counts as one document, as it does in the index).
     */
   def dedupLines(df: DataFrame, idCol: String, textCol: String,
-      maxDocFreq: Int = 4): DataFrame = {
-    require(maxDocFreq >= 1, s"dedupLines: maxDocFreq $maxDocFreq < 1")
-    requireLineCols(idCol, "dedupLines")
-    val lines = linePositions(df, idCol, textCol)
-    val common = commonLineKeys(df, idCol, textCol, maxDocFreq)
+      maxDocFreq: Int = 4): DataFrame =
+    linesProbe(df, idCol, textCol,
+      IndexMaintenance.Corpus.derived()(lineRows(df, idCol, textCol)),
+      commonLines(maxDocFreq, "dedupLines"), "dedupLines")
+
+  /** The line-dedup probe, ONE body for the self pass, the inline
+    * delta pass and the persisted-index pass: the delta's lines
+    * (the shared [[linePositions]] split) left-join the `common` keys
+    * of the corpus's line counts — pruned to the delta's `__lp`
+    * prefixes when the source is an index — and re-assemble; presence
+    * rides the `_hit` marker, never payload null-ness (the q65
+    * discipline), and a null `_kh` (blank line) joins nothing, so
+    * blank lines are kept.
+    */
+  private def linesProbe(newDf: DataFrame, idCol: String, textCol: String,
+      corpus: IndexMaintenance.Corpus, common: DataFrame => DataFrame,
+      op: String): DataFrame = {
+    requireLineCols(idCol, op)
+    val lines = linePositions(newDf, idCol, textCol)
+    val hits = common(corpus.pruned("lines",
+        lines.filter(col("_kh").isNotNull), col("_kh")))
       .withColumn("_hit", lit(1))
-    // presence via the marker column, never payload null-ness (the
-    // q65 discipline); a null _kh (blank line) joins nothing => kept
-    reassembleLines(lines.join(common, Seq("_kh"), "left"), idCol)
+    reassembleLines(lines.join(hits, Seq("_kh"), "left"), idCol)
   }
 
-  /** The over-threshold normalized-line keys of a corpus — ONE
-    * derivation shared by [[dedupLines]], [[dedupLinesAgainst]], and
-    * the streaming gate ([[graft.streaming.LineGate]]). Output: _kh.
-    */
-  private[graft] def commonLineKeys(df: DataFrame, idCol: String,
-      textCol: String, maxDocFreq: Int): DataFrame =
-    linePositions(df, idCol, textCol)
-      .filter(col("_kh").isNotNull)
-      .groupBy(col("_kh"))
-      .agg(countDistinct(col(idCol)).as("_df"))
-      .filter(col("_df") > maxDocFreq)
-      .select(col("_kh"))
+  /** THE boilerplate threshold of every line-dedup path and of
+    * [[graft.streaming.LineGate]]: a (lh, n_docs) line-count table →
+    * the `_kh` keys in MORE than `maxDocFreq` distinct documents. */
+  private[graft] def commonLines(maxDocFreq: Int,
+      op: String): DataFrame => DataFrame = {
+    require(maxDocFreq >= 1, s"$op: maxDocFreq $maxDocFreq < 1")
+    _.filter(col("n_docs") > maxDocFreq).select(col("lh").as("_kh"))
+  }
 
   // pos/col are posexplode's intermediate output names (the
   // extractLinks discipline)
@@ -991,20 +960,18 @@ object TextOps {
     * never counts toward the threshold — delta-internal repetition is
     * [[dedupLines]]' job, run over the batch itself when wanted. At
     * 100 TB the corpus side is materialized once ([[writeLineIndex]])
-    * and probed per ingest batch ([[dedupLinesAgainstIndex]]); this
-    * inline form is the contract both are held to. Output: the
-    * [[dedupLines]] schema over the NEW docs only.
+    * and probed per ingest batch ([[dedupLinesAgainstIndex]]). The two
+    * forms differ only in where the corpus's line counts come from —
+    * [[lineRows]] derived here in memory, or the index's reconciled
+    * table — and share one probe body ([[linesProbe]]), so they agree
+    * by construction. Output: the [[dedupLines]] schema over the NEW
+    * docs only.
     */
   def dedupLinesAgainst(newDf: DataFrame, corpusDf: DataFrame,
-      idCol: String, textCol: String, maxDocFreq: Int = 4): DataFrame = {
-    require(maxDocFreq >= 1, s"dedupLinesAgainst: maxDocFreq $maxDocFreq < 1")
-    requireLineCols(idCol, "dedupLinesAgainst")
-    val common = commonLineKeys(corpusDf, idCol, textCol, maxDocFreq)
-      .withColumn("_hit", lit(1))
-    reassembleLines(
-      linePositions(newDf, idCol, textCol)
-        .join(common, Seq("_kh"), "left"), idCol)
-  }
+      idCol: String, textCol: String, maxDocFreq: Int = 4): DataFrame =
+    linesProbe(newDf, idCol, textCol,
+      IndexMaintenance.Corpus.derived()(lineRows(corpusDf, idCol, textCol)),
+      commonLines(maxDocFreq, "dedupLinesAgainst"), "dedupLinesAgainst")
 
   /** The line-count index family, sharing the gram family's reconcile
     * algebra (exact BY ADDITIVITY): `lines` = (lh, n_docs)
@@ -1022,7 +989,11 @@ object TextOps {
       IndexMaintenance.Reconcile.Summed(Seq("lh"), Seq("n_docs")),
       Some("__lp" -> col("lh")))))
 
-  private def lineRows(df: DataFrame, idCol: String,
+  /** The line family's corpus table — the ONE derivation behind every
+    * line-dedup path, the index build/fold and LineGate: per normalized
+    * line, its distinct-document count (blank lines are never
+    * counted). */
+  private[graft] def lineRows(df: DataFrame, idCol: String,
       textCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta =
     IndexMaintenance.Delta("lines" -> linePositions(df, idCol, textCol)
       .filter(col("_kh").isNotNull)
@@ -1082,27 +1053,19 @@ object TextOps {
     * pruning (an ingest batch's line keys touch a handful of
     * prefixes, never the corpus-wide line table), layered runs
     * reconcile by per-line SUM, and `maxDocFreq` applies to the
-    * reconciled totals. Output identical to the inline path on the
-    * same split (DedupSpec parity; q153 gates fold==rebuild on the
-    * driver's hash).
+    * reconciled totals — [[linesProbe]] over the index's table.
+    * Output identical to the inline path on the same split (DedupSpec
+    * parity; q153 gates fold==rebuild on its oracle hash).
     */
   def dedupLinesAgainstIndex(newDf: DataFrame, idCol: String,
       textCol: String, indexPath: String, maxDocFreq: Int = 4): DataFrame = {
-    require(maxDocFreq >= 1,
-      s"dedupLinesAgainstIndex: maxDocFreq $maxDocFreq < 1")
-    requireLineCols(idCol, "dedupLinesAgainstIndex")
-    val s = newDf.sparkSession
     val op = "dedupLinesAgainstIndex"
-    val m = IndexMaintenance.readMeta(s, indexPath, LineIndex, op)
-    val lines = linePositions(newDf, idCol, textCol)
-    val prefixes = IndexMaintenance.prefixesOf(
-      lines.filter(col("_kh").isNotNull), col("_kh"), m)
-    val common = IndexMaintenance.read(s, indexPath, LineIndex, m, "lines",
-        op, Some(prefixes))
-      .filter(col("n_docs") > maxDocFreq)
-      .select(col("lh").as("_kh"), lit(1).as("_hit"))
-    reassembleLines(lines.join(common, Seq("_kh"), "left"), idCol)
+    val common = commonLines(maxDocFreq, op)
+    linesProbe(newDf, idCol, textCol,
+      IndexMaintenance.Corpus.indexed(newDf.sparkSession, indexPath,
+        LineIndex, op), common, op)
   }
+
   /** Apply a frame of per-line DROP DECISIONS — (idCol, pos) rows,
     * e.g. collected from [[graft.streaming.LineGate.drops]]'s append
     * sink — to the original documents: the consumer-side re-assembly
@@ -1131,22 +1094,6 @@ object TextOps {
         .join(marks, Seq(idCol, "pos"), "left"), idCol)
   }
 
-  /** The streaming gate's author-time read of a persisted
-    * [[writeLineIndex]]: full reconciled counts (no delta exists yet
-    * to prune by), thresholded to the over-threshold key set.
-    * Output: _kh.
-    */
-  private[graft] def commonLinesFromIndex(
-      s: org.apache.spark.sql.SparkSession, indexPath: String,
-      maxDocFreq: Int): DataFrame = {
-    require(maxDocFreq >= 1,
-      s"commonLinesFromIndex: maxDocFreq $maxDocFreq < 1")
-    val op = "commonLinesFromIndex"
-    IndexMaintenance.read(s, indexPath, LineIndex,
-        IndexMaintenance.readMeta(s, indexPath, LineIndex, op), "lines", op)
-      .filter(col("n_docs") > maxDocFreq)
-      .select(col("lh").as("_kh"))
-  }
   /** Quantized bigram language-model quality score — the CCNet/KenLM
     * perplexity filter (Wenzek et al. 2020, "CCNet: Extracting High
     * Quality Monolingual Datasets from Web Crawl Data") re-expressed

@@ -31,8 +31,14 @@ object VectorOps {
       col("nrm").as("na"))
     val b = base.select(col(idCol).as("vec_b"), col("v").as("vb"),
       col("nrm").as("nb"))
+    topKByCosine(a.join(b, col("vec_a") < col("vec_b")), k)
+  }
+
+  /** Global top-k of candidate (vec_a, va, na, vec_b, vb, nb) pairs by
+    * cosine, ties by ids: vec_a, vec_b, rn. */
+  private def topKByCosine(pairs: DataFrame, k: Int): DataFrame = {
     val ord = Seq(col("sim").desc, col("vec_a").asc, col("vec_b").asc)
-    a.join(b, col("vec_a") < col("vec_b"))
+    pairs
       .select(col("vec_a"), col("vec_b"),
         (expr("dot_f(va, vb)") / (col("na") * col("nb"))).as("sim"))
       .orderBy(ord: _*).limit(k)
@@ -58,15 +64,8 @@ object VectorOps {
       col("v").as("va"), col("nrm").as("na"))
     val b = withB.select(col("bucket"), col(idCol).as("vec_b"),
       col("v").as("vb"), col("nrm").as("nb"))
-    val ord = Seq(col("sim").desc, col("vec_a").asc, col("vec_b").asc)
-    a.join(b, Seq("bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        (expr("dot_f(va, vb)") / (col("na") * col("nb"))).as("sim"))
-      .orderBy(ord: _*).limit(k)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(spark_partition_id()).orderBy(ord: _*)).cast("long"))
-      .select("vec_a", "vec_b", "rn")
+    topKByCosine(a.join(b, Seq("bucket")).filter(col("vec_a") < col("vec_b")),
+      k)
   }
 
   /** Embedding-cosine near-duplicate PAIRS above a similarity
@@ -95,18 +94,27 @@ object VectorOps {
     graft.functions.SketchAggregates.register(df.sparkSession)
     val base = normalized(df, idCol, vecCol)
     val bands = signBands(base, idCol, planes, rowsPerBand)
-    val cand = DedupOps.cappedCandidatePairs(bands,
-      Seq(col("band"), col("bkey")), idCol, maxBucket, "vec_a", "vec_b")
-    cand
+    verifyCosine(DedupOps.cappedCandidatePairs(bands,
+        Seq(col("band"), col("bkey")), idCol, maxBucket, "vec_a", "vec_b")
       .join(base.select(col(idCol).as("vec_a"), col("v").as("va"),
         col("nrm").as("na")), Seq("vec_a"))
       .join(base.select(col(idCol).as("vec_b"), col("v").as("vb"),
-        col("nrm").as("nb")), Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
+        col("nrm").as("nb")), Seq("vec_b")), "vec_a", "vec_b",
+      simX1000Threshold)
+  }
+
+  /** THE exact cosine verify, written once for the self-join and both
+    * probe sources: candidate pairs carrying both sides' normalized
+    * vectors and norms as (va, na, vb, nb) → aCol, bCol, sim_x1000
+    * (floor of cosine × 1000, >= threshold).
+    */
+  private def verifyCosine(pairs: DataFrame, aCol: String, bCol: String,
+      simX1000Threshold: Int): DataFrame =
+    pairs
+      .select(col(aCol), col(bCol),
         floor(expr("dot_f(va, vb)") / (col("na") * col("nb")) * 1000)
           .cast("long").as("sim_x1000"))
       .filter(col("sim_x1000") >= simX1000Threshold)
-  }
 
   /** Banded sign-signature rows: (idCol, band, bkey) — the ONE
     * definition of the hyperplane banding, shared by the self-join
@@ -133,37 +141,51 @@ object VectorOps {
   /** Incremental embedding dedup: near-dup pairs between a NEW batch
     * and the EXISTING corpus — the vector-space twin of
     * [[DedupOps.minhashPairsAgainst]] (q59's shape, for embedding
-    * columns). Corpus band buckets aggregate to capped id-lists (an
-    * over-hot signature blocks nothing — the q21 skew contract), the
-    * new batch's band keys probe them, and exact cosine verifies
-    * candidates only. The corpus is never re-paired against itself; at
-    * 100TB the bucket index is materialized once and re-probed per
-    * ingest batch. Output: vec_new, vec_old, sim_x1000.
+    * columns): [[signProbe]] over the [[signRows]] tables derived in
+    * memory from `corpusDf`. Corpus band buckets aggregate to capped
+    * id-lists (an over-hot signature blocks nothing — the q21 skew
+    * contract), the new batch's band keys probe them, and exact cosine
+    * verifies candidates only. The corpus is never re-paired against
+    * itself; at 100TB the bucket index is materialized once
+    * ([[writeSignIndex]]) and re-probed per ingest batch
+    * ([[probeSignIndex]]). Output: vec_new, vec_old, sim_x1000.
     */
   def nearDupPairsAgainst(newDf: DataFrame, corpusDf: DataFrame,
       idCol: String, vecCol: String, planes: Seq[Seq[Double]],
       simX1000Threshold: Int, rowsPerBand: Int = 4,
-      maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
+      maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame =
+    signProbe(newDf, idCol, vecCol, planes,
+      IndexMaintenance.Corpus.derived("max_bucket" -> maxBucket,
+        "rows_per_band" -> rowsPerBand)(
+        signRows(normalized(corpusDf, idCol, vecCol), idCol, planes,
+          "nearDupPairsAgainst")),
+      simX1000Threshold, "nearDupPairsAgainst")
+
+  /** The sign-LSH probe, ONE body for both corpus sources: delta
+    * vectors band map-only with the corpus's `rows_per_band` (the
+    * caller's parameter inline, the index's own meta otherwise — a
+    * probe banding with another geometry would match nothing it
+    * should), join the live buckets, and verify exact cosine against
+    * the corpus `vectors` table. `planes` are the caller's (the LSH
+    * contract: the build's own planes on every side).
+    */
+  private def signProbe(newDf: DataFrame, idCol: String, vecCol: String,
+      planes: Seq[Seq[Double]], corpus: IndexMaintenance.Corpus,
+      simX1000Threshold: Int, op: String): DataFrame = {
+    val rowsPerBand = corpus.meta.int("rows_per_band")
     require(planes.nonEmpty && planes.size % rowsPerBand == 0,
-      s"nearDupPairsAgainst: ${planes.size} planes not divisible into bands of $rowsPerBand")
-    graft.functions.SketchAggregates.register(newDf.sparkSession)
+      s"$op: ${planes.size} planes not divisible into bands of $rowsPerBand")
     val bNew = normalized(newDf, idCol, vecCol)
-    val bOld = normalized(corpusDf, idCol, vecCol)
-    val buckets = DedupOps.bandBuckets(
-      signBands(bOld, idCol, planes, rowsPerBand), idCol, maxBucket)
-    val cand = signBands(bNew, idCol, planes, rowsPerBand)
-      .join(buckets, Seq("band", "bkey"))
-      .select(col(idCol).as("vec_new"), explode(col("__cs")).as("vec_old"))
-      .dropDuplicates("vec_new", "vec_old")
-    cand
-      .join(bNew.select(col(idCol).as("vec_new"), col("v").as("vn"),
-        col("nrm").as("nn")), Seq("vec_new"))
-      .join(bOld.select(col(idCol).as("vec_old"), col("v").as("vo"),
-        col("nrm").as("no")), Seq("vec_old"))
-      .select(col("vec_new"), col("vec_old"),
-        floor(expr("dot_f(vn, vo)") / (col("nn") * col("no")) * 1000)
-          .cast("long").as("sim_x1000"))
-      .filter(col("sim_x1000") >= simX1000Threshold)
+    verifyCosine(signBands(bNew, idCol, planes, rowsPerBand)
+        .join(corpus("buckets").filter(col("__cs").isNotNull),
+          Seq("band", "bkey"))
+        .select(col(idCol).as("vec_new"), explode(col("__cs")).as("vec_old"))
+        .dropDuplicates("vec_new", "vec_old")
+        .join(bNew.select(col(idCol).as("vec_new"), col("v").as("va"),
+          col("nrm").as("na")), Seq("vec_new"))
+        .join(corpus("vectors").select(col("vec_old"), col("vo").as("vb"),
+          col("no").as("nb")), Seq("vec_old")),
+      "vec_new", "vec_old", simX1000Threshold)
   }
 
   /** The sign-LSH index family — the vector twin of
@@ -180,25 +202,23 @@ object VectorOps {
     _ => Seq(DedupOps.bucketTable(withPrefix = false),
       IndexMaintenance.Table("vectors", Seq("vec_old"), 8)))
 
-  /** Row derivation over one persisted normalize pass, banded with the
-    * INDEX's rows_per_band. */
-  private def signRows[T](df: DataFrame, idCol: String, vecCol: String,
-      planes: Seq[Seq[Double]], op: String)(go: (IndexMaintenance.Meta =>
-        IndexMaintenance.Delta) => T): T = {
-    graft.functions.SketchAggregates.register(df.sparkSession)
-    val base = normalized(df, idCol, vecCol).persist()
-    try go { m =>
-      val rowsPerBand = m.int("rows_per_band")
-      require(planes.nonEmpty && planes.size % rowsPerBand == 0,
-        s"$op: ${planes.size} planes not divisible into the index's " +
-          s"bands of $rowsPerBand")
-      IndexMaintenance.Delta(
-        "buckets" -> DedupOps.bandBucketsAll(
-          signBands(base, idCol, planes, rowsPerBand), idCol,
-          m.int("max_bucket")),
-        "vectors" -> base.select(col(idCol).as("vec_old"), col("v").as("vo"),
-          col("nrm").as("no")))
-    } finally { base.unpersist(); () }
+  /** The sign family's corpus tables — the ONE derivation behind the
+    * index build/fold and the inline probe — over a normalize pass
+    * ([[normalized]]), banded with the meta's rows_per_band. */
+  private def signRows(base: DataFrame, idCol: String,
+      planes: Seq[Seq[Double]], op: String)(
+      m: IndexMaintenance.Meta): IndexMaintenance.Delta = {
+    graft.functions.SketchAggregates.register(base.sparkSession)
+    val rowsPerBand = m.int("rows_per_band")
+    require(planes.nonEmpty && planes.size % rowsPerBand == 0,
+      s"$op: ${planes.size} planes not divisible into the index's " +
+        s"bands of $rowsPerBand")
+    IndexMaintenance.Delta(
+      "buckets" -> DedupOps.bandBucketsAll(
+        signBands(base, idCol, planes, rowsPerBand), idCol,
+        m.int("max_bucket")),
+      "vectors" -> base.select(col(idCol).as("vec_old"), col("v").as("vo"),
+        col("nrm").as("no")))
   }
 
   /** Materialize the corpus side of [[probeSignIndex]] to parquet
@@ -208,7 +228,8 @@ object VectorOps {
   def writeSignIndex(corpus: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], path: String, rowsPerBand: Int = 4,
       maxBucket: Int = DedupOps.DefaultMaxBucket): Unit =
-    signRows(corpus, idCol, vecCol, planes, "writeSignIndex")(
+    IndexMaintenance.pinned(normalized(corpus, idCol, vecCol),
+      signRows(_, idCol, planes, "writeSignIndex"))(
       IndexMaintenance.write(corpus.sparkSession, path, SignIndex,
         "max_bucket" -> maxBucket, "rows_per_band" -> rowsPerBand))
 
@@ -219,7 +240,8 @@ object VectorOps {
     */
   def foldIntoSignIndex(delta: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], indexPath: String): Unit = {
-    signRows(delta, idCol, vecCol, planes, "foldIntoSignIndex")(
+    IndexMaintenance.pinned(normalized(delta, idCol, vecCol),
+      signRows(_, idCol, planes, "foldIntoSignIndex"))(
       IndexMaintenance.fold(delta.sparkSession, indexPath, SignIndex,
         "foldIntoSignIndex"))
     ()
@@ -233,7 +255,8 @@ object VectorOps {
   def foldIntoSignIndex(delta: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], indexPath: String,
       outPath: String): Unit =
-    signRows(delta, idCol, vecCol, planes, "foldIntoSignIndex")(
+    IndexMaintenance.pinned(normalized(delta, idCol, vecCol),
+      signRows(_, idCol, planes, "foldIntoSignIndex"))(
       IndexMaintenance.foldTo(delta.sparkSession, indexPath, outPath,
         SignIndex, "foldIntoSignIndex"))
 
@@ -244,7 +267,8 @@ object VectorOps {
       planes: Seq[Seq[Double]], indexPath: String,
       compactThreshold: Int =
         IndexMaintenance.DefaultCompactThreshold): Boolean =
-    signRows(delta, idCol, vecCol, planes, "maintainSignIndex")(
+    IndexMaintenance.pinned(normalized(delta, idCol, vecCol),
+      signRows(_, idCol, planes, "maintainSignIndex"))(
       IndexMaintenance.maintain(delta.sparkSession, indexPath, SignIndex,
         "maintainSignIndex", compactThreshold)).contains(true)
 
@@ -257,38 +281,22 @@ object VectorOps {
       "compactSignIndex")
 
   /** [[nearDupPairsAgainst]] probing a PERSISTED index
-    * ([[writeSignIndex]]): delta vectors band map-only, join the
-    * bucket parquet (layered runs reconciled through the exact
-    * cross-run cap arithmetic), verify exact cosine against the stored
-    * normalized vectors — identical output to the inline path on the
-    * same split (parity-tested), with no corpus re-normalization or
-    * re-banding per batch. `planes`/`rowsPerBand` must match the index
-    * build. Output: vec_new, vec_old, sim_x1000.
+    * ([[writeSignIndex]]): the same [[signProbe]] over the index's
+    * tables (layered runs reconciled through the exact cross-run cap
+    * arithmetic), banded with the `rows_per_band` the index was built
+    * with — identical output to the inline path on the same split
+    * (parity-tested), with no corpus re-normalization or re-banding
+    * per batch. `planes` must be the build's. Output: vec_new,
+    * vec_old, sim_x1000.
     */
   def probeSignIndex(newDf: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], indexPath: String,
-      simX1000Threshold: Int, rowsPerBand: Int = 4): DataFrame = {
-    require(planes.nonEmpty && planes.size % rowsPerBand == 0,
-      s"probeSignIndex: ${planes.size} planes not divisible into bands of $rowsPerBand")
-    val s = newDf.sparkSession
-    val m = IndexMaintenance.readMeta(s, indexPath, SignIndex, "probeSignIndex")
-    val buckets = IndexMaintenance.read(s, indexPath, SignIndex, m, "buckets",
-      "probeSignIndex").filter(col("__cs").isNotNull)
-    val vecs = IndexMaintenance.read(s, indexPath, SignIndex, m, "vectors",
-      "probeSignIndex")
-    val bNew = normalized(newDf, idCol, vecCol)
-    signBands(bNew, idCol, planes, rowsPerBand)
-      .join(buckets, Seq("band", "bkey"))
-      .select(col(idCol).as("vec_new"), explode(col("__cs")).as("vec_old"))
-      .dropDuplicates("vec_new", "vec_old")
-      .join(bNew.select(col(idCol).as("vec_new"), col("v").as("vn"),
-        col("nrm").as("nn")), Seq("vec_new"))
-      .join(vecs, Seq("vec_old"))
-      .select(col("vec_new"), col("vec_old"),
-        floor(expr("dot_f(vn, vo)") / (col("nn") * col("no")) * 1000)
-          .cast("long").as("sim_x1000"))
-      .filter(col("sim_x1000") >= simX1000Threshold)
-  }
+      simX1000Threshold: Int): DataFrame =
+    signProbe(newDf, idCol, vecCol, planes,
+      IndexMaintenance.Corpus.indexed(newDf.sparkSession, indexPath,
+        SignIndex, "probeSignIndex"),
+      simX1000Threshold, "probeSignIndex")
+
   /** Brute-force cosine top-k: rows matching `queryPred` are the query
     * set (broadcast), ranked per query with deterministic ties. Output:
     * qid, nid, rn. The recall baseline — LSH/IVF prune at scale.

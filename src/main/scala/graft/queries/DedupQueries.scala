@@ -1945,8 +1945,7 @@ SELECT id AS doc_id, w_degree, r AS rank FROM r5"""
   private def foldedWeightedDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     foldedWeightedCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldedwedge-").toString + "/ix"
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldedwedge-").toString + "/ix"
       val pairs = SharedStages.minhashPairs(s, dir)
         .select(col("doc_a").cast("string").as("ka"),
           col("doc_b").cast("string").as("kb"),
@@ -2015,8 +2014,7 @@ SELECT id AS doc_id, degree, r AS rank FROM r5"""
   private def foldedClustersShared(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val path = foldedClustersCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldedclusters-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldedclusters-").toString
       graft.jobs.Sinks.layout(foldedClusters(s, dir), tmp,
         partitionCols = Nil, sortCols = Seq("cluster_id", "doc_id"),
         numFiles = 1)
@@ -2102,8 +2100,7 @@ SELECT cluster_id, doc_id AS keeper_id, n_members, keeper_score FROM (
       val asg = graft.operators.ConnectedComponents.minLabel(
         graft.api.DedupOps.minhashPairs(corpus, "doc_id", "text"),
         "doc_a", "doc_b")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldcc-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldcc-").toString
       asg.write.mode("overwrite").parquet(tmp)
       tmp
     })
@@ -2131,8 +2128,7 @@ SELECT cluster_id, doc_id AS keeper_id, n_members, keeper_score FROM (
       dir: String): String =
     foldFpCache.computeIfAbsent(dir, { _ =>
       val dh = imageDhash(s, dir).localCheckpoint()
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldfp-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldfp-").toString
       graft.api.DedupOps.writeFingerprintIndex(
         dh.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "dhash64", bits = 64, hammingMax = 6, s"$tmp/v1")
@@ -2186,8 +2182,7 @@ FROM i GROUP BY doc_id, grp"""
       dir: String): String =
     foldGramCache.computeIfAbsent(dir, { _ =>
       val docs = Tables.documents(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldgram-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldgram-").toString
       graft.api.DedupOps.writeGramIndex(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", s"$tmp/v1")
@@ -2209,8 +2204,7 @@ FROM i GROUP BY doc_id, grp"""
       dir: String): String =
     foldMinhashCache.computeIfAbsent(dir, { _ =>
       val docs = Tables.documents(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldmh-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldmh-").toString
       graft.api.DedupOps.writeMinhashIndex(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", s"$tmp/v1")
@@ -2232,8 +2226,7 @@ FROM i GROUP BY doc_id, grp"""
     foldSignCache.computeIfAbsent(dir, { _ =>
       val emb = Tables.embeddings(s, dir)
       val planes = (0 until LshPlanes).map(plane)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldsign-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldsign-").toString
       graft.api.VectorOps.writeSignIndex(
         emb.filter(col("vec_id") % 5 === 1 || col("vec_id") % 5 === 2),
         "vec_id", "embedding", planes, s"$tmp/v1")
@@ -2249,8 +2242,7 @@ FROM i GROUP BY doc_id, grp"""
       dir: String): String =
     foldCdcCache.computeIfAbsent(dir, { _ =>
       val docs = Tables.documents(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldcdc-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldcdc-").toString
       graft.api.DedupOps.writeCdcChunkIndex(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", s"$tmp/v1",

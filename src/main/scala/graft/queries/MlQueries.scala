@@ -27,8 +27,7 @@ object MlQueries {
       val model = graft.api.VectorOps.ivfPqTrain(
         Tables.embeddings(s, dir), "vec_id", "embedding",
         nCells = 8, m = 16, k = 16, seed = 42L)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-ivfpq-").toString
       graft.api.VectorOps.writeIvfPqIndex(
         Tables.embeddings(s, dir), "vec_id", "embedding", model, tmp)
       tmp
@@ -293,8 +292,7 @@ FROM embeddings WHERE vec_id >= 100 AND vec_id < 110"""),
       val delta = emb.filter(col("vec_id") % 5 === 0)
       val model = graft.api.VectorOps.ivfPqTrain(
         c0, "vec_id", "embedding", nCells = 8, m = 16, k = 16, seed = 42L)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ivfpqfold-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-ivfpqfold-").toString
       graft.api.VectorOps.writeIvfPqIndex(
         c0, "vec_id", "embedding", model, tmp)
       val compacted = graft.api.VectorOps.maintainIvfPqIndex(

@@ -709,8 +709,7 @@ FROM v,
         java.lang.Integer.toHexString(System.identityHashCode(s))
       val li = s"graft_li_$sfx"
       val ord = s"graft_ord_$sfx"
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-bucketed-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-bucketed-").toString
       graft.jobs.Sinks.bucketedTable(
         Tables.lineitem(s, dir), li, s"$tmp/lineitem", 8, "l_orderkey")
       graft.jobs.Sinks.bucketedTable(
@@ -736,8 +735,7 @@ FROM v,
       val src = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"),
           expr("ts_ns div 1000").as("us"), col("event_type"), col("value"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-zorder-").toString + "/events"
+      val path = graft.api.Lifecycle.tempDir("graft-zorder-").toString + "/events"
       graft.jobs.Sinks.zorderedLayout(src, path, "user_id", "us",
         numFiles = 8)
       val r = src.agg(min(col("user_id")), max(col("user_id")),

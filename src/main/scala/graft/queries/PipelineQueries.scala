@@ -463,8 +463,7 @@ WHERE rb.fetch_rank <= 7"""
   private[graft] def foldedWeightedHostDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
     foldedWeightedHostCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldedwhost-").toString + "/ix"
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldedwhost-").toString + "/ix"
       val links = graft.api.TextOps.extractLinks(
         weightedLinkFixture(Tables.documents(s, dir)), "doc_id", "text")
       val edges = links.filter(col("host") =!= "")
@@ -495,8 +494,7 @@ WHERE rb.fetch_rank <= 7"""
   private[graft] def foldedEdgeDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     foldedEdgeCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldededge-").toString + "/ix"
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldededge-").toString + "/ix"
       val links = graft.api.TextOps.extractLinks(
         linkFixture(Tables.documents(s, dir)), "doc_id", "text")
       val edges = links.filter(col("host") =!= "")
@@ -2983,8 +2981,7 @@ GROUP BY shard"""),
   private[graft] def publishedShardsDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
     publishShardsCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-pubshards-").toString + "/rel"
+      val tmp = graft.api.Lifecycle.tempDir("graft-pubshards-").toString + "/rel"
       graft.api.SampleOps.publishShards(
         Tables.documents(s, dir).select(col("doc_id"), col("text"),
           size(split(col("text"), " ", -1)).cast("long").as("n_tok")),
@@ -3001,8 +2998,7 @@ GROUP BY shard"""),
   private[graft] def publishedCuratedDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
     publishCuratedCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-pubcurated-").toString + "/rel"
+      val tmp = graft.api.Lifecycle.tempDir("graft-pubcurated-").toString + "/rel"
       val docs = Tables.documents(s, dir).select(col("doc_id"),
         col("text"), col("source"),
         size(split(col("text"), " ", -1)).cast("long").as("n_tok"))
@@ -3033,8 +3029,7 @@ GROUP BY shard"""),
       dir: String): String =
     foldCardCache.computeIfAbsent(dir, { _ =>
       val docs = Tables.documents(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldcard-").toString + "/ix"
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldcard-").toString + "/ix"
       graft.api.CardOps.writeCardIndex(
         docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
         "source", "lang", tmp)
@@ -3059,8 +3054,7 @@ GROUP BY shard"""),
       dir: String): String =
     takedownCardCache.computeIfAbsent(dir, { _ =>
       val docs = Tables.documents(s, dir)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-takedowncard-").toString + "/ix"
+      val tmp = graft.api.Lifecycle.tempDir("graft-takedowncard-").toString + "/ix"
       graft.api.CardOps.writeCardIndex(
         docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
         "source", "lang", tmp)
@@ -3084,8 +3078,7 @@ GROUP BY shard"""),
   private[graft] def takedownEdgeDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     takedownEdgeCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-takedownedge-").toString + "/ix"
+      val tmp = graft.api.Lifecycle.tempDir("graft-takedownedge-").toString + "/ix"
       val links = graft.api.TextOps.extractLinks(
         linkFixture(Tables.documents(s, dir)), "doc_id", "text")
       val edges = links.filter(col("host") =!= "")
@@ -3113,8 +3106,7 @@ GROUP BY shard"""),
   private[graft] def takedownWeightedHostDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
     takedownWeightedHostCache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-takedownwhost-").toString + "/ix"
+      val tmp = graft.api.Lifecycle.tempDir("graft-takedownwhost-").toString + "/ix"
       val links = graft.api.TextOps.extractLinks(
         weightedLinkFixture(Tables.documents(s, dir)), "doc_id", "text")
       val edges = links.filter(col("host") =!= "")
@@ -3174,8 +3166,7 @@ GROUP BY shard"""),
       dir: String): String =
     foldLineCache.computeIfAbsent(dir, { _ =>
       val lined = lineIndexFixture(Tables.documents(s, dir))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-foldline-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-foldline-").toString
       graft.api.TextOps.writeLineIndex(
         lined.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", s"$tmp/v1")
@@ -3296,8 +3287,7 @@ GROUP BY shard"""),
   private[graft] def hybridBm25Dir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     hybridBm25Cache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-hybbm25-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-hybbm25-").toString
       graft.api.TextOps.writeBm25Index(
         Tables.documents(s, dir), "doc_id", "text", s"$tmp/ix")
       s"$tmp/ix"
@@ -3321,8 +3311,7 @@ GROUP BY shard"""),
         .filter(expr("exists(v, x -> x != 0D)"))
       val model = graft.api.VectorOps.ivfPqTrain(
         cv, "_cid", "v", nCells = 8, m = 16, k = 16, seed = 42L)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-psgivfpq-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-psgivfpq-").toString
       // storeVectors: q129's exact-refine leg joins the stored chunk
       // vectors (cell-pruned) instead of re-chunking + re-embedding
       // the corpus per retrieval batch
@@ -3339,8 +3328,7 @@ GROUP BY shard"""),
         .filter(expr("exists(v, x -> x != 0D)"))
       val model = graft.api.VectorOps.ivfPqTrain(
         ce, "doc_id", "v", nCells = 8, m = 16, k = 16, seed = 42L)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-hybivfpq-").toString
+      val tmp = graft.api.Lifecycle.tempDir("graft-hybivfpq-").toString
       graft.api.VectorOps.writeIvfPqIndex(ce, "doc_id", "v", model, tmp)
       tmp
     })

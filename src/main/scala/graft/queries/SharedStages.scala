@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.function.{Function => JFunction}
 
@@ -53,26 +52,14 @@ object SharedStages {
   // would pin stopped test sessions in the map for the JVM lifetime
   private val cache = new ConcurrentHashMap[(String, String), String]
 
-  // every materialized temp dir is deleted on JVM exit (one hook, the
-  // stage parquet is tiny — pairs/clusters, never corpus data)
-  private val created = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    created.forEach { d =>
-      try {
-        import scala.jdk.CollectionConverters._
-        Files.walk(java.nio.file.Paths.get(d)).iterator().asScala.toSeq
-          .reverse.foreach(p => Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    }
-  }))
-
   private def materialized(s: SparkSession, dir: String, stage: String,
       sortCols: Seq[String])(build: => DataFrame): DataFrame = {
     val path = cache.computeIfAbsent((dir, stage),
       new JFunction[(String, String), String] {
         def apply(k: (String, String)): String = {
-          val tmp = Files.createTempDirectory(s"graft-$stage-").toString
-          created.add(tmp)
+          // deleted on JVM exit (the stage parquet is tiny —
+          // pairs/clusters, never corpus data)
+          val tmp = graft.api.Lifecycle.tempDir(s"graft-$stage-").toString
           graft.jobs.Sinks.layout(build, tmp, partitionCols = Nil,
             sortCols = sortCols, numFiles = 1)
           tmp

@@ -60,13 +60,10 @@ object CdcGate {
   def hitsGate(docs: DataFrame, idCol: String, textCol: String,
       tsCol: String, delay: String, window: String,
       indexPath: String): DataFrame = {
-    val s = docs.sparkSession
-    val m = graft.api.IndexMaintenance.readMeta(s, indexPath,
-      DedupOps.CdcIndex, "CdcGate.hitsGate")
-    val (modulus, w) = (m.int("modulus"), m.int("window"))
-    val corpus = graft.api.IndexMaintenance.read(s, indexPath,
-        DedupOps.CdcIndex, m, "chunks", "CdcGate.hitsGate", reconciled = false)
-      .select(col("c").as("_c"), lit(1L).as("_hit"))
+    val index = graft.api.IndexMaintenance.Corpus.indexed(docs.sparkSession,
+      indexPath, DedupOps.CdcIndex, "CdcGate.hitsGate", reconciled = false)
+    val (modulus, w) = (index.meta.int("modulus"), index.meta.int("window"))
+    val corpus = index("chunks").select(col("c").as("_c"), lit(1L).as("_hit"))
 
     val src = Watermark.on(docs, tsCol, delay)
     // the SAME chunking front end as the batch probe (null contract

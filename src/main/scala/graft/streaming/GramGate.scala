@@ -18,9 +18,9 @@ import graft.api.DedupOps
   *   - [[indexFromPath]] authors a [[GramSet]] ONCE — layered runs
   *     reconcile by the kernel's per-gram SUM
   *     ([[graft.api.IndexMaintenance.read]]), the min/cap
-  *     thresholds apply to the reconciled totals (exactly the batch
-  *     probe's read), and the resulting over-threshold gram-hash set
-  *     snapshots eagerly (localCheckpoint, cache-owned — the
+  *     thresholds apply to the reconciled totals (the batch probes'
+  *     one threshold, `DedupOps.sharedGrams`), and the resulting
+  *     over-threshold gram-hash set snapshots eagerly (localCheckpoint, cache-owned — the
   *     FingerprintGate non-recomputable trade). Authoring once
   *     matters: a lazy static plan would re-scan and re-reconcile the
   *     gram table on EVERY micro-batch of the ingest hot path. Note
@@ -88,20 +88,13 @@ object GramGate {
   def indexFromPath(spark: SparkSession, indexPath: String,
       minCorpusDocs: Int = 1, maxDocsPerGram: Int = 1000,
       snapshotPath: Option[String] = None): GramSet = {
-    require(minCorpusDocs >= 1,
-      s"GramGate.indexFromPath: minCorpusDocs $minCorpusDocs < 1")
-    require(maxDocsPerGram >= minCorpusDocs,
-      s"GramGate.indexFromPath: maxDocsPerGram $maxDocsPerGram < " +
-        s"minCorpusDocs $minCorpusDocs — the cap would reject every gram")
     val op = "GramGate.indexFromPath"
-    val m = graft.api.IndexMaintenance.readMeta(spark, indexPath,
-      DedupOps.GramIndex, op)
-    val cp = GateSnapshot.of(graft.api.IndexMaintenance.read(spark,
-        indexPath, DedupOps.GramIndex, m, "grams", op)
-      .filter(col("n_docs") >= minCorpusDocs &&
-        col("n_docs") <= maxDocsPerGram)
-      .select(col("gh").as("__gh"), lit(1L).as("_hit")), snapshotPath)
-    GramSet(cp, m.int("gram_tokens"))
+    val shared = DedupOps.sharedGrams(minCorpusDocs, maxDocsPerGram, op)
+    val corpus = graft.api.IndexMaintenance.Corpus.indexed(spark,
+      indexPath, DedupOps.GramIndex, op)
+    GramSet(GateSnapshot.of(
+        shared(corpus("grams")).withColumn("_hit", lit(1L)), snapshotPath),
+      corpus.meta.int("gram_tokens"))
   }
 
   /** docs: a STREAMING frame with (idCol, textCol, tsCol). See the

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.api.TextOps
+import graft.api.{IndexMaintenance, TextOps}
 
 /** Streaming boilerplate-line gate — the unbounded twin of
   * [[graft.api.TextOps.dedupLinesAgainstIndex]] (line-level corpus
@@ -21,10 +21,13 @@ import graft.api.TextOps
   * boilerplate-sized snapshot.
   *
   * Line splitting and key normalization come from THE shared
-  * `TextOps.linePositions` definition, and the over-threshold set
-  * from the shared `commonLineKeys` / `commonLinesFromIndex`
-  * derivations, so stream and batch cannot normalize or threshold
-  * differently — StreamingSpec pins row parity against the batch
+  * `TextOps.linePositions` definition, and the over-threshold set is
+  * the line family's one threshold (`TextOps.commonLines`) over its
+  * one row derivation (`TextOps.lineRows`) — derived from a corpus
+  * frame ([[fromCorpus]]) or read from a persisted index
+  * ([[indexFromPath]]), the two sources every batch line probe reads
+  * too — so stream and batch cannot normalize or threshold
+  * differently. StreamingSpec pins row parity against the batch
   * probe's dropped lines on the same delta/corpus split.
   *
   * Static-side contract (the [[FingerprintGate]] snapshot
@@ -32,10 +35,8 @@ import graft.api.TextOps
   * AND thresholded at author time, then eagerly
   * localCheckpoint-snapshotted — folds landing while the gate serves
   * are invisible until re-author, and compaction swaps require
-  * quiescing (the Bm25Gate/CdcGate reader contract). The lineage cut
-  * trades recomputability for snapshot isolation; see
-  * FingerprintGate's object note for when that trade is acceptable
-  * and the copy-to-stable-path alternative. Note one delta from the
+  * quiescing (the Bm25Gate/CdcGate reader contract); the two snapshot
+  * strategies are [[GateSnapshot]]'s note. Note one delta from the
   * batch probe: `maxDocFreq` BAKES into the snapshot (the set is
   * `count > maxDocFreq`); changing the threshold means re-authoring,
   * where the batch probe takes it as a read parameter.
@@ -56,13 +57,10 @@ object LineGate {
   /** Author the gate state from a corpus FRAME (the
     * [[graft.api.TextOps.dedupLinesAgainst]] static side). */
   def fromCorpus(corpus: DataFrame, idCol: String, textCol: String,
-      maxDocFreq: Int = 4): LineSet = {
-    require(maxDocFreq >= 1, s"LineGate.fromCorpus: maxDocFreq " +
-      s"$maxDocFreq < 1")
-    LineSet(GateSnapshot.inMemory(
-      TextOps.commonLineKeys(corpus, idCol, textCol, maxDocFreq)),
-      maxDocFreq)
-  }
+      maxDocFreq: Int = 4): LineSet =
+    author(IndexMaintenance.Corpus.derived()(
+        TextOps.lineRows(corpus, idCol, textCol)),
+      maxDocFreq, "LineGate.fromCorpus", None)
 
   /** Author the gate state from a PERSISTED
     * [[graft.api.TextOps.writeLineIndex]] — the stream deploy
@@ -75,9 +73,16 @@ object LineGate {
     */
   def indexFromPath(spark: SparkSession, indexPath: String,
       maxDocFreq: Int = 4, snapshotPath: Option[String] = None): LineSet =
-    LineSet(GateSnapshot.of(
-      TextOps.commonLinesFromIndex(spark, indexPath, maxDocFreq),
-      snapshotPath), maxDocFreq)
+    author(IndexMaintenance.Corpus.indexed(spark, indexPath,
+        TextOps.LineIndex, "LineGate.indexFromPath"),
+      maxDocFreq, "LineGate.indexFromPath", snapshotPath)
+
+  private def author(corpus: IndexMaintenance.Corpus, maxDocFreq: Int,
+      op: String, snapshotPath: Option[String]): LineSet = {
+    val common = TextOps.commonLines(maxDocFreq, op)
+    LineSet(GateSnapshot.of(common(corpus("lines")), snapshotPath),
+      maxDocFreq)
+  }
 
   /** newDocs: a STREAMING frame with (idCol, textCol). Emits
     * (idCol, pos, line) boilerplate hits, append mode, stateless —

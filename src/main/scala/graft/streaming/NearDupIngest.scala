@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.DedupOps
+import graft.api.{DedupOps, IndexMaintenance}
 
 /** Streaming incremental near-dup ingest — the unbounded twin of q59
   * (DedupOps.minhashPairsAgainst): a stream of NEW documents probes a
@@ -48,9 +48,10 @@ object NearDupIngest {
     }
   }
 
-  /** Build the index from a static corpus frame — same shingle/minhash
-    * /band derivation as every batch pair generator (shared
-    * DedupOps front end), so stream and corpus band identically.
+  /** Build the index from a static corpus frame through the minhash
+    * family's one row derivation (`DedupOps.minhashRows`, the tables
+    * the batch build and the inline probe derive too), so stream and
+    * corpus band identically.
     *
     * Both frames are PERSISTED here: the static side of a stream-static
     * join is re-evaluated every micro-batch, so an unpersisted index
@@ -63,17 +64,15 @@ object NearDupIngest {
     */
   def index(corpus: DataFrame, idCol: String, textCol: String,
       maxBucket: Int = DedupOps.DefaultMaxBucket): CorpusIndex = {
-    // the shared base is persisted FIRST so both derivations (bucket
+    // the shared base is persisted FIRST so both tables (bucket
     // aggregation and verify projection) read ONE cached corpus
     // tokenize+shingle pass — two independent persists would each
     // materialize their own full-corpus scan
     val hashed = DedupOps.shingleHashed(corpus, idCol, textCol).persist()
-    val buckets = DedupOps.bandBuckets(
-      DedupOps.withBandKeys(hashed).select(col(idCol), col("band"), col("bkey")),
-      idCol, maxBucket)
-    CorpusIndex(buckets.persist(),
-      hashed.select(col(idCol).as("doc_old"), col("hs").as("hs_old")),
-      base = hashed)
+    val rows = IndexMaintenance.Corpus.derived("max_bucket" -> maxBucket)(
+      DedupOps.minhashRows(hashed, idCol))
+    CorpusIndex(rows("buckets").filter(col("__cs").isNotNull).persist(),
+      rows("hashed"), base = hashed)
   }
 
   /** newDocs: a STREAMING frame with (idCol, textCol, tsCol). Emits
@@ -84,8 +83,8 @@ object NearDupIngest {
     * map-only → stream-static join on (band, bkey) → candidate
     * explode → within-watermark pair dedup (a doc's band rows all land
     * in its arrival batch, so the horizon only needs to cover one
-    * batch's skew) → exact-Jaccard verify against the static hash
-    * sets.
+    * batch's skew) → the family's exact-Jaccard verify
+    * (`DedupOps.verifyJaccard`) against the static hash sets.
     */
   def pairs(newDocs: DataFrame, idCol: String, textCol: String,
       tsCol: String, delay: String, corpus: CorpusIndex,
@@ -95,22 +94,19 @@ object NearDupIngest {
     // plan or be silently clobbered; fail fast instead (the
     // simhashPairs reserved-name contract)
     val reserved = Set("hs", "band", "bkey", "pos", "col", "__mh",
-      "__cs", "toks", "doc_new", "doc_old", "hs_new", "hs_old")
+      "__cs", "toks", "doc_new", "doc_old", "hs_a", "hs_b")
     Seq(idCol, tsCol).foreach(c => require(!reserved.contains(c),
       s"NearDupIngest.pairs: column '$c' collides with a working " +
         s"column (${reserved.mkString(", ")}) — rename it first"))
     val banded = DedupOps.withBandKeys(
       DedupOps.shingleHashed(newDocs, idCol, textCol, carry = Seq(tsCol)))
-    Watermark.on(banded, tsCol, delay)
+    val cand = Watermark.on(banded, tsCol, delay)
       .join(corpus.buckets, Seq("band", "bkey"))
-      .select(col(idCol).as("doc_new"), col(tsCol), col("hs").as("hs_new"),
+      .select(col(idCol).as("doc_new"), col(tsCol), col("hs").as("hs_a"),
         explode(col("__cs")).as("doc_old"))
       .dropDuplicatesWithinWatermark("doc_new", "doc_old")
-      .join(corpus.hashed, Seq("doc_old"))
-      .withColumn("it", size(array_intersect(col("hs_new"), col("hs_old"))).cast("long"))
-      .withColumn("un", size(array_distinct(concat(col("hs_new"), col("hs_old")))).cast("long"))
-      .select(col("doc_new"), col("doc_old"),
-        expr("(it * 1000) div un").as("jaccard_x1000"))
-      .filter(col("jaccard_x1000") >= jaccardX1000Threshold)
+      .join(corpus.hashed.select(col("doc_old"), col("hs_old").as("hs_b")),
+        Seq("doc_old"))
+    DedupOps.verifyJaccard(cand, "doc_new", "doc_old", jaccardX1000Threshold)
   }
 }

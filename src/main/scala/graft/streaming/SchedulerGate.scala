@@ -8,8 +8,7 @@ import graft.api.TextOps
 /** The streaming CRAWL SCHEDULER — the whole front door composed as
   * ONE gate, closing the loop the batch pieces prove individually:
   * q147 discovery ([[FrontierGate]]), q148/q166 robots compliance
-  * ([[TextOps.robotsFilterMapOnly]] — the map-only verdict form,
-  * because the batch op's rank window cannot run on a streaming
+  * ([[TextOps.robotsFilter]] — map-only, so it runs on a streaming
   * frame), q146's politeness budget (per-(host, time-window) fetch
   * cap — the [[QuotaCap.firstNPerKey]] discipline with cost = 1), and
   * q162's deployed host priority (the maintained edge index's
@@ -169,7 +168,7 @@ object SchedulerGate {
     // map-only robots verdict over the canonical URL (the form q148
     // enforces on raw hrefs; a canonical URL is still scheme://host/
     // path, so HostPattern and the path strip apply unchanged)
-    val verdicts = TextOps.robotsFilterMapOnly(disc, idCol,
+    val verdicts = TextOps.robotsFilter(disc, idCol,
       "canonical_url", state.rules, extraCols = Seq("host", tsCol))
     // per-(host, politeness-window) fetch budget: the QuotaCap
     // first-N-arrivals discipline with cost = 1 per fetch, under the

@@ -289,7 +289,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("persisted-index probes == inline incremental dedup (text + vector)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-idx-").toString
+    val dir = tempDir("graft-idx-").toString
     val newBatch = corpus.filter(col("row_key") === 13L)
     val old = corpus.filter(col("row_key") =!= 13L)
     DedupOps.writeMinhashIndex(old, "row_key", "body", s"$dir/text")
@@ -887,8 +887,7 @@ class ApiSpec extends SparkSpec {
       "keeper_id", "n_tok", k = 50)
     assert(sampled.count() == 50)
 
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_pipeline").toString + "/export"
+    val out = tempDir("graft_pipeline").toString + "/export"
     graft.jobs.Sinks.jsonl(sampled.select("keeper_id", "chunk_text"), out)
     val back = spark.read.json(out)
     assert(back.count() == 50)
@@ -1054,7 +1053,7 @@ class ApiSpec extends SparkSpec {
       "literal cell pruning") {
     graft.functions.VectorExpressions.register(spark)
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-t-").toString
+    val dir = tempDir("graft-ivfpq-t-").toString
     try {
       val model = VectorOps.ivfPqTrain(emb, "vec_id", "embedding",
         nCells = 4, m = 8, k = 8, seed = 7L)
@@ -1134,7 +1133,7 @@ class ApiSpec extends SparkSpec {
     val c0 = emb.filter(col("vec_id") % 5 =!= 0)
     val delta = emb.filter(col("vec_id") % 5 === 0 && col("vec_id") >= 10)
     val probes = emb.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqf-").toString
+    val dir = tempDir("graft-ivfpqf-").toString
     def dirBytes(p: String): Long = {
       val st = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
       try st.filter(java.nio.file.Files.isRegularFile(_))
@@ -1172,7 +1171,7 @@ class ApiSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val c0 = emb.filter(col("vec_id") % 5 =!= 0)
     val delta = emb.filter(col("vec_id") % 5 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqv-").toString
+    val dir = tempDir("graft-ivfpqv-").toString
     try {
       val model = VectorOps.ivfPqTrain(c0, "vec_id", "embedding",
         nCells = 4, m = 8, k = 8, seed = 7L)
@@ -1223,7 +1222,7 @@ class ApiSpec extends SparkSpec {
     val d1 = emb.filter(col("vec_id") % 5 === 1)
     val d2 = emb.filter(col("vec_id") % 5 === 0 && col("vec_id") >= 10)
     val probes = emb.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqm-").toString
+    val dir = tempDir("graft-ivfpqm-").toString
     // ONE frozen model throughout (the FAISS add contract) — rebuilds
     // under the same model are the exact-parity oracle
     val model = VectorOps.ivfPqTrain(c0, "vec_id", "embedding",
@@ -1296,7 +1295,7 @@ class ApiSpec extends SparkSpec {
       Seq(("a", 2L), ("a", 3L), ("c", 20L)),
       Seq(("b", 10L), ("b", 11L), ("c", 20L), ("c", 21L)))
     val dfs = batches.map(_.toDF("k", "u"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-dstate-").toString
+    val dir = tempDir("graft-dstate-").toString
     EventOps.distinctState(dfs(0), "k", col("u"))
       .write.mode("overwrite").parquet(s"$dir/state0")
     var path = s"$dir/state0"
@@ -1329,7 +1328,7 @@ class ApiSpec extends SparkSpec {
       (41 to 70).map(v => ("a", v.toDouble)),
       (71 to 100).map(v => ("a", v.toDouble)))
     val dfs = batches.map(_.toDF("k", "v"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-qstate-").toString
+    val dir = tempDir("graft-qstate-").toString
     EventOps.quantileState(dfs(0), "k", col("v"))
       .write.mode("overwrite").parquet(s"$dir/state0")
     var path = s"$dir/state0"
@@ -1358,7 +1357,7 @@ class ApiSpec extends SparkSpec {
         (r.getLong(0), r.getSeq[org.apache.spark.sql.Row](1)
           .map(it => (it.getLong(0), it.getLong(1))).toList)
       }.head
-    val dir = java.nio.file.Files.createTempDirectory("graft-mgstate-").toString
+    val dir = tempDir("graft-mgstate-").toString
     // below capacity: counters never evict, so the fold must be EXACT
     // counter sums — {1:5, 2:3} ⊕ {1:2, 3:4} = {1:7, 3:4, 2:3}, delta 0
     state(Seq.fill(5)(("g", 1L)) ++ Seq.fill(3)(("g", 2L)), 4)
@@ -1394,7 +1393,7 @@ class ApiSpec extends SparkSpec {
       Seq(("a", 1L), ("c", 7L)),
       Seq(("b", 4L), ("c", 7L), ("c", 0L)))
     val dfs = batches.map(_.toDF("src", "v"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-aggstate-").toString
+    val dir = tempDir("graft-aggstate-").toString
     try {
       // round 0: state = partials of batch 0, persisted
       EventOps.aggState(dfs(0), "src", col("v"))
@@ -1483,7 +1482,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("BM25 persisted index: probe == in-process, meta required, pruning engages") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25idx-").toString
+    val dir = tempDir("graft-bm25idx-").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val qDf = docs.filter(col("doc_id") % 25 === 0)
       .select(col("doc_id").as("qid"), col("text"))
@@ -1528,7 +1527,7 @@ class ApiSpec extends SparkSpec {
   test("hybridTopKAgainstIndexes (both legs persisted) == hybridTopKIvfPq " +
       "(in-process lexical leg) row-for-row on the same corpus") {
     import graft.api.{TextOps, VectorOps}
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybidx-").toString
+    val dir = tempDir("graft-hybidx-").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val qDf = docs.filter(col("doc_id") % 25 === 0)
       .select(col("doc_id").as("qid"), col("text"))
@@ -1771,8 +1770,7 @@ class ApiSpec extends SparkSpec {
       ("b.net", "/x/", true), // equal length: Allow wins (REP tie rule)
       // a malformed EMPTY-host rule row: host-less URLs key to '' too,
       // and the contract says they are ALWAYS allowed — this row must
-      // be inert in BOTH forms (the map-only form drops ''-host rules
-      // before grouping; the batch form filters ''-host URLs pre-join)
+      // be inert (''-host rules drop before grouping)
       ("", "/", false)
     ).toDF("host", "prefix", "allow")
     val urls = Seq(
@@ -1794,20 +1792,23 @@ class ApiSpec extends SparkSpec {
     assert(out(6L) == ((true, "")), s"got ${out(6L)}")
     // nothing dropped: one verdict per input row
     assert(out.size == 6)
-    // the MAP-ONLY form (the streaming-legal longest-match — array_min
-    // over per-host rule arrays instead of a rank window) must agree
-    // row for row on the same branch-covering fixture, extras carried
-    val flat = graft.api.TextOps.robotsFilterMapOnly(
+    // extraCols carry through untouched, and the verdicts are the ones
+    // the former join + rank-window form gave on this fixture, written
+    // out literally (columns: id, href, extra, allowed, matched_prefix)
+    val withExtra = graft.api.TextOps.robotsFilter(
         urls.withColumn("extra", col("id") * 10), "id", "href", rules,
         extraCols = Seq("extra"))
       .collect()
-      // columns: id, href, extra (carried), allowed, matched_prefix
-      .map(r => r.getLong(0) ->
-        ((r.getBoolean(3), r.getString(4), r.getLong(2)))).toMap
-    assert(flat.view.mapValues(v => (v._1, v._2)).toMap == out,
-      "robotsFilterMapOnly diverged from robotsFilter")
-    assert(flat.forall { case (id, (_, _, extra)) => extra == id * 10 },
-      "extraCols must carry through untouched")
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getBoolean(3), r.getString(4))).toSet
+    assert(withExtra == Set(
+      (1L, "https://a.org/private/secret", 10L, false, "/private/"),
+      (2L, "https://a.org/private/public/page", 20L, true,
+        "/private/public/"),
+      (3L, "https://a.org/open/page", 30L, true, ""),
+      (4L, "https://b.net/x/1", 40L, true, "/x/"),
+      (5L, "https://c.io/anything", 50L, true, ""),
+      (6L, "/relative/path", 60L, true, "")), s"got $withExtra")
   }
 
   test("TextOps.parseRobots: comments/CRLF/case handling, the REP " +
@@ -1896,7 +1897,7 @@ class ApiSpec extends SparkSpec {
     // on corpus-global stats, so the fold recomputes _c from the
     // unioned RAW postings + merged stats — and must probe identically
     // to writeBm25Index on the unioned corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25fold-").toString
+    val dir = tempDir("graft-bm25fold-").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val c0 = docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2)
     val delta = docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 5 === 4)
@@ -1971,7 +1972,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("CDC chunk index: probe == inline, meta is required, pruning engages") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdcidx-").toString
+    val dir = tempDir("graft-cdcidx-").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val old = docs.filter(col("doc_id") % 5 =!= 0)

@@ -52,8 +52,7 @@ class AssemblyLawsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf).select(col("doc_id"),
       col("text"), size(split(col("text"), " ", -1)).cast("long")
         .as("n_tok"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-pubspec-").toString + "/rel"
+    val dir = tempDir("graft-pubspec-").toString + "/rel"
     SampleOps.publishShards(docs, "doc_id", "text", "n_tok", dir,
       shards = 8, seed = "shard1")
     val data = spark.read.parquet(s"$dir/data")
@@ -82,8 +81,7 @@ class AssemblyLawsSpec extends SparkSpec {
     assert(masses.max - masses.min <= maxDocTok,
       "published shards lost the one-document balance bound")
     // commit marker: data without a manifest must refuse by name
-    val crashed = java.nio.file.Files
-      .createTempDirectory("graft-pubcrash-").toString + "/rel"
+    val crashed = tempDir("graft-pubcrash-").toString + "/rel"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$crashed/data"))
     data.limit(3).write.parquet(s"$crashed/data/part")

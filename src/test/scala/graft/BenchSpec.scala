@@ -149,7 +149,7 @@ class BenchSpec extends SparkSpec {
 
   test("loadPriorMins: prefers a same-SF bench_out.json sidecar, falls " +
       "back to the highest committed driver artifact, refuses cross-SF") {
-    val dir = java.nio.file.Files.createTempDirectory("bench-prior").toFile
+    val dir = tempDir("bench-prior").toFile
     def write(name: String, text: String): Unit =
       java.nio.file.Files.write(new java.io.File(dir, name).toPath,
         text.getBytes("UTF-8"))
@@ -183,81 +183,49 @@ class BenchSpec extends SparkSpec {
 
   test("a REAL leak (intentionally-cached frames accreting) reproduces " +
       "through the retest and stays flagged") {
-    // the thunk leaks deliberately: every invocation caches ANOTHER
-    // block and the query unions ALL blocks cached so far — run i
-    // does i blocks of work, the exact accretion shape of the round-7
-    // q89 localCheckpoint bug. Work per block is sized so structural
-    // growth (one full block per run) dominates local jitter.
+    // Runs are measured in WORK UNITS (thousands of rows digested), not
+    // wall clock: the accretion ramp is then exact, and no host load
+    // can bend it. The thunk leaks deliberately: every invocation caches
+    // ANOTHER block and the query digests ALL blocks cached so far — run
+    // i does i blocks of work, the exact accretion shape of the round-7
+    // q89 localCheckpoint bug.
     val leaked = collection.mutable.ArrayBuffer.empty[DataFrame]
-    // per-block digest cost must DOMINATE run-to-run jitter for the
-    // ramp to be a reliable signature: three chained sha2 rounds per
-    // row make each accreted block worth ~2s of structural work, an
-    // increment scheduler noise (a few hundred ms) cannot mask
-    def digestAll(df: DataFrame) = {
-      val h1 = sha2(concat_ws(":", col("x"), col("x") * 31), 256)
-      df.agg(count(sha2(sha2(h1, 256), 256)).as("n"))
+    def digested(df: DataFrame): Double =
+      df.agg(count(sha2(col("x").cast("string"), 256))).head().getLong(0) /
+        1000.0
+    def block(): DataFrame = spark.range(0, 1000L, 1, 2).toDF("x")
+    def leakyRun(): Double = {
+      val b = block().persist()
+      b.count() // materialize into pinned storage
+      leaked += b
+      digested(leaked.reduce(_ unionByName _))
     }
-    def leakyThunk(): DataFrame = {
-      val block = spark.range(0, 4000000L, 1, 4).toDF("x").persist()
-      block.count() // materialize into pinned storage
-      leaked += block
-      // the read side re-derives the expensive digest over EVERY block
-      // cached so far — run i does i blocks of hash work, while the
-      // new block's build cost stays constant and small
-      digestAll(leaked.reduce(_ unionByName _))
+    // the cleanup Bench performs before a retest: the pinned state
+    // resets, so a state-accretion leak re-accretes from zero
+    def resetState(): Unit = {
+      leaked.foreach(_.unpersist(blocking = true))
+      leaked.clear()
     }
     try {
-      // JIT/codegen warmup (Bench's discipline), on the FULL thunk
-      // shape (persist + union + digest agg) with a throwaway block:
-      // without it the first run pays multi-second classloading that
-      // swamps the signature
-      // (both plan shapes — run 1 has no Union node, runs 2+ do — AND
-      // full-size blocks: the first big persist pays memory-store ramp
-      // that would otherwise land inside timed run 1)
-      val warm = spark.range(0, 4000000L, 1, 4).toDF("x").persist()
-      warm.count()
-      BenchHarness.exec(digestAll(warm))
-      BenchHarness.exec(digestAll(warm.unionByName(warm)))
-      warm.unpersist(blocking = true)
-      // The structural ramp (~one full 2s block of extra work per run)
-      // dominates normal jitter, but a LOADED host can still slow run 1
-      // enough to break strict monotonicity — the r16 driver flake
-      // (VERDICT r16 #2). The signature itself is what Bench measures,
-      // so keep asserting it on real wall clock, but retry the whole
-      // accretion experiment up to 3 times from a clean slate: host
-      // contention is time-local (the adjudicateLeaks premise), while
-      // a genuinely broken heuristic fails all three deterministically.
-      def resetState(): Unit = {
-        leaked.foreach(_.unpersist(blocking = true))
-        leaked.clear()
-        System.gc()
-      }
-      def attempt(): Either[String, Unit] = {
-        resetState()
-        val firstPass = BenchHarness.timedRuns(3, () => leakyThunk())
-        if (!BenchHarness.monotoneLeak(firstPass))
-          Left(s"leaky thunk did not trip the signature: $firstPass")
-        else {
-          // adjudication re-runs the SAME leaking thunk AFTER the
-          // cleanup Bench performs before a retest (drain + GC): for a
-          // state-accretion leak the pinned state resets and the
-          // retest re-accretes from zero — ramping 1x..3x again, the
-          // signature a real leak cannot help reproducing.
-          val (confirmed, retests) = BenchHarness.adjudicateLeaks(
-            Seq("q_leaky"), { _ =>
-              resetState()
-              BenchHarness.timedRuns(3, () => leakyThunk())
-            })
-          if (confirmed == Seq("q_leaky")) Right(())
-          else Left(s"real leak exonerated: first=$firstPass " +
-            s"retest=${retests("q_leaky")}")
-        }
-      }
-      val outcomes = Iterator.continually(attempt()).take(3)
-        .takeWhile(_.isLeft).toSeq
-      assert(outcomes.size < 3,
-        s"leak signature failed to reproduce in 3 clean attempts: " +
-          outcomes.map(_.left.getOrElse("")).mkString(" | "))
-    } finally leaked.foreach(_.unpersist(blocking = false))
+      val firstPass = Seq.fill(3)(leakyRun())
+      assert(firstPass == Seq(1.0, 2.0, 3.0), s"work per run: $firstPass")
+      assert(BenchHarness.monotoneLeak(firstPass),
+        s"leaky thunk did not trip the signature: $firstPass")
+      val (confirmed, retests) = BenchHarness.adjudicateLeaks(
+        Seq("q_leaky"), { _ => resetState(); Seq.fill(3)(leakyRun()) })
+      assert(confirmed == Seq("q_leaky"), s"real leak exonerated: " +
+        s"first=$firstPass retest=${retests("q_leaky")}")
+      // time-local contention on a thunk that does NOT leak: its work
+      // is flat, and an injected load ramps the first pass only (the
+      // machine load has passed by the retest) — a candidate, cleared
+      val load = Iterator(0.0, 1.0, 2.5) ++ Iterator.continually(0.0)
+      def contendedRun(): Double = digested(block()) + load.next()
+      val contended = Seq.fill(3)(contendedRun())
+      assert(BenchHarness.monotoneLeak(contended),
+        s"the contended pass must be a candidate: $contended")
+      val (cleared, _) = BenchHarness.adjudicateLeaks(Seq("q_contended"),
+        _ => Seq.fill(3)(contendedRun()))
+      assert(cleared.isEmpty, "time-local contention was confirmed as a leak")
+    } finally resetState()
   }
 }

@@ -29,7 +29,7 @@ class CardSpec extends SparkSpec {
   test("card fold == rebuild: maintained index over corpus + delta " +
       "renders the batch card over their union, with every leaf " +
       "overlapping across runs (the SUM reconcile is load-bearing)") {
-    val dir = Files.createTempDirectory("graft-cardfold-").toString + "/ix"
+    val dir = tempDir("graft-cardfold-").toString + "/ix"
     CardOps.writeCardIndex(docs.filter(col("doc_id") % 7 =!= 0),
       "doc_id", "text", "source", "lang", dir)
     assert(!CardOps.maintainCardIndex(docs.filter(col("doc_id") % 7 === 0),
@@ -55,7 +55,7 @@ class CardSpec extends SparkSpec {
   test("tagged fold is exactly-once: a replayed tag no-ops (index " +
       "bytes untouched), and still no-ops AFTER a compaction " +
       "(the tag manifest survives the rewrite)") {
-    val dir = Files.createTempDirectory("graft-cardtag-").toString + "/ix"
+    val dir = tempDir("graft-cardtag-").toString + "/ix"
     val c0 = docs.filter(col("doc_id") % 7 =!= 0)
     val d1 = docs.filter(col("doc_id") % 7 === 0)
     CardOps.writeCardIndex(c0, "doc_id", "text", "source", "lang", dir)
@@ -98,7 +98,7 @@ class CardSpec extends SparkSpec {
   test("delete path: a partial removal lowers counts exactly, a full " +
       "source takedown drops every leaf, compaction makes the " +
       "deletion durable (no negative or zero rows on disk)") {
-    val dir = Files.createTempDirectory("graft-cardrm-").toString + "/ix"
+    val dir = tempDir("graft-cardrm-").toString + "/ix"
     CardOps.writeCardIndex(docs, "doc_id", "text", "source", "lang", dir)
     // partial: a dedup pass drops every third doc of src1
     val dropped = docs.filter(col("source") === "src1" &&

@@ -43,8 +43,7 @@ class ClassifySpec extends SparkSpec {
     assert(rows.length == rows.map(r =>
       (r.getAs[String]("cls"), r.getAs[String]("w"))).toSet.size)
     assert(rows.map(_.getAs[Long]("v")).toSet == Set(vocab.size.toLong))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-nbmodel-").toString
+    val dir = tempDir("graft-nbmodel-").toString
     model.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     val a = ClassifyOps.nbClassify(sepCorpus, "k", "body",

@@ -366,7 +366,7 @@ class DedupSpec extends SparkSpec {
   test("dedup pipeline: one persisted pair list feeds clusters + keepers unchanged") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_pairs")
+    val dir = tempDir("graft_pairs")
       .toString + "/pairs"
     val pipe = graft.api.DedupOps.pipeline(
       Tables.documents(spark, sf), "doc_id", "text", dir)
@@ -553,7 +553,7 @@ class DedupSpec extends SparkSpec {
         probes, "doc_id", "text", path)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-fold-").toString
+    val dir = tempDir("graft-fold-").toString
     DedupOps.writeMinhashIndex(c0.unionByName(delta), "doc_id", "text",
       s"$dir/full")
     DedupOps.writeMinhashIndex(c0, "doc_id", "text", s"$dir/v1")
@@ -601,7 +601,7 @@ class DedupSpec extends SparkSpec {
         simX1000Threshold = 400)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-sfold-").toString
+    val dir = tempDir("graft-sfold-").toString
     VectorOps.writeSignIndex(c0.unionByName(delta), "vec_id", "embedding",
       planes, s"$dir/full")
     VectorOps.writeSignIndex(c0, "vec_id", "embedding", planes, s"$dir/v1")
@@ -620,6 +620,30 @@ class DedupSpec extends SparkSpec {
     assert(err.getMessage.contains("meta"))
   }
 
+  test("probeSignIndex bands with the rows_per_band the index was built " +
+      "with, not a caller default") {
+    import graft.api.VectorOps
+    // 8 planes in 4 bands of 2 bits: a probe banding 2 bands of 4 bits
+    // would compare keys of other bands and widths
+    val planes = graft.queries.DedupQueries.lshPlanes.take(8)
+    val emb = Tables.embeddings(spark, sf)
+    val corpus = emb.filter(col("vec_id") % 5 =!= 0)
+    val probes = emb.filter(col("vec_id") % 5 === 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val dir = tempDir("graft-signgeo-").toString
+    VectorOps.writeSignIndex(corpus, "vec_id", "embedding", planes, dir,
+      rowsPerBand = 2)
+    val inline = rows(VectorOps.nearDupPairsAgainst(probes, corpus,
+      "vec_id", "embedding", planes, simX1000Threshold = 400,
+      rowsPerBand = 2))
+    assert(inline.nonEmpty, "no pairs — the comparison would be vacuous")
+    val probed = rows(VectorOps.probeSignIndex(probes, "vec_id",
+      "embedding", planes, dir, simX1000Threshold = 400))
+    assert(probed == inline, s"missing=${(inline -- probed).take(3)} " +
+      s"extra=${(probed -- inline).take(3)}")
+  }
+
   test("foldIntoCdcChunkIndex == from-scratch rebuild") {
     import graft.api.DedupOps
     val docs = Tables.documents(spark, sf)
@@ -631,7 +655,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdcfold-").toString
+    val dir = tempDir("graft-cdcfold-").toString
     DedupOps.writeCdcChunkIndex(c0.unionByName(delta), "doc_id", "text",
       s"$dir/full", modulus = 32)
     DedupOps.writeCdcChunkIndex(c0, "doc_id", "text", s"$dir/v1",
@@ -687,7 +711,7 @@ class DedupSpec extends SparkSpec {
     def probeSet(path: String) = DedupOps.minhashPairsAgainstIndex(
         probes, "doc_id", "text", path)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-lfold-").toString
+    val dir = tempDir("graft-lfold-").toString
     DedupOps.writeMinhashIndex(c0.unionByName(d1).unionByName(d2),
       "doc_id", "text", s"$dir/full")
     DedupOps.writeMinhashIndex(c0, "doc_id", "text", s"$dir/v1")
@@ -735,7 +759,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     def layersOf(path: String) = spark.read.parquet(s"$path/meta").head()
       .getAs[Number]("layers").intValue()
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint-").toString
+    val dir = tempDir("graft-maint-").toString
     DedupOps.writeMinhashIndex(c0, "doc_id", "text", s"$dir/ix")
     // plant leftovers from a "crashed previous attempt" — maintain
     // must clear them, not trip over them
@@ -811,7 +835,7 @@ class DedupSpec extends SparkSpec {
         .mapToLong(java.nio.file.Files.size(_)).sum()
       finally st.close()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-fpidx-").toString
+    val dir = tempDir("graft-fpidx-").toString
     DedupOps.writeFingerprintIndex(c0, "doc_id", "dhash64",
       bits = 64, hammingMax = 6, s"$dir/ix")
     assert(wantVs(2).nonEmpty, "no pairs at all — parity would be vacuous")
@@ -848,7 +872,7 @@ class DedupSpec extends SparkSpec {
     def probeSet(path: String) = DedupOps.minhashPairsAgainstIndex(
         probes, "doc_id", "text", path)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-recov-").toString
+    val dir = tempDir("graft-recov-").toString
     DedupOps.writeMinhashIndex(c0, "doc_id", "text", s"$dir/ix")
     // simulate the crash window: live moved aside, fresh copy dangling
     java.nio.file.Files.move(
@@ -882,7 +906,7 @@ class DedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val c0 = docs.filter(col("doc_id") % 5 === 1)
     val d1 = docs.filter(col("doc_id") % 5 === 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-wlock-").toString
+    val dir = tempDir("graft-wlock-").toString
     val lockPath = java.nio.file.Paths.get(s"$dir/ix__writer.lock")
     DedupOps.writeMinhashIndex(c0, "doc_id", "text", s"$dir/ix")
     // while a writer holds the lock, a second maintain on the same
@@ -943,7 +967,7 @@ class DedupSpec extends SparkSpec {
         .mapToLong(java.nio.file.Files.size(_)).sum()
       finally st.close()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramix-").toString
+    val dir = tempDir("graft-gramix-").toString
     DedupOps.writeGramIndex(c0, "doc_id", "text", s"$dir/ix")
     assert(want(2).nonEmpty, "no spans at all — parity would be vacuous")
     assert(got(s"$dir/ix") == want(2))
@@ -982,7 +1006,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val probe = Seq((1L, s"$gram probe one two three four five six seven"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramsum-").toString
+    val dir = tempDir("graft-gramsum-").toString
     DedupOps.writeGramIndex(v1, "doc_id", "text", s"$dir/ix")
     def spansAt(min: Int) = DedupOps.exactSubstringSpansAgainstIndex(
         probe, "doc_id", "text", s"$dir/ix", minCorpusDocs = min)
@@ -1031,7 +1055,7 @@ class DedupSpec extends SparkSpec {
         .mapToLong(java.nio.file.Files.size(_)).sum()
       finally st.close()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-lineix-").toString
+    val dir = tempDir("graft-lineix-").toString
     TextOps.writeLineIndex(c0, "doc_id", "text", s"$dir/ix")
     assert(want(2).nonEmpty && got(s"$dir/ix") == want(2))
     // fold #1: layered run, O(delta) write bytes, probe == inline —
@@ -1066,7 +1090,7 @@ class DedupSpec extends SparkSpec {
     val v1 = Seq((10L, "dup line\nunique a")).toDF("doc_id", "text")
     val delta = Seq((20L, "dup line\nunique b")).toDF("doc_id", "text")
     val probe = Seq((1L, "DUP LINE \nmine")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-linesum-").toString
+    val dir = tempDir("graft-linesum-").toString
     TextOps.writeLineIndex(v1, "doc_id", "text", s"$dir/ix")
     def cleanOf() = TextOps.dedupLinesAgainstIndex(probe, "doc_id",
         "text", s"$dir/ix", maxDocFreq = 1)
@@ -1107,7 +1131,7 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     def layersOf(path: String) = spark.read.parquet(s"$path/meta").head()
       .getAs[Number]("layers").intValue()
-    val dir = java.nio.file.Files.createTempDirectory("graft-edgeix-").toString
+    val dir = tempDir("graft-edgeix-").toString
     PageRank.writeEdgeIndex(v1, "src", "dst", s"$dir/ix")
     assert(gotRank(s"$dir/ix") == rankSet(v1))
     assert(gotHits(s"$dir/ix") == hitsSet(v1))
@@ -1148,7 +1172,7 @@ class DedupSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val c0 = emb.filter(col("vec_id") % 3 === 0)
     val d1 = emb.filter(col("vec_id") % 3 === 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpql-").toString
+    val dir = tempDir("graft-ivfpql-").toString
     val model = VectorOps.ivfPqTrain(c0, "vec_id", "embedding",
       nCells = 4, m = 8, k = 8, seed = 7L)
     VectorOps.writeIvfPqIndex(c0, "vec_id", "embedding", model, s"$dir/ix")
@@ -1177,7 +1201,7 @@ class DedupSpec extends SparkSpec {
       val m = spark.read.parquet(s"$path/meta").head()
       m.getAs[Number]("layers").intValue()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint2-").toString
+    val dir = tempDir("graft-maint2-").toString
     // CDC: threshold 2 -> the very first maintain compacts
     DedupOps.writeCdcChunkIndex(c0, "doc_id", "text", s"$dir/cdc")
     assert(DedupOps.maintainCdcChunkIndex(d1, "doc_id", "text",
@@ -1226,7 +1250,7 @@ class DedupSpec extends SparkSpec {
     def probeSet(path: String) = DedupOps.minhashPairsAgainstIndex(
         probes, "doc_id", "text", path)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-lfoldc-").toString
+    val dir = tempDir("graft-lfoldc-").toString
     DedupOps.writeMinhashIndex(c0.unionByName(delta), "doc_id", "text",
       s"$dir/full1", maxBucket = 1)
     DedupOps.writeMinhashIndex(c0, "doc_id", "text", s"$dir/v1",
@@ -1257,7 +1281,7 @@ class DedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 50 =!= 3)
     val delta = docs.filter(col("doc_id") % 50 === 3) // ~2% of the corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft-obytes-").toString
+    val dir = tempDir("graft-obytes-").toString
     DedupOps.writeMinhashIndex(corpus, "doc_id", "text", s"$dir/v1")
     val before = dirBytes(s"$dir/v1/buckets") + dirBytes(s"$dir/v1/hashed")
     DedupOps.foldIntoMinhashIndex(delta, "doc_id", "text", s"$dir/v1")
@@ -1309,7 +1333,7 @@ class DedupSpec extends SparkSpec {
         probes, "vec_id", "embedding", planes, path,
         simX1000Threshold = 400)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsfold-").toString
+    val dir = tempDir("graft-lsfold-").toString
     VectorOps.writeSignIndex(c0.unionByName(delta), "vec_id", "embedding",
       planes, s"$dir/full")
     VectorOps.writeSignIndex(c0, "vec_id", "embedding", planes, s"$dir/v1")
@@ -1350,7 +1374,7 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     def layersOf(path: String) = spark.read.parquet(s"$path/meta").head()
       .getAs[Number]("layers").intValue()
-    val dir = java.nio.file.Files.createTempDirectory("graft-wedgeix-")
+    val dir = tempDir("graft-wedgeix-")
       .toString
     PageRank.writeWeightedEdgeIndex(v1, "src", "dst", "w", s"$dir/ix")
     assert(gotSet(s"$dir/ix") == inlineSet(v1))
@@ -1474,7 +1498,7 @@ class DedupSpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val d1 = Seq(("a.org", "x.net", 3L), ("y.net", "a.org", 4L))
       .toDF("src", "dst", "w")
-    val dir = java.nio.file.Files.createTempDirectory("graft-whits-")
+    val dir = tempDir("graft-whits-")
       .toString
     PageRank.writeWeightedEdgeIndex(v1, "src", "dst", "w", s"$dir/ix")
     PageRank.maintainWeightedEdgeIndex(d1, "src", "dst", "w", s"$dir/ix")
@@ -1497,7 +1521,7 @@ class DedupSpec extends SparkSpec {
     import graft.operators.PageRank
     val v1 = Seq(("a.org", "b.org"), ("b.org", "c.org"),
       ("c.org", "d.org")).toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("graft-edgetomb-")
+    val dir = tempDir("graft-edgetomb-")
       .toString
     PageRank.writeEdgeIndex(v1, "src", "dst", s"$dir/ix")
     def got(path: String) = PageRank.ranksByKeyAgainstIndex(spark, path)
@@ -1566,7 +1590,7 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val v1 = Seq(("a.org", "b.org", 5L), ("b.org", "c.org", 2L),
       ("c.org", "d.org", 4L)).toDF("src", "dst", "w")
-    val dir = java.nio.file.Files.createTempDirectory("graft-wtomb-")
+    val dir = tempDir("graft-wtomb-")
       .toString
     PageRank.writeWeightedEdgeIndex(v1, "src", "dst", "w", s"$dir/ix")
     // partial removal: retract 2 of a-b's 5 anchors
@@ -1611,7 +1635,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.PageRank
     val v1 = Seq(("a.org", "b.org"), ("b.org", "c.org")).toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("graft-edgemf-")
+    val dir = tempDir("graft-edgemf-")
       .toString
     PageRank.writeEdgeIndex(v1, "src", "dst", s"$dir/ix")
     def got() = PageRank.ranksByKeyAgainstIndex(spark, s"$dir/ix")

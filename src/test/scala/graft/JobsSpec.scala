@@ -13,7 +13,7 @@ import graft.jobs.{Jobs, Schemas, Sinks, Sources}
 class JobsSpec extends SparkSpec {
 
   private lazy val dir: Path = {
-    val d = Files.createTempDirectory("graft-fixtures")
+    val d = tempDir("graft-fixtures")
     def w(name: String, rows: String): Unit =
       Files.writeString(d.resolve(name), rows.trim + "\n")
     w("UserBehavior.csv", """
@@ -288,7 +288,7 @@ tx9,alipay,1558430850""")
   test("jsonl source round-trips the jsonl sink with an explicit schema") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString + "/x"
+    val dir = tempDir("graft_jsonl").toString + "/x"
     val df = spark.range(20).selectExpr("id AS doc_id",
       "concat('text ', id) AS body", "cast(id * 1.5 AS double) AS score")
     graft.jobs.Sinks.jsonl(df, dir)
@@ -300,7 +300,7 @@ tx9,alipay,1558430850""")
       .sortBy(_._1).toSeq ==
       (0L until 20L).map(i => (i, s"text $i", i * 1.5)))
     // malformed line -> PERMISSIVE null fields, never a crash
-    val badDir = java.nio.file.Files.createTempDirectory("graft_badjsonl")
+    val badDir = tempDir("graft_badjsonl")
     java.nio.file.Files.writeString(badDir.resolve("a.json"),
       "{\"doc_id\": 1, \"body\": \"ok\", \"score\": 2.0}\nnot json at all\n")
     val lenient = Sources.jsonl(spark, badDir.toString, schema).collect()
@@ -328,7 +328,7 @@ tx9,alipay,1558430850""")
         record("response", "http://example.org/marker", markerBody) +
         record("response", "http://example.org/http", httpBody) +
         record("response", "http://example.org/nl", nlBody)
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc")
+    val dir = tempDir("graft_warc")
     java.nio.file.Files.writeString(dir.resolve("crawl.warc"), warcText)
     val got = Sources.warc(spark, dir.toString).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))

@@ -13,7 +13,7 @@ import graft.jobs.Sinks
 class LayoutSpec extends SparkSpec {
 
   test("layout writes partition dirs with sorted, range-disjoint files") {
-    val dir = Files.createTempDirectory("graft_layout").toString + "/events"
+    val dir = tempDir("graft_layout").toString + "/events"
     val src = Tables.events(spark, sf)
       .select(col("event_type"), col("user_id"), col("event_id"))
     Sinks.layout(src, dir, Seq("event_type"), Seq("user_id"), numFiles = 8)
@@ -58,7 +58,7 @@ class LayoutSpec extends SparkSpec {
     // 2 KB blocks make each group a skippable ~100-row unit)
     val src = Tables.events(spark, "/root/testdata/sf0.01")
       .select(col("event_id"), col("user_id"), expr("ts_ns div 1000").as("us"))
-    val base = Files.createTempDirectory("graft_zorder").toString
+    val base = tempDir("graft_zorder").toString
     Sinks.zorderedLayout(src, s"$base/z", "user_id", "us",
       numFiles = 2, rowGroupBytes = 2048)
     src.repartitionByRange(2, col("user_id"))
@@ -132,7 +132,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("jsonl export round-trips rows and honors partition dirs") {
-    val dir = Files.createTempDirectory("graft_jsonl").toString + "/docs"
+    val dir = tempDir("graft_jsonl").toString + "/docs"
     val src = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("n_chars"))
     Sinks.jsonl(src, dir, partitionCols = Seq("lang"))

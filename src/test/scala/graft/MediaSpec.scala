@@ -647,8 +647,7 @@ class MediaSpec extends SparkSpec {
       MediaRecord(3L, "image/png", noisePng(64, 48, 7L))).toDS()
     val want = Multimodal.imageNearDupPairs(recs, hammingMax = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fpsnap-").toString
+    val dir = tempDir("graft-fpsnap-").toString
     // authoring is eager (the fingerprints land on disk here); the
     // returned frame reads FILES, so a drain between authoring and
     // materialization must be harmless — exactly what kills the

@@ -137,7 +137,7 @@ class MlSpec extends SparkSpec {
       "embedding", nCells = 2, m = 2, k = 2, seed = 1L)
     val corpus = sample.union(Seq((99L, Seq(1.0, 0.0, 0.0, 0.0)))
       .toDF("vec_id", "embedding"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqragged-")
+    val dir = tempDir("graft-pqragged-")
     val e = intercept[Exception] {
       graft.api.VectorOps.writeIvfPqIndex(corpus, "vec_id", "embedding",
         model, s"$dir/ix")

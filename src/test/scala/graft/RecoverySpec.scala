@@ -50,7 +50,7 @@ class RecoverySpec extends SparkSpec {
     * it against the off-heap store (whose checkpoint format differs).
     */
   private def assertStateSurvivesRestart(user: Long): Unit = {
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = tempDir("graft_ckpt").toString
     val input = MemoryStream[StreamEvent]
     // memory sink cannot recover from a checkpoint; foreachBatch can
     val collected = new java.util.concurrent.ConcurrentLinkedQueue[FailWarning]()
@@ -101,7 +101,7 @@ class RecoverySpec extends SparkSpec {
     * exists iff the join buffer was recovered from the checkpoint.
     */
   private def assertJoinStateSurvivesRestart(txId: String): Unit = {
-    val ckpt = Files.createTempDirectory("graft_j1_ckpt").toString
+    val ckpt = tempDir("graft_j1_ckpt").toString
     val oIn = MemoryStream[(Long, String, String, Timestamp)]
     val rIn = MemoryStream[(String, String, Timestamp)]
     val collected =
@@ -158,7 +158,7 @@ class RecoverySpec extends SparkSpec {
     * was recovered, not rebuilt from the post-restart batch alone.
     */
   private def assertLatestStateSurvivesRestart(tag: String): Unit = {
-    val ckpt = Files.createTempDirectory("graft_latest_ckpt").toString
+    val ckpt = tempDir("graft_latest_ckpt").toString
     val input = MemoryStream[StreamEvent]
     @volatile var last: Array[(Long, Long, String)] = Array.empty
     def startQuery() = graft.api.EventOps.latestState(
@@ -214,7 +214,7 @@ class RecoverySpec extends SparkSpec {
     * must NOT re-emit — only possible if the dedup state was recovered.
     */
   private def assertIngestDedupSurvivesRestart(): Unit = {
-    val ckpt = Files.createTempDirectory("graft_ingest_ckpt").toString
+    val ckpt = tempDir("graft_ingest_ckpt").toString
     val corpus = Seq((10L, "a b c d e f g")).toDF("doc_id", "text")
     val idx = NearDupIngest.index(corpus, "doc_id", "text")
     val input = MemoryStream[(Long, String, Timestamp)]
@@ -274,8 +274,8 @@ class RecoverySpec extends SparkSpec {
 
   private def assertFrontierDedupSurvivesRestart(): Unit = {
     import org.apache.spark.sql.functions.col
-    val ckpt = Files.createTempDirectory("graft_frontier_ckpt").toString
-    val visitedDir = Files.createTempDirectory("graft_frontier_vis").toString
+    val ckpt = tempDir("graft_frontier_ckpt").toString
+    val visitedDir = tempDir("graft_frontier_vis").toString
     Seq("https://old.org/seen").toDF("canonical_url")
       .write.mode("overwrite").parquet(s"$visitedDir/v")
     val input = MemoryStream[(Long, String, Timestamp)]
@@ -346,7 +346,7 @@ class RecoverySpec extends SparkSpec {
     val c0 = emb.filter(col("vec_id") % 5 >= 2)
     val d1 = emb.filter(col("vec_id") % 5 === 1)
     val probes = emb.filter(col("vec_id") % 5 === 0)
-    val dir = Files.createTempDirectory("graft-ivfpqr-").toString
+    val dir = tempDir("graft-ivfpqr-").toString
     val model = VectorOps.ivfPqTrain(c0, "vec_id", "embedding",
       nCells = 4, m = 8, k = 8, seed = 7L)
     VectorOps.writeIvfPqIndex(c0, "vec_id", "embedding", model, s"$dir/ix")
@@ -382,7 +382,7 @@ class RecoverySpec extends SparkSpec {
     val c0 = lined.filter(col("doc_id") % 5 >= 2)
     val d1 = lined.filter(col("doc_id") % 5 === 1)
     val probes = lined.filter(col("doc_id") % 5 === 0)
-    val dir = Files.createTempDirectory("graft-liner-").toString
+    val dir = tempDir("graft-liner-").toString
     TextOps.writeLineIndex(c0, "doc_id", "text", s"$dir/ix")
     // simulate the crash window: live moved aside, fresh copy dangling
     Files.move(
@@ -413,7 +413,7 @@ class RecoverySpec extends SparkSpec {
     import graft.operators.PageRank
     val v1 = Seq(("a.org", "b.org"), ("b.org", "c.org")).toDF("src", "dst")
     val d1 = Seq(("c.org", "d.org")).toDF("src", "dst")
-    val dir = Files.createTempDirectory("graft-edger-").toString
+    val dir = tempDir("graft-edger-").toString
     PageRank.writeEdgeIndex(v1, "src", "dst", s"$dir/ix")
     // simulate the crash window: live moved aside, fresh copy dangling
     Files.move(
@@ -444,7 +444,7 @@ class RecoverySpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val d1 = Seq(("a.org", "b.org", 3L), ("c.org", "d.org", 4L))
       .toDF("src", "dst", "w")
-    val dir = Files.createTempDirectory("graft-wedger-").toString
+    val dir = tempDir("graft-wedger-").toString
     PageRank.writeWeightedEdgeIndex(v1, "src", "dst", "w", s"$dir/ix")
     // simulate the crash window: live moved aside, fresh copy dangling
     Files.move(
@@ -490,7 +490,7 @@ class RecoverySpec extends SparkSpec {
     val c0 = lined.filter(col("doc_id") % 5 >= 2)
     val d1 = lined.filter(col("doc_id") % 5 === 1)
     val probes = lined.filter(col("doc_id") % 5 === 0)
-    val dir = Files.createTempDirectory("graft-linemf-").toString
+    val dir = tempDir("graft-linemf-").toString
     TextOps.writeLineIndex(c0, "doc_id", "text", s"$dir/ix")
     def probeSet(path: String) = TextOps.dedupLinesAgainstIndex(probes,
         "doc_id", "text", path, maxDocFreq = 100).collect()
@@ -552,7 +552,7 @@ class RecoverySpec extends SparkSpec {
     val c0 = docs.filter(col("doc_id") % 5 >= 2)
     val d1 = docs.filter(col("doc_id") % 5 === 1)
     val probes = docs.filter(col("doc_id") % 5 === 0)
-    val dir = Files.createTempDirectory("graft-grammf-").toString
+    val dir = tempDir("graft-grammf-").toString
     DedupOps.writeGramIndex(c0, "doc_id", "text", s"$dir/ix")
     // maxDocsPerGram sits between the committed corpus's count and
     // the double-counted one, so an orphan merging in FLIPS the shared
@@ -607,7 +607,7 @@ class RecoverySpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val d1 = Seq(("a.org", "b.org", 3L), ("c.org", "d.org", 4L))
       .toDF("src", "dst", "w")
-    val dir = Files.createTempDirectory("graft-wedgemf-").toString
+    val dir = tempDir("graft-wedgemf-").toString
     PageRank.writeWeightedEdgeIndex(v1, "src", "dst", "w", s"$dir/ix")
     def rankSet(path: String) =
       PageRank.weightedRanksByKeyAgainstIndex(spark, path).collect()
@@ -663,7 +663,7 @@ class RecoverySpec extends SparkSpec {
     // weighted: crash between the signed run's append and its commit
     val v1 = Seq(("a.org", "b.org", 5L), ("b.org", "c.org", 2L))
       .toDF("src", "dst", "w")
-    val dir = Files.createTempDirectory("graft-tombr-").toString
+    val dir = tempDir("graft-tombr-").toString
     PageRank.writeWeightedEdgeIndex(v1, "src", "dst", "w", s"$dir/wix")
     def rankSet(path: String) =
       PageRank.weightedRanksByKeyAgainstIndex(spark, path).collect()
@@ -711,7 +711,7 @@ class RecoverySpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val c0 = docs.filter(col("doc_id") % 5 >= 2)
     val d1 = docs.filter(col("doc_id") % 5 === 1)
-    val dir = Files.createTempDirectory("graft-cardmf-").toString
+    val dir = tempDir("graft-cardmf-").toString
     CardOps.writeCardIndex(c0, "doc_id", "text", "source", "lang",
       s"$dir/ix")
     def cardNow(path: String) = CardOps
@@ -893,7 +893,7 @@ class RecoverySpec extends SparkSpec {
     assert(indexFamilies.map(_.name).distinct.size == 11)
     indexFamilies.foreach { f =>
       def slice(k: Int*) = f.rows.filter((col(f.idCol) % 6).isin(k: _*))
-      val ix = Files.createTempDirectory("graft-crashmx-").toString + "/ix"
+      val ix = tempDir("graft-crashmx-").toString + "/ix"
       def path(suffix: String) = java.nio.file.Paths.get(s"$ix$suffix")
       f.build(slice(0, 1, 2), ix)
 
@@ -944,7 +944,7 @@ class RecoverySpec extends SparkSpec {
       "runs sidecar)") {
     import org.apache.spark.sql.functions.col
     indexFamilies.foreach { f =>
-      val dir = Files.createTempDirectory("graft-nometa-").toString
+      val dir = tempDir("graft-nometa-").toString
       val ix = s"$dir/ix"
       f.build(f.rows.filter(col(f.idCol) % 6 < 3), ix)
       val delta = f.rows.filter(col(f.idCol) % 6 === 3)

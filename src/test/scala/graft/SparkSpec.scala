@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, Test/fork := true). */
-trait SparkSpec extends AnyFunSuite {
+/** Shared local SparkSession for all suites (one JVM, Test/fork := true),
+  * plus the suite-scoped temp directories of [[TempDirs]]. */
+trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -600,7 +600,7 @@ class StreamingSpec extends SparkSpec {
   test("CdcGate is delivery-idempotent per (window, doc): a redelivered " +
       "doc collapses to one chunk set") {
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdcidem-").toString
+    val dir = tempDir("graft-cdcidem-").toString
     graft.api.DedupOps.writeCdcChunkIndex(
       docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
       s"$dir/cdc", modulus = 32, window = 4)
@@ -674,7 +674,7 @@ class StreamingSpec extends SparkSpec {
   private def assertGramGateParity(sinkName: String,
       redeliver: Boolean = false): Unit = {
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramgate-").toString
+    val dir = tempDir("graft-gramgate-").toString
     graft.api.DedupOps.writeGramIndex(
       docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", s"$dir/ix")
     val delta = docs.filter(col("doc_id") % 5 === 0)
@@ -743,8 +743,7 @@ class StreamingSpec extends SparkSpec {
     val f = "f1 f2 f3 f4 f5 f6 f7 f8"
     val v1 = Seq((10L, s"$g tail one two three")).toDF("doc_id", "text")
     val delta = Seq((20L, s"$f tail one two three")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-snapgate-").toString
+    val dir = tempDir("graft-snapgate-").toString
     DedupOps.writeGramIndex(v1, "doc_id", "text", s"$dir/ix")
     val set = GramGate.indexFromPath(spark, s"$dir/ix",
       snapshotPath = Some(s"$dir/snap"))
@@ -813,8 +812,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val delta = Seq((20L, s"$gram tailB one two three four five six seven"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-gramgate-sum-").toString
+    val dir = tempDir("graft-gramgate-sum-").toString
     DedupOps.writeGramIndex(v1, "doc_id", "text", s"$dir/ix")
     assert(!DedupOps.maintainGramIndex(delta, "doc_id", "text", s"$dir/ix"))
     // layers == 2 now; at minCorpusDocs=2 the shared gram qualifies
@@ -857,7 +855,7 @@ class StreamingSpec extends SparkSpec {
 
   private def assertCdcGateParity(sinkName: String): Unit = {
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdcgate-").toString
+    val dir = tempDir("graft-cdcgate-").toString
     graft.api.DedupOps.writeCdcChunkIndex(
       docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
       s"$dir/cdc", modulus = 32, window = 4)
@@ -912,7 +910,7 @@ class StreamingSpec extends SparkSpec {
   test("CdcGate fold-while-serving: gate serves the authored snapshot; " +
       "a re-authored gate sees the fold (batch parity both sides)") {
     val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdcfws-").toString
+    val dir = tempDir("graft-cdcfws-").toString
     graft.api.DedupOps.writeCdcChunkIndex(
       docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
       s"$dir/cdc", modulus = 32, window = 4)
@@ -1040,7 +1038,7 @@ class StreamingSpec extends SparkSpec {
     val dh = graft.operators.Multimodal.imageHashes(
         graft.operators.Multimodal.documentsAsBmpMedia(spark, sf))
       .select(col("doc_id"), col("dhash64")).localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("graft-fpgidx-").toString
+    val dir = tempDir("graft-fpgidx-").toString
     // v1 + an in-place fold: the gate must reconcile the layered runs
     // at author time exactly as the batch probe does at read
     graft.api.DedupOps.writeFingerprintIndex(
@@ -1089,7 +1087,7 @@ class StreamingSpec extends SparkSpec {
       concat_ws("\n", lit("COMMON banner"), col("text"),
         concat(lit("Shared "), expr("(doc_id div 5) % 8").cast("string")))
         .as("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-lng-").toString
+    val dir = tempDir("graft-lng-").toString
     TextOps.writeLineIndex(
       lined.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
       "doc_id", "text", s"$dir/ix")
@@ -1177,7 +1175,7 @@ class StreamingSpec extends SparkSpec {
     val dh = graft.operators.Multimodal.imageHashes(
         graft.operators.Multimodal.documentsAsBmpMedia(spark, sf))
       .select(col("doc_id"), col("dhash64")).localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("graft-fpfws-").toString
+    val dir = tempDir("graft-fpfws-").toString
     graft.api.DedupOps.writeFingerprintIndex(
       dh.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
       "doc_id", "dhash64", bits = 64, hammingMax = 6, s"$dir/ix")
@@ -1388,7 +1386,7 @@ class StreamingSpec extends SparkSpec {
   test("Bm25Gate against a persisted index == batch bm25TopKAgainstIndex") {
     val docs = Tables.documents(spark, sf)
     val idxPath =
-      java.nio.file.Files.createTempDirectory("graft_bm25_gate_idx").toString
+      tempDir("graft_bm25_gate_idx").toString
     graft.api.TextOps.writeBm25Index(docs, "doc_id", "text", idxPath)
     val qDf = docs.filter(col("doc_id") % 25 === 0)
       .select(col("doc_id").as("qid"), col("text"))
@@ -1439,7 +1437,7 @@ class StreamingSpec extends SparkSpec {
     // from-scratch rebuild)
     val docs = Tables.documents(spark, sf)
     val idxPath =
-      java.nio.file.Files.createTempDirectory("graft_bm25_lgate").toString
+      tempDir("graft_bm25_lgate").toString
     graft.api.TextOps.writeBm25Index(
       docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", idxPath)
     graft.api.TextOps.foldIntoBm25Index(
@@ -1756,7 +1754,7 @@ class StreamingSpec extends SparkSpec {
     val newDocs = docs.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val dropDir = java.nio.file.Files.createTempDirectory("graft_drop")
+    val dropDir = tempDir("graft_drop")
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType), StructField("at", TimestampType)))
     // each arrival batch exports through the jsonl SINK (hand-written
@@ -1807,7 +1805,7 @@ class StreamingSpec extends SparkSpec {
     // batch probe's rows on the same delta.
     graft.functions.VectorExpressions.register(spark)
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-s-").toString
+    val dir = tempDir("graft-ivfpq-s-").toString
     try {
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val model = graft.api.VectorOps.ivfPqTrain(
@@ -1856,7 +1854,7 @@ class StreamingSpec extends SparkSpec {
     // applied per batch).
     graft.functions.VectorExpressions.register(spark)
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-fb-").toString
+    val dir = tempDir("graft-ivfpq-fb-").toString
     try {
       val corpus = emb.filter(col("vec_id") % 5 =!= 0)
       val model = graft.api.VectorOps.ivfPqTrain(
@@ -1978,8 +1976,8 @@ class StreamingSpec extends SparkSpec {
     assert(expected.exists(_._1 == 90001L),
       "synthetic corpus copy produced no pair — exact-dedup leg is vacuous")
 
-    val dropDir = java.nio.file.Files.createTempDirectory("graft_ingest_drop")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ingest_ck").toString
+    val dropDir = tempDir("graft_ingest_drop")
+    val ckpt = tempDir("graft_ingest_ck").toString
     val collected =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
     def startQuery() = IngestPipeline.pairs(spark, dropDir.toString, idx,
@@ -2044,7 +2042,7 @@ class StreamingSpec extends SparkSpec {
     val corpusDf = docs.filter(col("doc_id") % 5 =!= 0)
     val idx = NearDupIngest.index(corpusDf, "doc_id", "text")
     val cdcPath =
-      java.nio.file.Files.createTempDirectory("graft_cur_cdc").toString
+      tempDir("graft_cur_cdc").toString
     graft.api.DedupOps.writeCdcChunkIndex(corpusDf, "doc_id", "text", cdcPath)
     val lmModel = graft.api.TextOps.bigramLmModel(corpusDf, "doc_id", "text")
       .localCheckpoint()
@@ -2127,9 +2125,9 @@ class StreamingSpec extends SparkSpec {
       expected.exists(r => r(11) == true),
       "composed keep is one-sided — test is vacuous")
 
-    val dropDir = java.nio.file.Files.createTempDirectory("graft_cur_drop")
+    val dropDir = tempDir("graft_cur_drop")
     val ckpt =
-      java.nio.file.Files.createTempDirectory("graft_cur_ck").toString
+      tempDir("graft_cur_ck").toString
     val collected =
       new java.util.concurrent.ConcurrentLinkedQueue[Seq[Any]]()
     def startQuery() = IngestPipeline.curated(spark, dropDir.toString, idx,
@@ -2207,14 +2205,14 @@ class StreamingSpec extends SparkSpec {
     val corpusDf = docs.filter(col("doc_id") % 5 =!= 0)
     val idx = NearDupIngest.index(corpusDf, "doc_id", "text")
     val cdcPath =
-      java.nio.file.Files.createTempDirectory("graft_cur_plan").toString
+      tempDir("graft_cur_plan").toString
     graft.api.DedupOps.writeCdcChunkIndex(corpusDf, "doc_id", "text", cdcPath)
     val lmModel = graft.api.TextOps.bigramLmModel(corpusDf, "doc_id", "text")
       .localCheckpoint()
     val nbModel = graft.api.ClassifyOps
       .nbModel(corpusDf, "doc_id", "text", "lang").localCheckpoint()
     val dropDir =
-      java.nio.file.Files.createTempDirectory("graft_cur_plan_drop").toString
+      tempDir("graft_cur_plan_drop").toString
     val out = IngestPipeline.curated(spark, dropDir, idx, cdcPath,
       lmModel, nbModel, capPerSource = 8, horizon = "2 hours",
       delay = "1 hour", window = "1 hour", keepAvgQx1000 = -9000L)
@@ -2502,7 +2500,7 @@ class StreamingSpec extends SparkSpec {
       "from the next batch on (the freshness contract)") {
     import graft.api.{TextOps, VectorOps}
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-retgate-").toString
+    val dir = tempDir("graft-retgate-").toString
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 10 =!= 3)
     val delta = docs.filter(col("doc_id") % 10 === 3)
@@ -2578,8 +2576,7 @@ class StreamingSpec extends SparkSpec {
     // The fold flips in atomically at the NEXT batch's meta reads.
     import graft.api.{TextOps, VectorOps}
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-retgate-mid-").toString
+    val dir = tempDir("graft-retgate-mid-").toString
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 10 =!= 3)
     val delta = docs.filter(col("doc_id") % 10 === 3)
@@ -2650,7 +2647,7 @@ class StreamingSpec extends SparkSpec {
     // invalidates a running graph.
     val docs = Tables.documents(spark, sf)
     val idxPath =
-      java.nio.file.Files.createTempDirectory("graft_bm25_qgate").toString
+      tempDir("graft_bm25_qgate").toString
     graft.api.TextOps.writeBm25Index(
       docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", idxPath)
     val qDf = docs.filter(col("doc_id") % 25 === 0)
@@ -2739,7 +2736,7 @@ class StreamingSpec extends SparkSpec {
     val corpus = marked(docs.filter(col("doc_id") % 5 =!= 0))
     val deltaDf = marked(docs.filter(col("doc_id") % 5 === 0))
     val visitedDir =
-      java.nio.file.Files.createTempDirectory("graft-frontier-v-").toString
+      tempDir("graft-frontier-v-").toString
     TextOps.extractLinks(corpus, "doc_id", "text")
       .filter(col("host") =!= "")
       .select(TextOps.canonicalUrl(col("href")).as("canonical_url"))
@@ -2810,8 +2807,7 @@ class StreamingSpec extends SparkSpec {
         lit("\">x</a>")).as("text"))
     val corpus = marked(docs.filter(col("doc_id") % 5 =!= 0))
     val deltaDf = marked(docs.filter(col("doc_id") % 5 === 0))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sched-").toString
+    val dir = tempDir("graft-sched-").toString
     TextOps.extractLinks(corpus, "doc_id", "text")
       .filter(col("host") =!= "")
       .select(TextOps.canonicalUrl(col("href")).as("canonical_url"))
@@ -2977,8 +2973,7 @@ class StreamingSpec extends SparkSpec {
 
   private def assertSchedulerQuotaExpiry(sink: String): Unit = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-schedx-").toString
+    val dir = tempDir("graft-schedx-").toString
     Seq.empty[String].toDF("canonical_url")
       .write.mode("overwrite").parquet(s"$dir/visited")
     val rules = Seq.empty[(String, String, Boolean)]
@@ -3069,8 +3064,7 @@ class StreamingSpec extends SparkSpec {
         lit("\">x</a>")).as("text"))
     val corpus = marked(docs.filter(col("doc_id") % 5 =!= 0))
     val deltaDf = marked(docs.filter(col("doc_id") % 5 === 0))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-schedw-").toString
+    val dir = tempDir("graft-schedw-").toString
     TextOps.extractLinks(corpus, "doc_id", "text")
       .filter(col("host") =!= "")
       .select(TextOps.canonicalUrl(col("href")).as("canonical_url"))
@@ -3170,8 +3164,7 @@ class StreamingSpec extends SparkSpec {
     val rows = docs.collect().map(r =>
       (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
     val (seed, rest) = rows.splitAt(rows.length / 4)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cardgate-").toString
+    val dir = tempDir("graft-cardgate-").toString
     // the index exists before the stream (the gate validates at
     // author time) — seeded from the batch build path
     CardOps.writeCardIndex(
@@ -3233,8 +3226,7 @@ class StreamingSpec extends SparkSpec {
       TextOps.extractLinks(d, "src_host", "text")
         .filter(col("host") =!= "")
         .select(col("src_host"), col("host"), lit(1L).as("__w1"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-edgegate-").toString
+    val dir = tempDir("graft-edgegate-").toString
     PageRank.writeWeightedEdgeIndex(linksOf(seed), "src_host", "host",
       "__w1", s"$dir/ix")
     val rows = streamed.select("src_host", "text").collect()
