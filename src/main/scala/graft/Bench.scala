@@ -66,17 +66,18 @@ object Bench {
           pTasks.addAndGet(s.stageInfo.numTasks.toLong); ()
         }
       })
-    def listenerFlush(): Unit = try {
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      val ms = bus.getClass.getMethods
-      ms.find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .map(_.invoke(bus))
-        .orElse(ms.find(m =>
-            m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-          .map(_.invoke(bus, java.lang.Long.valueOf(5000L))))
-      ()
-    } catch { case _: Throwable => () }
+    // resolved once: a Spark without the method fails here by name, and
+    // a flush that times out throws its own TimeoutException (a method
+    // handle does not wrap it) instead of skewing the counts
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+      .invoke(spark.sparkContext)
+    val waitUntilEmpty = java.lang.invoke.MethodHandles.publicLookup()
+      .unreflect(bus.getClass.getMethods
+        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+        .getOrElse(throw new IllegalStateException(
+          s"Bench: ${bus.getClass.getName} has no waitUntilEmpty() — the " +
+            "per-query job/stage/task counts cannot be flushed")))
+    def listenerFlush(): Unit = { waitUntilEmpty.invokeWithArguments(bus); () }
     val probeCounts =
       scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long)]
     def probed[A](name: String)(body: => A): A = {

@@ -104,8 +104,7 @@ object CardOps {
   def writeCardIndex(df: DataFrame, idCol: String, textCol: String,
       sourceCol: String, langCol: String, path: String,
       stopword: String = " the "): Unit =
-    IndexMaintenance.write(df.sparkSession, path, CardIndex,
-      "prefix_partitions" -> 1)(_ =>
+    IndexMaintenance.write(df.sparkSession, path, CardIndex)(_ =>
       statsRun(leafStats(df, idCol, textCol, sourceCol, langCol, stopword)))
 
   /** Fold a DELTA of documents into a persisted [[writeCardIndex]] IN

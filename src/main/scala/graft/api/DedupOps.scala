@@ -246,21 +246,20 @@ object DedupOps {
     * ([[minhashPairsAgainst]] re-derives it per CALL, NearDupIngest.index
     * per SESSION), and every daily delta pays only the probe. The `__bp`
     * layout makes the probe's index-scan term sub-linear in the INDEX: a
-    * delta touching k of the prefixes reads k/prefixPartitions of the
-    * bucket files, and the (band, bkey) sort gives row-group min/max
-    * pruning within each file. Both tables are tiny next to the corpus:
-    * ids + 60-bit hash sets, never text.
+    * delta touching k of the P prefixes reads k/P of the bucket files,
+    * and the (band, bkey) sort gives row-group min/max pruning within
+    * each file. P is sized from the bucket table's bytes, one prefix per
+    * scan split up to 64 ([[IndexMaintenance]]): an index smaller than a
+    * split is one directory and one file, which a probe reads whole
+    * without a prefix job. Both tables are tiny next to the corpus: ids
+    * + 60-bit hash sets, never text.
     */
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
-      path: String, maxBucket: Int = DefaultMaxBucket,
-      prefixPartitions: Int = 64): Unit = {
-    require(prefixPartitions >= 1,
-      s"writeMinhashIndex: prefixPartitions $prefixPartitions < 1")
+      path: String, maxBucket: Int = DefaultMaxBucket): Unit =
     IndexMaintenance.pinned(shingleHashed(corpus, idCol, textCol),
       minhashRows(_, idCol))(
       IndexMaintenance.write(corpus.sparkSession, path, MinhashIndex,
-        "prefix_partitions" -> prefixPartitions, "max_bucket" -> maxBucket))
-  }
+        "max_bucket" -> maxBucket))
 
   /** N-way reconcile of LAYERED (band, bkey, `__cs`) bucket runs — the
     * [[IndexMaintenance.Reconcile.Capped]] rule: each append lands the
@@ -682,17 +681,13 @@ object DedupOps {
     * ([[FingerprintIndex]]'s layout). */
   def writeFingerprintIndex(corpusFps: DataFrame, idCol: String,
       fpCol: String, bits: Int, hammingMax: Int, path: String,
-      maxBucket: Int = DefaultMaxBucket,
-      prefixPartitions: Int = 64): Unit = {
+      maxBucket: Int = DefaultMaxBucket): Unit = {
     fingerprintValidate("writeFingerprintIndex", idCol, fpCol, bits,
       hammingMax)
-    require(prefixPartitions >= 1,
-      s"writeFingerprintIndex: prefixPartitions $prefixPartitions < 1")
     IndexMaintenance.pinned(corpusFps.select(col(idCol), col(fpCol)),
       fingerprintRows(_, idCol, fpCol))(IndexMaintenance.write(
       corpusFps.sparkSession, path, FingerprintIndex,
-      "prefix_partitions" -> prefixPartitions, "max_bucket" -> maxBucket,
-      "bits" -> bits, "hamming_max" -> hammingMax))
+      "max_bucket" -> maxBucket, "bits" -> bits, "hamming_max" -> hammingMax))
   }
 
   /** [[fingerprintPairsAgainst]] probing a PERSISTED
@@ -956,12 +951,10 @@ object DedupOps {
     * probe per ingest batch.
     */
   def writeGramIndex(corpus: DataFrame, idCol: String, textCol: String,
-      path: String, gramTokens: Int = 8,
-      prefixPartitions: Int = 64): Unit = {
+      path: String, gramTokens: Int = 8): Unit = {
     require(gramTokens >= 2, s"writeGramIndex: gramTokens $gramTokens < 2")
     IndexMaintenance.write(corpus.sparkSession, path, GramIndex,
-      "gram_tokens" -> gramTokens, "prefix_partitions" -> prefixPartitions)(
-      gramRows(corpus, idCol, textCol))
+      "gram_tokens" -> gramTokens)(gramRows(corpus, idCol, textCol))
   }
 
   /** Fold a DELTA of new documents into a persisted [[writeGramIndex]]
@@ -1242,14 +1235,9 @@ object DedupOps {
   /** Materialize the corpus side of [[cdcChunkHitsAgainstIndex]]
     * ([[CdcIndex]]'s layout). */
   def writeCdcChunkIndex(corpus: DataFrame, idCol: String, textCol: String,
-      path: String, modulus: Int = 64, window: Int = 4,
-      prefixPartitions: Int = 64): Unit = {
-    require(prefixPartitions >= 1,
-      s"writeCdcChunkIndex: prefixPartitions $prefixPartitions < 1")
+      path: String, modulus: Int = 64, window: Int = 4): Unit =
     IndexMaintenance.write(corpus.sparkSession, path, CdcIndex,
-      "prefix_partitions" -> prefixPartitions, "modulus" -> modulus,
-      "window" -> window)(cdcRows(corpus, idCol, textCol))
-  }
+      "modulus" -> modulus, "window" -> window)(cdcRows(corpus, idCol, textCol))
 
   /** Fold a DELTA of new documents into a persisted
     * [[writeCdcChunkIndex]] IN PLACE with O(delta) write bytes: the

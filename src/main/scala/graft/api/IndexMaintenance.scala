@@ -26,6 +26,22 @@ import org.apache.spark.sql.functions._
   *   - the committed and reconciled [[read]] behind every probe and
   *     every streaming gate's snapshot.
   *
+  * Each table's layout is sized from the bytes it is about to hold (the
+  * optimized plan's `stats.sizeInBytes`), never finer than one scan
+  * split (`spark.sql.files.maxPartitionBytes`): a directory or file
+  * smaller than a split saves a probe no I/O and only adds file
+  * overhead. A build ([[write]]) and every compaction ([[compact]],
+  * [[foldTo]], [[maintain]]'s swap) set `prefix_partitions =
+  * clamp(ceil(bytes / split), 1, prefixCap)` over the family's largest
+  * prefixed table ([[Family.prefixCap]]), so compaction re-sizes: a
+  * grown index gains prefixes and an over-split one shrinks to fit. An
+  * in-place [[fold]] keeps the meta's count, since its run lands
+  * beside the committed ones. Every table and appended run is written
+  * as `clamp(ceil(bytes / split), 1, numFiles)` range files
+  * ([[Table.numFiles]] is the cap). A table of at least cap × split
+  * bytes gets exactly the declared layout (64 prefixes × 8 files for
+  * minhash).
+  *
   * The two-source rule: a family derives its corpus tables in ONE
   * place, the row derivation its write and fold persist; every probe
   * reads them through a [[Corpus]] — that derivation over a corpus
@@ -127,7 +143,8 @@ object IndexMaintenance {
   }
 
   /** One persisted table: `$index/$dir`, range-laid-out by
-    * `partitionBy ++ sortCols` into `numFiles` files. `prefix` names a
+    * `partitionBy ++ sortCols` into at most `numFiles` files (one per
+    * scan split of its bytes). `prefix` names a
     * partition column the kernel derives as `pmod(key, prefix_partitions)`
     * on write and drops on read (directory-level probe pruning);
     * `partitionCols` are data columns partitioned as they are.
@@ -142,10 +159,13 @@ object IndexMaintenance {
   /** A persisted index family: its required meta fields (in on-disk
     * order, manifest fields excluded), what they carry (named in
     * errors), its manifest kind, and its tables — a function of the
-    * meta, since a family's geometry may size them. */
+    * meta, since a family's geometry may size them. A family whose
+    * meta carries `prefix_partitions` gets it from the kernel, sized
+    * from its data and capped at `prefixCap`. */
   final case class Family(name: String, writer: String,
       metaFields: Seq[String], carries: String, manifest: Manifest,
-      tables: Meta => Seq[Table], metaFirst: Boolean = false)
+      tables: Meta => Seq[Table], metaFirst: Boolean = false,
+      prefixCap: Int = 64)
 
   /** One index's meta row, fields in on-disk order. */
   final case class Meta(fields: Seq[(String, Any)]) {
@@ -287,13 +307,16 @@ object IndexMaintenance {
   // ---- write / fold / foldTo / compact / maintain ----------------------
 
   /** Build an index at `path`: `geometry` (the family's meta fields, in
-    * order) plus a one-run manifest; the rows derive against that meta.
+    * order, without `prefix_partitions`, which the kernel sizes from the
+    * rows) plus a one-run manifest; the rows derive against that meta.
     * Tables a [[Reconcile.Rebake]] derives need no rows. */
   def write(s: SparkSession, path: String, fam: Family,
       geometry: (String, Any)*)(rows: Meta => Delta): Unit = {
     val run = newRunId()
-    val m = committedMeta(fam, Meta(geometry), 1, Seq(run), Nil)
-    lay(s, path, fam, m, run, rows(m).rows.toMap)
+    val given = Meta(geometry)
+    val frames = rows(given).rows.toMap
+    val m = committedMeta(fam, sized(fam, given, frames), 1, Seq(run), Nil)
+    lay(s, path, fam, m, run, frames)
     commit(s, path, fam, m, 1, rewriteMeta = true)
   }
 
@@ -341,7 +364,8 @@ object IndexMaintenance {
 
   /** Compact a layered index into ONE run per table at `outPath`: each
     * table's committed runs reconciled by its rule (orphan rows of
-    * crashed folds dropped from disk), layers reset to 1, tags kept. */
+    * crashed folds dropped from disk), prefixes re-sized to the
+    * reconciled bytes, layers reset to 1, tags kept. */
   def compact(s: SparkSession, indexPath: String, outPath: String,
       fam: Family, op: String): Unit = {
     require(indexPath != outPath, s"$op: outPath must differ from indexPath")
@@ -357,15 +381,40 @@ object IndexMaintenance {
       val old = committed(s, indexPath, fam, m, t, op, None)
       delta.get(t.dir).fold(old)(d => old.unionByName(d))
     }
-    lay(s, outPath, fam, m, run, tables.collect {
+    val frames = tables.collect {
       case t if !t.reconcile.isInstanceOf[Reconcile.Rebake] &&
           (!t.optional || exists(s, s"$indexPath/${t.dir}")) =>
         t.dir -> reconcile(t, input(t), m,
           d => committed(s, indexPath, fam, m, table(fam, tables, d), op, None))
-    }.toMap)
-    commit(s, outPath, fam, committedMeta(fam, m, 1, Seq(run),
-      if (fam.manifest == Manifest.RunsTags) m.tags else Nil),
-      1, rewriteMeta = true)
+    }.toMap
+    val out = committedMeta(fam, sized(fam, m, frames), 1, Seq(run),
+      if (fam.manifest == Manifest.RunsTags) m.tags else Nil)
+    lay(s, outPath, fam, out, run, frames)
+    commit(s, outPath, fam, out, 1, rewriteMeta = true)
+  }
+
+  private val PrefixField = "prefix_partitions"
+
+  /** `m` with `prefix_partitions` (at its [[Family.metaFields]]
+    * position) sized over the family's largest prefixed table in
+    * `frames` — one prefix per scan split, at most
+    * [[Family.prefixCap]]; unchanged for a family without the field. */
+  private def sized(fam: Family, m: Meta, frames: Map[String, DataFrame]): Meta =
+    if (!fam.metaFields.contains(PrefixField)) m
+    else {
+      val n = fam.tables(m).filter(_.prefix.isDefined)
+        .flatMap(t => frames.get(t.dir)).map(splits(_, fam.prefixCap))
+        .maxOption.getOrElse(1)
+      Meta(fam.metaFields.map(f => f -> (if (f == PrefixField) n else m(f))) ++
+        m.fields.filterNot(kv => fam.metaFields.contains(kv._1)))
+    }
+
+  /** `clamp(ceil(bytes / split), 1, cap)`: the scan splits of `df`'s
+    * estimated bytes (the optimized plan's statistics — no job runs). */
+  private def splits(df: DataFrame, cap: Int): Int = {
+    val split = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    ((bytes + split - 1) / split).max(1).min(cap).toInt
   }
 
   /** Lay out one complete table set at `path` — [[Reconcile.Rebake]]
@@ -440,15 +489,18 @@ object IndexMaintenance {
   /** The distinct `pmod(key, prefix_partitions)` prefixes of a probe's
     * keys — at most prefix_partitions ints, collected driver-side as a
     * partition-pruning list (Int literals: the read-back partition
-    * column infers as int, and a cast on it would defeat pruning). */
+    * column infers as int, and a cast on it would defeat pruning). A
+    * one-prefix index has the one prefix 0, known without a job. */
   def prefixesOf(keys: DataFrame, key: Column, m: Meta): Seq[Int] =
-    keys.select(pmod(key, lit(m.int("prefix_partitions").toLong)))
+    if (m.int(PrefixField) == 1) Seq(0)
+    else keys.select(pmod(key, lit(m.int(PrefixField).toLong)))
       .distinct().collect().map(_.getLong(0).toInt).toSeq
 
   /** A family's corpus tables as its one probe body reads them (the
     * two-source rule above). `pruned(dir, keys, key)`: an index prunes
     * its prefix directories to the `keys`' prefixes ([[prefixesOf]],
-    * one collect job); a derived table returns whole, so an inline
+    * one collect job, none for a one-prefix index); a derived table
+    * returns whole, so an inline
     * probe adds no job. The meta is read on first use. */
   final class Corpus private (meta0: => Meta,
       tableOf: (String, Option[(DataFrame, Column)]) => DataFrame) {
@@ -529,7 +581,7 @@ object IndexMaintenance {
   private def stamp(df: DataFrame, t: Table, fam: Family, m: Meta,
       run: String): DataFrame = {
     val prefixed = t.prefix.fold(df) { case (p, key) =>
-      df.withColumn(p, pmod(key, lit(m.int("prefix_partitions").toLong)))
+      df.withColumn(p, pmod(key, lit(m.int(PrefixField).toLong)))
     }
     if (hasRuns(fam.manifest) && t.reconcile != Reconcile.Tombstones)
       prefixed.withColumn("__run", lit(run))
@@ -542,9 +594,9 @@ object IndexMaintenance {
       df.coalesce(1).write.mode(if (append) "append" else "overwrite")
         .parquet(path)
     case _ if append => graft.jobs.Sinks.layoutAppend(df, path,
-      t.partitionBy, t.sortCols, t.numFiles)
+      t.partitionBy, t.sortCols, splits(df, t.numFiles))
     case _ => graft.jobs.Sinks.layout(df, path, t.partitionBy, t.sortCols,
-      t.numFiles)
+      splits(df, t.numFiles))
   }
 
   private def exists(s: SparkSession, path: String): Boolean = {

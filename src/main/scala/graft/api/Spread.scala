@@ -55,9 +55,9 @@ private[graft] object Spread {
     * the exchange, so skipping the spread is a no-op — while probing
     * it under AQE would execute (and then discard) those stages.
     * Shared with [[graft.jobs.Sinks]]' ranged writer, where the same
-    * test decides whether re-executing the child for the range
-    * sampler is expensive (wide ops above the leaves) or a cheap
-    * narrow re-read of a cache/scan.
+    * test (with its native-kernel test) decides whether re-executing
+    * the child for the range sampler is expensive (wide ops above the
+    * leaves) or a cheap narrow re-read of a cache/scan.
     */
   private[graft] def hasWideOp(ds: Dataset[_]): Boolean =
     ds.queryExecution.optimizedPlan.exists {

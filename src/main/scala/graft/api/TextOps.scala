@@ -1006,10 +1006,10 @@ object TextOps {
     * probe per ingest batch.
     */
   def writeLineIndex(corpus: DataFrame, idCol: String, textCol: String,
-      path: String, prefixPartitions: Int = 64): Unit = {
+      path: String): Unit = {
     requireLineCols(idCol, "writeLineIndex")
-    IndexMaintenance.write(corpus.sparkSession, path, LineIndex,
-      "prefix_partitions" -> prefixPartitions)(lineRows(corpus, idCol, textCol))
+    IndexMaintenance.write(corpus.sparkSession, path, LineIndex)(
+      lineRows(corpus, idCol, textCol))
   }
 
   /** Fold a DELTA of new documents into a persisted [[writeLineIndex]]
@@ -1741,13 +1741,10 @@ object TextOps {
     * query terms read a handful of directories, never the index.
     */
   def writeBm25Index(corpus: DataFrame, idCol: String, textCol: String,
-      path: String, prefixPartitions: Int = 64): Unit = {
-    require(prefixPartitions >= 1,
-      s"writeBm25Index: prefixPartitions $prefixPartitions < 1")
+      path: String): Unit = {
     val (n, tt, maxDl) = bm25CorpusStats(corpus, idCol, textCol)
     IndexMaintenance.write(corpus.sparkSession, path, Bm25Index,
-      "prefix_partitions" -> prefixPartitions, "n" -> n, "tt" -> tt,
-      "max_dl" -> maxDl)(_ => IndexMaintenance.Delta(
+      "n" -> n, "tt" -> tt, "max_dl" -> maxDl)(_ => IndexMaintenance.Delta(
       "postings" -> bm25Postings(corpus, idCol, textCol)))
   }
 

@@ -78,27 +78,32 @@ object Sinks {
     * `repartitionByRange`'s RangePartitioner SAMPLES its child before
     * the exchange, which executes the child plan a second time
     * (VERDICT r16 #4: this double-compute bottlenecked the timed
-    * index/stage-build bench entries). When the child carries real
-    * recompute cost — any wide operator (join/aggregate/window/
-    * distinct/repartition/global sort) above its leaves — it is cut
-    * ONCE with a lazy localCheckpoint: the sampling pass materializes
-    * the blocks (MEMORY_AND_DISK — spill-safe), the exchange re-reads
-    * them, and the blocks release as soon as the write commits. A
-    * NARROW child (a projection over a parquet scan, a checkpoint, or
-    * a cache — e.g. writeBm25Index's second table, a pmod over an
-    * already-checkpointed postings frame) is deliberately NOT cut:
-    * re-reading it for the sampler costs about what reading the cut's
-    * own cache would, so the extra materialization is pure overhead
-    * (measured +0.6 s on q141_index_build before this gate). Sampling,
-    * range boundaries, hot-directory splitting and the written bytes
-    * are unchanged either way — only how many times the child
-    * COMPUTES (2 → 1 where computing is expensive).
+    * index/stage-build bench entries). The cut rule, decided from the
+    * optimized plan: when `numFiles > 1` (one output partition needs no
+    * range bounds, so nothing samples) and the child carries real
+    * recompute cost — a wide operator (join/aggregate/window/distinct/
+    * repartition/global sort) above its leaves, or an expression that
+    * evaluates a graft native kernel (a class of [[graft.functions]],
+    * e.g. `writeIvfPqIndex`'s `pq_encode` projection) — it is cut ONCE
+    * with a lazy localCheckpoint: the sampling pass materializes the
+    * blocks (MEMORY_AND_DISK — spill-safe), the exchange re-reads them,
+    * and the blocks release as soon as the write commits. Any other
+    * NARROW child (a plain projection over a parquet scan, a
+    * checkpoint, or a cache — e.g. writeBm25Index's second table, a
+    * pmod over an already-checkpointed postings frame) is deliberately
+    * NOT cut: re-reading it for the sampler costs about what reading
+    * the cut's own cache would, so the extra materialization is pure
+    * overhead (measured +0.6 s on q141_index_build before this gate).
+    * Sampling, range boundaries, hot-directory splitting and the
+    * written bytes are unchanged either way — only how many times the
+    * child COMPUTES (2 → 1 where computing is expensive).
     */
   private def rangedWrite(df: DataFrame, path: String,
       partitionCols: Seq[String], sortCols: Seq[String], numFiles: Int,
       mode: String): Unit = {
     val keys = (partitionCols ++ sortCols).map(col)
-    val needsCut = graft.api.Spread.hasWideOp(df)
+    val needsCut = numFiles > 1 &&
+      (graft.api.Spread.hasWideOp(df) || evaluatesKernel(df))
     val src = if (needsCut) df.localCheckpoint(eager = false) else df
     try {
       src.repartitionByRange(numFiles, keys: _*)
@@ -106,6 +111,12 @@ object Sinks {
         .write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
     } finally if (needsCut) graft.api.Lifecycle.releaseLocalCheckpoint(src)
   }
+
+  /** Does the optimized plan evaluate a graft native kernel — an
+    * expression whose class lives in [[graft.functions]]? */
+  private def evaluatesKernel(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(
+      _.getClass.getPackageName == "graft.functions")))
 
   /** [[layout]] with mode=append: NEW sorted files land next to the
     * existing ones (dynamic-partition append inside each directory

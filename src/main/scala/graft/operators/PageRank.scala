@@ -462,7 +462,7 @@ object PageRank {
         Some("__vp" -> col("id"))),
       graft.api.IndexMaintenance.Table("removals", Nil, 1,
         graft.api.IndexMaintenance.Reconcile.Tombstones)),
-    metaFirst = true)
+    metaFirst = true, prefixCap = 16)
 
   /** Shared write-side derivation: distinct directed hash pairs
     * (self-loops dropped) + the vertex key map. ONE definition serves
@@ -485,9 +485,8 @@ object PageRank {
     * / [[hitsByKeyAgainstIndex]]).
     */
   def writeEdgeIndex(edges: DataFrame, srcCol: String, dstCol: String,
-      path: String, prefixPartitions: Int = 16): Unit =
-    graft.api.IndexMaintenance.write(edges.sparkSession, path, EdgeIndex,
-      "prefix_partitions" -> prefixPartitions) { _ =>
+      path: String): Unit =
+    graft.api.IndexMaintenance.write(edges.sparkSession, path, EdgeIndex) { _ =>
       val d = edgeRows(edges, srcCol, dstCol)
       graft.api.IndexMaintenance.Delta(
         d.rows :+ ("removals" -> d.rows.toMap.apply("edges").limit(0)): _*)
@@ -731,7 +730,7 @@ object PageRank {
           netPositive = true), Some("__ep" -> col("s"))),
       graft.api.IndexMaintenance.Table("vertices", Seq("id"), 4,
         graft.api.IndexMaintenance.Reconcile.SetUnion(),
-        Some("__vp" -> col("id")))))
+        Some("__vp" -> col("id")))), prefixCap = 16)
 
   /** Shared write-side derivation for the weighted family: per-run
     * partial sums over distinct DIRECTED hash pairs (self-loops
@@ -757,10 +756,9 @@ object PageRank {
     * makes w the occurrence count.
     */
   def writeWeightedEdgeIndex(edges: DataFrame, srcCol: String,
-      dstCol: String, weightCol: String, path: String,
-      prefixPartitions: Int = 16): Unit =
+      dstCol: String, weightCol: String, path: String): Unit =
     graft.api.IndexMaintenance.write(edges.sparkSession, path,
-      WeightedEdgeIndex, "prefix_partitions" -> prefixPartitions)(_ =>
+      WeightedEdgeIndex)(_ =>
       weightedEdgeRows(edges, srcCol, dstCol, weightCol))
 
   /** Fold a DELTA of weighted links into a persisted

@@ -292,7 +292,9 @@ class ApiSpec extends SparkSpec {
     val dir = tempDir("graft-idx-").toString
     val newBatch = corpus.filter(col("row_key") === 13L)
     val old = corpus.filter(col("row_key") =!= 13L)
-    DedupOps.writeMinhashIndex(old, "row_key", "body", s"$dir/text")
+    // a split of a few bytes lays the 4-doc index out in many prefixes
+    withSplitBytes(16)(
+      DedupOps.writeMinhashIndex(old, "row_key", "body", s"$dir/text"))
     val probe = DedupOps.minhashPairsAgainstIndex(
       newBatch, "row_key", "body", s"$dir/text")
     val viaIdx = probe
@@ -1486,7 +1488,9 @@ class ApiSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val qDf = docs.filter(col("doc_id") % 25 === 0)
       .select(col("doc_id").as("qid"), col("text"))
-    TextOps.writeBm25Index(docs, "doc_id", "text", s"$dir/bm25")
+    // a 1 KiB split lays the sf0.001 index out in many prefixes
+    withSplitBytes(1024)(
+      TextOps.writeBm25Index(docs, "doc_id", "text", s"$dir/bm25"))
     val probe = TextOps.bm25TopKAgainstIndex(qDf, "qid", "text",
       s"$dir/bm25", "doc_id", k = 10)
     val viaIdx = probe.collect()
@@ -1976,8 +1980,10 @@ class ApiSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val old = docs.filter(col("doc_id") % 5 =!= 0)
-    DedupOps.writeCdcChunkIndex(old, "doc_id", "text", s"$dir/cdc",
-      modulus = 32, window = 4)
+    // a 1 KiB split lays the sf0.001 index out in many prefixes
+    withSplitBytes(1024)(
+      DedupOps.writeCdcChunkIndex(old, "doc_id", "text", s"$dir/cdc",
+        modulus = 32, window = 4))
     val probe = DedupOps.cdcChunkHitsAgainstIndex(
       delta, "doc_id", "text", s"$dir/cdc")
     val viaIdx = probe.collect()

@@ -9,6 +9,17 @@ class DedupSpec extends SparkSpec {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  /** A scan split that gives the sf0.001 minhash bucket table a few
+    * prefixes (between 1 and the cap of 64). */
+  private val MidSplit = 1024L
+
+  /** sf0.001's documents as an in-memory frame: a small split would
+    * otherwise cut the parquet scan into thousands of tasks. */
+  private lazy val localDocs = {
+    val d = Tables.documents(spark, sf).select("doc_id", "text")
+    spark.createDataFrame(d.collectAsList(), d.schema)
+  }
+
   test("q21 minhash: every reported pair really has jaccard >= 0.5") {
     val rows = run("q21_dedup_minhash_lsh").collect()
     assert(rows.nonEmpty)
@@ -745,6 +756,89 @@ class DedupSpec extends SparkSpec {
     DedupOps.foldIntoMinhashIndex(d2, "doc_id", "text",
       s"$dir/w1", s"$dir/v3")
     assert(probeSet(s"$dir/v3") == full)
+  }
+
+  /** An index table's on-disk layout: its prefix directories (`name=`
+    * children) and its parquet files. */
+  private def prefixDirs(table: String): Int =
+    new java.io.File(table).listFiles.count(f =>
+      f.isDirectory && f.getName.contains("="))
+  private def parquetFiles(root: java.io.File): Int =
+    if (root.isDirectory) root.listFiles.toSeq.map(parquetFiles).sum
+    else if (root.getName.endsWith(".parquet")) 1 else 0
+  private def prefixesInMeta(index: String): Int =
+    spark.read.parquet(s"$index/meta").head()
+      .getAs[Number]("prefix_partitions").intValue()
+
+  test("index layout follows the data: a minhash index smaller than one " +
+      "scan split is one prefix and one file per table") {
+    import graft.api.DedupOps
+    val dir = tempDir("graft-size1-").toString
+    DedupOps.writeMinhashIndex(Tables.documents(spark, sf), "doc_id",
+      "text", s"$dir/ix")
+    assert(prefixesInMeta(s"$dir/ix") == 1)
+    assert(prefixDirs(s"$dir/ix/buckets") == 1)
+    Seq("buckets", "hashed").foreach(t => assert(
+      parquetFiles(new java.io.File(s"$dir/ix/$t")) == 1,
+      s"$t: ${parquetFiles(new java.io.File(s"$dir/ix/$t"))} files"))
+  }
+
+  test("index layout follows the split: a lowered " +
+      "spark.sql.files.maxPartitionBytes gives more prefixes, capped at 64") {
+    import graft.api.DedupOps
+    val docs = localDocs
+    val dir = tempDir("graft-sizen-").toString
+    val counts = Seq(MidSplit * 4, MidSplit, 1L).map { split =>
+      withSplitBytes(split)(DedupOps.writeMinhashIndex(docs, "doc_id",
+        "text", s"$dir/s$split"))
+      val n = prefixesInMeta(s"$dir/s$split")
+      assert(prefixDirs(s"$dir/s$split/buckets") == n)
+      n
+    }
+    // one prefix per split of the bucket table, never more than the cap
+    assert(counts.head > 1 && counts.head < counts(1) && counts(1) < 64,
+      s"prefix counts by falling split: $counts")
+    assert(counts(2) == 64, s"a 1-byte split must hit the cap: $counts")
+    assert(parquetFiles(new java.io.File(s"$dir/s1/hashed")) == 8,
+      "a 1-byte split must lay out the declared 8 files")
+  }
+
+  test("an in-place fold keeps the index's prefix count; compaction " +
+      "re-sizes it and still probes like a from-scratch rebuild") {
+    import graft.api.DedupOps
+    val docs = localDocs
+    val c0 = docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4)
+    val delta = docs.filter(col("doc_id") % 5 === 4)
+    val probes = docs.filter(col("doc_id") % 5 === 0)
+    def probeSet(path: String) = DedupOps.minhashPairsAgainstIndex(
+        probes, "doc_id", "text", path)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val dir = tempDir("graft-sizefold-").toString
+    withSplitBytes(MidSplit)(
+      DedupOps.writeMinhashIndex(c0, "doc_id", "text", s"$dir/ix"))
+    val built = prefixesInMeta(s"$dir/ix")
+    assert(built > 1 && built < 64, s"$built prefixes")
+    // folded at the default split, the delta's run lands in the
+    // build's prefixes: the count is the index's, not the delta's
+    DedupOps.foldIntoMinhashIndex(delta, "doc_id", "text", s"$dir/ix")
+    assert(prefixesInMeta(s"$dir/ix") == built)
+    assert(prefixDirs(s"$dir/ix/buckets") == built)
+    DedupOps.writeMinhashIndex(c0.unionByName(delta), "doc_id", "text",
+      s"$dir/full")
+    val full = probeSet(s"$dir/full")
+    assert(full.nonEmpty, "probe found nothing — parity would be vacuous")
+    assert(probeSet(s"$dir/ix") == full)
+    // compaction at the default split shrinks the index to one prefix
+    DedupOps.compactMinhashIndex(spark, s"$dir/ix", s"$dir/small")
+    assert(prefixesInMeta(s"$dir/small") == 1)
+    assert(prefixDirs(s"$dir/small/buckets") == 1)
+    assert(probeSet(s"$dir/small") == full)
+    // and under a lowered split a one-prefix index grows prefixes
+    withSplitBytes(MidSplit)(
+      DedupOps.compactMinhashIndex(spark, s"$dir/small", s"$dir/grown"))
+    val grown = prefixesInMeta(s"$dir/grown")
+    assert(grown > 1 && grown < 64, s"$grown prefixes")
+    assert(probeSet(s"$dir/grown") == full)
   }
 
   test("maintainMinhashIndex: folds stay O(delta) below the threshold, " +

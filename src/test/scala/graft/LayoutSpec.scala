@@ -51,6 +51,55 @@ class LayoutSpec extends SparkSpec {
       }
   }
 
+  test("ranged layout cuts its child once when the range sampler runs " +
+      "and it is costly (a native kernel counts); one file cuts nothing") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    graft.functions.TextHashExpressions.register(spark)
+    val root = tempDir("graft_cut").toString
+    // the logical plan each write executed, keyed by its output path
+    val written = new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val p = qe.optimizedPlan
+        Seq("kernel", "wide").find(d => p.toString.contains(s"$root/$d"))
+          .foreach(written.put(_, p))
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def planOf(d: String): LogicalPlan = {
+      val until = System.nanoTime() + 10000000000L
+      while (!written.containsKey(d) && System.nanoTime() < until)
+        Thread.sleep(20)
+      Option(written.get(d)).getOrElse(fail(s"no plan captured for $d"))
+    }
+    def kernel(p: LogicalPlan) = p.exists(_.expressions.exists(_.exists(
+      _.getClass.getPackageName == "graft.functions")))
+    def cut(p: LogicalPlan) = p.exists(_.isInstanceOf[LogicalRDD])
+    spark.listenerManager.register(listener)
+    try {
+      // a NARROW child evaluating minhash16: with 4 files the sampler
+      // re-runs the child, so the write reads a cut, not the kernel
+      val narrow = spark.range(0, 2000)
+        .select(col("id"), call_function("minhash16",
+          array(col("id"), col("id") + 1)).as("mh"))
+      Sinks.layout(narrow, s"$root/kernel", Nil, Seq("id"), numFiles = 4)
+      assert(cut(planOf("kernel")) && !kernel(planOf("kernel")),
+        s"kernel child not cut:\n${planOf("kernel")}")
+      // a WIDE child written as one file: nothing samples, so nothing
+      // is cut and the aggregate runs inside the write
+      val wide = spark.range(0, 2000).groupBy((col("id") % 10).as("k"))
+        .agg(count(lit(1)).as("n"))
+      Sinks.layout(wide, s"$root/wide", Nil, Seq("k"), numFiles = 1)
+      assert(!cut(planOf("wide")) &&
+        planOf("wide").exists(_.isInstanceOf[Aggregate]),
+        s"one-file write was cut:\n${planOf("wide")}")
+    } finally spark.listenerManager.unregister(listener)
+    assert(spark.read.parquet(s"$root/kernel").count() == 2000)
+    assert(spark.read.parquet(s"$root/wide").count() == 10)
+  }
+
   test("z-order layout skips row groups on BOTH dims; the single-column " +
       "sort cannot prune its trailing dim") {
     // sf0.01: 10k events over 150 users — enough rows for ~100-row

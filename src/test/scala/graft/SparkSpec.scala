@@ -8,6 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body` under a scan split (`spark.sql.files.maxPartitionBytes`) of
+    * `bytes`, restored after. Index layouts are sized in splits, so a
+    * small split gives a small fixture a multi-prefix index. */
+  def withSplitBytes[T](bytes: Long)(body: => T): T = {
+    val k = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, bytes.toString)
+    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
 }
 
 object SparkSpec {
