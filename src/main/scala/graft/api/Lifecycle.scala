@@ -20,8 +20,8 @@ object Lifecycle {
     }))
 
   /** A fresh directory under the system temp dir for a JVM-lifetime
-    * cache (the catalog's session-cached stages and indexes), deleted
-    * with its contents when the JVM exits. */
+    * cache (the catalog's `SharedStages` artifacts), deleted with its
+    * contents when the JVM exits. */
   private[graft] def tempDir(prefix: String): java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     tempDirs.add(d)

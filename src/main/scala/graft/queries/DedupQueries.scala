@@ -1939,13 +1939,10 @@ SELECT id AS doc_id, w_degree, r AS rank FROM r5"""
     * DedupSpec law. Keys pass as STRINGS (hash60 casts to binary —
     * a Long key would be an ANSI-mode cast violation).
     */
-  private val foldedWeightedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private def foldedWeightedDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldedWeightedCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldedwedge-").toString + "/ix"
+    SharedStages.artifact(dir, "foldedwedge") { root =>
+      val tmp = s"$root/ix"
       val pairs = SharedStages.minhashPairs(s, dir)
         .select(col("doc_a").cast("string").as("ka"),
           col("doc_b").cast("string").as("kb"),
@@ -1955,7 +1952,7 @@ SELECT id AS doc_id, w_degree, r AS rank FROM r5"""
       graft.operators.PageRank.maintainWeightedEdgeIndex(
         pairs.filter(pmod(col("_da"), lit(5)) === 0), "ka", "kb", "w", tmp)
       tmp
-    })
+    }
 
   /** q123's oracle: the identical integer power iteration unrolled as
     * a CTE chain over the SHARED q21 pair SQL (the BpeOps unrolled-
@@ -2002,26 +1999,10 @@ SELECT id AS doc_id, degree, r AS rank FROM r5"""
     * cross pairs (layered persisted-index probe) + the delta's
     * self-pairs, re-closed through foldAssignment.
     */
-  /** The materialized folded assignment (SharedStages discipline —
-    * q116 and q117 both consume the identical derivation, so the
-    * first consumer pays the fold once per SF dir and the other reads
-    * the persisted parquet; keyed by dir only, like SharedStages: the
-    * output is a pure function of the input directory).
-    */
-  private val foldedClustersCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private def foldedClustersShared(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val path = foldedClustersCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldedclusters-").toString
-      graft.jobs.Sinks.layout(foldedClusters(s, dir), tmp,
-        partitionCols = Nil, sortCols = Seq("cluster_id", "doc_id"),
-        numFiles = 1)
-      tmp
-    })
-    s.read.parquet(path)
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    SharedStages.materialized(s, dir, "foldedclusters",
+      Seq("cluster_id", "doc_id"))(foldedClusters(s, dir))
 
   private def foldedClusters(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -2086,29 +2067,21 @@ SELECT cluster_id, doc_id AS keeper_id, n_members, keeper_score FROM (
                             ORDER BY n_tok DESC, doc_id ASC) AS rn
   FROM m) WHERE rn = 1"""
 
-  // session-scoped persisted corpus cluster assignment (the
-  // SharedStages discipline): "yesterday's" (doc, cluster) parquet
-  // that q116 folds the delta into — built once per SF dir from the
-  // corpus slice's own pairs, read (never recomputed) by every fold.
-  private val clusterAsgCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
+  // "yesterday's" (doc, cluster) assignment that q116 folds the delta
+  // into, from the corpus slice's own pairs
   private def corpusAssignmentDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    clusterAsgCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "foldcc") { tmp =>
       val corpus = Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0)
-      val asg = graft.operators.ConnectedComponents.minLabel(
+      graft.operators.ConnectedComponents.minLabel(
         graft.api.DedupOps.minhashPairs(corpus, "doc_id", "text"),
-        "doc_a", "doc_b")
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldcc-").toString
-      asg.write.mode("overwrite").parquet(tmp)
+        "doc_a", "doc_b").write.mode("overwrite").parquet(tmp)
       tmp
-    })
+    }
 
-  // session-scoped folded-index caches (the MlQueries.ivfPqIndexDir
-  // discipline): build v1 on the 40% slice, fold the other 40% in,
-  // first consumer pays the build, every later run probes the same
-  // parquet — which is the fold's own deployment story
+  // the folded indexes: v1 on the 40% slice, the other 40% folded in
+  // — the first consumer pays the build, every later run probes the
+  // same parquet, which is the fold's own deployment story
   /** The q133 dHash frame (doc_id, dhash64) through the real decode —
     * shared front end of q137 (inline probe) and q138 (persisted
     * index); callers checkpoint as needed. */
@@ -2118,25 +2091,22 @@ SELECT cluster_id, doc_id AS keeper_id, n_members, keeper_score FROM (
         graft.operators.Multimodal.documentsAsBmpMedia(s, dir))
       .select(col("doc_id"), col("dhash64"))
 
-  private val foldFpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** q138's persisted fingerprint index: v1 over the 40% slice, the
     * other 40% folded IN PLACE as its own layered run (the
     * foldedMinhashDir discipline for the sixth family). */
   private def foldedFpDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldFpCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "foldfp") { tmp =>
       val dh = imageDhash(s, dir).localCheckpoint()
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldfp-").toString
       graft.api.DedupOps.writeFingerprintIndex(
         dh.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "dhash64", bits = 64, hammingMax = 6, s"$tmp/v1")
       graft.api.DedupOps.foldIntoFingerprintIndex(
         dh.filter(col("doc_id") % 5 === 3 || col("doc_id") % 5 === 4),
         "doc_id", "dhash64", s"$tmp/v1")
+      graft.api.Lifecycle.releaseLocalCheckpoint(dh)
       s"$tmp/v1"
-    })
+    }
 
   /** The q149/q150 oracle: ONE SQL generator for the inline and
     * persisted-index probes (the q59/q110 discipline — fold==rebuild
@@ -2168,9 +2138,6 @@ SELECT doc_id, min(pos) AS span_start, max(pos) + 8 AS span_end,
        max(pos) + 8 - min(pos) AS span_tokens
 FROM i GROUP BY doc_id, grp"""
 
-  private val foldGramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** q150's persisted gram-count index: v1 over the 40% slice, the
     * other 40% folded IN PLACE through the FULL maintain* policy
     * (writer lock + recoverAtEntry + O(delta) run; the default
@@ -2180,9 +2147,8 @@ FROM i GROUP BY doc_id, grp"""
     */
   private[graft] def foldedGramDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldGramCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "foldgram") { tmp =>
       val docs = Tables.documents(s, dir)
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldgram-").toString
       graft.api.DedupOps.writeGramIndex(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", s"$tmp/v1")
@@ -2193,18 +2159,12 @@ FROM i GROUP BY doc_id, grp"""
         "foldedGramDir: the fixture is specified to stay LAYERED " +
           "(probe must exercise the sum-reconcile path)")
       s"$tmp/v1"
-    })
-
-  private val foldMinhashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-  private val foldCdcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
+    }
 
   private def foldedMinhashDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldMinhashCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "foldmh") { tmp =>
       val docs = Tables.documents(s, dir)
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldmh-").toString
       graft.api.DedupOps.writeMinhashIndex(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", s"$tmp/v1")
@@ -2216,17 +2176,13 @@ FROM i GROUP BY doc_id, grp"""
         docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 5 === 4),
         "doc_id", "text", s"$tmp/v1")
       s"$tmp/v1"
-    })
-
-  private val foldSignCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
+    }
 
   private def foldedSignDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldSignCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "foldsign") { tmp =>
       val emb = Tables.embeddings(s, dir)
       val planes = (0 until LshPlanes).map(plane)
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldsign-").toString
       graft.api.VectorOps.writeSignIndex(
         emb.filter(col("vec_id") % 5 === 1 || col("vec_id") % 5 === 2),
         "vec_id", "embedding", planes, s"$tmp/v1")
@@ -2236,13 +2192,12 @@ FROM i GROUP BY doc_id, grp"""
         emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 5 === 4),
         "vec_id", "embedding", planes, s"$tmp/v1")
       s"$tmp/v1"
-    })
+    }
 
   private def foldedCdcDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldCdcCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "foldcdc") { tmp =>
       val docs = Tables.documents(s, dir)
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldcdc-").toString
       graft.api.DedupOps.writeCdcChunkIndex(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", s"$tmp/v1",
@@ -2253,5 +2208,5 @@ FROM i GROUP BY doc_id, grp"""
         docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 5 === 4),
         "doc_id", "text", s"$tmp/v1")
       s"$tmp/v1"
-    })
+    }
 }

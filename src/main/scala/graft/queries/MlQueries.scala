@@ -13,25 +13,18 @@ import graft.{QueryDef, Tables}
   */
 object MlQueries {
 
-  // session-scoped IVF-PQ index cache (the SharedStages/BpeOps
-  // discipline): the persisted index is a pure function of the SF dir
-  // and the build parameters, so the first consumer writes it and
-  // every later run probes the SAME parquet — which is the index's own
-  // deployment story (build once, probe per batch). Temp dirs die with
-  // the JVM (same shutdown contract as SharedStages).
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
+  // the first consumer writes the IVF-PQ index and every later run
+  // probes the SAME parquet — the index's own deployment story (build
+  // once, probe per batch)
   private[graft] def ivfPqIndexDir(s: SparkSession, dir: String): String =
-    indexCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "ivfpq") { tmp =>
       val model = graft.api.VectorOps.ivfPqTrain(
         Tables.embeddings(s, dir), "vec_id", "embedding",
         nCells = 8, m = 16, k = 16, seed = 42L)
-      val tmp = graft.api.Lifecycle.tempDir("graft-ivfpq-").toString
       graft.api.VectorOps.writeIvfPqIndex(
         Tables.embeddings(s, dir), "vec_id", "embedding", model, tmp)
       tmp
-    })
+    }
 
   /** Full KMeans-IVF neighbor detail: qid, qcell, nid, cell, sim, rn.
     * MLlib KMeans (k=8, fixed seed) learns the coarse quantizer instead
@@ -271,7 +264,7 @@ FROM embeddings WHERE vec_id >= 100 AND vec_id < 110"""),
           .as("recall10"))
   }
 
-  // session-scoped MAINTAINED IVF-PQ index (the q110/q111/q113 fixture
+  // the MAINTAINED IVF-PQ index (the q110/q111/q113 fixture
   // pattern for the vector-codes family): codebooks train on the 80%
   // slice, v1 encodes it, the 20% delta goes through the FULL
   // maintain* policy — writer lock, crash recovery at entry, O(delta)
@@ -280,19 +273,14 @@ FROM embeddings WHERE vec_id >= 100 AND vec_id < 110"""),
   // is a pure re-layout for IVF-PQ (no read-side reconcile exists),
   // so probe results are identical to the layered state ApiSpec pins
   // exactly — what the catalog row adds is the deployed composition:
-  // maintain -> swap -> route -> prune -> ADC -> re-rank. First
-  // consumer pays the build, later runs probe the same parquet.
-  private val foldedIvfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
+  // maintain -> swap -> route -> prune -> ADC -> re-rank.
   private[graft] def foldedIvfPqDir(s: SparkSession, dir: String): String =
-    foldedIvfPqCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "ivfpqfold") { tmp =>
       val emb = Tables.embeddings(s, dir)
       val c0 = emb.filter(col("vec_id") % 5 =!= 0)
       val delta = emb.filter(col("vec_id") % 5 === 0)
       val model = graft.api.VectorOps.ivfPqTrain(
         c0, "vec_id", "embedding", nCells = 8, m = 16, k = 16, seed = 42L)
-      val tmp = graft.api.Lifecycle.tempDir("graft-ivfpqfold-").toString
       graft.api.VectorOps.writeIvfPqIndex(
         c0, "vec_id", "embedding", model, tmp)
       val compacted = graft.api.VectorOps.maintainIvfPqIndex(
@@ -301,5 +289,5 @@ FROM embeddings WHERE vec_id >= 100 AND vec_id < 110"""),
         "foldedIvfPqDir: maintain at threshold 2 must compact — the " +
           "q115 row is specified to gate a probe over a compacted index")
       tmp
-    })
+    }
 }

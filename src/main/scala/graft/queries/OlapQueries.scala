@@ -691,56 +691,46 @@ FROM v,
           Seq("view", "click", "purchase"), gap = 86400000000L))
   )
 
-  /** Session-scoped bucketed lineitem/orders external tables (the
-    * index-build discipline: first consumer pays the one-time layout
-    * shuffle, every later run joins co-located buckets — which IS the
-    * bucketing deployment story). Table names carry the session and
-    * dir hashes so distinct sessions/SFs never collide in a shared
-    * catalog.
+  /** Bucketed lineitem/orders external tables: the first consumer pays
+    * the one-time layout shuffle, every later run joins co-located
+    * buckets — which IS the bucketing deployment story. Table names
+    * carry the session and dir hashes so distinct sessions/SFs never
+    * collide in a shared catalog.
     */
-  private val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
-
   def bucketedPair(s: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val key = System.identityHashCode(s) + "|" + dir
-    bucketedCache.computeIfAbsent(key, { _ =>
-      val sfx = java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        java.lang.Integer.toHexString(System.identityHashCode(s))
+    val sfx = java.lang.Integer.toHexString(dir.hashCode) + "_" +
+      java.lang.Integer.toHexString(System.identityHashCode(s))
+    SharedStages.artifact(dir, s"bucketed-$sfx") { tmp =>
       val li = s"graft_li_$sfx"
       val ord = s"graft_ord_$sfx"
-      val tmp = graft.api.Lifecycle.tempDir("graft-bucketed-").toString
       graft.jobs.Sinks.bucketedTable(
         Tables.lineitem(s, dir), li, s"$tmp/lineitem", 8, "l_orderkey")
       graft.jobs.Sinks.bucketedTable(
         Tables.orders(s, dir), ord, s"$tmp/orders", 8, "o_orderkey")
       (li, ord)
-    })
+    }
   }
 
-  /** Session-scoped Z-ORDERED events layout (the [[bucketedPair]]
-    * discipline for the data-skipping layout): built once per
-    * session+SF; returns the path plus the integer min/max of both
-    * layout dimensions so callers inline bound LITERALS — a filter
-    * built from a join would never reach the scan as a PushedFilter.
+  /** Z-ORDERED events layout (the [[bucketedPair]] discipline for the
+    * data-skipping layout), built once per session+SF; returns the path
+    * plus the integer min/max of both layout dimensions so callers
+    * inline bound LITERALS — a filter built from a join would never
+    * reach the scan as a PushedFilter.
     */
-  private val zorderCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Long, Long, Long, Long)]
-
   def zorderedEvents(s: org.apache.spark.sql.SparkSession,
       dir: String): (String, Long, Long, Long, Long) = {
-    val key = System.identityHashCode(s) + "|" + dir
-    zorderCache.computeIfAbsent(key, { _ =>
+    val sid = java.lang.Integer.toHexString(System.identityHashCode(s))
+    SharedStages.artifact(dir, s"zorder-$sid") { root =>
       val src = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"),
           expr("ts_ns div 1000").as("us"), col("event_type"), col("value"))
-      val path = graft.api.Lifecycle.tempDir("graft-zorder-").toString + "/events"
+      val path = s"$root/events"
       graft.jobs.Sinks.zorderedLayout(src, path, "user_id", "us",
         numFiles = 8)
       val r = src.agg(min(col("user_id")), max(col("user_id")),
         min(col("us")), max(col("us"))).head()
       (path, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    })
+    }
   }
 }

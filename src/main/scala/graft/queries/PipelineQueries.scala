@@ -209,6 +209,18 @@ FROM q GROUP BY ROLLUP (source, lang, quality)"""
        (1 + (doc_id % 9) % 4)::INT) || ' ' || text ||
        ' <a href=''https://sq' || (doc_id % 5) || '.io/s''>s</a>'"""
 
+  /** The host edges (doc_id, src_host, dst_host) of an extracted link
+    * stream: every fixture doc lives on ex(doc_id mod 9).org, and each
+    * of its links with a host is one edge to that host.
+    */
+  private def hostEdges(
+      links: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    links.filter(col("host") =!= "")
+      .select(col("doc_id"),
+        concat(lit("ex"), (col("doc_id") % 9).cast("string"),
+          lit(".org")).as("src_host"),
+        col("host").as("dst_host"))
+
   /** q159's unrolled HITS rounds (the pagerankRoundsSql discipline):
     * round k derives authority in-sums off h(k-1) over the directed
     * edges `e`, renormalizes by the round max to the PageRank scale,
@@ -457,57 +469,50 @@ WHERE rb.fetch_rank <= 7"""
     * oracle-checked fold==rebuild hash exercises the cross-run SUM
     * reconcile with genuinely split weights.
     */
-  private val foldedWeightedHostCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def foldedWeightedHostDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    foldedWeightedHostCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldedwhost-").toString + "/ix"
-      val links = graft.api.TextOps.extractLinks(
-        weightedLinkFixture(Tables.documents(s, dir)), "doc_id", "text")
-      val edges = links.filter(col("host") =!= "")
-        .select(col("doc_id"),
-          concat(lit("ex"), (col("doc_id") % 9).cast("string"),
-            lit(".org")).as("src_host"),
-          col("host").as("dst_host"))
-        .withColumn("w1", lit(1L))
-      graft.operators.PageRank.writeWeightedEdgeIndex(
-        edges.filter(col("doc_id") % 5 =!= 0), "src_host", "dst_host",
-        "w1", tmp)
-      graft.operators.PageRank.maintainWeightedEdgeIndex(
-        edges.filter(col("doc_id") % 5 === 0), "src_host", "dst_host",
-        "w1", tmp)
-      tmp
-    })
+    SharedStages.artifact(dir, "foldedwhost")(weightedHostIndex(s, dir, _))
 
-  /** The materialized FOLDED edge index per SF dir (SharedStages
-    * discipline — q160 and q161 consume the identical artifact): v1 =
-    * links of docs with doc_id % 5 != 0, then the %5==0 slice's links
-    * maintain-fold in. Ranking over this index must equal ranking the
-    * FULL link stream — the driver checks it against
+  /** Writes [[foldedWeightedHostDir]]'s index under `root`; returns
+    * its path. */
+  private def weightedHostIndex(s: org.apache.spark.sql.SparkSession,
+      dir: String, root: String): String = {
+    val ix = s"$root/ix"
+    val edges = hostEdges(graft.api.TextOps.extractLinks(
+      weightedLinkFixture(Tables.documents(s, dir)), "doc_id", "text"))
+      .withColumn("w1", lit(1L))
+    graft.operators.PageRank.writeWeightedEdgeIndex(
+      edges.filter(col("doc_id") % 5 =!= 0), "src_host", "dst_host",
+      "w1", ix)
+    graft.operators.PageRank.maintainWeightedEdgeIndex(
+      edges.filter(col("doc_id") % 5 === 0), "src_host", "dst_host",
+      "w1", ix)
+    ix
+  }
+
+  /** The materialized FOLDED edge index per SF dir (q160 and q161
+    * consume the identical artifact): v1 = links of docs with
+    * doc_id % 5 != 0, then the %5==0 slice's links maintain-fold in.
+    * Ranking over this index must equal ranking the FULL link stream —
+    * the driver checks it against
     * [[hostCentralityOracleSql]]/[[hostHitsOracleSql]] verbatim.
     */
-  private val foldedEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def foldedEdgeDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldedEdgeCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldededge-").toString + "/ix"
-      val links = graft.api.TextOps.extractLinks(
-        linkFixture(Tables.documents(s, dir)), "doc_id", "text")
-      val edges = links.filter(col("host") =!= "")
-        .select(col("doc_id"),
-          concat(lit("ex"), (col("doc_id") % 9).cast("string"),
-            lit(".org")).as("src_host"),
-          col("host").as("dst_host"))
-      graft.operators.PageRank.writeEdgeIndex(
-        edges.filter(col("doc_id") % 5 =!= 0), "src_host", "dst_host", tmp)
-      graft.operators.PageRank.maintainEdgeIndex(
-        edges.filter(col("doc_id") % 5 === 0), "src_host", "dst_host", tmp)
-      tmp
-    })
+    SharedStages.artifact(dir, "foldededge")(edgeIndex(s, dir, _))
+
+  /** Writes [[foldedEdgeDir]]'s index under `root`; returns its path. */
+  private def edgeIndex(s: org.apache.spark.sql.SparkSession,
+      dir: String, root: String): String = {
+    val ix = s"$root/ix"
+    val edges = hostEdges(graft.api.TextOps.extractLinks(
+      linkFixture(Tables.documents(s, dir)), "doc_id", "text"))
+    graft.operators.PageRank.writeEdgeIndex(
+      edges.filter(col("doc_id") % 5 =!= 0), "src_host", "dst_host", ix)
+    graft.operators.PageRank.maintainEdgeIndex(
+      edges.filter(col("doc_id") % 5 === 0), "src_host", "dst_host", ix)
+    ix
+  }
 
   /** q154's full scheduler oracle — ONE definition shared with q162
     * (the deployed twin ranking off the MAINTAINED edge index), the
@@ -2173,13 +2178,8 @@ FROM m GROUP BY doc_id"""),
         "the key join-back is a broadcast-sized vertex map.",
       Some(hostCentralityOracleSql),
       (s, dir) => {
-        val links = graft.api.TextOps.extractLinks(
-          linkFixture(Tables.documents(s, dir)), "doc_id", "text")
-        val edges = links.filter(col("host") =!= "")
-          .select(
-            concat(lit("ex"), (col("doc_id") % 9).cast("string"),
-              lit(".org")).as("src_host"),
-            col("host").as("dst_host"))
+        val edges = hostEdges(graft.api.TextOps.extractLinks(
+          linkFixture(Tables.documents(s, dir)), "doc_id", "text"))
         graft.operators.PageRank.ranksByKey(edges, "src_host", "dst_host",
             iterations = 5)
           .select(col("key").as("host"), col("degree"), col("rank"))
@@ -2269,13 +2269,9 @@ FROM m GROUP BY doc_id"""),
           "doc_id", "text")
         val budget = graft.api.TextOps.frontierBudget(links,
           "doc_id", "host", "href", budgetPerHost = 7)
-        val edges = links.filter(col("host") =!= "")
-          .select(
-            concat(lit("ex"), (col("doc_id") % 9).cast("string"),
-              lit(".org")).as("src_host"),
-            col("host").as("dst_host"))
         val ranks = graft.operators.PageRank
-          .ranksByKey(edges, "src_host", "dst_host", iterations = 5)
+          .ranksByKey(hostEdges(links), "src_host", "dst_host",
+            iterations = 5)
           .select(col("key").as("host"), col("rank").as("host_rank"))
         budget.join(ranks, Seq("host"))
           .select(col("host"), col("href"), col("n_refs"),
@@ -2468,13 +2464,8 @@ FROM s JOIN t ON s.host = t.host AND s.href = t.href AND t.rn = 1"""),
         "is a broadcast-sized vertex map.",
       Some(hostHitsOracleSql),
       (s, dir) => {
-        val links = graft.api.TextOps.extractLinks(
-          linkFixture(Tables.documents(s, dir)), "doc_id", "text")
-        val edges = links.filter(col("host") =!= "")
-          .select(
-            concat(lit("ex"), (col("doc_id") % 9).cast("string"),
-              lit(".org")).as("src_host"),
-            col("host").as("dst_host"))
+        val edges = hostEdges(graft.api.TextOps.extractLinks(
+          linkFixture(Tables.documents(s, dir)), "doc_id", "text"))
         graft.operators.PageRank.hitsByKey(edges, "src_host", "dst_host",
             iterations = 3)
           .select(col("key").as("host"), col("hub"), col("auth"))
@@ -2579,13 +2570,8 @@ FROM s JOIN t ON s.host = t.host AND s.href = t.href AND t.rn = 1"""),
         "broadcast-sized vertex map.",
       Some(weightedHostRankOracleSql),
       (s, dir) => {
-        val links = graft.api.TextOps.extractLinks(
-          weightedLinkFixture(Tables.documents(s, dir)), "doc_id", "text")
-        val edges = links.filter(col("host") =!= "")
-          .select(
-            concat(lit("ex"), (col("doc_id") % 9).cast("string"),
-              lit(".org")).as("src_host"),
-            col("host").as("dst_host"))
+        val edges = hostEdges(graft.api.TextOps.extractLinks(
+          weightedLinkFixture(Tables.documents(s, dir)), "doc_id", "text"))
           .withColumn("w1", lit(1L))
         graft.operators.PageRank.weightedRanksByKey(edges,
             "src_host", "dst_host", "w1", iterations = 5)
@@ -2975,30 +2961,24 @@ GROUP BY shard"""),
   /** q173's artifact: the corpus published as 8 token-balanced shards
     * (q156's assignment written out with its committed manifest).
     */
-  private val publishShardsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def publishedShardsDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    publishShardsCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-pubshards-").toString + "/rel"
+    SharedStages.artifact(dir, "pubshards") { root =>
+      val tmp = s"$root/rel"
       graft.api.SampleOps.publishShards(
         Tables.documents(s, dir).select(col("doc_id"), col("text"),
           size(split(col("text"), " ", -1)).cast("long").as("n_tok")),
         "doc_id", "text", "n_tok", tmp, shards = 8, seed = "shard1")
       tmp
-    })
+    }
 
   /** q174's artifact: the temperature-resampled keep set published as
     * 8 token-balanced shards — the curate → export composition.
     */
-  private val publishCuratedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def publishedCuratedDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    publishCuratedCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-pubcurated-").toString + "/rel"
+    SharedStages.artifact(dir, "pubcurated") { root =>
+      val tmp = s"$root/rel"
       val docs = Tables.documents(s, dir).select(col("doc_id"),
         col("text"), col("source"),
         size(split(col("text"), " ", -1)).cast("long").as("n_tok"))
@@ -3009,7 +2989,7 @@ GROUP BY shard"""),
         docs.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi"),
         "doc_id", "text", "n_tok", tmp, shards = 8, seed = "shard1")
       tmp
-    })
+    }
 
   /** q171's persisted corpus-stats (dataset-card) index: v1 over the
     * mod-7 6/7 slice, the 1/7 delta maintain-folded IN PLACE through
@@ -3022,109 +3002,70 @@ GROUP BY shard"""),
     * ever overlap — mod 7 is coprime to the derivation and the runs
     * genuinely share leaves (CardSpec pins it).
     */
-  private val foldCardCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def foldedCardDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldCardCache.computeIfAbsent(dir, { _ =>
-      val docs = Tables.documents(s, dir)
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldcard-").toString + "/ix"
-      graft.api.CardOps.writeCardIndex(
-        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
-        "source", "lang", tmp)
-      val compacted = graft.api.CardOps.maintainCardIndex(
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-        "source", "lang", tmp)
-      require(!compacted,
-        "foldedCardDir: the fixture is specified to stay LAYERED " +
-          "(probe must exercise the sum-reconcile path)")
-      tmp
-    })
+    SharedStages.artifact(dir, "foldcard")(
+      cardIndex(Tables.documents(s, dir), _))
+
+  /** Writes [[foldedCardDir]]'s index of `docs` under `root`; returns
+    * its path. */
+  private def cardIndex(docs: org.apache.spark.sql.DataFrame,
+      root: String): String = {
+    val ix = s"$root/ix"
+    graft.api.CardOps.writeCardIndex(
+      docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
+      "source", "lang", ix)
+    val compacted = graft.api.CardOps.maintainCardIndex(
+      docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
+      "source", "lang", ix)
+    require(!compacted,
+      "foldedCardDir: the fixture is specified to stay LAYERED " +
+        "(probe must exercise the sum-reconcile path)")
+    ix
+  }
 
   /** q172's artifact: the q171-shape maintained card index with ALL
     * of source src3's documents removal-folded (full removal — the
     * source's leaves net to exactly 0). Independent of
     * [[foldedCardDir]] — q171 must keep reading the un-removed card.
     */
-  private val takedownCardCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def takedownCardDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    takedownCardCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "takedowncard") { root =>
       val docs = Tables.documents(s, dir)
-      val tmp = graft.api.Lifecycle.tempDir("graft-takedowncard-").toString + "/ix"
-      graft.api.CardOps.writeCardIndex(
-        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
-        "source", "lang", tmp)
-      graft.api.CardOps.maintainCardIndex(
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-        "source", "lang", tmp)
+      val ix = cardIndex(docs, root)
       graft.api.CardOps.foldRemovalsIntoCardIndex(
         docs.filter(col("source") === "src3"), "doc_id", "text",
-        "source", "lang", tmp)
-      tmp
-    })
+        "source", "lang", ix)
+      ix
+    }
 
   /** q169's artifact: the q160-shape maintained edge index with host
     * m1.net taken down through the tombstone path. Independent of
     * [[foldedEdgeDir]] — q160/q161/q162 must keep reading the
     * un-removed graph.
     */
-  private val takedownEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def takedownEdgeDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    takedownEdgeCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-takedownedge-").toString + "/ix"
-      val links = graft.api.TextOps.extractLinks(
-        linkFixture(Tables.documents(s, dir)), "doc_id", "text")
-      val edges = links.filter(col("host") =!= "")
-        .select(col("doc_id"),
-          concat(lit("ex"), (col("doc_id") % 9).cast("string"),
-            lit(".org")).as("src_host"),
-          col("host").as("dst_host"))
-      graft.operators.PageRank.writeEdgeIndex(
-        edges.filter(col("doc_id") % 5 =!= 0), "src_host", "dst_host", tmp)
-      graft.operators.PageRank.maintainEdgeIndex(
-        edges.filter(col("doc_id") % 5 === 0), "src_host", "dst_host", tmp)
-      graft.operators.PageRank.removeKeysFromEdgeIndex(
-        s, Seq("m1.net"), tmp)
-      tmp
-    })
+    SharedStages.artifact(dir, "takedownedge") { root =>
+      val ix = edgeIndex(s, dir, root)
+      graft.operators.PageRank.removeKeysFromEdgeIndex(s, Seq("m1.net"), ix)
+      ix
+    }
 
   /** q170's artifact: the q165-shape maintained WEIGHTED index with
     * host m1.net taken down through the signed-run path. Independent
     * of [[foldedWeightedHostDir]] — q165/q167/q168 must keep reading
     * the un-removed graph.
     */
-  private val takedownWeightedHostCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def takedownWeightedHostDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    takedownWeightedHostCache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-takedownwhost-").toString + "/ix"
-      val links = graft.api.TextOps.extractLinks(
-        weightedLinkFixture(Tables.documents(s, dir)), "doc_id", "text")
-      val edges = links.filter(col("host") =!= "")
-        .select(col("doc_id"),
-          concat(lit("ex"), (col("doc_id") % 9).cast("string"),
-            lit(".org")).as("src_host"),
-          col("host").as("dst_host"))
-        .withColumn("w1", lit(1L))
-      graft.operators.PageRank.writeWeightedEdgeIndex(
-        edges.filter(col("doc_id") % 5 =!= 0), "src_host", "dst_host",
-        "w1", tmp)
-      graft.operators.PageRank.maintainWeightedEdgeIndex(
-        edges.filter(col("doc_id") % 5 === 0), "src_host", "dst_host",
-        "w1", tmp)
+    SharedStages.artifact(dir, "takedownwhost") { root =>
+      val ix = weightedHostIndex(s, dir, root)
       graft.operators.PageRank.removeKeysFromWeightedEdgeIndex(
-        s, Seq("m1.net"), tmp)
-      tmp
-    })
+        s, Seq("m1.net"), ix)
+      ix
+    }
 
   /** q153's line fixture — the q151 skeleton minus the license line,
     * with the shared paragraph keyed `(doc_id div 5) mod 24` (the
@@ -3152,9 +3093,6 @@ GROUP BY shard"""),
        'Shared para ' || ((doc_id // 5) % 24) || chr(10) || chr(10) ||
        'Doc ' || doc_id || ' footer'"""
 
-  private val foldLineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** q153's persisted line-count index: v1 over the 40% slice, the
     * other 40% folded IN PLACE through the FULL maintain* policy
     * (writer lock + recoverAtEntry + O(delta) run; the default
@@ -3164,9 +3102,8 @@ GROUP BY shard"""),
     */
   private[graft] def foldedLineDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    foldLineCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "foldline") { tmp =>
       val lined = lineIndexFixture(Tables.documents(s, dir))
-      val tmp = graft.api.Lifecycle.tempDir("graft-foldline-").toString
       graft.api.TextOps.writeLineIndex(
         lined.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", s"$tmp/v1")
@@ -3177,7 +3114,7 @@ GROUP BY shard"""),
         "foldedLineDir: the fixture is specified to stay LAYERED " +
           "(probe must exercise the sum-reconcile path)")
       s"$tmp/v1"
-    })
+    }
 
   /** q114's raw overlap counts: IVF-PQ hybrid leg vs the SHARED
     * materialized brute stage, per-query (qid, _n, _bn, rn_dense,
@@ -3268,41 +3205,23 @@ GROUP BY shard"""),
       (col("_ov") * 10 >= least(col("_n"), col("_bn")) * floorPer10)
         .as("overlap_ok"))
 
-  // session-scoped IVF-PQ index over the corpus's TEXT hash embeddings
-  // (the MlQueries.ivfPqIndexDir discipline applied to embedText
-  // vectors): build once per SF dir, every q114 run probes the same
-  // parquet — the index's own deployment story. Zero-signal vectors
-  // (token-less or fully-sign-cancelled docs) are excluded exactly as
-  // the brute leg excludes them, so both legs see one corpus.
-  private val hybridIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  // q141's persisted BM25 index over the same corpus (the
-  // hybridIdxCache discipline for the lexical leg): built once per
-  // SF dir, every q141 run probes the same parquet — together with
-  // hybridIvfPqDir this makes the deployed call's plan corpus-free.
-  private val hybridBm25Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
+  // q141's persisted BM25 index over the q114 corpus: together with
+  // hybridIvfPqDir this makes the deployed call's plan corpus-free
   private[graft] def hybridBm25Dir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    hybridBm25Cache.computeIfAbsent(dir, { _ =>
-      val tmp = graft.api.Lifecycle.tempDir("graft-hybbm25-").toString
+    SharedStages.artifact(dir, "hybbm25") { tmp =>
       graft.api.TextOps.writeBm25Index(
         Tables.documents(s, dir), "doc_id", "text", s"$tmp/ix")
       s"$tmp/ix"
-    })
+    }
 
   // q129's persisted CHUNK-vector IVF-PQ index (the hybridIvfPqDir
   // discipline at passage granularity): chunks become pseudo-docs
   // exactly as passageTopK builds them, so probe and brute see one
   // chunk universe.
-  private val passageIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def passageIvfPqDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    passageIdxCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "psgivfpq") { tmp =>
       val chunks = graft.api.TextOps.chunk(
         Tables.documents(s, dir), "doc_id", "text", 32, 32)
         .select((col("doc_id") * lit(100000L) + col("chunk_idx"))
@@ -3311,25 +3230,27 @@ GROUP BY shard"""),
         .filter(expr("exists(v, x -> x != 0D)"))
       val model = graft.api.VectorOps.ivfPqTrain(
         cv, "_cid", "v", nCells = 8, m = 16, k = 16, seed = 42L)
-      val tmp = graft.api.Lifecycle.tempDir("graft-psgivfpq-").toString
       // storeVectors: q129's exact-refine leg joins the stored chunk
       // vectors (cell-pruned) instead of re-chunking + re-embedding
       // the corpus per retrieval batch
       graft.api.VectorOps.writeIvfPqIndex(cv, "_cid", "v", model, tmp,
         storeVectors = true)
       tmp
-    })
+    }
 
+  // q114's IVF-PQ index over the corpus's TEXT hash embeddings.
+  // Zero-signal vectors (token-less or fully-sign-cancelled docs) are
+  // excluded exactly as the brute leg excludes them, so both legs see
+  // one corpus.
   private[graft] def hybridIvfPqDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    hybridIdxCache.computeIfAbsent(dir, { _ =>
+    SharedStages.artifact(dir, "hybivfpq") { tmp =>
       val ce = graft.api.TextOps.embedText(
         Tables.documents(s, dir), "doc_id", "text", 64)
         .filter(expr("exists(v, x -> x != 0D)"))
       val model = graft.api.VectorOps.ivfPqTrain(
         ce, "doc_id", "v", nCells = 8, m = 16, k = 16, seed = 42L)
-      val tmp = graft.api.Lifecycle.tempDir("graft-hybivfpq-").toString
       graft.api.VectorOps.writeIvfPqIndex(ce, "doc_id", "v", model, tmp)
       tmp
-    })
+    }
 }

@@ -1,76 +1,93 @@
 package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.function.{Function => JFunction}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 
-/** Session-scoped materialization of stages shared by several catalog
-  * queries — the "compute the pair list once" discipline
-  * [[graft.api.DedupOps.pipeline]] defines, applied to the catalog
-  * itself.
+/** The catalog's one artifact cache: every expensive artifact several
+  * queries (or several runs of one query) share — materialized stages,
+  * folded and maintained indexes, IVF-PQ and BM25 indexes, published
+  * shards, bucketed and z-ordered layouts — is built once through
+  * [[artifact]] and reused by every later consumer.
   *
-  * q21's MinHash-LSH pair list feeds five derived queries (q37 dedup
-  * output, q46 clusters, q58 keepers, q78 cross-source report, q80
-  * degree histogram). Built independently, each re-derives the whole
-  * LSH DAG — at 100TB that is five full-corpus shingle+minhash scans
-  * for one logical stage, and locally it made the derived queries'
-  * bench numbers order-sensitive. Here the first consumer materializes
-  * the stage to a temp parquet (sorted by (doc_a, doc_b) for row-group
-  * pruning, exactly like `DedupOps.pipeline`); every later consumer —
-  * in the same session, same SF dir — reads the tiny persisted list.
+  * q21's MinHash-LSH pair list is the founding case: it feeds five
+  * derived queries (q37 dedup output, q46 clusters, q58 keepers, q78
+  * cross-source report, q80 degree histogram). Built independently,
+  * each re-derives the whole LSH DAG — at 100TB that is five full-corpus
+  * shingle+minhash scans for one logical stage, and locally it made the
+  * derived queries' bench numbers order-sensitive. The first consumer
+  * materializes the stage (sorted by (doc_a, doc_b) for row-group
+  * pruning, exactly like `DedupOps.pipeline`); every later consumer
+  * reads the tiny persisted list. A stage's owner (q21 for the pairs,
+  * q112 for the hybrid ranking, ...) never reads the cache: its catalog
+  * entry stays the honest end-to-end computation and the oracle.
   *
-  * q21 itself does NOT read the cache: its catalog entry remains the
-  * honest end-to-end LSH computation (and the oracle for all six).
-  * The transitive-cluster stage (q46 = q58's input) is shared the same
-  * way, derived from the persisted pairs rather than the raw corpus.
+  * The contract, for every artifact:
+  *  - Keyed by (SF dir, artifact name). An artifact is a pure function
+  *    of its input directory and its derivation, so every session in
+  *    the JVM shares it and no session object is pinned by the cache.
+  *    [[OlapQueries.bucketedPair]] registers catalog tables in the
+  *    calling session, so it and its layout twin
+  *    [[OlapQueries.zorderedEvents]] carry the session's identity in
+  *    their name.
+  *  - The input directory is IMMUTABLE for the JVM lifetime. There is
+  *    no content fingerprint or invalidation: regenerating a path with
+  *    different data in one JVM would silently serve stale artifacts.
+  *    Every harness here uses write-once dirs (the driver's SF dirs,
+  *    BenchScale's one-shot scaled dirs; Bench warmup and timed runs
+  *    differ by dir); a long-lived service re-deriving a mutated corpus
+  *    must restart the JVM or write to an explicit output path.
+  *  - Each artifact lives in its own `Lifecycle.tempDir`, deleted when
+  *    the JVM exits.
+  *  - Nesting-safe: a build may ask for other artifacts (the hybrid
+  *    IVF-PQ ranking builds its index, the folded clusters build the
+  *    folded minhash index and the corpus assignment). The map holds
+  *    only a per-key build-once cell; the build runs under that cell's
+  *    lock, outside any map operation.
+  *  - Concurrent callers of one key run its build once; a build that
+  *    throws leaves no value behind, so the next call retries it.
   *
-  * Keyed by (SF dir, stage): the materialized parquet is a pure
-  * function of the input directory and the derivation, so every
-  * session in the JVM shares it (and no session object is ever pinned
-  * in the cache); Bench warmup vs timed runs differ by dir and never
-  * collide. Temp dirs are deleted by a JVM shutdown hook. Thread-safe
-  * via computeIfAbsent; stage dependencies resolve BEFORE entering it.
-  *
-  * CONTRACT: the input directory is IMMUTABLE for the JVM lifetime.
-  * The cache holds stages by path string with no content fingerprint
-  * or invalidation — regenerating the same path with different data in
-  * one JVM would silently serve stale pairs/clusters to q37/q46/q58/
-  * q78/q80. That matches how every harness here uses it (the driver's
-  * SF dirs and BenchScale's one-shot scaled temp dirs are
-  * write-once); a long-lived service re-deriving a mutated corpus
-  * must restart the JVM or use `DedupOps.pipeline` with an explicit
-  * output path instead.
+  * Two caches stay outside on purpose: `CurationQueries.stagesCache`
+  * (its owner q89 refreshes it every run, checks its frames' liveness
+  * and registers their checkpoints as cache-owned) and
+  * `BpeOps.modelCache` (its owner q95 refreshes it with `put`). Neither
+  * is build-once.
   */
 object SharedStages {
 
-  // keyed by (SF dir, stage) only: the materialized parquet is a pure
-  // function of the input directory and the stage derivation, so any
-  // session in this JVM can reuse it — and holding SparkSession keys
-  // would pin stopped test sessions in the map for the JVM lifetime
-  private val cache = new ConcurrentHashMap[(String, String), String]
-
-  private def materialized(s: SparkSession, dir: String, stage: String,
-      sortCols: Seq[String])(build: => DataFrame): DataFrame = {
-    val path = cache.computeIfAbsent((dir, stage),
-      new JFunction[(String, String), String] {
-        def apply(k: (String, String)): String = {
-          // deleted on JVM exit (the stage parquet is tiny —
-          // pairs/clusters, never corpus data)
-          val tmp = graft.api.Lifecycle.tempDir(s"graft-$stage-").toString
-          graft.jobs.Sinks.layout(build, tmp, partitionCols = Nil,
-            sortCols = sortCols, numFiles = 1)
-          tmp
-        }
-      })
-    s.read.parquet(path)
+  /** A build-once holder: the value, once a build has returned one. */
+  private final class Cell {
+    private var value: Option[Any] = None
+    def get[A](build: => A): A = synchronized {
+      value.getOrElse { val v = build; value = Some(v); v }.asInstanceOf[A]
+    }
   }
 
-  /** q21's verified near-dup pair list (doc_a, doc_b, jaccard_x1000),
-    * materialized once per (session, SF dir).
+  private val cells = new ConcurrentHashMap[(String, String), Cell]
+
+  /** The artifact `name` of SF dir `dir`: the first call hands `build`
+    * a fresh JVM-lifetime temp dir and caches what it returns (the
+    * artifact's path, or a value derived while writing it); every later
+    * call returns the cached value.
     */
+  private[graft] def artifact[A](dir: String, name: String)(
+      build: String => A): A =
+    cells.computeIfAbsent((dir, name), _ => new Cell).get {
+      build(graft.api.Lifecycle.tempDir(s"graft-$name-").toString)
+    }
+
+  /** [[artifact]] for a frame persisted as one sorted parquet file. */
+  private[queries] def materialized(s: SparkSession, dir: String,
+      stage: String, sortCols: Seq[String])(build: => DataFrame): DataFrame =
+    s.read.parquet(artifact(dir, stage) { tmp =>
+      graft.jobs.Sinks.layout(build, tmp, partitionCols = Nil,
+        sortCols = sortCols, numFiles = 1)
+      tmp
+    })
+
+  /** q21's verified near-dup pair list (doc_a, doc_b, jaccard_x1000). */
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
     materialized(s, dir, "pairs", Seq("doc_a", "doc_b")) {
       graft.api.DedupOps.minhashPairs(
@@ -135,16 +152,8 @@ object SharedStages {
     * pair list — the iterative label propagation reads the persisted
     * edges, never the LSH DAG, and its own output is persisted for q58.
     */
-  def clusters(s: SparkSession, dir: String): DataFrame = {
-    // resolve the pair stage BEFORE entering this stage's
-    // computeIfAbsent: nesting computeIfAbsent calls on one
-    // ConcurrentHashMap is undefined behavior (recursive-update
-    // IllegalStateException when the keys land in the same bin —
-    // exactly how run orders that hit clusters before any pair
-    // consumer failed)
-    val pairs = minhashPairs(s, dir)
+  def clusters(s: SparkSession, dir: String): DataFrame =
     materialized(s, dir, "clusters", Seq("cluster_id", "doc_id")) {
-      graft.api.DedupOps.clusters(pairs)
+      graft.api.DedupOps.clusters(minhashPairs(s, dir))
     }
-  }
 }

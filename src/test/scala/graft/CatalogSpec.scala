@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Per-operator invariants over the sf0.001 corpus. The DuckDB oracle
   * (scripts/check_oracle.py, driver gate) is the exact check; these
@@ -37,6 +38,80 @@ class CatalogSpec extends SparkSpec {
       val n = fn(spark, sf).count()
       assert(n > 0, s"$name returned 0 rows")
     }
+  }
+
+  test("SharedStages.artifact: a build may build other keys") {
+    // 64 inner keys inside one outer build: in one ConcurrentHashMap,
+    // nested computeIfAbsent calls landing in the outer key's bin fail
+    val dir = s"nest-${System.nanoTime}"
+    val outer = graft.queries.SharedStages.artifact(dir, "outer") { _ =>
+      (1 to 64).map(i =>
+        graft.queries.SharedStages.artifact(dir, s"inner$i")(_ => i)).sum
+    }
+    assert(outer == (1 to 64).sum)
+    assert(graft.queries.SharedStages.artifact(dir, "inner7")(_ => -1) == 7)
+  }
+
+  test("SharedStages.artifact: concurrent callers of one key build it once") {
+    val dir = s"conc-${System.nanoTime}"
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls = (1 to 4).map(_ => pool.submit(() => {
+        start.await()
+        graft.queries.SharedStages.artifact(dir, "once") { _ =>
+          builds.incrementAndGet()
+          Thread.sleep(100)
+          "built"
+        }
+      }))
+      start.countDown()
+      assert(calls.map(_.get()) == Seq.fill(4)("built"))
+      assert(builds.get == 1)
+    } finally pool.shutdown()
+  }
+
+  test("SharedStages.artifact: a failed build is retried, then cached") {
+    val dir = s"retry-${System.nanoTime}"
+    var builds = 0
+    def call(result: => String) =
+      graft.queries.SharedStages.artifact(dir, "flaky") { _ =>
+        builds += 1
+        result
+      }
+    intercept[IllegalStateException](call(throw new IllegalStateException))
+    assert(call("second") == "second")
+    assert(call("third") == "second")
+    assert(builds == 2)
+  }
+
+  test("q138 releases its index build's checkpoint") {
+    // a cold key: a fresh copy of the fixture, so the invocation builds
+    // the folded fingerprint index; only the probe's own delta
+    // checkpoint may stay pinned (Bench/Verify drain it between
+    // queries). Spark tracks persisted RDDs weakly and a GC would
+    // release an unreachable one, so a poller holds every checkpointed
+    // RDD it sees: what stays persisted is what the code never released.
+    val cold = tempDir("graft-coldsf-").toFile
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(sf), cold)
+    def checkpointed = spark.sparkContext.getPersistentRDDs.values
+      .filter(BenchHarness.isLocallyCheckpointed)
+    val before = checkpointed.map(_.id).toSet
+    val seen = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[org.apache.spark.rdd.RDD[_]]()
+    @volatile var polling = true
+    val poller = new Thread(() =>
+      while (polling) { checkpointed.foreach(seen.add); Thread.sleep(1) })
+    poller.start()
+    try assert(SparkEntry.queries("q138_fold_fingerprint_probe")(spark,
+      cold.toString).count() > 0)
+    finally { polling = false; poller.join() }
+    checkpointed.foreach(seen.add)
+    val pinned = seen.asScala.filter(r => !before(r.id) &&
+      r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    pinned.foreach(_.unpersist(blocking = false))
+    assert(pinned.size == 1, s"new local checkpoints: ${pinned.map(_.id)}")
   }
 
   test("entry returns rows") {
