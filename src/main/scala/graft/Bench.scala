@@ -44,48 +44,14 @@ object Bench {
     // the warmup alone runs every thunk once → one session's worth of
     // leaked localCheckpoint RDDs before timing even starts
     BenchHarness.drainLocalCheckpoints(spark)
-    // Per-query job/stage/task counters (VERDICT r16 #10): shuffle-
-    // shape claims ("task counts −35%") become driver-verifiable by
-    // shipping the counts in-band. The listener bus is flushed (via
-    // the test-utility waitUntilEmpty, reflective — it is
-    // private[spark] but public bytecode) before each snapshot so
-    // async listener delivery cannot smear one query's jobs into its
-    // neighbor's row. Counts cover each query's FULL timed 3-run set.
-    val pJobs = new java.util.concurrent.atomic.AtomicLong
-    val pStages = new java.util.concurrent.atomic.AtomicLong
-    val pTasks = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          pJobs.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          pStages.incrementAndGet()
-          pTasks.addAndGet(s.stageInfo.numTasks.toLong); ()
-        }
-      })
-    // resolved once: a Spark without the method fails here by name, and
-    // a flush that times out throws its own TimeoutException (a method
-    // handle does not wrap it) instead of skewing the counts
-    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-      .invoke(spark.sparkContext)
-    val waitUntilEmpty = java.lang.invoke.MethodHandles.publicLookup()
-      .unreflect(bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .getOrElse(throw new IllegalStateException(
-          s"Bench: ${bus.getClass.getName} has no waitUntilEmpty() — the " +
-            "per-query job/stage/task counts cannot be flushed")))
-    def listenerFlush(): Unit = { waitUntilEmpty.invokeWithArguments(bus); () }
+    // per-entry job/stage/task counts (`probe_jst`), each covering the
+    // entry's FULL timed run set
+    val listener = new BenchHarness.JobListener(spark)
     val probeCounts =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long)]
+      scala.collection.mutable.LinkedHashMap.empty[String, BenchHarness.JobCounts]
     def probed[A](name: String)(body: => A): A = {
-      listenerFlush()
-      val (j0, s0, t0) = (pJobs.get, pStages.get, pTasks.get)
-      val r = body
-      listenerFlush()
-      probeCounts(name) = (pJobs.get - j0, pStages.get - s0, pTasks.get - t0)
+      val (r, c) = listener.during(body)
+      probeCounts(name) = c
       r
     }
     // A failed build or query run is a FAILED entry (-1.0, so it lands
@@ -243,8 +209,8 @@ object Bench {
     // compact line stays small); BenchHarness.parseBenchMins strips
     // this object before its run-array fallback, like leak_retests and
     // build_errors
-    val probeJson = probeCounts.map { case (k, (j, s, t)) =>
-      "\"" + k + "\":[" + j + "," + s + "," + t + "]"
+    val probeJson = probeCounts.map { case (k, c) =>
+      "\"" + k + "\":[" + c.jobs + "," + c.stages + "," + c.tasks + "]"
     }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"failed":$failedJson,"build_errors":${failures.json},"leak_suspects":$leaksJson,"drift_suspects":$driftsJson,"prior_source":"$priorSource","leak_retests":$retestsJson,"probe_jst":$probeJson,"drained_checkpoints":$drained,"sf":"$sfDir"}"""

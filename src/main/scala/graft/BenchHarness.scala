@@ -2,13 +2,16 @@ package graft
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE benchmark methodology, shared by [[Bench]] (per-round driver
-  * bench) and [[BenchScale]] (10× scale-stress): same session config,
-  * same noop sink, same warmup, same timing discipline. SCALE.md's
-  * comparability claim ("Bench's methodology") is true by construction
-  * because both mains call these.
+  * bench), [[BenchScale]] (10× scale-stress) and [[Probe]]: same
+  * session config, same noop sink, same warmup, same timing
+  * discipline, one job listener. SCALE.md's comparability claim
+  * ("Bench's methodology") is true by construction because every main
+  * calls these.
   */
 object BenchHarness {
 
@@ -76,14 +79,19 @@ object BenchHarness {
     }
   }
 
+  /** Wall seconds of `body`; what `body` throws propagates. */
+  def seconds(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** THE timed call of both benches: wall seconds of `body`, or -1.0
     * when it throws — the failure kept under `entry` in `failures`,
     * never discarded. */
-  def timed(entry: String, failures: Failures)(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    try { body; (System.nanoTime() - t0) / 1e9 }
+  def timed(entry: String, failures: Failures)(body: => Unit): Double =
+    try seconds(body)
     catch { case NonFatal(e) => failures.record(entry, e); -1.0 }
-  }
 
   /** `n` timed runs of a plan thunk, raw times in order. A failed run
     * short-circuits to a single -1.0 (its cause in `failures`). The
@@ -108,11 +116,90 @@ object BenchHarness {
 
   /** min of two timed runs of a plan thunk (BenchScale's per-SF rows
     * and const-delta probes; Bench proper uses three runs and reports
-    * the raw array too).
+    * the raw array too). A failed run throws: BenchScale's row keeps
+    * the failure.
     */
-  def minOf2(entry: String, failures: Failures)(
-      build: () => DataFrame): Double =
-    minOfRuns(timedRuns(entry, 2, failures)(build))
+  def minOf2(build: () => DataFrame): Double =
+    Seq.fill(2)(seconds(exec(build()))).min
+
+  /** The harness's one job listener: jobs started, stages completed and
+    * their task counts (a skipped stage never completes, so it is not
+    * counted), and per `spark.job.description` (None: unlabelled) the
+    * jobs started and their seconds. Bench ships the job/stage/task
+    * counts in-band as `probe_jst` (VERDICT r16 #10), so shuffle-shape
+    * claims ("task counts −35%") can be checked against the bench line
+    * itself; `Probe substages` reads the per-label seconds.
+    *
+    * Every reading flushes the listener bus first (the test-utility
+    * `waitUntilEmpty`, reflective — it is private[spark] but public
+    * bytecode), so async delivery cannot smear one action's jobs into
+    * the next reading.
+    */
+  final class JobListener(spark: SparkSession) extends SparkListener
+      with AutoCloseable {
+    private var total = JobCounts(0, 0, 0)
+    private val started =
+      scala.collection.mutable.HashMap.empty[Int, (Option[String], Long)]
+    private val labels = scala.collection.mutable.LinkedHashMap
+      .empty[Option[String], (Long, Double)]
+
+    // resolved once: a Spark without the method fails here by name, and
+    // a flush that times out throws its own TimeoutException (a method
+    // handle does not wrap it) instead of skewing the counts
+    private val sc = spark.sparkContext
+    private val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    private val waitUntilEmpty = java.lang.invoke.MethodHandles.publicLookup()
+      .unreflect(bus.getClass.getMethods
+        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+        .getOrElse(throw new IllegalStateException(
+          s"${bus.getClass.getName} has no waitUntilEmpty() — job " +
+            "counts cannot be flushed")))
+    sc.addSparkListener(this)
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      val label = Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+      total = total.copy(jobs = total.jobs + 1)
+      started(j.jobId) = (label, j.time)
+      val (n, secs) = labels.getOrElse(label, (0L, 0.0))
+      labels(label) = (n + 1, secs)
+    }
+
+    override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
+      started.remove(j.jobId).foreach { case (label, t0) =>
+        val (n, secs) = labels(label)
+        labels(label) = (n, secs + (j.time - t0) / 1e3)
+      }
+    }
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      synchronized {
+        total = JobCounts(total.jobs, total.stages + 1,
+          total.tasks + s.stageInfo.numTasks)
+      }
+
+    private def flushed[A](read: => A): A = {
+      waitUntilEmpty.invokeWithArguments(bus)
+      synchronized(read)
+    }
+
+    /** `body`'s result and the counts of the jobs it ran. */
+    def during[A](body: => A): (A, JobCounts) = {
+      val before = flushed(total)
+      val r = body
+      (r, flushed(total) - before)
+    }
+
+    /** (jobs, job seconds) per label since the listener was added. */
+    def byLabel(): Seq[(Option[String], (Long, Double))] = flushed(labels.toSeq)
+
+    override def close(): Unit = sc.removeSparkListener(this)
+  }
+
+  final case class JobCounts(jobs: Long, stages: Long, tasks: Long) {
+    def -(o: JobCounts): JobCounts =
+      JobCounts(jobs - o.jobs, stages - o.stages, tasks - o.tasks)
+  }
 
   /** Leak signature on a raw run array: strictly monotone-increasing
     * with meaningful growth (≥1.2× first→last and ≥0.2s absolute).

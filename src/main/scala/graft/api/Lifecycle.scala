@@ -20,7 +20,8 @@ object Lifecycle {
     }))
 
   /** A fresh directory under the system temp dir for a JVM-lifetime
-    * cache (the catalog's `SharedStages` artifacts), deleted with its
+    * cache or scratch (the catalog's `SharedStages` artifacts,
+    * BenchScale's scaled corpora and indexes), deleted with its
     * contents when the JVM exits. */
   private[graft] def tempDir(prefix: String): java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory(prefix)

@@ -182,7 +182,7 @@ FROM embeddings WHERE vec_id >= 100 AND vec_id < 110"""),
 
   /** q94's raw recall counts: PQ ADC shortlist + exact refine top-10
     * vs the in-band exact brute top-10, per-query. Split from the
-    * boolean oracle mapping so [[AnnFloorMeasure]] can record the
+    * boolean oracle mapping so `Probe ann-floors` can record the
     * measured minima the [[AnnFloors]] floors are pinned against.
     */
   private[graft] def pqRecallCounts(s: SparkSession,
@@ -224,7 +224,7 @@ FROM embeddings WHERE vec_id >= 100 AND vec_id < 110"""),
   }
 
   /** The raw-count leg of [[ivfPqRecallHarness]] — also what
-    * [[AnnFloorMeasure]] records minima from.
+    * `Probe ann-floors` records minima from.
     */
   private[graft] def ivfPqRecallCounts(s: SparkSession, dir: String,
       idx: String): DataFrame = {

@@ -3119,7 +3119,7 @@ GROUP BY shard"""),
   /** q114's raw overlap counts: IVF-PQ hybrid leg vs the SHARED
     * materialized brute stage, per-query (qid, _n, _bn, rn_dense,
     * _ov). Split from the boolean oracle mapping so
-    * [[AnnFloorMeasure]] can record the measured minima the
+    * `Probe ann-floors` can record the measured minima the
     * [[AnnFloors]] floors are pinned against.
     */
   private[graft] def hybridIvfPqCounts(

@@ -228,4 +228,84 @@ class BenchSpec extends SparkSpec {
       assert(cleared.isEmpty, "time-local contention was confirmed as a leak")
     } finally resetState()
   }
+
+  test("JobListener: per-label jobs and job/stage/task totals equal the " +
+      "status tracker's for the same jobs, flushed without a sleep") {
+    val sc = spark.sparkContext
+    val listener = new BenchHarness.JobListener(spark)
+    // the second count re-reads the first one's shuffle: its job's map
+    // stage is skipped (never submitted) and must not be counted
+    val pairs = sc.parallelize(1 to 100, 4).map(x => (x % 5, 1))
+      .reduceByKey(_ + _)
+    def tagged[A](tag: String)(body: => A): A = {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+    }
+    val ((_, counts), byLabel) = try {
+      (listener.during {
+        tagged("benchspec-labelled") {
+          sc.setJobDescription("labelled")
+          try { pairs.count(); pairs.count() }
+          finally sc.setJobDescription(null)
+        }
+        tagged("benchspec-unlabelled")(sc.parallelize(1 to 10, 3).sum())
+      }, listener.byLabel())
+    } finally listener.close()
+    val st = sc.statusTracker
+    val labelled = st.getJobIdsForTag("benchspec-labelled").toSeq
+    val unlabelled = st.getJobIdsForTag("benchspec-unlabelled").toSeq
+    val stages = (labelled ++ unlabelled)
+      .flatMap(id => st.getJobInfo(id).get.stageIds.toSeq)
+      .map(id => st.getStageInfo(id).get)
+    val ran = stages.filter(_.submissionTime > 0)
+    assert(labelled.size == 2 && unlabelled.size == 1)
+    assert(byLabel.map { case (k, (jobs, _)) => k -> jobs } ==
+      Seq(Some("labelled") -> labelled.size.toLong,
+        None -> unlabelled.size.toLong))
+    assert(counts.jobs == labelled.size + unlabelled.size)
+    assert(ran.size == stages.size - 1, "one skipped stage")
+    assert(counts.stages == ran.size)
+    assert(counts.tasks == ran.map(_.numTasks).sum)
+    assert(byLabel.forall(_._2._2 >= 0))
+  }
+
+  test("BenchScale rows: a failed side reads -1 with its error under " +
+      "<entry>/<side>, the other side still runs, a tiny base is floored") {
+    val failures = new BenchHarness.Failures
+    val sides = new BenchScale.Sides("B", "S", failures)
+    val floored = sides.pairRow("q_tiny")((side, _) =>
+      if (side == "base") 0.05 else 0.6)
+    assert(floored.base == 0.05 && floored.scaled == 0.6)
+    assert(math.abs(floored.ratio - 4.0) < 1e-9, s"ratio ${floored.ratio}")
+
+    val calls = collection.mutable.ArrayBuffer.empty[String]
+    def side(p: String) = p.split('/').last
+    val index = BenchScale.IndexCase("q_index_build",
+      { (dir, _) =>
+        calls += s"build $dir"
+        if (dir == "S") throw new IllegalStateException("no scaled corpus")
+      },
+      probes = Seq("q_probe" -> { p =>
+        calls += s"probe ${side(p)}"
+        throw new IllegalArgumentException(s"no index at ${side(p)}")
+      }),
+      fold = Some("q_fold" -> (p => calls += s"fold ${side(p)}")),
+      compact = Some("q_compact" -> (p => calls += s"compact ${side(p)}")))
+    val (linear, flat, _) = BenchScale.runCases(Seq(index), sides,
+      tempDir("benchspec-idx").toString)
+    assert(calls == Seq("build B", "build S", "probe base", "probe scaled",
+      "fold base", "fold scaled", "compact base", "compact scaled"))
+    assert(linear.map(_.entry) == Seq("q_index_build", "q_compact"))
+    assert(flat.map(_.entry) == Seq("q_probe", "q_fold"))
+    val build = linear.head
+    assert(build.base >= 0 && build.scaled == -1.0 && build.ratio == -1.0)
+    assert(flat.head.ratio == -1.0)
+    // both fold sides ran in microseconds: the floored base puts the
+    // ratio far below 1 instead of dividing by a near-zero base
+    assert(flat(1).ratio > 0 && flat(1).ratio < 1.0)
+    assert(failures.json ==
+      """{"q_index_build/scaled":"java.lang.IllegalStateException: no scaled corpus",""" +
+      """"q_probe/base":"java.lang.IllegalArgumentException: no index at base",""" +
+      """"q_probe/scaled":"java.lang.IllegalArgumentException: no index at scaled"}""")
+  }
 }
