@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * session config, same noop sink, same warmup, same timing
   * discipline, one job listener. SCALE.md's comparability claim
   * ("Bench's methodology") is true by construction because every main
-  * calls these.
+  * calls these. [[Verify]] takes its session (4 cores by default) and
+  * its query selection from here too.
   */
 object BenchHarness {
 
@@ -24,16 +25,17 @@ object BenchHarness {
     */
   def ansiEnabled: String = sys.env.getOrElse("SPARK_GRAFT_ANSI", "false")
 
-  /** Cluster-job-shaped local session: AQE on, shuffle partitions =
-    * core count (not 200), codegen compile failures THROW (a silent
-    * interpreted fallback would invalidate every number).
+  /** Cluster-job-shaped local session: AQE on (Spark's default),
+    * shuffle partitions = core count (not 200), codegen compile failures
+    * THROW (a silent interpreted fallback would invalidate every number,
+    * and in [[Verify]] fails the query through its catch instead).
+    * `SPARK_GRAFT_CPUS` overrides the core count.
     */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def session(defaultCpus: String = "32"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.fallback", "false")
@@ -43,6 +45,17 @@ object BenchHarness {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The catalog entries a run covers: all, or with the dev aid
+    * `SPARK_GRAFT_ONLY=q<name>[,q<name>...]` only the named ones (the
+    * driver never sets it, so its runs stay full-catalog).
+    */
+  def onlyQueries: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    onlyQueries.fold(SparkEntry.queries)(names =>
+      SparkEntry.queries.filter(kv => names(kv._1)))
 
   /** noop sink: every output row is fully computed and then discarded.
     * count() would let Catalyst prune the projection, so map-only

@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextHashExpressions, TextHashing}
+import graft.functions.TextHashing
 import graft.operators.ConnectedComponents
 
 /** User-facing dedup API over caller-named columns. The catalog queries
@@ -35,7 +35,7 @@ object DedupOps {
     */
   private[api] def cappedCandidatePairs(df: DataFrame, groupCols: Seq[Column],
       idCol: String, maxBucket: Int, aCol: String, bCol: String): DataFrame = {
-    graft.functions.SketchAggregates.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.groupBy(groupCols: _*)
       .agg(call_function("capped_list", col(idCol), lit(maxBucket)).as("__ds"))
       .filter(col("__ds").isNotNull && size(col("__ds")) >= 2)
@@ -55,8 +55,7 @@ object DedupOps {
   private[graft] def shingleHashed(df: DataFrame, idCol: String,
       textCol: String, carry: Seq[String] = Nil): DataFrame = {
     import TextHashing._
-    TextHashExpressions.register(df.sparkSession)
-    graft.functions.SketchAggregates.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     val cs = carry.map(col)
     df.select((col(idCol) +: cs :+ split(col(textCol), " ", -1).as("toks")): _*)
       .filter(size(col("toks")) >= 3)
@@ -431,8 +430,7 @@ object DedupOps {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 2, maxDf: Int = 20, jaccardX1000Threshold: Int = 300): DataFrame = {
-    graft.functions.SketchAggregates.register(df.sparkSession)
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     val grams = df
       .select(col(idCol), split(col(textCol), " ", -1).as("toks"))
       .filter(size(col("toks")) >= n)
@@ -453,7 +451,7 @@ object DedupOps {
     * interpreted HOF chain it replaces.
     */
   def simhashFingerprint(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol),
         call_function("simhash60", split(col(textCol), " ", -1)).as("simhash"))
       .withColumn("block", shiftright(col("simhash"), 48).cast("long"))
@@ -670,7 +668,7 @@ object DedupOps {
     * upstream lineage (a real media decode) runs ONCE. */
   private[graft] def fingerprintRows(fps: DataFrame, idCol: String,
       fpCol: String)(m: IndexMaintenance.Meta): IndexMaintenance.Delta = {
-    graft.functions.SketchAggregates.register(fps.sparkSession)
+    graft.GraftExtensions.register(fps.sparkSession)
     IndexMaintenance.Delta(
       "buckets" -> bandBucketsAll(fingerprintBands(fps, idCol, fpCol,
         m.int("bits"), m.int("hamming_max")), idCol, m.int("max_bucket")),
@@ -1036,7 +1034,7 @@ object DedupOps {
     */
   def keepersByScore(scored: DataFrame, idCol: String, clusterCol: String,
       scoreCol: String): DataFrame = {
-    graft.functions.SketchAggregates.register(scored.sparkSession)
+    graft.GraftExtensions.register(scored.sparkSession)
     scored.groupBy(col(clusterCol))
       .agg(
         call_function("latest_by", col(idCol),
@@ -1149,7 +1147,7 @@ object DedupOps {
   private[graft] def cdcChunked(df: DataFrame, idCol: String,
       textCol: String, modulus: Int, window: Int,
       extraCols: Seq[String] = Nil): DataFrame = {
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol) +: extraCols.map(col) :+
         split(col(textCol), " ", -1).as("_tk"): _*)
       .withColumn("_ch",

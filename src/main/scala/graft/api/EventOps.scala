@@ -112,7 +112,7 @@ object EventOps {
   def latestState(df: DataFrame, keyCol: String, orderCols: Seq[String],
       valueCols: Seq[String]): DataFrame = {
     require(orderCols.nonEmpty, "latestState needs at least one order column")
-    graft.functions.SketchAggregates.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     val carried = (orderCols ++ valueCols).distinct
     df.groupBy(col(keyCol))
       .agg(call_function("latest_by", struct(carried.map(col): _*),
@@ -499,7 +499,7 @@ object EventOps {
     */
   def heavyHittersState(df: DataFrame, keyCol: String, item: Column,
       capacity: Int): DataFrame = {
-    graft.functions.SketchAggregates.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.groupBy(col(keyCol))
       .agg(call_function("heavy_hitters", lit(capacity), item).as("_hh"))
       .select(col(keyCol), lit(capacity).as("mg_cap"),
@@ -518,7 +518,7 @@ object EventOps {
     */
   def mergeHeavyHittersState(state: DataFrame, deltaState: DataFrame,
       keyCol: String): DataFrame = {
-    graft.functions.SketchAggregates.register(state.sparkSession)
+    graft.GraftExtensions.register(state.sparkSession)
     val caps = state.select(col("mg_cap"))
       .unionByName(deltaState.select(col("mg_cap")))
       .distinct().collect().map(_.getInt(0))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextHashExpressions, TextHashing}
+import graft.functions.TextHashing
 
 /** User-facing text-pipeline API: every operator is a pure
   * DataFrame → DataFrame function over caller-named columns, so any
@@ -198,7 +198,7 @@ object TextOps {
     * with no state. Output: (idCol, n_tok, entropy_mb).
     */
   def tokenEntropy(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol), split(col(textCol), " ", -1).as("_tk"))
       .select(col(idCol), size(col("_tk")).cast("long").as("n_tok"),
         call_function("token_entropy", col("_tk")).as("entropy_mb"))
@@ -244,7 +244,7 @@ object TextOps {
     */
   def repetitionFilter(df: DataFrame, idCol: String, textCol: String,
       keepBelowX1000: Int = 300): DataFrame = {
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol), split(col(textCol), " ", -1).as("toks"))
       .select(col(idCol),
         greatest(size(col("toks")) - 2, lit(0)).cast("long").as("total_grams"),
@@ -262,7 +262,7 @@ object TextOps {
     */
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
-    graft.functions.SketchAggregates.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     val tf = df
       .select(col(idCol), explode(split(col(textCol), " ", -1)).as("term"))
       .groupBy(col(idCol), col("term"))
@@ -684,7 +684,7 @@ object TextOps {
     */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, idCol: String,
       textCol: String, n: Int = 8): DataFrame = {
-    TextHashExpressions.register(corpus.sparkSession)
+    graft.GraftExtensions.register(corpus.sparkSession)
     def grams(d: DataFrame) = d
       .select(col(idCol), split(col(textCol), " ", -1).as("toks"))
       .filter(size(col("toks")) >= n)
@@ -818,7 +818,7 @@ object TextOps {
     */
   def commonGramRatio(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, commonDocFreq: Int = 5): DataFrame = {
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     // shingle_hashes dedupes (distinct grams, insertion order), so
     // size(_gs) is the per-doc distinct-gram count and each doc votes
     // once per gram in the document-frequency aggregate
@@ -1157,7 +1157,7 @@ object TextOps {
     */
   private def lmTokenize(df: DataFrame, idCol: String,
       textCol: String): (DataFrame, DataFrame) = {
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     val toks = df.select(col(idCol),
         split(col(textCol), " ", -1).as("_toks"))
       .withColumn("_m", coalesce(size(col("_toks")), lit(-1)))
@@ -1235,7 +1235,7 @@ object TextOps {
     require(modulus >= 2, s"cdcChunkShares: modulus must be >= 2, got $modulus")
     require(window >= 1, s"cdcChunkShares: window must be >= 1, got $window")
     require(minDf >= 2, s"cdcChunkShares: minDf must be >= 2, got $minDf")
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     // the fused native kernel (boundary hashes + chunk hashes +
     // distinct in one codegen'd static call); the declarative HOF
     // spelling of the same math — still the oracle's spelling — ran
@@ -1420,7 +1420,7 @@ object TextOps {
       d: Int = 64, rrfK: Long = 60L): DataFrame = {
     require(k >= 1 && kPerList >= 1,
       s"hybridTopK: k/kPerList must be >= 1, got $k/$kPerList")
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
+    graft.GraftExtensions.register(corpus.sparkSession)
     val lex = bm25TopK(corpus, queries, idCol, textCol, qidCol, kPerList)
       .select(col("qid"), col(idCol).as("_id"), col("rank").as("_r"))
     def signal(df: DataFrame) = df.filter(expr("exists(v, x -> x != 0D)"))
@@ -1464,7 +1464,7 @@ object TextOps {
       textCol: String, qidCol: String, k: Int = 10,
       chunkTokens: Int = 32, stride: Int = 32, d: Int = 64): DataFrame = {
     require(k >= 1, s"passageTopK: k must be >= 1, got $k")
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
+    graft.GraftExtensions.register(corpus.sparkSession)
     val chunks = chunk(corpus, idCol, textCol, chunkTokens, stride)
       .select((col(idCol) * lit(100000L) + col("chunk_idx")).as("_cid"),
         col("chunk_text").as("_ctext"))
@@ -1523,7 +1523,7 @@ object TextOps {
     require(k >= 1 && refine >= k,
       s"passageTopKIvfPq: need 1 <= k <= refine, got k=$k refine=$refine")
     val s = queries.sparkSession
-    graft.functions.VectorExpressions.register(s)
+    graft.GraftExtensions.register(s)
     // the probe addresses both sides by the INDEX's id column (the
     // codes parquet was written with the chunk pseudo-id _cid)
     val qe = embedText(queries, qidCol, textCol, d)
@@ -1607,7 +1607,7 @@ object TextOps {
       adcX1000Threshold: Int = -2000): DataFrame = {
     require(k >= 1 && kPerList >= 1,
       s"hybridTopKIvfPq: k/kPerList must be >= 1, got $k/$kPerList")
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
+    graft.GraftExtensions.register(corpus.sparkSession)
     val lex = bm25TopK(corpus, queries, idCol, textCol, qidCol, kPerList)
       .select(col("qid"), col(idCol).as("_id"), col("rank").as("_r"))
     rrfFuse(lex, semanticLeg(queries, qidCol, textCol, ivfPqIndexPath,
@@ -1667,7 +1667,7 @@ object TextOps {
       adcX1000Threshold: Int = -2000): DataFrame = {
     require(k >= 1 && kPerList >= 1,
       s"hybridTopKAgainstIndexes: k/kPerList must be >= 1, got $k/$kPerList")
-    graft.functions.VectorExpressions.register(queries.sparkSession)
+    graft.GraftExtensions.register(queries.sparkSession)
     val lex = bm25TopKAgainstIndex(queries, qidCol, textCol,
         bm25IndexPath, idCol, kPerList)
       .select(col("qid"), col(idCol).as("_id"), col("rank").as("_r"))
@@ -1974,7 +1974,7 @@ object TextOps {
   def embedText(df: DataFrame, idCol: String, textCol: String,
       d: Int = 64): DataFrame = {
     require(d > 0, s"embedText: d must be positive, got $d")
-    TextHashExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     val zero = s"transform(sequence(0, ${d - 1}), i -> 0.0D)"
     df.select(col(idCol),
       when(col(textCol).isNotNull,

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExpressions
-
 /** Similarity-search API over caller-named embedding columns. Dot
   * products run through the codegen `dot_f` expression (left-to-right
   * double fold — bit-identical to DuckDB's list_dot_product).
@@ -14,7 +12,7 @@ object VectorOps {
 
   /** Casts + pre-computes the L2 norm: idCol, v, nrm. */
   def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(expr("dot_f(v, v)")))
   }
@@ -91,7 +89,7 @@ object VectorOps {
       maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
     require(planes.nonEmpty && planes.size % rowsPerBand == 0,
       s"nearDupPairs: ${planes.size} planes not divisible into bands of $rowsPerBand")
-    graft.functions.SketchAggregates.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     val base = normalized(df, idCol, vecCol)
     val bands = signBands(base, idCol, planes, rowsPerBand)
     verifyCosine(DedupOps.cappedCandidatePairs(bands,
@@ -208,7 +206,7 @@ object VectorOps {
   private def signRows(base: DataFrame, idCol: String,
       planes: Seq[Seq[Double]], op: String)(
       m: IndexMaintenance.Meta): IndexMaintenance.Delta = {
-    graft.functions.SketchAggregates.register(base.sparkSession)
+    graft.GraftExtensions.register(base.sparkSession)
     val rowsPerBand = m.int("rows_per_band")
     require(planes.nonEmpty && planes.size % rowsPerBand == 0,
       s"$op: ${planes.size} planes not divisible into the index's " +
@@ -331,7 +329,7 @@ object VectorOps {
     * bit-for-bit.
     */
   def quantizeStats(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.select(col(idCol),
       size(col(vecCol)).cast("long").as("n_dims"),
       round(array_min(col(vecCol)).cast("double") * lit(1000000d))
@@ -635,7 +633,7 @@ object VectorOps {
 
   private def ivfPqRouted(df: DataFrame, idCol: String, vecCol: String,
       model: IvfPqModel): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     normalized(df, idCol, vecCol)
       .withColumn("u", expr("transform(v, x -> x / nrm)"))
       .withColumn("cell",
@@ -797,7 +795,7 @@ object VectorOps {
       indexPath: String, adcX1000Threshold: Int,
       nprobe: Int = 2): DataFrame = {
     val s = newDf.sparkSession
-    VectorExpressions.register(s)
+    graft.GraftExtensions.register(s)
     val model = readIvfPqModel(s, indexPath)
     ivfPqProbeWith(newDf, idCol, vecCol, indexPath, model,
       adcX1000Threshold, nprobe)._1
@@ -817,7 +815,7 @@ object VectorOps {
     require(!newDf.isStreaming,
       "ivfPqProbeAndCells: plan-time cell collect needs a batch frame")
     val s = newDf.sparkSession
-    VectorExpressions.register(s)
+    graft.GraftExtensions.register(s)
     val model = readIvfPqModel(s, indexPath)
     val (probe, cells) = ivfPqProbeWith(newDf, idCol, vecCol, indexPath,
       model, adcX1000Threshold, nprobe)
@@ -852,7 +850,7 @@ object VectorOps {
     require(newDf.isStreaming,
       "ivfPqProbeEachBatch: batch frames take the already-pruned ivfPqProbe")
     val s = newDf.sparkSession
-    VectorExpressions.register(s)
+    graft.GraftExtensions.register(s)
     val model = readIvfPqModel(s, indexPath)
     require(nprobe >= 1 && nprobe <= model.coarse.k,
       s"ivfPqProbeEachBatch: nprobe $nprobe outside [1, ${model.coarse.k}]")

@@ -69,12 +69,3 @@ case class MortonCode(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
-
-object LayoutExpressions {
-  /** Idempotently registers `morton2(x, y)` on the session (the
-    * registry path — VectorExpressions.register's rationale).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "morton2", exprs => MortonCode(exprs.head, exprs(1)), "built-in")
-}

@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
@@ -13,86 +12,15 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom sketch/rank aggregates (SURVEY.md §4.2 must-build #2 and #3).
-  *
-  * Both are `TypedImperativeAggregate`s: the buffer is a plain JVM object
-  * held across all rows of a group (serialized only at shuffle edges), and
-  * both have associative-commutative `merge` — so Catalyst runs them as
-  * partial (map-side) + final aggregation, the property that makes them
-  * 100TB-safe: each map task ships at most k rows / one bitmap per group,
-  * never the raw rows.
-  */
-object SketchAggregates {
-
-  /** Idempotently register SQL surface: `topk_agg(k, cnt, key)` and
-    * `bloom_distinct(value, numBits)`.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_agg",
-      exprs => GroupedTopK(
-        FnArgs.litInt("topk_agg", "k", exprs.head), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_distinct",
-      exprs => BloomDistinct(
-        exprs.head, FnArgs.litInt("bloom_distinct", "numBits", exprs(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "capped_list",
-      exprs => CappedList(
-        exprs.head, FnArgs.litInt("capped_list", "cap", exprs(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters",
-      exprs => HeavyHitters(
-        FnArgs.litInt("heavy_hitters", "capacity", exprs.head), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters_merge",
-      exprs => HeavyHittersMerge(
-        FnArgs.litInt("heavy_hitters_merge", "capacity", exprs.head),
-        exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "latest_by",
-      exprs => LatestBy(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_sketch",
-      exprs => CmsSketch(
-        FnArgs.litInt("cms_sketch", "width", exprs.head),
-        FnArgs.litInt("cms_sketch", "depth", exprs(1)), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_est",
-      exprs => CmsEstimate(exprs.head, exprs(1),
-        FnArgs.litInt("cms_est", "width", exprs(2)),
-        FnArgs.litInt("cms_est", "depth", exprs(3))),
-      "built-in")
-  }
-}
-
-/** Literal-argument extraction for registry-expanded functions: a column
-  * passed where a literal is required fails with a clear message at
-  * registration expansion instead of an NPE from `eval()` on an unbound
-  * attribute.
-  */
-private[graft] object FnArgs {
-  def litInt(fn: String, arg: String, e: Expression): Int = litNum(fn, arg, e).intValue()
-  def litLong(fn: String, arg: String, e: Expression): Long = litNum(fn, arg, e).longValue()
-
-  private def litNum(fn: String, arg: String, e: Expression): Number = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal integer, got non-foldable expression ${e.sql}")
-    e.eval() match {
-      case n: Number => n
-      case other => throw new IllegalArgumentException(
-        s"$fn: $arg must be a literal integer, got $other")
-    }
-  }
-}
+/* Custom sketch/rank aggregates (SURVEY.md §4.2 must-build #2 and #3).
+ *
+ * Both are `TypedImperativeAggregate`s: the buffer is a plain JVM object
+ * held across all rows of a group (serialized only at shuffle edges), and
+ * both have associative-commutative `merge` — so Catalyst runs them as
+ * partial (map-side) + final aggregation, the property that makes them
+ * 100TB-safe: each map task ships at most k rows / one bitmap per group,
+ * never the raw rows.
+ */
 
 /** Bounded collect_list: keeps at most cap+1 values per group and
   * evaluates to NULL once the cap is exceeded — the skew-safe inverted-

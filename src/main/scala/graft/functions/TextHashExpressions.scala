@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -620,58 +619,4 @@ object BigramCounts {
     StructField("w1", StringType, nullable = false),
     StructField("w2", StringType, nullable = false),
     StructField("n", LongType, nullable = false))), containsNull = false)
-}
-
-object TextHashExpressions {
-
-  /** ONE builder for both registration paths (temp-function registry
-    * here and GraftExtensions injection): extra args must fail loudly,
-    * not be silently dropped, and the two paths must not drift.
-    */
-  private[graft] val simhash60Builder
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.size == 1,
-      s"simhash60 takes exactly 1 argument, got ${exprs.size}")
-    SimHash60(exprs.head)
-  }
-
-  /** Idempotently registers `shingle_hashes(tokens, n, mod)` and
-    * `simhash60(tokens)` — call via `call_function`/`expr` (the
-    * registry path sidesteps Spark 4's Column-from-Expression churn,
-    * as with dot_f).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs.head,
-        FnArgs.litInt("shingle_hashes", "n", exprs(1)),
-        FnArgs.litLong("shingle_hashes", "mod", exprs(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", simhash60Builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash16", exprs => MinHash16(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_counts", exprs => BigramCounts(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_entropy", exprs => TokenEntropy(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunk_hashes",
-      exprs => CdcChunkHashes(exprs.head,
-        FnArgs.litInt("cdc_chunk_hashes", "window", exprs(1)),
-        FnArgs.litLong("cdc_chunk_hashes", "modulus", exprs(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "curation_rows",
-      exprs => CurationRows(exprs.head,
-        FnArgs.litInt("curation_rows", "window", exprs(1)),
-        FnArgs.litLong("curation_rows", "modulus", exprs(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash_embed",
-      exprs => HashEmbed(exprs.head,
-        FnArgs.litInt("hash_embed", "d", exprs(1))),
-      "built-in")
-  }
 }

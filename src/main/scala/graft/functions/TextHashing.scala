@@ -51,8 +51,8 @@ object TextHashing {
 
   /** Shingle array → array of 16 minhash values — the native one-pass
     * `minhash16` expression (functions.MinHash16), not 16 interpreted
-    * `array_min(transform(...))` chains; callers must have
-    * `TextHashExpressions.register`ed the session (all do).
+    * `array_min(transform(...))` chains; callers must have registered
+    * the session (`graft.GraftExtensions.register`; all do).
     */
   def minhash(shingleHashes: Column): Column =
     call_function("minhash16", shingleHashes)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -367,30 +366,4 @@ case class PqAdc(first: Expression, second: Expression, third: Expression)
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression =
     copy(first = a, second = b, third = c)
-}
-
-object VectorExpressions {
-  /** Idempotently registers `dot_f(a, b)`, `quant_code_sum(v)` and the
-    * product-quantization kernels `pq_encode` / `pq_lut` / `pq_adc` on
-    * the session so plans can use them via expr(...) — the registry
-    * path sidesteps the Column-from-Expression constructor churn in
-    * Spark 4.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quant_code_sum", exprs => QuantCodeSum(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_lut", exprs => PqLut(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_dists", exprs => PqDists(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_adc", exprs => PqAdc(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
 }

@@ -168,7 +168,7 @@ object Sinks {
       def scaled(c: String, lo: Double, span: Double) =
         ((col(c).cast("double") - lit(lo)) / lit(if (span > 0) span else 1.0) *
           lit(hi.toDouble)).cast("long")
-      graft.functions.LayoutExpressions.register(df.sparkSession)
+      graft.GraftExtensions.register(df.sparkSession)
       val mort = call_function("morton2",
         scaled(xCol, xMin, xMax - xMin), scaled(yCol, yMin, yMax - yMin))
       cut.withColumn("__z", mort)

@@ -36,7 +36,7 @@ object DedupQueries {
     plane(j).map(x => s"${x}D").mkString("array(", ", ", ")")
 
   // Spark-side shingling runs through the native ShingleHashes
-  // expression (TextHashExpressions); shingledSql below is the oracle's
+  // expression (`shingle_hashes`); shingledSql below is the oracle's
   // declarative spelling of the same values. Parameterized by source
   // table so the composed curation pipeline (CurationQueries) re-runs
   // the SAME stage SQL over its survivor CTEs — one generator, no
@@ -889,7 +889,7 @@ SELECT cluster_id, doc_id AS keeper_id, n_members, keeper_score FROM (
                             ORDER BY n_tok DESC, doc_id ASC) AS rn
   FROM m) WHERE rn = 1"""),
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
+        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, dir)
         val emb = graft.api.TextOps.embedText(docs, "doc_id", "text", d = 64)
           .filter(expr("dot_f(v, v)") > 0)
@@ -942,7 +942,7 @@ SELECT vec_new AS doc_id, count(*) AS n_eval_matches,
        max(sim_x1000) AS max_sim_x1000
 FROM p GROUP BY 1"""),
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
+        graft.GraftExtensions.register(s)
         val docs = Tables.documents(s, dir)
         // embed ONCE, probe twice: without the checkpoint the eval and
         // corpus branches each re-derive the full embedText subtree
@@ -1010,7 +1010,7 @@ SELECT qid, nid,
 FROM srch
 QUALIFY rn <= 5"""),
       (s, dir) => {
-        graft.functions.VectorExpressions.register(s)
+        graft.GraftExtensions.register(s)
         val base = Tables.embeddings(s, dir)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
           .withColumn("nrm", sqrt(expr("dot_f(v, v)")))

@@ -35,7 +35,7 @@ object MlQueries {
     * column — scans touch 1/k of the corpus.
     */
   def neighbors(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.GraftExtensions.register(s)
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(expr("dot_f(v, v)")))
@@ -187,7 +187,7 @@ FROM embeddings WHERE vec_id >= 100 AND vec_id < 110"""),
     */
   private[graft] def pqRecallCounts(s: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, dir)
     val pred = col("vec_id") >= 100 && col("vec_id") < 110
     val model = graft.api.VectorOps.pqTrain(
@@ -228,7 +228,7 @@ FROM embeddings WHERE vec_id >= 100 AND vec_id < 110"""),
     */
   private[graft] def ivfPqRecallCounts(s: SparkSession, dir: String,
       idx: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, dir)
     val pred = col("vec_id") >= 100 && col("vec_id") < 110
     // candidates from the pruned ADC scan (threshold low enough to

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.SketchAggregates
 import graft.{QueryDef, Tables}
 
 /** Queries driving the custom TypedImperativeAggregates — the two
@@ -23,7 +22,7 @@ object SketchQueries {
         "(SELECT ts, props FROM events WHERE event_type = 'view')",
         "json_extract(props, '$.k')::BIGINT", "item_id", 5, 12, Some(3))),
       (s, dir) => {
-        SketchAggregates.register(s)
+        graft.GraftExtensions.register(s)
         val counts = Tables.events(s, dir)
           .filter(col("event_type") === "view")
           .select(col("ts"),
@@ -90,7 +89,7 @@ SELECT epoch(time_bucket(INTERVAL '1 day', ts::TIMESTAMP) + INTERVAL '1 day')::B
        true AS bloom_ok
 FROM events GROUP BY 1"""),
       (s, dir) => {
-        SketchAggregates.register(s)
+        graft.GraftExtensions.register(s)
         // exact count is computed in its OWN aggregation and joined on
         // the (tiny) per-day result: a combined agg with countDistinct
         // would Expand-duplicate every event through the interpreted
@@ -129,7 +128,7 @@ SELECT event_type, count(*) AS n_events,
        true AS mg_ok
 FROM events GROUP BY event_type"""),
       (s, dir) => {
-        SketchAggregates.register(s)
+        graft.GraftExtensions.register(s)
         val cap = 48
         val ev = Tables.events(s, dir)
           .select(col("event_type"),
@@ -178,7 +177,7 @@ x AS (SELECT item, count(*) AS n_exact FROM e GROUP BY 1)
 SELECT item, n_exact, true AS cms_ok
 FROM x ORDER BY n_exact DESC, item LIMIT 10"""),
       (s, dir) => {
-        SketchAggregates.register(s)
+        graft.GraftExtensions.register(s)
         val keyed = Tables.events(s, dir)
           .select(get_json_object(col("props"), "$.k").cast("long").as("item"))
         val sketch = keyed.agg(expr("cms_sketch(1024, 4, item)").as("sk"),

@@ -92,7 +92,7 @@ object Bm25Gate {
       textCol: String, tsCol: String, delay: String, window: String,
       idx: DataFrame, corpusIdCol: String, k: Int): DataFrame = {
     require(k >= 1, s"Bm25Gate: k must be >= 1, got $k")
-    graft.functions.SketchAggregates.register(queries.sparkSession)
+    graft.GraftExtensions.register(queries.sparkSession)
     val qTerms = TextOps.bm25QueryTerms(Watermark.on(queries, tsCol, delay),
       qidCol, textCol, extraCols = Seq(tsCol))
     qTerms.join(idx, Seq("_t"))

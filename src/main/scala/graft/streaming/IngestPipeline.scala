@@ -161,7 +161,7 @@ object IngestPipeline {
       jaccardX1000Threshold: Int = 500): DataFrame = {
     import spark.implicits._
     import graft.functions.TextHashing.{P, Bands, RowsPerBand, minhash}
-    graft.functions.TextHashExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
 
     // ---- static model state, read driver-side at graph build time ----
     val st = graft.api.ClassifyOps.nbStats(nbModel)

@@ -37,7 +37,7 @@ object LmGate {
   def score(docs: DataFrame, idCol: String, textCol: String,
       tsCol: String, delay: String, window: String, model: DataFrame,
       keepAvgQx1000: Long = -9000L): DataFrame = {
-    graft.functions.TextHashExpressions.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     // V is a property of the static model — one driver-side read at
     // build time (the model is vocabulary-sized parquet, this is a
     // 1-row max), entering the plan as a literal

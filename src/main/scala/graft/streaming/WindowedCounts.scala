@@ -71,7 +71,7 @@ object WindowedCounts {
   def topNStreaming(events: DataFrame, tsCol: String, keyCol: String,
       duration: String, slide: String, watermarkDelay: String,
       n: Int): DataFrame = {
-    graft.functions.SketchAggregates.register(events.sparkSession)
+    graft.GraftExtensions.register(events.sparkSession)
     events
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), duration, slide), col(keyCol))

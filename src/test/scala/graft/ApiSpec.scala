@@ -1021,7 +1021,7 @@ class ApiSpec extends SparkSpec {
   test("TextOps.embedText: unit norm, zero-vector edge, and near-dup " +
       "texts embed near-parallel (the bridge into the vector stack)") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy cat"), // near-dup of 1
@@ -1053,7 +1053,7 @@ class ApiSpec extends SparkSpec {
 
   test("VectorOps IVF-PQ index: model round-trip, probe ADC exactness, " +
       "literal cell pruning") {
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val dir = tempDir("graft-ivfpq-t-").toString
     try {
@@ -1130,7 +1130,7 @@ class ApiSpec extends SparkSpec {
 
   test("foldIntoIvfPqIndex: frozen-codebook fold probes EXACTLY like a " +
       "same-model rebuild, with O(delta) write bytes") {
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val c0 = emb.filter(col("vec_id") % 5 =!= 0)
     val delta = emb.filter(col("vec_id") % 5 === 0 && col("vec_id") >= 10)
@@ -1169,7 +1169,7 @@ class ApiSpec extends SparkSpec {
 
   test("writeIvfPqIndex storeVectors: exact round-trip, fold keeps the " +
       "vectors sibling in sync, vectors-less index fails with a named error") {
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val c0 = emb.filter(col("vec_id") % 5 =!= 0)
     val delta = emb.filter(col("vec_id") % 5 === 0)
@@ -1218,7 +1218,7 @@ class ApiSpec extends SparkSpec {
       "below threshold a layered fold, at threshold compact-and-swap " +
       "re-lays codes AND stored vectors, probes EXACTLY equal to a " +
       "same-model rebuild at every stage") {
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val c0 = emb.filter(col("vec_id") % 5 >= 2)
     val d1 = emb.filter(col("vec_id") % 5 === 1)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.expr
 
 /** The spark.sql.extensions entry point: a session built with
@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions.expr
   */
 class ExtensionsSpec extends SparkSpec {
 
-  test("a session built with graft.GraftExtensions has all functions injected") {
+  /** `body` on a fresh session built with graft.GraftExtensions; the
+    * suite session is default and active again afterwards. */
+  private def withExtensionSession(body: SparkSession => Unit): Unit = {
     spark // force the shared session (and its SparkContext) first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -22,6 +24,23 @@ class ExtensionsSpec extends SparkSpec {
       .getOrCreate()
     try {
       assert(s2 ne spark, "expected a fresh session instance")
+      body(s2)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  /** A session with no graft function until `GraftExtensions.register`. */
+  private def registeredSession(): SparkSession = {
+    val s = spark.newSession()
+    assert(!s.catalog.functionExists("topk_agg"))
+    GraftExtensions.register(s)
+    s
+  }
+
+  test("a session built with graft.GraftExtensions has all functions injected") {
+    withExtensionSession { s2 =>
       import s2.implicits._
       val df = Seq((1, 5L, 10L), (1, 9L, 20L), (1, 7L, 30L))
         .toDF("g", "cnt", "key")
@@ -93,13 +112,67 @@ class ExtensionsSpec extends SparkSpec {
       // on the suite session via plain SQL to avoid implicit clashes)
       val fp = Seq("a b c").toDF("t")
         .selectExpr("simhash60(split(t, ' '))").head.getLong(0)
-      graft.functions.TextHashExpressions.register(spark)
+      GraftExtensions.register(spark)
       val fpReg = spark.sql("SELECT simhash60(split('a b c', ' '))")
         .head.getLong(0)
       assert(fp == fpReg && fp != 0L)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+
+      // curation_rows: base row, one CDC chunk (3 tokens < window 4),
+      // the two distinct bigrams, then each token occurrence in order
+      val cr = Seq("a b c").toDF("t").selectExpr(
+        "curation_rows(split(t, ' '), 4, 2) AS r",
+        "cdc_chunk_hashes(split(t, ' '), 4, 2) AS ch").head
+      val rows = cr.getSeq[Row](0)
+      def tagged(t: Int) = rows.filter(_.getInt(0) == t)
+      assert(rows.map(_.getInt(0)) == Seq(0, 1, 2, 2, 3, 3, 3))
+      assert(tagged(1).map(_.getLong(4)) == cr.getSeq[Long](1))
+      assert(tagged(2).map(r => (r.getString(1), r.getString(2), r.getLong(3)))
+        .sorted == Seq(("a", "b", 1L), ("b", "c", 1L)))
+      assert(tagged(3).map(_.getString(1)) == Seq("a", "b", "c"))
+
+      // hash_embed: the registry path's unit vector, bit for bit
+      val he = Seq("a b c").toDF("t")
+        .selectExpr("hash_embed(split(t, ' '), 8)").head.getSeq[Double](0)
+      val heReg = spark.sql("SELECT hash_embed(split('a b c', ' '), 8)")
+        .head.getSeq[Double](0)
+      assert(he == heReg && he.length == 8)
+      assert(math.abs(he.map(x => x * x).sum - 1.0) < 1e-9)
     }
+  }
+
+  test("every table function resolves in an extension-built and in a " +
+      "registered session") {
+    val names = GraftExtensions.functions.map(_.name)
+    assert(names.distinct.size == names.size, s"duplicate names in $names")
+    def missing(s: SparkSession) = names.filterNot(s.catalog.functionExists)
+    withExtensionSession(s2 => assert(missing(s2).isEmpty))
+    assert(missing(registeredSession()).isEmpty)
+  }
+
+  test("a wrong argument count fails naming the function, the expected " +
+      "and the given count, on both paths") {
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    def arityError(s: SparkSession, call: String): String = {
+      val e = intercept[Exception](s.sql(s"SELECT $call"))
+      causes(e).collectFirst { case iae: IllegalArgumentException =>
+        iae.getMessage
+      }.getOrElse(fail(s"$call: no IllegalArgumentException in ${causes(e)}"))
+    }
+    def check(s: SparkSession): Unit = {
+      // the builders were `MinHash16(exprs.head)` (surplus argument
+      // dropped) and `DotProduct(exprs.head, exprs(1))` (bare index error)
+      assert(arityError(s, "minhash16(array(1L), array(2L))") ==
+        "minhash16 takes exactly 1 argument, got 2")
+      assert(arityError(s, "dot_f(array(1.0D))") ==
+        "dot_f takes exactly 2 arguments, got 1")
+      for (f <- GraftExtensions.functions; n <- Seq(f.arity - 1, f.arity + 1)) {
+        val msg = arityError(s, s"${f.name}(${Seq.fill(n)("1").mkString(", ")})")
+        assert(msg.startsWith(s"${f.name} takes exactly ${f.arity} argument") &&
+          msg.endsWith(s", got $n"), msg)
+      }
+    }
+    withExtensionSession(check)
+    check(registeredSession())
   }
 }

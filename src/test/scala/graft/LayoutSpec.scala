@@ -56,7 +56,7 @@ class LayoutSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
     import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
     import org.apache.spark.sql.util.QueryExecutionListener
-    graft.functions.TextHashExpressions.register(spark)
+    GraftExtensions.register(spark)
     val root = tempDir("graft_cut").toString
     // the logical plan each write executed, keyed by its output path
     val written = new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]
@@ -149,7 +149,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("morton2 laws: exact bijective interleave (despread roundtrip)") {
-    graft.functions.LayoutExpressions.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val pts = Seq.fill(2000)(

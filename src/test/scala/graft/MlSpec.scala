@@ -38,7 +38,7 @@ class MlSpec extends SparkSpec {
 
   test("pq kernels: encode argmin, lut dots, adc == lut-sum — hand model") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     // m=2 subspaces × k=2 centroids over 4 dims; centroids chosen so
     // the nearest code is unambiguous

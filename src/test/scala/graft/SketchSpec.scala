@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.SketchAggregates
-
 /** Invariants for the custom TypedImperativeAggregates (topk_agg,
   * bloom_distinct): correctness vs built-in formulations, merge behavior
   * under repartitioning, tie-break determinism, accuracy bounds.
@@ -19,7 +17,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("topk_agg is partitioning-invariant (merge correctness)") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     val df = (1 to 1000).map(i => (i % 7, (i % 13).toLong, i.toLong))
       .toDF("g", "cnt", "key")
@@ -32,7 +30,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("topk_agg breaks count ties by key ascending") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     // all keys have cnt=1 → rank must follow key order
     val out = Seq((1, 1L, 30L), (1, 1L, 10L), (1, 1L, 20L))
@@ -45,7 +43,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("topk_agg supports string keys") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     val out = Seq(("a", 5L), ("b", 9L), ("c", 7L), ("d", 1L))
       .toDF("key", "cnt").repartition(3)
@@ -79,7 +77,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("literal-arg registry functions reject column arguments clearly") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((1, 2L, 3L)).toDF("g", "cnt", "key")
     val e = intercept[Exception] {
@@ -92,7 +90,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("custom aggregates run in streaming update mode") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime
@@ -132,7 +130,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("bloom_distinct is partitioning-invariant (OR-merge)") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     val df = (1 to 5000).map(i => (i % 3, (i % 997).toLong)).toDF("g", "v")
     def est(parts: Int) = df.repartition(parts)
@@ -142,7 +140,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("capped_list: under-cap groups are partitioning-invariant as sets") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     // 50 groups: ids 0..9 per group (under cap 20), plus one hot group
     // with 100 ids (over cap -> NULL regardless of partitioning)
@@ -161,7 +159,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("bloom_distinct saturates to MaxValue instead of lying") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     // 64-bit bitmap with 4 hashes: ~40 distinct values saturate it
     val out = (1L to 1000L).toDF("v")
@@ -179,7 +177,7 @@ class SketchSpec extends SparkSpec {
   }
 
   private def mgRun(parts: Int) = {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     val r = mgSkewDf.repartition(parts)
       .agg(expr("heavy_hitters(4, k)").as("hh"))
       .select(col("hh.delta"), col("hh.items")).collect()(0)
@@ -212,7 +210,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("heavy_hitters: distinct keys under capacity is exact, delta 0") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     val df = (1 to 900).map(i => (i % 3).toLong).toDF("k").repartition(8)
     val r = df.agg(expr("heavy_hitters(8, k)").as("hh"))
@@ -224,7 +222,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("heavy_hitters output is sorted (est desc, key asc)") {
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     val df = ((1 to 10).map(_ => 5L) ++ (1 to 10).map(_ => 3L) ++
       (1 to 4).map(_ => 9L)).toDF("k")
@@ -238,7 +236,7 @@ class SketchSpec extends SparkSpec {
   test("cms_sketch rejects oversized grids at analysis, not execution") {
     // width 2^28 x depth 16 overflows Int in width*depth — without the
     // Long-arithmetic bound this was a NegativeArraySizeException mid-job
-    SketchAggregates.register(spark)
+    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(1L).toDF("k")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
@@ -253,7 +251,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("quant_code_sum: NULL for empty/all-null vectors, 0 for constant (oracle parity)") {
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT quant_code_sum(cast(array() AS array<float>)) AS a,
         |       quant_code_sum(cast(array(NULL, NULL) AS array<float>)) AS b,
@@ -268,7 +266,7 @@ class SketchSpec extends SparkSpec {
     // getLong on a null slot silently reads 0 — diverging from
     // array_min(transform(...)) semantics where nulls are ignored; the
     // type check must refuse containsNull=true inputs outright
-    graft.functions.TextHashExpressions.register(spark)
+    GraftExtensions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT minhash16(array(1L, cast(NULL AS bigint)))").collect()
     }

@@ -1803,7 +1803,7 @@ class StreamingSpec extends SparkSpec {
     // function accepts a streaming frame — the compressed-index ANN
     // twin of NearDupIngest. Two micro-batches must emit exactly the
     // batch probe's rows on the same delta.
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val dir = tempDir("graft-ivfpq-s-").toString
     try {
@@ -1852,7 +1852,7 @@ class StreamingSpec extends SparkSpec {
     // partition filter per micro-batch, reading strictly fewer codes
     // files than the index holds (the ApiSpec file-count assertion,
     // applied per batch).
-    graft.functions.VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val dir = tempDir("graft-ivfpq-fb-").toString
     try {

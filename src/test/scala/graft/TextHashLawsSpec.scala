@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextHashExpressions
 import graft.functions.TextHashing._
 
 /** Native-expression ⇔ declarative-spelling equivalence laws for the
@@ -31,7 +30,7 @@ class TextHashLawsSpec extends SparkSpec {
   }
 
   private lazy val docs = {
-    TextHashExpressions.register(spark)
+    GraftExtensions.register(spark)
     randomDocs(400).toDF("id", "toks")
   }
 
